@@ -4,23 +4,15 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": sf}.
 
 The stdout JSON line is kept COMPACT (separators without spaces, 3-dp
-values, no per-query spread/cold maps) so it stays parseable inside the
-driver's bounded stdout-tail capture; the full per-query detail
-(min/cold/spread per attempt, PLUS the per-section attribution map for
-the multi-section slots: a `sections` dict of min-of-2 wall times and
-the slot's eager `parts_build` time) is written to BENCH_DETAIL.json
-next to this script — a bench excursion localizes to a section in one
-read.
-
-The stdout line also carries `composite_min`: the sum of per-query
-minima ACROSS bench runs at the same git revision (ratcheted through
-BENCH_DETAIL.json's per-query `composite` field) — the official
-host-noise-proof close number; the ratchet resets only when the
-PRODUCT code (package tree / driver entry, committed or dirty)
-changes, never on bench.py or doc edits.
+values, no per-query spread/cold maps) so it stays parseable inside a
+bounded stdout-tail capture; the full per-query detail (min/cold/spread
+per attempt, PLUS the per-section attribution map for the multi-section
+slots: a `sections` dict of min-of-2 wall times and the slot's eager
+`parts_build` time) is written to BENCH_DETAIL.json next to this script
+— a bench excursion localizes to a section in one read.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the host CPU count).
 """
 
 from __future__ import annotations
@@ -28,7 +20,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import subprocess
 import sys
 import time
 
@@ -38,58 +29,11 @@ SECTION_ATTEMPTS = 2  # min-of-2 for the per-section attribution pass —
 # it exists to localize excursions, not to be the headline number
 
 
-def _code_rev() -> str | None:
-    """Ratchet key for the host-noise-proof composite (r12 verdict item
-    7): per-query minima ratchet ACROSS bench runs of the SAME code
-    revision, so repeated close passes converge on the idle-host floor.
-
-    The key is the PRODUCT tree (package + driver entry) only — NOT
-    bench.py (r13 verdict item 1: an instrumentation edit cannot change
-    query cost, and keying on it reset the minima into a contended
-    window) and NOT HEAD (doc-only commits must not reset).  Any change
-    to code that can affect a measured plan still resets the ratchet,
-    including UNCOMMITTED edits: when the working tree is dirty over
-    the keyed paths, the diff's hash is folded into the key so stale
-    committed minima can't hide a working-tree regression (r13 advice
-    item 3).
-    """
-    here = os.path.dirname(os.path.abspath(__file__))
-    keyed = ["pyspark_dist_explore_spark", "__spark_entry__.py"]
-    try:
-        rev = subprocess.run(
-            ["git", "rev-parse"] + [f"HEAD:{p}" for p in keyed],
-            cwd=here, capture_output=True, text=True, timeout=10,
-        ).stdout.strip().replace("\n", "-") or None
-        if rev is None:
-            return None
-        dirt = subprocess.run(
-            ["git", "status", "--porcelain", "--"] + keyed,
-            cwd=here, capture_output=True, text=True, timeout=10,
-        ).stdout
-        if dirt.strip():
-            import hashlib
-
-            diff = subprocess.run(
-                ["git", "diff", "HEAD", "--"] + keyed,
-                cwd=here, capture_output=True, text=True, timeout=30,
-            ).stdout
-            rev += "-dirty-" + hashlib.md5(
-                (dirt + diff).encode()
-            ).hexdigest()[:12]
-        return rev
-    except Exception:
-        return None
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
-    # Snapshot the ratchet key NOW, before any query runs: the measured
-    # plans come from the code imported at start, so a mid-run edit to
-    # the package must not relabel this run's minima.
-    code_rev = _code_rev()
 
     from pyspark.sql import SparkSession
 
@@ -144,18 +88,17 @@ def main() -> None:
             "spread": round(max(dts) - min(dts), 4),
         }
 
-    # Per-section attribution for the multi-section slots (r11 verdict
-    # item 1): each slot's parts builder returns the exact frames the
-    # registered query composes, so timing a section's collect times the
-    # section's real plan.  `parts_build` is the slot's eager-at-build
-    # work (BPE learn loop, staged localCheckpoints, mixture-target
-    # collect) — it runs once per parts() call and is NOT inside any
-    # section's time.  For the join-composed slot
-    # (text_scrub_repetition) family times sum to MORE than the slot:
-    # each family pays its own scan where the joined slot shares one.
-    from pyspark_dist_explore_spark.plans.llm_ops import SECTION_PARTS
-
-    for slot, parts_fn in SECTION_PARTS.items():
+    # Per-section attribution for the multi-section slots: a slot's
+    # section builder returns the exact frames the registered query
+    # composes, so timing a section's collect times the section's real
+    # plan.  `parts_build` is the slot's eager-at-build work (BPE learn
+    # loop, mixture-target collect) — it runs once per sections() call
+    # and is NOT inside any section's time.  For the join-composed slots
+    # family times sum to MORE than the slot: each family pays its own
+    # scan where the joined slot shares one.
+    for slot, spec in REGISTRY.items():
+        if spec.sections is None:
+            continue
         builds: list[float] = []
         sec_dts: dict[str, list[float]] = {}
         for _ in range(SECTION_ATTEMPTS):
@@ -164,7 +107,7 @@ def main() -> None:
             # object would exclude Catalyst time and undercount vs the
             # slot numbers above (which rebuild per attempt too)
             t0 = time.perf_counter()
-            parts = parts_fn(spark, sf_dir)
+            parts = spec.sections(spark, sf_dir)
             builds.append(time.perf_counter() - t0)
             for sec, sdf in parts.items():
                 t0 = time.perf_counter()
@@ -177,32 +120,12 @@ def main() -> None:
     spark.stop()
 
     here = os.path.dirname(os.path.abspath(__file__))
-
-    composite: dict[str, float] = {}
-    try:
-        with open(os.path.join(here, "BENCH_DETAIL.json")) as fh:
-            prev = json.load(fh)
-        if (
-            code_rev is not None
-            and prev.get("code_rev") == code_rev
-            and prev.get("sf") == sf
-            and prev.get("cpus") == cpus
-        ):
-            for name, d in prev.get("queries", {}).items():
-                composite[name] = d.get("composite", d.get("min", float("inf")))
-    except (OSError, ValueError):
-        pass
-    for name, d in detail.items():
-        d["composite"] = round(min(d["min"], composite.get(name, float("inf"))), 4)
-    composite_min = round(sum(d["composite"] for d in detail.values()), 3)
-
     out = {
         "metric": "headline_queries_total_wall",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "cold_total": round(cold_total, 3),
-        "composite_min": composite_min,
         "sf": sf,
     }
     with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as fh:
@@ -211,14 +134,13 @@ def main() -> None:
                 "sf": sf,
                 "cpus": cpus,
                 "attempts": ATTEMPTS,
-                "code_rev": code_rev,
                 "queries": detail,
             },
             fh,
             indent=1,
         )
-    # compact separators + 3-dp values: the whole line must survive the
-    # driver's 2000-char stdout tail to be machine-parsed
+    # compact separators + 3-dp values: the whole line must survive a
+    # 2000-char stdout tail to be machine-parsed
     line = json.dumps(out, separators=(",", ":"))
     if len(line) > 1900:  # belt-and-braces: drop to aggregates only
         out.pop("queries")

@@ -148,11 +148,11 @@ GROUP BY cells.grp
 
     # 4. hist_density_kde kde rows: round(<gaussian mixture>, 10) — exp() in
     #    every term, pow() in the bandwidth
-    from pyspark_dist_explore_spark.plans.queries import HIST_KDE_ORACLE
+    from pyspark_dist_explore_spark.plans.queries import _HIST_KDE_ORACLE
     import re
 
     unrounded = re.sub(
-        r"round\((sum.*any_value\(n\)), 10\)", r"\1", HIST_KDE_ORACLE, flags=re.S
+        r"round\((sum.*any_value\(n\)), 10\)", r"\1", _HIST_KDE_ORACLE, flags=re.S
     )
     assert "round" not in unrounded, "regex failed to strip the KDE round"
     kde_rows = con.execute(unrounded).fetchall()

@@ -66,6 +66,3 @@ def in_range(v: Column, lo: Column, hi: Column) -> Column:
     """Out-of-range values are dropped, not clamped (rdd.py:2352-2360)."""
     return (v >= lo) & (v <= hi)
 
-
-def in_range_sql(v: str, lo: str, hi: str) -> str:
-    return f"{v} >= {lo} AND {v} <= {hi}"

@@ -1414,8 +1414,9 @@ def weighted_reservoir_sample(
     the power-of-two scale, and the comparison are IEEE-exact, so the
     twin (:func:`weighted_reservoir_sample_sql`) can only diverge if
     two keys in one group land within libm's ~2-ulp ln() spread of
-    each other AT THE RANK-k BOUNDARY; the margin is measured by
-    ``probe_r14.py`` and recorded in ORACLES.md before any gate use.
+    each other AT THE RANK-k BOUNDARY; the measured margin is frozen in
+    PROBE_R14.json and re-measured by ``knife_probe.py`` (recorded in
+    ORACLES.md).
 
     Output: the kept rows with ``wrs_rank`` (1-based, best key first).
     """

@@ -964,21 +964,6 @@ JOIN wc ON tops.doc_id = wc.doc_id
 """
 
 
-def doc_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Content fingerprint (md5 of normalized text) + duplicate-group stats."""
-    return (
-        df.select(
-            F.md5(normalize_text(F.col(text_col))).alias("fingerprint"),
-            F.col(id_col).alias("doc_id"),
-        )
-        .groupBy("fingerprint")
-        .agg(
-            F.min("doc_id").alias("first_doc"),
-            F.count(F.lit(1)).alias("n_docs"),
-        )
-    )
-
-
 def unigram_logprob_scores(
     df: DataFrame,
     text_col: str,

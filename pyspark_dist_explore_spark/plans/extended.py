@@ -1,7 +1,7 @@
 """Extended relational + UDF-surface coverage (SURVEY §2.3 completion):
 join variants (left/semi/anti), CUBE / GROUPING SETS, lag/lead windows,
 non-equi range join, the pandas-UDF surface (applyInPandas per-group
-histogram, Arrow grouped aggregation), and the reference's pivoted
+histogram), and the reference's pivoted
 pandas-histogram shape (R3/R13) as an oracle-checked query.
 """
 
@@ -22,59 +22,6 @@ from pyspark_dist_explore_spark.sources.tables import load_table
 # --------------------------------------------------------------------------
 # Join variants
 # --------------------------------------------------------------------------
-
-
-#: deregistered round 5 (merged into ``join_variants`` below to free a
-#: driver slot for ``corpus_shuffle_shards``); kept callable with the
-#: oracle pinned in tests/test_ops.py
-JOIN_SEMI_ANTI_ORACLE = """
-SELECT c_custkey, 'has_urgent' AS status FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
-              WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-UNION ALL
--- NOT EXISTS, not NOT IN: a NULL o_custkey would make NOT IN return zero
--- rows while Spark's left_anti keeps unmatched customers
-SELECT c_custkey, 'no_urgent' AS status FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-"""
-
-
-def q_join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT SEMI + LEFT ANTI joins (existence tests without row blow-up)."""
-    c = load_table(spark, sf_dir, "customer").select("c_custkey")
-    urgent = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_custkey")
-    )
-    has = c.join(urgent, c.c_custkey == urgent.o_custkey, "left_semi").select(
-        "c_custkey", F.lit("has_urgent").alias("status")
-    )
-    hasnt = c.join(urgent, c.c_custkey == urgent.o_custkey, "left_anti").select(
-        "c_custkey", F.lit("no_urgent").alias("status")
-    )
-    return has.unionAll(hasnt)
-
-
-#: deregistered round 5 (merged into ``join_variants``); kept callable
-#: with the oracle pinned in tests/test_ops.py
-JOIN_LEFT_OUTER_ORACLE = """
-SELECT n.n_name, count(s.s_suppkey) AS n_suppliers
-FROM nation n LEFT JOIN supplier s ON s.s_nationkey = n.n_nationkey
-GROUP BY n.n_name
-"""
-
-
-def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER join preserving unmatched dimension rows (count=0)."""
-    n = load_table(spark, sf_dir, "nation")
-    s = load_table(spark, sf_dir, "supplier")
-    return (
-        n.join(s, s.s_nationkey == n.n_nationkey, "left")
-        .groupBy("n_name")
-        .agg(F.count("s_suppkey").alias("n_suppliers"))
-    )
 
 
 @register(
@@ -98,12 +45,9 @@ GROUP BY n.n_name
 """,
 )
 def q_join_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT SEMI + LEFT ANTI + LEFT OUTER joins in one plan (merged from
-    ``join_semi_anti`` + ``join_left_outer`` round 5 to free a driver
-    slot; the original builders stay callable with their own oracles
-    pinned in pytest).  Per-row granularity is preserved — every semi /
+    """LEFT SEMI + LEFT ANTI + LEFT OUTER joins in one plan.  Every semi /
     anti survivor and every outer-join group is its own hash-checked
-    row — so the merge loses no checking power, only a slot."""
+    row."""
     c = load_table(spark, sf_dir, "customer").select("c_custkey")
     urgent = (
         load_table(spark, sf_dir, "orders")
@@ -170,25 +114,6 @@ def q_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-#: deregistered round 6 (merged into ``grouping_analytics``); original
-#: stays callable, oracle pinned in tests/test_ops.py
-GROUPING_SETS_ORACLE = """
-SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
-FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-"""
-
-
-def q_grouping_sets_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS via the SQL surface (temp view + spark.sql)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
-        FROM orders_gs GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        """
-    )
-
-
 @register(
     "salted_skew_join",
     f"""
@@ -218,32 +143,8 @@ def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: deregistered round 5 (merged into ``scalar_unpivot_part`` in
-#: relational.py); kept callable with the oracle pinned in tests/test_ops.py
-UNPIVOT_PART_ORACLE = """
-SELECT p_partkey, 'p_size' AS metric, CAST(p_size AS DOUBLE) AS value FROM part
-UNION ALL
-SELECT p_partkey, 'p_retailprice' AS metric, p_retailprice AS value FROM part
-"""
-
-
-def q_unpivot_part_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPIVOT/melt: wide columns to (metric, value) rows.
-
-    Deregistered round 5: the merged ``scalar_unpivot_part`` registration
-    unpivots the same raw metrics (plus computed ones); oracle pinned in
-    pytest."""
-    p = load_table(spark, sf_dir, "part")
-    return p.unpivot(
-        ids=["p_partkey"],
-        values=["p_size", "p_retailprice"],
-        variableColumnName="metric",
-        valueColumnName="value",
-    )
-
-
 # --------------------------------------------------------------------------
-# pandas-UDF surface: applyInPandas / grouped Arrow aggregation
+# pandas-UDF surface: applyInPandas
 # --------------------------------------------------------------------------
 
 _GH_SCHEMA = StructType(
@@ -285,25 +186,6 @@ def q_grouped_hist_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return li.groupBy("l_returnflag").applyInPandas(group_hist, schema=_GH_SCHEMA)
-
-
-def q_grouped_sum_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-agg pandas UDF (Arrow): exact scaled-integer sum in numpy —
-    bit-identical to the JVM scaled_sum and the DuckDB oracle.
-
-    No longer REGISTERED (the grouped-agg Arrow surface is already
-    driver-checked via ``grouped_hist_pandas``'s applyInPandas path and
-    this query's oracle twin is byte-identical to a plain groupBy sum);
-    kept callable + pytest-pinned against the JVM result."""
-    li = load_table(spark, sf_dir, "lineitem")
-
-    @F.pandas_udf(LongType())
-    def scaled_cents(x: pd.Series) -> int:
-        return int(np.round(x.to_numpy(dtype=float) * 10000.0).astype("int64").sum())
-
-    return li.groupBy("l_returnflag").agg(
-        (scaled_cents("l_extendedprice").cast("double") / F.lit(10000.0)).alias("total_price")
-    )
 
 
 # --------------------------------------------------------------------------

@@ -28,7 +28,7 @@ from pyspark_dist_explore_spark.operators.sampling import (
     sql_str_lit,
     weighted_reservoir_sample_sql,
 )
-from pyspark_dist_explore_spark.plans.queries import register
+from pyspark_dist_explore_spark.plans.queries import register, register_sections
 from pyspark_dist_explore_spark.sources.tables import embedding_dim, load_table
 
 #: DuckDB rendering of dedup.normalize_text
@@ -133,22 +133,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
 
 
-#: deregistered round 3 — the md5-fingerprint group-by is a strict
-#: sub-plan of ``pipeline_curate``'s exact-dedup stage, which took this
-#: registry slot; still callable, oracle-pinned by tests/test_pipeline.py
-DEDUP_FINGERPRINT_ORACLE = f"""
-SELECT md5({_NORM.format(c='text')}) AS fingerprint,
-       min(doc_id) AS survivor_id, count(*) AS n_dups
-FROM documents GROUP BY 1
-"""
-
-
-def q_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprinting: md5 over normalized text, group stats."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.fingerprint_dedup(docs, "text", "doc_id")
-
-
 #: re-keyed "re-crawl" offset for the incremental-dedup demo: copies of
 #: every doc_id % 10 == 3 document re-enter the new batch under a fresh
 #: id, so the anti-join (copies of SEEN docs) and the within-batch
@@ -226,7 +210,7 @@ _DIFF_UNPIVOT = " UNION ALL ".join(
 )
 
 
-@register(
+@register_sections(
     "dedup_incremental",
     f"""
 WITH batch AS ({_INCR_BATCH_SRC}),
@@ -266,65 +250,32 @@ FROM (
 )
 """,
 )
-def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental dedup — the day-one production shape: a NEW crawl
-    batch (here the doc_id % 7 != 0 slice plus re-keyed "re-crawl"
-    copies of every % 10 == 3 doc) deduped against the fingerprint
-    snapshot of the already-shipped corpus (the % 7 == 0 slice).
-    Within-batch dups collapse to a deterministic min-id survivor;
-    already-seen content is dropped.  Runs the Bloom-prefilter scale
-    path (``bloom_bits=4096``): the snapshot bitmap builds via ONE
-    distributed bit_or aggregate, broadcast into an Arrow membership
-    test — bloom-miss rows (definitely new) never join at all, and the
-    maybe-seen remainder is verified with broadcast joins so the
-    snapshot side never shuffles.  The result is EXACTLY the plain
-    anti-join (false positives get weeded, never dropped), which is
-    what the DuckDB twin checks; 4096 bits over ~70 snapshot docs
-    forces real false positives through the verify branch at sf0.01.
-
-    Round 10 merges the X36 CROSS-CORPUS OVERLAP CENSUS
-    (:func:`dedup.corpus_overlap`) as the ``section='overlap'`` rows —
-    the audit a real pipeline runs BEFORE this dedup ("how much of the
-    new crawl already exists in the shipped corpus?"): the batch slice
-    vs the snapshot slice, unpivoted as ``(stat_name, value)`` pairs of
-    exact BIGINTs (``fingerprint`` carries the stat name,
-    ``survivor_id`` is 0, ``n_dups`` the value); the fp_jaccard column
-    is derivable from three of them and stays pytest-side.
-
-    Round 10 also merges the X43 K-WAY OVERLAP MATRIX
-    (:func:`dedup.corpus_overlap_matrix`) as the
-    ``section='overlap_matrix'`` rows — the census generalized to every
-    source pair of one mixed corpus in ONE scan (the multi-source
-    mixture audit; pairwise X36 runs would cost K²/2 scans).  The
-    synthetic corpus has zero raw cross-source duplicates, so the gate
-    runs it over ``_MATRIX_MIX_SRC``: documents plus a deterministic
-    mirror slice (doc_id % 5 == 0, re-keyed into the rotated source
-    ``'src' || (doc_id+7) % 20``) that plants real commons; every pair
-    row unpivots its seven class-A BIGINTs keyed
-    ``src_a>src_b:stat``.
-
-    Round 12 merges the X49 SNAPSHOT DIFF
-    (:func:`dedup.corpus_diff`) as the ``section='snapshot_diff'``
-    rows — the recurring-crawl audit between two corpus versions: the
-    "new crawl" mutation (removals %11, content changes %13, re-keyed
-    additions %9==4) diffs against the corpus itself, and every
-    per-source count/token stat (eleven BIGINTs incl. the signed
-    ``tokens_changed_delta``) unpivots keyed ``source:stat``.  The
-    manifest short-circuit lives in ``sinks.corpus_diff_dirs``
-    (pytest-pinned — sidecar IO stays lib per the X46 precedent)."""
-    parts = dedup_incremental_parts(spark, sf_dir)
-    out = None
-    for df in parts.values():
-        out = df if out is None else out.unionByName(df)
-    return out
-
-
-def dedup_incremental_parts(
+def dedup_incremental_sections(
     spark: SparkSession, sf_dir: str
 ) -> "dict[str, DataFrame]":
-    """Per-section frames of ``dedup_incremental``, keyed by
-    ``section`` tag — the registered query is exactly the union of
-    these values in dict order (see ``sampling_splits_parts``)."""
+    """Incremental dedup and three corpus audits, one section each, all
+    in the ``(section, fingerprint, survivor_id, n_dups)`` schema.
+
+    - ``batch``: a new crawl batch (the doc_id % 7 != 0 slice plus
+      re-keyed re-crawl copies of every % 10 == 3 doc) deduped against
+      the fingerprint snapshot of the shipped corpus (the % 7 == 0
+      slice) by :func:`dedup.incremental_dedup` with a 4096-bit Bloom
+      prefilter.  Within-batch duplicates collapse to the min-id
+      survivor and already-seen content is dropped; the rows equal the
+      plain anti-join.  The flagged batch is staged (lazy
+      ``localCheckpoint``) because three branches read it.
+    - ``overlap``: :func:`dedup.corpus_overlap` of the batch vs the
+      snapshot, unpivoted to ``(stat, value)`` rows of exact BIGINTs
+      (``fingerprint`` = stat name, ``survivor_id`` = 0, ``n_dups`` =
+      value).
+    - ``overlap_matrix``: :func:`dedup.corpus_overlap_matrix` over
+      every source pair of ``_MATRIX_MIX_SRC`` (documents plus a mirror
+      slice that plants cross-source duplicates), keyed
+      ``src_a>src_b:stat``.
+    - ``snapshot_diff``: :func:`dedup.corpus_diff` between the corpus
+      and the ``_DIFF_NEW_SRC`` mutation (removals, content changes,
+      re-keyed additions), keyed ``source:stat``.
+    """
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.where(F.col("doc_id") % 7 != 0).select("doc_id", "text").unionAll(
         docs.where(F.col("doc_id") % 10 == 3).select(
@@ -337,7 +288,7 @@ def dedup_incremental_parts(
     ).distinct()
     incr = dedup.incremental_dedup(
         batch, seen, "text", "doc_id", bloom_bits=4096, bloom_hashes=5,
-        stage=True,  # r14 opt: the flagged batch feeds three branches
+        stage=True,
     ).select(F.lit("batch").alias("section"), "fingerprint", "survivor_id", "n_dups")
     census = dedup.corpus_overlap(batch, snap, "text", "doc_id")
     stack = "stack({n}, {pairs}) as (fingerprint, n_dups)".format(
@@ -373,10 +324,6 @@ def dedup_incremental_parts(
         F.lit(0).cast("bigint").alias("survivor_id"),
         F.col("val").cast("bigint").alias("n_dups"),
     )
-    # X49 (round 12): snapshot diff over the deterministic "re-crawl"
-    # mutation (_DIFF_NEW_SRC): removals (%11), content changes (%13),
-    # re-keyed additions (%9==4) — all eleven per-source BIGINTs
-    # hash-checked, incl. the signed tokens_changed_delta
     old_snap = docs.select(
         "doc_id", F.col("source").cast("string").alias("source"), "text"
     )
@@ -723,33 +670,6 @@ FROM labeled l LEFT JOIN sizes s ON l.doc_id = s.doc_id
 """
 
 
-def q_neardup_clusters(
-    spark: SparkSession, sf_dir: str, *, stage: bool = False
-) -> DataFrame:
-    """X1/X3 end-goal: near-dup pairs resolved into duplicate CLUSTERS
-    with one deterministic survivor each (min doc id of the connected
-    component; isolated docs are their own cluster).  Pairs come from the
-    oracle-able exact-Jaccard graph; the DuckDB twin walks the same graph
-    with a recursive CTE.  Linear output in documents — the shape a
-    keep-list pipeline actually consumes (``is_survivor = 1``).
-
-    ``stage=False`` (default) is FULLY LAZY — the statically-unrolled
-    ``neardup_clusters_lazy`` (8 ONE-HOP propagation rounds: labels
-    travel one hop per round, so it is correct only for component
-    diameters ≤ 8 — generous for the dense clusters similarity joins
-    produce, and equality with the eager form on this graph is
-    pytest-pinned).  For chain-shaped or unknown graph shapes use
-    ``stage=True`` (what the registry passes): the eager
-    convergence-CHECKED pointer-jumping propagation with
-    checkpoint-bounded lineage, which warns rather than silently
-    splitting deep components."""
-    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < _JACCARD_MAX_ID)
-    pairs = dedup.jaccard_pairs_exact(docs, "text", "doc_id", threshold=_JACCARD_THRESHOLD)
-    if stage:
-        return dedup.neardup_clusters(pairs, all_ids=docs.select("doc_id"))
-    return dedup.neardup_clusters_lazy(pairs, all_ids=docs.select("doc_id"))
-
-
 def _cluster_quality_scores(docs: DataFrame) -> DataFrame:
     """Per-doc distinct non-empty token count — the X60 election score.
     Byte-for-byte the oracle's ``sizes`` CTE (count of distinct
@@ -767,46 +687,33 @@ def _cluster_quality_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-def neardup_clusters_parts(
+@register_sections("neardup_clusters", _CLUSTER_ORACLE)
+def neardup_clusters_sections(
     spark: SparkSession, sf_dir: str
 ) -> "dict[str, DataFrame]":
-    """Per-section frames for the bench attribution map: `minid` is the
-    propagation itself (eager checkpoint-backed — its cost lands in
-    parts_build, the read is label-sized), `best` adds the X60 quality
-    election (score scan + two aggregates + join-back)."""
+    """Exact-Jaccard near-dup pairs of the doc_id < ``_JACCARD_MAX_ID``
+    slice resolved into duplicate clusters, with one survivor each under
+    two election rules:
+
+    - ``minid``: :func:`dedup.neardup_clusters`, the convergence-checked
+      propagation with checkpoint-bounded lineage; the survivor is the
+      min doc id of the connected component and isolated docs are their
+      own cluster.
+    - ``best``: the same clusters re-elected by
+      :func:`dedup.cluster_best_survivors` with score = distinct-token
+      count (the oracle's ``sizes`` CTE); ties break to the min id.
+
+    The propagation runs once: ``neardup_clusters`` returns a
+    checkpoint-backed frame that the ``best`` election reads."""
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < _JACCARD_MAX_ID)
     pairs = dedup.jaccard_pairs_exact(docs, "text", "doc_id", threshold=_JACCARD_THRESHOLD)
     labels = dedup.neardup_clusters(pairs, all_ids=docs.select("doc_id"))
     best = dedup.cluster_best_survivors(labels, _cluster_quality_scores(docs))
-    return {"minid": labels, "best": best}
-
-
-@register("neardup_clusters", _CLUSTER_ORACLE)
-def _q_neardup_clusters_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered form of :func:`q_neardup_clusters` — the eager
-    convergence-checked propagation (``stage=True``), section-merged
-    (round 12) with X60's quality-aware survivor election:
-
-    - ``minid``: the propagation output as shipped since round 4 —
-      survivor = min doc id of the connected component.
-    - ``best`` (X60): the same clusters re-elected by
-      :func:`~pyspark_dist_explore_spark.operators.dedup.cluster_best_survivors`
-      with score = distinct-token count (the oracle's own ``sizes`` CTE,
-      so the election is hash-checked member-for-member against the
-      DuckDB window-form twin; ties break to the min id, which also
-      pins the tie path — single-member clusters tie trivially).
-
-    The propagation runs ONCE: ``neardup_clusters`` returns a
-    checkpoint-backed frame, so the ``best`` section's election reads
-    the final-round label blocks, not a second propagation."""
-    parts = neardup_clusters_parts(spark, sf_dir)
-    minid = parts["minid"].select(
-        F.lit("minid").alias("section"), "doc_id", "cluster_id", "is_survivor"
-    )
-    best = parts["best"].select(
-        F.lit("best").alias("section"), "doc_id", "cluster_id", "is_survivor"
-    )
-    return minid.unionByName(best)
+    cols = ("doc_id", "cluster_id", "is_survivor")
+    return {
+        "minid": labels.select(F.lit("minid").alias("section"), *cols),
+        "best": best.select(F.lit("best").alias("section"), *cols),
+    }
 
 
 def _simhash_oracle(max_hamming: int) -> str:
@@ -925,7 +832,7 @@ _NEG_K = 2
 _NEG_SALT = "neg0"
 
 
-@register(
+@register_sections(
     "corpus_shuffle_shards",
     f"""
 WITH sh AS ({shuffle_shards_sql(
@@ -970,40 +877,31 @@ FROM ({sample_negatives_sql(
     )})
 """,
 )
-def q_corpus_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic training shuffle + sharding — the last stage before
-    a training dump: order the corpus by ``md5(salt:doc_id)`` (breaks
-    source/crawl locality, reproducible, salt = epoch), split into 8
-    hash-balanced shards, and number rows within each shard so readers
-    stream a globally de-correlated sequence.  ONE shuffle (window hash
-    partition by shard), per-shard sort, never a global order-by — the
-    shape that holds at 100 TB.  The ENTIRE output (every row's shard
-    and position) is hash-checked against the DuckDB twin.
+def corpus_shuffle_shards_sections(
+    spark: SparkSession, sf_dir: str
+) -> "dict[str, DataFrame]":
+    """Deterministic training shuffle and three companions, one section
+    each, all in the ``(doc_id, source, shard, pos)`` schema:
 
-    Round 10 appends the X46 INTEGRITY MANIFEST as
-    ``source='manifest:<stat>'`` rows (:func:`~pyspark_dist_explore_spark.
-    sources.sinks.shard_manifest` — the card ``write_training_shards``
-    records and ``verify_training_shards`` replays): per-shard row
-    count, id sum/bounds, and the 44-bit md5-fold sum, hash-checking
-    the fold arithmetic cross-engine (Spark ``conv(hex,16,10)`` vs
-    DuckDB ``'0x'``-cast) that the full-assignment hash alone does not
-    exercise.
-
-    Round 12 appends the X53 PROPORTIONAL INTERLEAVE as
-    ``source='interleave:<src>'`` rows (:func:`~pyspark_dist_explore_spark.
-    operators.sampling.proportional_interleave` — stride-scheduled
-    global training order over a 20-source integer mixture): ``shard``
-    carries the within-source deterministic rank and ``pos`` the
-    closed-form global position, so the two-level rank construction,
-    the BIGINT virtual-time arithmetic, and every tie-break are
-    hash-checked row for row against the twin's flat window form.
-
-    Round 13 appends the X63 DETERMINISTIC NEGATIVE SAMPLING as
-    ``source='neg:<neg_id>'`` rows (see :func:`_neg_section`) — the
-    contrastive-training prep step, reusing X53's two-level dense-rank
-    build, with ``k=_NEG_K`` draws per anchor and the same-source
-    false-negative guard ON so the deliberate fewer-than-k drop path is
-    part of the hash-checked surface."""
+    - ``shuffle``: :func:`shuffle_shards` orders the corpus by
+      ``md5(salt:doc_id)``, splits it into 8 hash-balanced shards and
+      numbers rows within each shard — one shuffle (window hash
+      partition by shard) and a per-shard sort, never a global
+      order-by.  Every row's shard and position is hash-checked.
+    - ``manifest`` (``source='manifest:<stat>'``): the
+      :func:`~pyspark_dist_explore_spark.sources.sinks.shard_manifest`
+      card per shard — row count, id sum and bounds, and the 44-bit
+      md5-fold sum, which checks the fold arithmetic cross-engine
+      (Spark ``conv(hex,16,10)`` vs DuckDB ``'0x'`` cast).
+    - ``interleave`` (``source='interleave:<src>'``):
+      :func:`proportional_interleave` over the ``_IL_WEIGHTS`` 20-source
+      mixture; ``shard`` carries the within-source rank and ``pos`` the
+      closed-form global position.
+    - ``neg`` (``source='neg:<neg_id>'``): :func:`sample_negatives` with
+      ``k=_NEG_K`` draws per anchor and the same-source false-negative
+      guard on, so the fewer-than-k drop path is hash-checked; ``shard``
+      carries the draw index.
+    """
     from pyspark_dist_explore_spark.sources.sinks import shard_manifest
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
@@ -1035,20 +933,7 @@ def q_corpus_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("int").alias("shard"),
         F.col("pos").cast("int").alias("pos"),
     )
-    neg = _neg_section(docs)
-    return sharded.unionByName(mani).unionByName(il).unionByName(neg)
-
-
-def _neg_section(docs: DataFrame) -> DataFrame:
-    """The X63 ``source='neg:<neg_id>'`` rows of ``corpus_shuffle_shards``
-    (promoted to the driver gate round 13): deterministic negative
-    sampling with the same-source false-negative guard — the sampled
-    negative rides the ``source`` string (BIGINT-safe at any scale),
-    ``shard`` carries the draw index, so the two-level dense rank, the
-    md5 draw arithmetic, the self-collision bump, and the guard's
-    drop path are all hash-checked row for row against the twin's flat
-    window form."""
-    return sample_negatives(
+    neg = sample_negatives(
         docs, "doc_id", k=_NEG_K, salt=_NEG_SALT, group_col="source"
     ).select(
         F.col("anchor_id").alias("doc_id"),
@@ -1056,64 +941,10 @@ def _neg_section(docs: DataFrame) -> DataFrame:
         F.col("draw").cast("int").alias("shard"),
         F.lit(0).cast("int").alias("pos"),
     )
-
-
-def corpus_shuffle_shards_parts(
-    spark: SparkSession, sf_dir: str
-) -> "dict[str, DataFrame]":
-    """Per-section frames of ``corpus_shuffle_shards`` for the bench
-    attribution map: the original shuffle+manifest stack vs the round-12
-    X53 interleave section (whose ``parts_build`` share is the K·S count
-    aggregate :func:`proportional_interleave` runs eagerly)."""
-    from pyspark_dist_explore_spark.sources.sinks import shard_manifest
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    sharded = shuffle_shards(docs, "doc_id", shards=8, salt="epoch0")
-    mani = shard_manifest(sharded, "shard", "doc_id")
-    il = proportional_interleave(
-        docs, "source", "doc_id", weights=_IL_WEIGHTS, salt="il0", shards=16
-    )
-    neg = _neg_section(docs)
     return {"shuffle": sharded, "manifest": mani, "interleave": il, "neg": neg}
 
 
-#: deregistered round 6 (merged into ``sampling_splits``); originals
-#: stay callable, oracles pinned in tests/test_ops.py
-HASH_SPLIT_ORACLE = f"""
-SELECT {hash_split_sql('doc_id')} AS split, count(*) AS cnt
-FROM documents GROUP BY 1
-"""
-
-
-def q_dataset_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic md5-keyed train/val/test split — same row, same
-    split, every run, every engine (no RNG, no shuffle)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return hash_split(docs, "doc_id").groupBy("split").agg(F.count(F.lit(1)).alias("cnt"))
-
-
 _STRAT_FRACS = {"en": 0.5, "de": 0.5, "es": 0.5, "zh": 1.0, "fr": 1.0}
-
-STRATIFIED_LANGS_ORACLE = f"""
-SELECT lang, count(*) AS cnt FROM documents
-WHERE {stratified_sample_hash_sql('lang', 'doc_id', _STRAT_FRACS)}
-GROUP BY lang
-"""
-
-
-def q_stratified_sample_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified rebalance: downsample dominant languages with the
-    DETERMINISTIC md5-bucket sampler — the kept set (not just its size)
-    is identical on every run and engine, so the whole query is
-    hash-oracle-checked.  (The seeded ``sampleBy`` variant stays
-    callable as ``operators.sampling.stratified_sample``.)"""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        stratified_sample_hash(docs, "lang", _STRAT_FRACS, "doc_id")
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
 
 #: X24 temperature-resample coefficient for the registered section:
 #: rate_g = min(1, 4/√n_g) downsamples EVERY language at every test SF
@@ -1228,12 +1059,12 @@ GROUP BY 1, 2
 #: engines.  600 > the 500-doc sf0.01 gate corpus — driver CORRECTNESS
 #: rows stay byte-identical — while the sf0.1 bench stops paying the
 #: eager k-round learn loop over 5 000 docs (the slot's dominant
-#: parts_build cost).  Every other section still runs the full table.
+#: build-time cost).  Every other section still runs the full table.
 _BPE_CAP = 600
 _BPE_SRC = f"SELECT doc_id, source, text FROM documents WHERE doc_id < {_BPE_CAP}"
 
 
-@register(
+@register_sections(
     "sampling_splits",
     f"""
 WITH fert AS MATERIALIZED ({textstats.bpe_fertility_sql(_BPE_SRC, "source", k=_BPE_K)})
@@ -1286,91 +1117,40 @@ SELECT 'unigram_seed' AS kind, piece AS key, cnt
 FROM ({textstats.unigram_seed_sql(f"SELECT text FROM documents WHERE doc_id < {_BPE_CAP}", max_piece_len=_USEED_LEN, seed_size=_USEED_N)})
 """,
 )
-def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic sampling surface in one slot (merged round 6 from
-    ``dataset_hash_split`` + ``stratified_sample_langs``, freeing a
-    slot for the drift/profile promotions): the md5-keyed train/val/
-    test split counts, the stratified per-language downsample counts,
-    and — since round 8 — the X24 TEMPERATURE-resample counts
-    (``min(1, coeff·n^(τ−1))`` keep rates at τ=0.5: the multilingual
-    mixture-flattening recipe, thresholds derived from the group counts
-    through an exact sqrt chain so the kept set hash-checks
-    cross-engine), tagged and unioned.  All sections stay fully
-    hash-checked (the kept SET is deterministic, not just its size);
-    the standalone builders remain callable with their oracles pinned
-    in pytest.
+def sampling_splits_sections(
+    spark: SparkSession, sf_dir: str
+) -> "dict[str, DataFrame]":
+    """Deterministic sampling and tokenizer-induction surface, one
+    section per ``kind`` tag, all in the ``(kind, key, cnt)`` schema.
+    Every sampler is md5-keyed, so the kept SET (not just its size) is
+    hash-checked; set-sensitive sections sub-bucket kept rows by
+    ``doc_id % 7``.
 
-    Round 10 adds the X41 PER-HOST CAP section
-    (:func:`~pyspark_dist_explore_spark.operators.sampling.
-    cap_per_key`): at most ``_HOST_CAP_N`` docs per source/lang
-    composite "host", md5-rank deterministic, sub-bucketed by
-    ``doc_id % 7`` like ``strat_exact`` so the hashed counts are
-    sensitive to WHICH docs survived the cap, not just how many — and
-    the X40 BPE MERGE-TABLE section
-    (:func:`~pyspark_dist_explore_spark.operators.textstats.
-    bpe_learn`, Sennrich et al. 2016): the first ``_BPE_K`` greedy
-    merges as ``step:pair>merged`` keys with their integer pair counts,
-    hash-checked against the unrolled chained-CTE DuckDB twin — the
-    subword-tokenizer induction step whose coverage grade already rides
-    ``corpus_profile``'s vocab/OOV card.
+    - ``hash_split``: :func:`hash_split` train/val/test counts.
+    - ``strat_lang``: :func:`stratified_sample_hash` per-language
+      downsample counts at ``_STRAT_FRACS``.
+    - ``temp_resample``: :func:`temperature_resample` counts, keep rate
+      ``min(1, coeff·n^(τ−1))`` at τ=0.5, ``coeff=_TEMP_COEFF``.
+    - ``strat_exact``: :func:`stratified_take_exact` at
+      ``_TAKE_TARGETS``.
+    - ``host_cap``: :func:`cap_per_key`, at most ``_HOST_CAP_N`` docs per
+      source/lang "host".
+    - ``bpe_merge`` / ``bpe_fertility``: the first ``_BPE_K`` greedy
+      merges of :func:`textstats.bpe_learn` (``step:pair>merged`` keys)
+      and the per-source token/subword sums of
+      :func:`textstats.bpe_encode` applying them back.
+    - ``top_frac``: :func:`top_frac_per_group`, the per-source top 25%
+      by the 1e-6 fixed-point quality score.
+    - ``mix_epochs``: :func:`materialize_mixture` with per-source token
+      targets derived from the corpus totals (down-sampling, 2⅓×
+      up-sampling, and the exact-1.0× boundary).
+    - ``unigram_seed``: :func:`textstats.unigram_seed_candidates`, the
+      candidate-piece table unigram-LM induction starts from.
 
-    Round 10 (second pass) adds the X40 ENCODE half as the
-    ``bpe_fertility`` section: the merges just learned are applied back
-    to the corpus (:func:`~pyspark_dist_explore_spark.operators.
-    textstats.bpe_encode`) and the per-source ``n_tokens``/
-    ``n_subwords`` sums hash-check the whole learn→encode chain — the
-    DuckDB twin re-derives the merge table and pivots it into the
-    replace-chain's pattern/replacement literals dynamically
-    (:func:`~pyspark_dist_explore_spark.operators.textstats.
-    bpe_fertility_sql`), so a segmentation difference on ANY word in
-    either engine shifts a hashed sum — and the X44 MIXTURE-EPOCHS
-    section (:func:`~pyspark_dist_explore_spark.operators.sampling.
-    materialize_mixture`): per-source token targets derived from the
-    corpus totals exercise down-sampling (src0 at ½×), integer
-    UP-sampling (src1 at 2⅓× — two full epochs + an md5-prefix
-    partial), and the exact-1.0× no-partial boundary (src2); the
-    hashed ``source#epoch#id%7`` counts are sensitive to which docs
-    ride the partial epoch — and the X45 TOP-FRACTION section
-    (:func:`~pyspark_dist_explore_spark.operators.sampling.
-    top_frac_per_group`): the per-source top 25% by the 1e-6
-    fixed-point quality score with ``ceil(n/4)`` integer keep counts
-    and md5 tie-break — the per-source classifier-threshold shape
-    (absolute score cutoffs do not transfer across sources).
-
-    Round 12 adds the X48 UNIGRAM-SEED section
-    (:func:`~pyspark_dist_explore_spark.operators.textstats.
-    unigram_seed_candidates`, Kudo 2018): the candidate-piece table
-    unigram-LM induction starts from — all single chars plus the top
-    ``_USEED_N`` multi-char substrings by corpus-weighted count — i.e.
-    the only corpus-sized stage of the EM chain, hash-checked
-    piece-for-piece; the Viterbi-EM rounds stay pytest-pinned
-    (integer-cost DP is not DuckDB-expressible without exponential
-    path enumeration).
-
-    Round 14: both tokenizer inductions (X40 BPE, X48 unigram seed)
-    run on the ``_BPE_CAP`` sample slice off ONE shared staged
-    word-frequency table, and the BPE greedy fits driver-side over
-    that model-sized table (``fit='driver'``, pinned == the Spark
-    loop) — the slot's eager build cost is one corpus-slice scan
-    instead of k job rounds plus two separate scans."""
-    parts = sampling_splits_parts(spark, sf_dir)
-    out = None
-    for df in parts.values():
-        out = df if out is None else out.unionByName(df)
-    return out
-
-
-def sampling_splits_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFrame]":
-    """Per-section frames of ``sampling_splits``, keyed by ``kind`` tag.
-
-    The registered query is EXACTLY the union of these values in dict
-    order — same frames, same union order, gate plan untouched — so
-    ``bench.py`` can time each section separately (the per-section
-    attribution map in BENCH_DETAIL.json; r11 verdict item 1).
-    Calling this runs the slot's eager-at-build work once (the BPE
-    learn loop's localCheckpoints and the mixture-target totals
-    collect); bench reports that as the slot's ``parts_build`` time,
-    so a BPE-learn regression shows there rather than vanishing.
+    Both tokenizer inductions run on the ``_BPE_CAP`` sample slice off
+    one staged word-frequency table, and the BPE greedy fits on the
+    driver (``fit='driver'``).  Building the dict runs two jobs: the
+    BPE type-table collect and the mixture token-totals collect.
     """
     docs = load_table(spark, sf_dir, "documents")
     splits = (
@@ -1427,18 +1207,11 @@ def sampling_splits_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFr
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.lit("host_cap").alias("kind"), "key", "cnt")
     )
-    # Learn AND encode run on the _BPE_CAP sample slice — see the cap's
-    # comment above the registered oracle (tokenizer induction is
-    # sample-based at scale).  Round 14: ONE word-frequency scan feeds
-    # BOTH tokenizer inductions (bpe_learn and unigram_seed share the
-    # staged (w, freq) type table), and the BPE greedy runs
-    # fit='driver' — k merges cost one type-table job instead of k
-    # scheduler round-trips (driver == spark pinned in pytest; the
-    # type table of a 600-doc slice is ~10³ rows, far under the 1M
-    # collect guard).  parts_build dropped ~4 s → ~1.5 s idle.
+    # the type table of a 600-doc slice is ~10³ rows, far under the
+    # driver fit's 1M collect guard
     bdocs = docs.where(F.col("doc_id") < _BPE_CAP)
-    # lazy checkpoint (r14): the BPE driver fit's type-table collect is
-    # the materializing action; the unigram seed then reads the blocks
+    # lazy checkpoint: the BPE driver fit's type-table collect is the
+    # materializing action; the unigram seed then reads the blocks
     wf = textstats.bpe_word_freqs(bdocs, "text").localCheckpoint(eager=False)
     learned = textstats.bpe_learn(
         bdocs, "text", k=_BPE_K, word_freqs=wf, fit="driver"
@@ -1451,9 +1224,6 @@ def sampling_splits_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFr
         ).alias("key"),
         "cnt",
     )
-    # X40's ENCODE half at the gate: apply the merges just LEARNED to
-    # the same corpus and hash the per-source fertility sums — any
-    # cross-engine segmentation difference on any word shifts a sum
     fert = (
         textstats.bpe_encode(bdocs, "text", "doc_id", learned, extra_cols=("source",))
         .groupBy(F.col("source").cast("string").alias("grp"))
@@ -1471,11 +1241,6 @@ def sampling_splits_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFr
             F.col("val").cast("bigint").alias("cnt"),
         )
     )
-    # X45: per-source top-quarter by the 1e-6 fixed-point quality score
-    # (the DCLM-style per-source classifier threshold — "top 25% of
-    # each source" where absolute cutoffs would not transfer); md5
-    # tie-break inside tied q6 scores, id%7 sub-buckets for set
-    # sensitivity
     _, _, qual = textstats.quality_ratio_exprs(F.col("text"))
     tfrac = (
         top_frac_per_group(
@@ -1497,9 +1262,6 @@ def sampling_splits_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFr
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.lit("top_frac").alias("kind"), "key", "cnt")
     )
-    # X44: mixture epochs — targets derived from the corpus totals so
-    # the section's three behaviors (down-sample / 2⅓× up-sample /
-    # exact-1.0× no-partial boundary) hold at every SF
     mixdocs = docs.where(F.col("source").isin(list(_MIX_EPOCH_SOURCES))).select(
         "doc_id",
         F.col("source").cast("string").alias("source"),
@@ -1527,17 +1289,8 @@ def sampling_splits_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFr
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.lit("mix_epochs").alias("kind"), "key", "cnt")
     )
-    # X48 (round 12): the unigram-LM SEED candidate table — the only
-    # corpus-sized stage of Kudo-2018 induction (all chars + top-N
-    # multi-char substrings, corpus-weighted, (cnt DESC, piece ASC)
-    # tie-break), pure class-A integers; the EM/prune rounds are
-    # type-table-sized with driver-computed integer costs and stay
-    # pytest-pinned (the Viterbi DP is not SQL-expressible in DuckDB
-    # without exponential path enumeration)
-    # Round 14: the seed runs on the SAME _BPE_CAP sample slice and the
-    # SAME staged word-frequency table as the BPE fit (one corpus scan
-    # for both tokenizer inductions; sf0.01's 500 docs are all < 600,
-    # so the gate rows are byte-identical — the _EXACT_CAP discipline)
+    # the Viterbi-EM rounds after the seed are not DuckDB-expressible
+    # and stay pytest-pinned
     useed = textstats.unigram_seed_candidates(
         bdocs,
         "text",
@@ -1581,7 +1334,7 @@ _MIX_BUDGETS = {
 _WRS_K = 20
 _WRS_SALT = "wrs0"
 
-@register(
+@register_sections(
     "corpus_token_budget",
     f"""
 SELECT 'budget' AS section, doc_id, source, quality, n_tok,
@@ -1608,29 +1361,24 @@ FROM ({weighted_reservoir_sample_sql(
     )})
 """,
 )
-def q_corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-mixing recipe: per-source TOKEN budgets, best quality first
-    (``sampling.select_by_token_budget_stratified``) — "this many tokens
-    of each source" is the stage that turns a scored corpus into a
-    training mixture.  Execution: row-local quality score + token count
-    on the scan, quality bucketed into 1000 fixed bins, ONE tiny
-    per-(source, bin) aggregate (driver-small however big the corpus),
-    cumulative budget threshold resolved on that frame, broadcast
-    semi-join admits the keep-set — one shuffle of ≤ strata·bins rows
-    total.  Budgets cover partial / keep-all / zero / dropped strata.
-    Deterministic (no RNG), so the kept SET itself is hash-checked
-    against the DuckDB twin.
+def corpus_token_budget_sections(
+    spark: SparkSession, sf_dir: str
+) -> "dict[str, DataFrame]":
+    """Two data-mixing draws over the same scored corpus (row-local
+    1e-6-rounded quality score + token count), one ``section`` each:
 
-    ``section='wrs'`` (X70): deterministic WEIGHTED RESERVOIR SAMPLING
-    (Efraimidis & Spirakis A-ES over the house 60-bit md5 uniforms) —
-    20 docs per source ∝ (n_tok + 1), the "sample documents so token
-    mass is represented" draw; kept rows AND their ``wrs_rank`` are
-    hash-checked.  The ``ln()`` in the key is class C: the rank order
-    can only flip if two keys in one group sit within libm's ~2-ulp
-    spread of each other, and the measured min adjacent gap among the
-    audited top-21 keys is ~10¹² ulps at both sf0.01 and sf0.1
-    (ORACLES.md).  The k=1 ∝ w/Σw draw-probability law and the numpy
-    reference parity stay pytest-pinned."""
+    - ``budget``: :func:`select_by_token_budget_stratified` — per-source
+      token budgets filled best quality first.  Quality is bucketed into
+      1000 fixed bins, one per-(source, bin) aggregate resolves the
+      cumulative threshold, and a broadcast semi-join admits the
+      keep-set.  ``_MIX_BUDGETS`` covers partial, keep-all, zero and
+      dropped sources.
+    - ``wrs``: :func:`weighted_reservoir_sample` — Efraimidis–Spirakis
+      A-ES over md5 uniforms, ``_WRS_K`` docs per source with weight
+      ``n_tok + 1``; kept rows and their ``wrs_rank`` are hash-checked.
+      The ``ln()`` in the key is class C in ORACLES.md (measured key
+      gaps are ~10¹² ulps).
+    """
     from pyspark_dist_explore_spark.operators.dedup import normalize_text
     from pyspark_dist_explore_spark.operators.sampling import (
         select_by_token_budget_stratified,
@@ -1675,7 +1423,7 @@ def q_corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tok",
         F.col("wrs_rank").cast("int").alias("wrs_rank"),
     )
-    return budget.unionByName(wrs)
+    return {"budget": budget, "wrs": wrs}
 
 
 # --------------------------------------------------------------------------
@@ -1968,7 +1716,7 @@ SELECT doc_id AS chunk_id, n_tokens, CAST(domain AS INT) AS bucket,
 FROM rel"""
 
 
-@register(
+@register_sections(
     "pack_sequences",
     chunk_pack_modes_sql(
         "documents",
@@ -1997,79 +1745,38 @@ FROM ({bucket_batches_sql(
     )})
 """,
 )
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-batch shaping end-to-end: stride-window CHUNKING
-    (``chunk_documents``: ≤128-token windows, 16-token overlap — pure
-    row-local tokenize → slice → posexplode, no shuffle) → doc-major
-    bigint chunk ids → sequence PACKING under BOTH modes (round 6):
-    cumsum (md5-bucket shard → per-bucket exclusive running token count
-    → floor-division pack ids — pure window SQL, ONE exchange,
-    plan-pinned in tests/test_plans.py) AND greedy (the strict ≤-budget
-    first-fit real training dumps use — ``applyInPandas`` over (id,
-    count) pairs only), mode-tagged and unioned.  The DuckDB twin
-    renders the identical chunk arithmetic, bucket hash, window frame,
-    and — via a recursive CTE carrying the same first-fit loop state —
-    the greedy assignment, so chunk boundaries and BOTH pack
-    assignments are hash-checked end-to-end.  Plain no-chunk packing
-    keeps its own DuckDB-parity pytest
-    (tests/test_ops.py::test_pack_sequences_cumsum_matches_duckdb).
+def pack_sequences_sections(
+    spark: SparkSession, sf_dir: str
+) -> "dict[str, DataFrame]":
+    """Training-batch shaping, one section per ``mode`` tag, all in the
+    ``(mode, chunk_id, n_tokens, bucket, pack_id, oversize)`` schema.
 
-    Round 12 adds ``mode='related'`` — X50 SEMANTIC-LOCALITY packing
-    (:func:`~pyspark_dist_explore_spark.operators.packing.
-    pack_related_documents`, the in-context-pretraining shape, Shi et
-    al. 2023): whole docs packed WITHIN fixed embedding domains in
-    JL-projection order so related documents share a context window;
-    domain labels, the exact-integer ordering keys, pack boundaries,
-    and oversize flags are all hash-checked (1e-6-grid inputs, round@6
-    argmax, md5 planes — the ``embedding_quantize`` disciplines).
+    Documents are first cut by :func:`chunk_documents` into ≤128-token
+    windows with 16-token overlap (row-local, no shuffle) and given
+    doc-major BIGINT chunk ids; that small id frame is staged with a
+    lazy ``localCheckpoint`` because four sections read it.
 
-    Round 13 adds ``mode='ffd'`` — X62 FIRST-FIT-DECREASING bin packing
-    (the ~15%-fewer-packs mode, Johnson's 11/9·OPT+1 bound) promoted to
-    the driver gate: the DuckDB twin replays the per-bucket first-fit
-    scan as a recursive CTE whose loop state is the open-pack capacity
-    LIST itself (``list_position`` over a ``c >= n`` transform = the
-    numpy first-fit argmax), so the decreasing order, capacity
-    decrements, giant-doc solo packs, and every placement are
-    hash-checked end-to-end.
-
-    Round 14 adds ``mode='span'`` — X65 PACK SPAN MAPS over the FFD
-    packs (:func:`~pyspark_dist_explore_spark.operators.packing.
-    pack_span_map`): the per-(pack, chunk) half-open token span
-    ``[start, end)`` in FFD concatenation order — the dataloader's
-    attention-mask/loss-mask input, ONE window over budget-bounded
-    packs.  Spans are exact BIGINTs (class A); the shared section
-    schema carries ``start`` in ``bucket`` and ``end`` in ``oversize``
-    (both < 2³¹: spans are bounded by the 512-token pack budget), so
-    every offset of every pack hash-checks cross-engine.
-
-    Round 14b adds ``mode='batch'`` — X72 LENGTH-BUCKETED BATCH SHAPING
-    (:func:`~pyspark_dist_explore_spark.operators.packing.
-    bucket_batches`): whole docs sorted by token count and cut into
-    16-doc batches via the X53 two-level rank (per-length counts +
-    within-length rank — NO global sort), each batch padding only to
-    its own max.  ``pos_in_batch`` rides ``bucket``, ``batch_id`` rides
-    ``pack_id``, the per-row pad rides ``oversize`` — exact integers,
-    class A; the padding-waste A/B (bucketed ≈ 28× below arrival-order
-    batches on this corpus) stays pytest-pinned."""
-    parts = pack_sequences_parts(spark, sf_dir)
-    out = None
-    for df in parts.values():
-        out = df if out is None else out.unionByName(df)
-    return out
-
-
-def pack_sequences_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFrame]":
-    """Per-mode frames of ``pack_sequences``, keyed by ``mode`` tag —
-    the registered query is exactly the union of these values in dict
-    order (see :func:`sampling_splits_parts`)."""
+    - ``cumsum`` / ``greedy`` / ``ffd``: :func:`pack_sequences` under
+      each mode — md5-bucket shard plus exclusive running token count
+      (one exchange), strict ≤-budget first-fit, and
+      first-fit-decreasing.  The DuckDB twin replays first-fit as a
+      recursive CTE, so every placement is hash-checked.
+    - ``span``: :func:`pack_span_map` over the FFD packs — the
+      half-open ``[start, end)`` token span of each chunk, carried in
+      ``bucket``/``oversize``.  The FFD packing is staged so it runs once
+      for ``ffd`` and ``span``.
+    - ``related``: :func:`pack_related_documents` — whole docs packed
+      within fixed embedding domains (unit embeddings of vec_id <
+      ``_REL_CELLS``) in exact-integer JL order; ``bucket`` carries the
+      domain.
+    - ``batch``: :func:`bucket_batches` — whole docs sorted by token
+      count and cut into 16-doc batches; ``pos_in_batch``, ``batch_id``
+      and the per-row pad ride ``bucket``, ``pack_id`` and ``oversize``.
+    """
     docs = load_table(spark, sf_dir, "documents")
     chunks = chunk_documents(
         docs, "text", "doc_id", max_tokens=_CHUNK_MAX, overlap=_CHUNK_OVERLAP
     )
-    # staged (r14 opt): FOUR union branches (cumsum/greedy/ffd + span
-    # via ffd) re-derive the chunk-id frame from the text scan — one
-    # lazy localCheckpoint of the small (chunk_id, n_tokens, bucket)
-    # rows tokenizes/chunks the corpus once (guide §2.4)
     ids = chunk_ids(chunks).localCheckpoint(eager=False)
     out = []
     ffd_packed = None
@@ -2083,9 +1790,6 @@ def pack_sequences_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFra
             mode=mode,
         )
         if mode == "ffd":
-            # staged: the span section windows over the SAME ffd packing
-            # — checkpoint so the per-bucket FFD pass runs once, not
-            # once for 'ffd' and again for 'span'
             packed = packed.localCheckpoint(eager=False)
             ffd_packed = packed
         out.append(
@@ -2098,10 +1802,7 @@ def pack_sequences_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFra
                 "oversize",
             )
         )
-    # X65 (round 14): span map over the FFD packs — the trainer-facing
-    # [start, end) token offsets in FFD concatenation order; start/end
-    # ride the shared schema as bucket/oversize (bounded by the pack
-    # budget, so the INT casts are exact)
+    # start/end are bounded by the pack budget, so the INT casts are exact
     span = pack_span_map(ffd_packed, order="ffd").select(
         F.lit("span").alias("mode"),
         F.col("doc_id").alias("chunk_id"),
@@ -2110,12 +1811,9 @@ def pack_sequences_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFra
         "pack_id",
         F.col("end").cast("int").alias("oversize"),
     )
-    # X50 (round 12): the SEMANTIC-LOCALITY mode — whole docs packed
-    # within fixed embedding domains, ordered by the exact-integer JL
-    # key over the 1e-6 grid (assign_round=6 argmax + md5 planes: the
-    # embedding_quantize section disciplines), so domain labels, order,
-    # pack boundaries, and oversize flags all hash-check cross-engine;
-    # docs without an embedding pack together under domain -1
+    # inputs on the 1e-6 grid with a round@6 argmax and md5 planes keep
+    # the JL order key exact; docs without an embedding pack together
+    # under domain -1
     emb6 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
@@ -2145,12 +1843,6 @@ def pack_sequences_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFra
         "pack_id",
         "oversize",
     )
-    # X72 (round 14b): length-bucketed BATCH shaping over whole docs —
-    # the non-packing half of batch prep (one sequence per slot, each
-    # batch pads only to its own max).  pos_in_batch rides `bucket`,
-    # batch_id rides `pack_id`, the per-row pad rides `oversize` (all
-    # exact ints < 2^31 — class A); the 28x padding-waste A/B vs
-    # arrival-order batches stays pytest-pinned.
     batch = bucket_batches(docs, "doc_id", batch_size=16, text_col="text").select(
         F.lit("batch").alias("mode"),
         F.col("id").alias("chunk_id"),
@@ -2176,50 +1868,7 @@ def pack_sequences_parts(spark: SparkSession, sf_dir: str) -> "dict[str, DataFra
 _UNIT_CTE = f"u AS (SELECT vec_id, {_UNIT.format(v='ve')} AS uv FROM v)"
 
 
-#: deregistered round 6 (merged into ``vector_exact_search``);
-#: originals stay callable, oracles pinned in tests/test_ops.py
-VECTOR_TOPK_ORACLE = f"""
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-{_UNIT_CTE},
-q AS (SELECT vec_id AS query_id, uv AS qv FROM u WHERE vec_id < 5),
-scored AS (
-  SELECT q.query_id, u.vec_id, round(list_dot_product(qv, uv), 6) AS cos_sim
-  FROM u, q WHERE u.vec_id <> q.query_id
-)
-SELECT query_id, CAST(rank AS INT) AS rank, vec_id, cos_sim FROM (
-  SELECT query_id, vec_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 5
-"""
-
-
-def q_vector_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for query vectors vec_id < 5."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.exact_topk(emb, queries, k=5, query_id_col="query_id")
-
-
 _COS_THRESHOLD = 0.45
-
-VECTOR_PAIRS_ORACLE = f"""
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-{_UNIT_CTE}
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_dot_product(a.uv, b.uv), 6) AS cos_sim
-FROM u a JOIN u b ON a.vec_id < b.vec_id
-WHERE round(list_dot_product(a.uv, b.uv), 6) >= {_COS_THRESHOLD}
-"""
-
-
-def q_vector_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (exact all-pairs form)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_neardup_pairs(emb, threshold=_COS_THRESHOLD)
-
 
 #: fixed semantic-dedup cells for the oracle-checked variant: the unit
 #: embeddings of vec_id < _SEMDEDUP_CELLS act as centroids — data-derived
@@ -2238,7 +1887,7 @@ _SEMDEDUP_CELLS = 4
 _EXACT_CAP = 600
 
 
-@register(
+@register_sections(
     "vector_exact_search",
     f"""
 WITH RECURSIVE v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
@@ -2322,42 +1971,33 @@ FROM (
 ) WHERE rank <= 5
 """,
 )
-def q_vector_exact_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact (ground-truth) similarity-search surface in one slot
-    (merged round 6 from ``vector_topk_exact`` + ``vector_neardup_pairs``;
-    round 7 adds the DETERMINISTIC ``semantic_dedup`` variant AND the
-    md5-plane LSH ANN): broadcast-Q brute-force cosine top-5, the
-    all-pairs near-dup list at the 0.45 threshold, SemDeDup with FIXED
-    centroids (the unit embeddings of vec_id < 4 — fit-free, so the
-    whole cell-assign → within-cell pairs → survivor-resolution chain is
-    DuckDB-hash-checked; the KMeans-fit form is the library default,
-    pytest-pinned), and ``kind='lsh'``: the random-hyperplane ANN with
-    ``hash_fn='md5'`` planes — bucketing, probe, and exact re-rank all
-    hash-checked (the same md5-variant move as MinHash/SimHash; xxhash64
-    stays the library default and runs in ``vector_ann_topk``).
-    Schema-aligned ``(kind, id_a, id_b, rank, cos_sim)`` and unioned —
-    for semdedup rows id_b carries cluster_id and rank carries
-    is_survivor.  The exact baselines remain what the ANN/LSH paths are
-    recall-pinned against; standalone builders stay callable with their
-    oracles pinned in pytest."""
-    p = vector_exact_search_parts(spark, sf_dir)
-    return (
-        p["topk"]
-        .unionByName(p["pairs"])
-        .unionByName(p["semdedup"])
-        .unionByName(p["lsh"])
-        .unionByName(p["hardneg"])
-    )
-
-
-def vector_exact_search_parts(
+def vector_exact_search_sections(
     spark: SparkSession, sf_dir: str
 ) -> "dict[str, DataFrame]":
-    """Per-section frames of ``vector_exact_search``, keyed by ``kind``
-    tag — the registered query unions them in its original order
-    (topk, pairs, semdedup, lsh; see ``sampling_splits_parts``).
-    Building the dict runs ``semantic_dedup``'s eager ``stage=True``
-    localCheckpoint once; bench attributes it as ``parts_build``."""
+    """Exact (ground-truth) similarity search and the deterministic
+    forms of its scale paths, one section per ``kind`` tag, all in the
+    ``(kind, id_a, id_b, rank, cos_sim)`` schema.  Queries are the
+    vectors with vec_id < 5.
+
+    - ``topk``: :func:`similarity.exact_topk` brute-force cosine top-5
+      over the ``_EXACT_CAP`` corpus.
+    - ``pairs``: :func:`similarity.cosine_neardup_pairs` — all pairs of
+      the capped corpus at cosine ≥ ``_COS_THRESHOLD``.
+    - ``semdedup``: :func:`similarity.semantic_dedup` with fixed
+      centroids (unit embeddings of vec_id < ``_SEMDEDUP_CELLS``), so
+      cell assignment, within-cell pairs and survivor resolution are
+      hash-checked; ``id_b`` carries cluster_id and ``rank``
+      is_survivor.
+    - ``lsh``: :func:`similarity.ann_lsh_topk` with md5 planes — bucket,
+      probe and exact re-rank.
+    - ``hardneg``: :func:`similarity.mine_hard_negatives` — per-query
+      top-5 below the dup threshold, on the same cosine grid as
+      ``topk``.
+
+    The exact sections are the baselines the ANN paths are
+    recall-pinned against.  Building the dict runs ``semantic_dedup``'s
+    ``stage=True`` localCheckpoint.
+    """
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -2365,11 +2005,8 @@ def vector_exact_search_parts(
     # the exact audit sections search the capped corpus (see _EXACT_CAP);
     # the scale-path sections below (semdedup, lsh) search the full table
     embe = emb.where(F.col("vec_id") < _EXACT_CAP)
-    # r14 opt: 'topk' and 'hardneg' rank the SAME (query × capped
-    # corpus) cosine grid — compute it once (exact_scores), stage the
-    # tiny (query_id, vec_id, cos_sim) frame, feed both rankings via
-    # scores= (guide §2.4; arithmetic stays single-sourced in the
-    # library, so the oracle twins are untouched)
+    # 'topk' and 'hardneg' rank the same (query × capped corpus) cosine
+    # grid: compute and stage it once, feed both rankings via scores=
     grid = similarity.exact_scores(
         embe, queries, query_id_col="query_id"
     ).localCheckpoint(eager=False)
@@ -2382,12 +2019,9 @@ def vector_exact_search_parts(
         F.col("rank").cast("int").alias("rank"),
         "cos_sim",
     )
-    # n_blocks=1 (r14 opt, the semdedup precedent): the section corpus
-    # is gate-bounded at _EXACT_CAP, so one ≤600² matmul is trivially
-    # memory-safe and the n_blocks² group fan-out is pure task overhead
-    # — A/B warm min-of-3: 1.00 s (8 blocks) → 0.63 s (1 block),
-    # identical pair rows (the tiling partitions the same pair space).
-    # The library default stays 8 for unbounded corpora.
+    # n_blocks=1: the corpus is bounded by _EXACT_CAP, so one ≤600²
+    # matmul is memory-safe and the n_blocks² group fan-out is pure task
+    # overhead (the tiling partitions the same pair space)
     pairs = similarity.cosine_neardup_pairs(
         embe, threshold=_COS_THRESHOLD, n_blocks=1
     ).select(
@@ -2397,10 +2031,9 @@ def vector_exact_search_parts(
         F.lit(None).cast("int").alias("rank"),
         "cos_sim",
     )
-    # dim via the process-global (path, mtime)-keyed cache: ONE row fetch
-    # per corpus per process instead of per plan construction (round-7
-    # judge nit); the md5 plane vectors then inline as literals (256
-    # signs computed once, not per row — see lsh_bucket)
+    # dim via the process-global (path, mtime)-keyed cache: one row fetch
+    # per corpus per process; the md5 plane vectors then inline as
+    # literals (see lsh_bucket)
     lsh_dim = embedding_dim(spark, sf_dir)
     lsh = similarity.ann_lsh_topk(
         emb, queries, k=5, n_planes=4, hash_fn="md5", dim=lsh_dim
@@ -2418,17 +2051,14 @@ def vector_exact_search_parts(
     semdedup = similarity.semantic_dedup(
         emb,
         threshold=_COS_THRESHOLD,
-        n_blocks=1,  # blocking exists to bound per-task matmul memory;
-        # at the gate corpus (≤2k vectors in 4 cells) one block per cell
-        # is trivially bounded and saves the n_blocks² task fan-out —
-        # r13 A/B: 3.2 s vs 5.2 s warm at sf0.1, identical rows (the
-        # tiling partitions the same pair space).  The library default
-        # stays 4 for real corpora.
+        # blocking bounds per-task matmul memory; ≤2k vectors in 4
+        # cells fit one block per cell
+        n_blocks=1,
         centroids=cents,
         assign_round=6,
-        stage=True,  # checkpoint pairs once: the lazy propagation would
-        # re-execute the blocked matmul per round (measured 7.5-9 s vs
-        # ~2 s at sf0.1); same registry opt-in pattern as text_perplexity
+        # checkpoint the pairs once: the lazy propagation re-executes
+        # the blocked matmul per round
+        stage=True,
     ).select(
         F.lit("semdedup").alias("kind"),
         F.col("vec_id").alias("id_a"),
@@ -2436,11 +2066,6 @@ def vector_exact_search_parts(
         F.col("is_survivor").cast("int").alias("rank"),
         F.lit(None).cast("double").alias("cos_sim"),
     )
-    # kind='hardneg' (X73, round 14b): per-anchor top-5 BELOW the dup
-    # threshold — the contrastive-training hard-negative band, over the
-    # same capped corpus and the same audited round@6 cosine grid the
-    # topk/pairs sections hash-check (the DPR/ANCE mining shape; the
-    # ivf route + floor/oversample semantics stay pytest-pinned)
     hardneg = similarity.mine_hard_negatives(
         embe, queries, k=5, dup_threshold=_COS_THRESHOLD,
         query_id_col="query_id", scores=grid,
@@ -2542,48 +2167,32 @@ WHERE greatest(round(CAST(shared AS DOUBLE) / na.n_fp, 6),
 """
 
 
-def q_neardup_containment(
-    spark: SparkSession, sf_dir: str, *, stage: bool = False
-) -> DataFrame:
-    """Asymmetric containment detection (X16): the crawl near-dup shape
-    symmetric Jaccard misses — a short doc embedded verbatim in a long
-    boilerplate page scores low Jaccard but C(A→B)=|fp∩|/|fp(A)| ≈ 1.
-
-    Registered with the md5 winnowing variant so the ENTIRE chain
-    (fingerprints → max_df boilerplate drop → bucketed pair join →
-    per-direction ratios) is DuckDB-hash-checked; pairs flow only
-    through shared-fingerprint buckets (LSH-band family, never
-    all-pairs) and the max_df drop caps bucket width — 10× probe 1.17×
-    with pair output exactly 10×.
-
-    ``stage=False`` (default) is FULLY LAZY — constructing the frame
-    runs no jobs (the lazy plan re-derives the fingerprint build 4×).
-    ``stage=True`` (what the registry passes) localCheckpoints the
-    winnowing fingerprints ONCE and feeds them via ``fp_rows=`` —
-    measured A/B at sf0.1: staged 2.3 s warm vs lazy 6.7 s, identical
-    263 pairs; blocks release when the result is garbage-collected."""
-    from pyspark_dist_explore_spark.operators.dedup import containment_pairs
-    from pyspark_dist_explore_spark.operators.textstats import winnowing_fingerprints
-
-    docs = load_table(spark, sf_dir, "documents")
-    fps = None
-    if stage:
-        fps = winnowing_fingerprints(
-            docs, "text", "doc_id", k=5, window=4, hash_fn="md5"
-        ).localCheckpoint(eager=False)
-    return containment_pairs(
-        docs, "text", "doc_id", threshold=0.5, hash_fn="md5", max_df=50, fp_rows=fps
-    )
-
-
 @register(
     "neardup_containment",
     _containment_oracle(threshold=0.5, max_df=50, k=5, window=4),
 )
-def _q_neardup_containment_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered form of :func:`q_neardup_containment` — opts in to the
-    eager staged-fingerprint build (``stage=True``)."""
-    return q_neardup_containment(spark, sf_dir, stage=True)
+def q_neardup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Asymmetric containment detection: the crawl near-dup shape
+    symmetric Jaccard misses — a short doc embedded verbatim in a long
+    boilerplate page scores low Jaccard but C(A→B)=|fp∩|/|fp(A)| ≈ 1.
+
+    Runs :func:`dedup.containment_pairs` with md5 winnowing, so the whole
+    chain (fingerprints → max_df boilerplate drop → bucketed pair join →
+    per-direction ratios) is DuckDB-hash-checked.  Pairs flow only
+    through shared-fingerprint buckets, never all-pairs, and the max_df
+    drop caps bucket width.  The winnowing fingerprints are staged with
+    a lazy ``localCheckpoint`` and fed via ``fp_rows=``; otherwise the
+    plan re-derives them four times."""
+    from pyspark_dist_explore_spark.operators.dedup import containment_pairs
+    from pyspark_dist_explore_spark.operators.textstats import winnowing_fingerprints
+
+    docs = load_table(spark, sf_dir, "documents")
+    fps = winnowing_fingerprints(
+        docs, "text", "doc_id", k=5, window=4, hash_fn="md5"
+    ).localCheckpoint(eager=False)
+    return containment_pairs(
+        docs, "text", "doc_id", threshold=0.5, hash_fn="md5", max_df=50, fp_rows=fps
+    )
 
 
 #: fixed IVF cells for the oracle-checked deterministic form — the unit
@@ -2889,23 +2498,6 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: deregistered round 4 — its three columns are a strict subset of the
-#: merged ``text_stats`` profile; still callable, oracle-pinned in tests
-TEXT_QUALITY_ORACLE = f"""
-SELECT doc_id,
-       round({_alpha_ratio_sql('text')}, 6) AS alpha_ratio,
-       round({_punct_ratio_sql('text')}, 6) AS punct_ratio,
-       {_quality_sql('text')} AS quality
-FROM documents
-"""
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic document quality score in [0, 1]."""
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.quality_score(docs, "text", "doc_id")
-
-
 #: the registered C4 gate's sentence floor — chosen so the page-level
 #: rule MIXES on the md5-punctuated word-salad corpus (272 kept / 228
 #: dropped at sf0.01; the injected sentence-mark median is ~33)
@@ -3030,85 +2622,35 @@ JOIN il ON s.doc_id = il.doc_id
 """
 
 
-def _rep_battery_oracle() -> str:
-    """DuckDB twin of :func:`rep_battery_frame` — the X32 pivoted
-    exact-integer Gopher battery numerators over the ECHO adapter.
-    Rode the ``text_scrub_repetition`` gate rounds 10–12; retired from
-    the bench path in round 13 (the 2.2 s audit companion dominated the
-    slot while X32's arithmetic is already lib-pinned) and kept
-    hash-pinned here via ``tests/test_plans.py``."""
-    return f"""
-WITH rb AS ({textstats.gopher_repetition_sql(
-    "SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN concat_ws(' ', text, text) "
-    "ELSE text END AS text FROM documents",
-    top_ns=(2,), dup_ns=(5,))})
-SELECT doc_id,
-       max(CASE WHEN n = 2 THEN top_gram END) AS rb2_top_gram,
-       CAST(max(CASE WHEN n = 2 THEN top_cnt END) AS BIGINT) AS rb2_top_cnt,
-       CAST(max(CASE WHEN n = 2 THEN top_chars END) AS BIGINT) AS rb2_top_chars,
-       CAST(max(CASE WHEN n = 2 THEN dup_excess_chars END) AS BIGINT) AS rb2_dup_excess_chars,
-       max(CASE WHEN n = 5 THEN top_gram END) AS rb5_top_gram,
-       CAST(max(CASE WHEN n = 5 THEN top_cnt END) AS BIGINT) AS rb5_top_cnt,
-       CAST(max(CASE WHEN n = 5 THEN top_chars END) AS BIGINT) AS rb5_top_chars,
-       CAST(max(CASE WHEN n = 5 THEN dup_excess_chars END) AS BIGINT) AS rb5_dup_excess_chars,
-       CAST(max(word_chars) AS BIGINT) AS rb_word_chars
-FROM rb GROUP BY doc_id
-"""
-
-
-REP_BATTERY_ORACLE = _rep_battery_oracle()
-
-
-@register("text_scrub_repetition", _scrub_repetition_oracle())
-def q_text_scrub_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curation signals in one doc-level result: PII-style scrubbing
-    (email/URL/phone counts + md5 of the redacted text, so the
-    TRANSFORMATION is verified, not just the counts) joined with
-    Gopher-style repetition measures (dup-token fraction, top-bigram
-    fraction) — since round 6, the X19 FineWeb-style line-level dedup
-    columns (md5 of the rebuilt text + kept/dropped counts at
-    ``sep=' '``/``min_df=2``, so the doc-frequency → anti-join →
-    ordered-rebuild chain is hash-checked at the driver gate; the
-    newline-separator form stays twin-pinned in pytest) — and, since
-    round 8, the X23 ExactSubstr-style duplicate-SPAN removal columns
-    (``k=8``-token grams duplicated ≥2× corpus-wide, every covered
-    token removed: md5 of the span-deduped rebuild + kept/dropped token
-    counts + duplicated-window count, so the gram build → corpus-wide
-    duplicate detection → coverage → ordered-rebuild chain is
-    hash-checked end-to-end).  All four are the real pre-training
-    filters a corpus pipeline runs before quality scoring.
-
-    Round 13: the X32 ``rep_battery`` companion (pivoted Gopher battery
-    numerators over the ECHO adapter) is RETIRED from this slot — it was
-    2.2 s of the slot's 5.4 s bench cost while the battery's arithmetic
-    is already lib-pinned four ways in ``tests/test_ops.py``; the gate
-    section stays callable as :func:`rep_battery_frame` and hash-pinned
-    against :data:`REP_BATTERY_ORACLE` in ``tests/test_plans.py``."""
-    p = text_scrub_repetition_parts(spark, sf_dir)
-    return (
-        p["scrub"]
-        .join(p["repetition"], "doc_id")
-        .join(p["line_dedup"], "doc_id")
-        .join(p["span_dedup"], "doc_id")
-        .join(p["c4"], "doc_id")
-        .join(p["intra_line"], "doc_id")
-    )
-
-
-def text_scrub_repetition_parts(
+@register_sections("text_scrub_repetition", _scrub_repetition_oracle(), on="doc_id")
+def text_scrub_repetition_sections(
     spark: SparkSession, sf_dir: str
 ) -> "dict[str, DataFrame]":
-    """Per-family frames of ``text_scrub_repetition`` (a JOIN of
-    doc-keyed column families rather than a tagged union): the
-    registered query joins them on ``doc_id`` in dict order.  Keys:
-    scrub, repetition, line_dedup, span_dedup, c4, intra_line (the X32
-    ``rep_battery`` companion moved to :func:`rep_battery_frame` in
-    round 13 — see the registered query's docstring).  Building the
-    dict runs the staged span-gram localCheckpoint once
-    (``parts_build`` in bench's attribution); each family frame is
-    independently collectable, so BENCH_DETAIL.json attributes the
-    slot's cost per family — family times sum to MORE than the slot
-    (each pays its own documents scan; the joined slot shares one)."""
+    """Doc-level curation signals, one doc_id-keyed column family per
+    section; the slot joins them on ``doc_id`` in dict order.
+
+    - ``scrub``: :func:`textstats.scrub_text` email/URL/phone counts
+      plus the md5 of the redacted text, so the transformation itself
+      is checked.
+    - ``repetition``: :func:`textstats.repetition_signals` (dup-token
+      and top-bigram fractions).
+    - ``line_dedup``: :func:`textstats.drop_repeated_lines` at
+      ``sep=' '``, ``min_df=2`` — md5 of the rebuilt text and
+      kept/dropped line counts.
+    - ``span_dedup``: :func:`textstats.drop_duplicate_spans` — 8-token
+      grams duplicated ≥2× corpus-wide are removed; md5 of the rebuild
+      plus kept/dropped token and duplicated-window counts.  The gram
+      frame is staged (lazy ``localCheckpoint``) because the duplicate
+      aggregate and the occurrence probe both read it.
+    - ``c4``: :func:`textstats.c4_clean` over the
+      :func:`textstats.inject_punctuation` corpus (the synthetic docs
+      carry no punctuation) with ``min_sentences=_C4_MIN_SENTENCES``.
+    - ``intra_line``: :func:`textstats.dedup_lines_within_doc` at
+      ``sep=' '`` — md5 of the rebuilt text and kept/dropped counts.
+
+    Each family is independently collectable, so per-section times sum
+    to more than the slot: each pays its own documents scan where the
+    joined slot shares one."""
     docs = load_table(spark, sf_dir, "documents")
     scrub = textstats.scrub_text(docs, "text", "doc_id").select(
         "doc_id", "n_email", "n_url", "n_phone", F.md5("scrubbed").alias("scrub_hash")
@@ -3120,12 +2662,6 @@ def text_scrub_repetition_parts(
         "n_lines_kept",
         "n_lines_dropped",
     )
-    # staged gram frame (lazy localCheckpoint, the accepted registry
-    # opt-in): the grams feed BOTH the duplicate-detection aggregate and
-    # the occurrence probe — staging them once measured 2.10 → 1.56 s at
-    # sf0.1, and materializing them inside the first consuming action
-    # instead of a build-time job took the slot 3.78 → 3.32 s (r14;
-    # the 100 TB form lands them to parquet)
     grams = textstats.span_grams(docs, "text", "doc_id", k=8).localCheckpoint(
         eager=False
     )
@@ -3138,11 +2674,7 @@ def text_scrub_repetition_parts(
         F.col("n_tok_dropped").alias("n_span_tok_dropped"),
         "n_dup_spans",
     )
-    # X37 (round 9): C4 cleaning heuristics over the md5-punctuated
-    # corpus (inject_punctuation — the synthetic docs carry no
-    # punctuation, so the adapter makes every line/sentence rule fire
-    # at engine-reproducible places); the md5 verifies WHICH lines the
-    # line-level rules retained, in order
+    # the md5 verifies WHICH lines the line-level rules retained, in order
     inj = docs.select(
         "doc_id", textstats.inject_punctuation(F.col("text")).alias("text")
     )
@@ -3152,11 +2684,6 @@ def text_scrub_repetition_parts(
         "doc_id", "c4_n_lines", "c4_n_kept_lines", "c4_kept_md5",
         "c4_n_sentences", "c4_keep",
     )
-    # X19b (round 10): the INTRA-doc first-occurrence line dedup beside
-    # X19's cross-doc columns — same sep=' ' corpus adapter, md5 of the
-    # rebuilt text so the window → first-occurrence → ordered-rebuild
-    # chain is hash-checked (the newline form stays twin-pinned in
-    # tests/test_ops.py)
     idl = textstats.dedup_lines_within_doc(
         docs, "text", "doc_id", sep=" "
     ).select(
@@ -3175,93 +2702,9 @@ def text_scrub_repetition_parts(
     }
 
 
-def rep_battery_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X32 (round 10): the Gopher repetition battery's EXACT-INTEGER
-    numerators for n ∈ {2, 5} — one size from the top-gram family,
-    one from the duplicate-gram family, pivoted wide per doc (the
-    full 2..10 stack stays pytest-twin-pinned: nine sizes would
-    multiply the unpivot rows ~4.5× for no extra code path).
-    The @6-rounded fractions are derivable (numerator / rb_word_chars)
-    and stay pytest-side per the class-A gate rule.  Input rides the
-    ECHO adapter (doc_id % 3 docs get their text doubled — the
-    inject_punctuation convention): the word-salad corpus never
-    repeats a 5-gram naturally, so without it every rb5 numerator is
-    a constant 0/1 and the dup-gram arithmetic would go unchecked.
-
-    Rode the ``text_scrub_repetition`` driver gate rounds 10–12;
-    retired from the bench path in round 13 (the audit companion was
-    2.2 s of the slot) and kept hash-pinned against
-    :data:`REP_BATTERY_ORACLE` in ``tests/test_plans.py``."""
-    docs = load_table(spark, sf_dir, "documents")
-    echoed = docs.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 3 == 0, F.concat_ws(" ", "text", "text")
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    rb = textstats.gopher_repetition_battery(
-        echoed, "text", "doc_id", top_ns=(2,), dup_ns=(5,)
-    )
-
-    def _at(n: int, col: str, alias: str):
-        return F.max(F.when(F.col("n") == n, F.col(col))).alias(alias)
-
-    return rb.groupBy("doc_id").agg(
-        _at(2, "top_gram", "rb2_top_gram"),
-        _at(2, "top_cnt", "rb2_top_cnt"),
-        _at(2, "top_chars", "rb2_top_chars"),
-        _at(2, "dup_excess_chars", "rb2_dup_excess_chars"),
-        _at(5, "top_gram", "rb5_top_gram"),
-        _at(5, "top_cnt", "rb5_top_cnt"),
-        _at(5, "top_chars", "rb5_top_chars"),
-        _at(5, "dup_excess_chars", "rb5_dup_excess_chars"),
-        F.max("word_chars").alias("rb_word_chars"),
-    )
-
-
-def _lang_id_oracle() -> str:
-    padded = f"concat(' ', {_NORM.format(c='text')}, ' ')"
-    langs = sorted(textstats.LANG_MARKERS)
-    score_exprs = _lang_score_sql()
-    return f"""
-WITH p0 AS (SELECT doc_id, {padded} AS p FROM documents),
-scored AS (
-  SELECT doc_id,
-         {", ".join(f"{score_exprs[lang]} AS score_{lang}" for lang in langs)}
-  FROM p0
-)
-SELECT doc_id, {", ".join(f"score_{lang}" for lang in langs)},
-       {_lang_pred_case_sql()} AS lang_pred
-FROM scored
-"""
-
-
-#: deregistered round 6 — the lang columns now ride inside the merged
-#: ``text_stats`` projection (same scan); still callable, oracle pinned
-#: in tests/test_ops.py
-TEXT_LANG_ID_ORACLE = _lang_id_oracle()
-
-
-def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-marker language ID with deterministic argmax."""
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.language_id(docs, "text", "doc_id")
-
-
 # --------------------------------------------------------------------------
 # X5 second half: text vectorization (term frequencies + TF-IDF)
 # --------------------------------------------------------------------------
-
-
-def q_text_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relational CountVectorizer: per-document term frequencies.
-
-    No longer REGISTERED: its output is a strict projection of
-    ``text_tfidf``'s (doc_id, term, tf ⊂ tf, df_t, tfidf), so the driver
-    window slot is better spent elsewhere.  Kept callable; the tf values
-    stay oracle-pinned through the tfidf query."""
-    docs = load_table(spark, sf_dir, "documents")
-    return textstats.term_frequencies(docs, "text", "doc_id")
 
 
 @register(
@@ -3324,38 +2767,27 @@ FROM documents
 """
 
 
-def q_multimodal_features(
-    spark: SparkSession, sf_dir: str, *, stage: bool = False
-) -> DataFrame:
-    """Binary-column plumbing AND the deterministic half of the decode
-    pipeline, all hash-checked (round 8 — shrinks the rows-only surface
-    of ``multimodal_pipeline`` to genuinely codec-only columns):
+@register("multimodal_features", _MULTIMODAL_FEATURES_ORACLE)
+def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary-column plumbing and the deterministic half of the decode
+    pipeline, one ``modality`` tag per row family:
 
     - ``text`` rows: encode → mapInPandas (Arrow) feature extract; the
       md5-over-bytes in Python must equal DuckDB's md5 over the same
-      UTF-8 bytes — the batch shape carries payloads intact.
-    - ``image_meta`` rows: the REAL BMP pipeline runs (generate 3-frame
-      clips → decode → 8×8 resize → frame-sample fan-out) and emits its
-      deterministic outputs — payload byte size, resize dims, counted
-      frames — which must hash-match first-principles literals the
-      oracle computes from the BMP format spec (54-byte header +
-      4-aligned row stride), NOT from the codec under test.
-    - ``audio_meta`` rows: the REAL WAV decode runs (RIFF parse → 2×
-      decimate) and its sample_rate / decimated sample count /
-      duration must match the fixture arithmetic (8000 Hz, 4000
-      samples → '4000:500' and ⌈4000/2⌉).
+      UTF-8 bytes.
+    - ``image_meta`` rows: the BMP pipeline runs (generate 3-frame clips
+      → decode → 8×8 resize → frame-sample fan-out) and emits payload
+      byte size, resize dims and counted frames, which must match
+      literals the oracle derives from the BMP format spec (54-byte
+      header + 4-aligned row stride), not from the codec under test.
+      The generated payload frame is staged (lazy ``localCheckpoint``)
+      because its three consumers would each re-run the generation.
+    - ``audio_meta`` rows: the WAV decode runs (RIFF parse → 2×
+      decimate) and its sample rate, decimated sample count and
+      duration must match the fixture arithmetic.
 
-    A broken codec (wrong stride, off-by-one decimation, header
-    misparse) flips the value hash at the driver gate; only
-    content-derived values (pixel/rms/peak hashes of decoded arrays)
-    stay rows-only in ``multimodal_pipeline``.
-
-    ``stage=True`` (the registry's opt-in, repo staging pattern)
-    ``localCheckpoint``s the generated image payload frame: three
-    consumers (payload size, resize decode, frame-split count)
-    otherwise each re-run the BMP generation pass — measured 3.1 s lazy
-    vs 2.5 s staged at sf0.1; default False keeps construction
-    job-free."""
+    Content-derived values (pixel/rms/peak hashes of decoded arrays)
+    stay rows-only in ``multimodal_pipeline``."""
     docs = load_table(spark, sf_dir, "documents")
     payload = multimodal.attach_binary_payload(docs, "text", "doc_id")
     text_rows = multimodal.extract_features(payload)
@@ -3363,8 +2795,7 @@ def q_multimodal_features(
     img = multimodal.attach_image_payload(
         docs, "doc_id", width=_IMG_W, height=_IMG_H, n_frames=_IMG_FRAMES
     )
-    if stage:
-        img = img.localCheckpoint(eager=False)
+    img = img.localCheckpoint(eager=False)
     resized = multimodal.resize_images(
         img, width=_RESIZE_W, height=_RESIZE_H, decoder=multimodal.decode_bmp
     )
@@ -3398,14 +2829,6 @@ def q_multimodal_features(
         F.lit("audio_meta").alias("modality"),
     )
     return text_rows.unionByName(img_meta).unionByName(audio_meta)
-
-
-@register("multimodal_features", _MULTIMODAL_FEATURES_ORACLE)
-def _q_multimodal_features_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered form of :func:`q_multimodal_features` — opts in to the
-    staged image-payload build (``stage=True``, measured 3.1→2.5 s at
-    sf0.1: three consumers otherwise re-run the BMP generation pass)."""
-    return q_multimodal_features(spark, sf_dir, stage=True)
 
 
 # --------------------------------------------------------------------------
@@ -3777,98 +3200,56 @@ JOIN kstat ON ustat.doc_id = kstat.doc_id
 """
 
 
-def q_text_perplexity(
-    spark: SparkSession, sf_dir: str, *, stage: bool = False
-) -> DataFrame:
-    """X18 at the driver gate: per-doc statistics of BOTH self-trained
-    LMs — the Laplace unigram (CCNet-bucket stand-in) and the
-    interpolated bigram (word-order aware) — joined on doc_id.
+@register_sections("text_perplexity", _perplexity_oracle(), on="doc_id")
+def text_perplexity_sections(
+    spark: SparkSession, sf_dir: str
+) -> "dict[str, DataFrame]":
+    """Per-doc language-model statistics, one doc_id-keyed family per
+    section; the slot joins them on ``doc_id`` in dict order.  Every
+    column is an exact BIGINT from the scorers' ``count_stats=True``
+    aggregates, so tokenization, LM training counts and every scoring
+    join are hash-checked without ln/exp-derived doubles (the
+    ``mean_logprob``/``ppl`` outputs are DuckDB-twin-pinned in pytest).
 
-    Gate projection (round 7, transcendental-free): ``(doc_id, n_tok,
-    u_terms, u_mass, n_scored, b_hits, b_matched, ctx_mass)`` — all
-    exact BIGINTs from the scorers' ``count_stats=True`` aggregates.
-    They pin tokenization, LM training counts, and every scoring join
-    on ANY engine build; the round-6 projection hashed the
-    ln/exp-derived doubles and went red at the driver on a last-ulp
-    libm difference while reproducing green locally.  The exact double
-    ``mean_logprob``/``ppl`` surfaces (what a user filters on) stay the
-    scorers' default output and are DuckDB-twin-pinned in pytest where
-    the engine pair is controlled.
+    - ``unigram``: :func:`textstats.unigram_logprob_scores`, the Laplace
+      unigram LM.
+    - ``bigram``: :func:`textstats.bigram_logprob_scores`, the
+      interpolated bigram LM.
+    - ``dsir``: :func:`dsir_scores` importance statistics with the
+      doc_id % 10 = 0 slice as target and the whole corpus as raw.
+    - ``kn``: :func:`textstats.kn_bigram_logprob_scores`
+      continuation/fertility/context-total masses.
 
-    ``stage=False`` (default) is FULLY LAZY — constructing the frame
-    runs no jobs; each scorer tokenizes from the parquet scan itself.
-    ``stage=True`` (what the registry passes) builds the tokenize +
-    lag-window pair frame ONCE, ``localCheckpoint``s it, and feeds both
-    scorers through their staged inputs (``tf_rows=`` /
-    ``pairs_rows=``) — one corpus scan instead of eight across the
-    lazily re-derived LM subtrees.
+    The tokenize + lag-window pair frame is built once and staged (lazy
+    ``localCheckpoint``); all four families read it (``tf_rows=``,
+    ``pairs_rows=``, and the DSIR uni+bigram gram stream), so the slot
+    scans the corpus once instead of once per LM subtree."""
+    from pyspark.sql import Window
 
-    The DSIR section (round 8) shares that SAME frame: its uni+bigram
-    gram stream is exactly the pair rows (``tok`` / ``prev || ' ' ||
-    tok``), so the importance-statistics columns cost two ≤4096-row
-    bucket aggregates and one per-doc partial-aggregated groupBy — no
-    extra tokenize scan.  The X54 Kneser-Ney section (round 12) also
-    rides it — its ``kn_cont_mass``/``kn_fert_mass``/``kn_ctx_mass``
-    BIGINTs pin the continuation/fertility/context-total aggregates
-    that KN smoothing derives from the one bigram table."""
-    docs, tf, pairs, gram_rows = _perplexity_staged_inputs(
-        spark, sf_dir, stage=stage
-    )
-    return _perplexity_joined(docs, tf, pairs, gram_rows)
-
-
-def _perplexity_staged_inputs(
-    spark: SparkSession, sf_dir: str, *, stage: bool = True
-):
-    docs = load_table(spark, sf_dir, "documents")
-    if stage:
-        from pyspark.sql import Window
-
-        # the staged frames MUST tokenize exactly like the scorers' lazy
-        # paths — reuse the shared normalizer instead of hand-copying it
-        norm = dedup.normalize_text(F.col("text"))
-        toks = docs.select(
-            F.col("doc_id"), F.posexplode(F.split(norm, " ")).alias("idx", "tok")
-        ).where(F.col("tok") != "")
-        w = Window.partitionBy("doc_id").orderBy("idx")
-        pairs = toks.select(
-            "doc_id", "idx", "tok", F.lag("tok", 1).over(w).alias("prev")
-        ).localCheckpoint(eager=False)
-        tf = pairs.groupBy("doc_id", F.col("tok").alias("term")).agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-        # DSIR gram stream from the checkpointed pairs: every token is a
-        # unigram row; adjacent pairs are the bigram rows — identical
-        # strings to dsir_gram_rows' row-local build
-        gram_rows = pairs.select("doc_id", F.col("tok").alias("gram")).unionByName(
-            pairs.where(F.col("prev").isNotNull()).select(
-                "doc_id", F.concat_ws(" ", "prev", "tok").alias("gram")
-            )
-        )
-    else:
-        from pyspark_dist_explore_spark.operators.dsir import dsir_gram_rows
-
-        pairs = None
-        tf = None
-        gram_rows = dsir_gram_rows(docs, "text", "doc_id")
-    return docs, tf, pairs, gram_rows
-
-
-def _perplexity_joined(docs, tf, pairs, gram_rows) -> DataFrame:
-    frames = _perplexity_frames(docs, tf, pairs, gram_rows)
-    out = None
-    for part in frames.values():
-        out = part if out is None else out.join(part, "doc_id")
-    return out
-
-
-def _perplexity_frames(docs, tf, pairs, gram_rows) -> "dict[str, DataFrame]":
-    """The four per-doc statistic families ``text_perplexity`` joins —
-    exposed for the bench per-section attribution map (each family's
-    collect times its own real plan; the joined slot shares one staged
-    pair frame, so family times sum to MORE than the slot)."""
     from pyspark_dist_explore_spark.operators.dsir import dsir_scores
 
+    docs = load_table(spark, sf_dir, "documents")
+    # the staged frames MUST tokenize exactly like the scorers' lazy
+    # paths — reuse the shared normalizer instead of hand-copying it
+    norm = dedup.normalize_text(F.col("text"))
+    toks = docs.select(
+        F.col("doc_id"), F.posexplode(F.split(norm, " ")).alias("idx", "tok")
+    ).where(F.col("tok") != "")
+    w = Window.partitionBy("doc_id").orderBy("idx")
+    pairs = toks.select(
+        "doc_id", "idx", "tok", F.lag("tok", 1).over(w).alias("prev")
+    ).localCheckpoint(eager=False)
+    tf = pairs.groupBy("doc_id", F.col("tok").alias("term")).agg(
+        F.count(F.lit(1)).alias("tf")
+    )
+    # DSIR gram stream from the checkpointed pairs: every token is a
+    # unigram row; adjacent pairs are the bigram rows — identical
+    # strings to dsir_gram_rows' row-local build
+    gram_rows = pairs.select("doc_id", F.col("tok").alias("gram")).unionByName(
+        pairs.where(F.col("prev").isNotNull()).select(
+            "doc_id", F.concat_ws(" ", "prev", "tok").alias("gram")
+        )
+    )
     uni = textstats.unigram_logprob_scores(
         docs, "text", "doc_id", tf_rows=tf, count_stats=True
     ).select("doc_id", "n_tok", "u_terms", "u_mass")
@@ -3881,15 +3262,9 @@ def _perplexity_frames(docs, tf, pairs, gram_rows) -> "dict[str, DataFrame]":
         "b_matched",
         "ctx_mass",
     )
-    # X30 DSIR gate columns: target = the doc_id % 10 = 0 slice of the
-    # same corpus (the semantic-decontam eval-slice convention), raw =
-    # everything; only the class-A integer count statistics reach the
-    # gate — the ln-derived weights stay pytest-pinned
-    # (A combined-aggregate form — both count tables from ONE conditional
-    # aggregate, localCheckpoint'd — was A/B-measured SLOWER at sf0.1
-    # (1.0–1.3 s vs 0.6–0.8 s): the eager checkpoint action costs more
-    # than the lazy second aggregate it saves when the stream is an
-    # already-checkpointed local frame.  Keep the lazy twin-aggregate.)
+    # (One conditional aggregate building both DSIR count tables was
+    # measured slower: the checkpoint action costs more than the lazy
+    # second aggregate over an already-checkpointed local frame.)
     ds = dsir_scores(
         gram_rows=gram_rows,
         target_gram_rows=gram_rows.where(F.col("doc_id") % 10 == 0),
@@ -3903,32 +3278,10 @@ def _perplexity_frames(docs, tf, pairs, gram_rows) -> "dict[str, DataFrame]":
         "ds_t_hits",
         "ds_r_mass",
     )
-    # X54 KN columns (round 12): the continuation/fertility/context-
-    # total aggregates of the Kneser-Ney scorer, off the SAME staged
-    # pair frame — three vocab-sized aggregates + one per-doc groupBy
     kn = textstats.kn_bigram_logprob_scores(
         docs, "text", "doc_id", pairs_rows=pairs, count_stats=True
     ).select("doc_id", "kn_cont_mass", "kn_fert_mass", "kn_ctx_mass")
     return {"unigram": uni, "bigram": bi, "dsir": ds, "kn": kn}
-
-
-def text_perplexity_parts(
-    spark: SparkSession, sf_dir: str
-) -> "dict[str, DataFrame]":
-    """Per-family frames of ``text_perplexity`` for the bench
-    attribution map, over the SAME eager staged pair frame the
-    registered query uses (its localCheckpoint is the ``parts_build``
-    share)."""
-    docs, tf, pairs, gram_rows = _perplexity_staged_inputs(spark, sf_dir)
-    return _perplexity_frames(docs, tf, pairs, gram_rows)
-
-
-@register("text_perplexity", _perplexity_oracle())
-def _q_text_perplexity_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered form of :func:`q_text_perplexity` — opts in to the
-    eager one-scan staging (``stage=True``); direct library callers get
-    the lazy default."""
-    return q_text_perplexity(spark, sf_dir, stage=True)
 
 
 #: X47 fixed domain cells for the oracle-checked assignment: the unit
@@ -3961,7 +3314,7 @@ _PQ_GRID_SRC = (
 )
 
 
-@register(
+@register_sections(
     "embedding_quantize",
     f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
@@ -4062,65 +3415,39 @@ FROM ({similarity.ivf_pq_residual_sql(_PQ_GRID_SRC, m=_PQ_M, dim=_PQ_DIM, n_code
 GROUP BY query_id
 """,
 )
-def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X15 + X28 at the driver gate, two tagged sections over ONE
-    embeddings scan:
-
-    - ``section='codes'`` (promoted round 6): the affine int8
-      quantization codes for every vector — minmax fit, scale, half-up
-      round — rendered as a csv string so the driver hash-checks every
-      position of every vector.  The packed BINARY form is a pure byte
-      re-encode of these codes (round-trip + error-bound + recall
-      pinned in pytest); the packed IVF serving path is benchmarked via
-      ``vector_ann_topk``.
-    - ``section='pooled'`` (X28, registered late round 8): the REAL
-      :func:`similarity.mean_pool_embeddings` path (posexplode → one
-      (group,pos) map-side-combined aggregate → ordered re-assembly)
-      pooling each ``label`` group's vectors into one mean vector.  The
-      gate form discretizes inputs to the 1e-6 grid FIRST
-      (``round(x·10⁶)`` — exact integers in doubles), so every
-      per-position sum is exact and order-independent at any
-      parallelism, and the pooled mean (one IEEE division of identical
-      operands) rounds to an integer csv identically on both engines —
-      the same fixed-point discipline as ``corpus_profile``'s
-      avg_quality (ORACLES.md).  ``vec_id`` carries the label;
-      ``n_dims`` carries n_pooled.  The true float-mean + normalize
-      forms stay pytest-pinned (numpy + DuckDB twins @6dp).
-    - ``section='pq'`` + ``'pq_adc'`` (X64, round 13): PRODUCT
-      QUANTIZATION (Jégou et al. 2011) — per-subspace code assignment
-      over the ``fit='sample'`` codebooks and the compressed-domain ADC
-      top-5 serving path, both on the 1e-6 grid where every squared-L2
-      distance and ADC score is an exact integer, so assignment AND
-      ranking hash-check cross-engine; the ``fit='kmeans'`` codebooks
-      and the exactness/recall pins stay pytest-side.
-    - ``section='ivf_pq'`` (X66, round 14): the COMPOSED IVF-PQ serving
-      path over fixed artifacts — raw grid centroids (vec_id < 8,
-      unnormalized, so every coarse dot is an exact integer: class A
-      end-to-end with no rounding), the same sample codebooks the
-      ``'pq'`` sections check, the 4-probe candidate join, and the ADC
-      ranking restricted to candidates.  Proves the COMPOSITION
-      cross-engine, not just its parts.
-    - ``section='ivf_pq_res'`` (X69): the RESIDUAL-encoded IVFADC form
-      (Jégou et al. 2011 §III.C — PQ quantizes ``x − c(x)``, not the
-      raw vector) over the same fixed artifacts: squared-L2 coarse
-      assignment, elementwise grid residuals, sample residual
-      codebooks, and the decomposed ``q·c + Σ q·cv`` score — class A
-      end-to-end.  The quality claim (residual beats raw when coarse
-      cells outnumber codes — the 100 TB regime) stays pytest-pinned.
-    """
-    parts = embedding_quantize_parts(spark, sf_dir)
-    out = None
-    for df in parts.values():
-        out = df if out is None else out.unionByName(df)
-    return out
-
-
-def embedding_quantize_parts(
+def embedding_quantize_sections(
     spark: SparkSession, sf_dir: str
 ) -> "dict[str, DataFrame]":
-    """Per-section frames of ``embedding_quantize``, keyed by
-    ``section`` tag — the registered query is exactly the union of
-    these values in dict order (see :func:`sampling_splits_parts`)."""
+    """Embedding compression and clustering, one section per
+    ``section`` tag, all in the ``(section, vec_id, codes_csv, n_dims)``
+    schema.  Most sections discretize inputs to the 1e-6 grid first
+    (``round(x·10⁶)``, exact integers in doubles), so sums, dots and
+    squared-L2 distances are exact and order-independent on both
+    engines.
+
+    - ``codes``: :func:`similarity.quantize_embeddings` affine int8
+      codes (minmax fit, scale, half-up round) as a csv per vector.
+    - ``pooled``: :func:`similarity.mean_pool_embeddings` per ``label``
+      group on the grid; ``vec_id`` carries the label and ``n_dims``
+      the pooled count.
+    - ``rp``: :func:`similarity.random_projection` to 8 dims with md5
+      ±1 signs, unscaled (exact integer sums).
+    - ``domain`` / ``proto`` / ``domain_profile``:
+      :func:`similarity.domain_scores` against fixed centroids (unit
+      embeddings of vec_id < ``_DOMAIN_CELLS``) — the domain label, the
+      own-centroid cosine at 1e-6 fixed point, and the per-domain
+      (n_docs, token sum) card joined from documents.
+    - ``pq`` / ``pq_adc``: product quantization with ``fit='sample'``
+      codebooks — per-subspace codes and the compressed-domain ADC
+      top-5 for 3 queries.
+    - ``ivf_pq``: the composed IVF-PQ serving path over raw grid
+      centroids (vec_id < ``_IVFPQ_CENTS``), the same codebooks and
+      codes, a 4-probe candidate join and ADC ranking.
+    - ``ivf_pq_res``: residual IVFADC — squared-L2 coarse assignment,
+      PQ over ``x − c``, and the decomposed ``q·c + Σ q·cv`` score.
+
+    The argmax frame (read by three sections) and the PQ codes (read by
+    three sections) are staged with lazy ``localCheckpoint``s."""
     emb = load_table(spark, sf_dir, "embeddings")
     mm = similarity.dimension_minmax(emb, vec_col="embedding")
     coded = similarity.quantize_embeddings(emb, mm, id_col="vec_id", vec_col="embedding")
@@ -4148,11 +3475,7 @@ def embedding_quantize_parts(
         ).alias("codes_csv"),
         F.col("n_pooled").cast("int").alias("n_dims"),
     )
-    # section='rp' (X34, round 8): JL random projection over the SAME
-    # 1e-6-discretized inputs — the ±1-signed sums are exact integers in
-    # doubles (|sum| ≤ 64·~2e6 ≪ 2⁵³), so the fold is order-independent
-    # and bit-identical cross-engine (class A via the pooled-section
-    # discipline); the true float form (scale=1/√8) stays pytest-pinned
+    # |±1-signed sum| ≤ 64·~2e6 ≪ 2⁵³: exact in doubles
     emb6_v = emb.select(
         "vec_id",
         F.transform(
@@ -4172,30 +3495,10 @@ def embedding_quantize_parts(
         ).alias("codes_csv"),
         F.lit(8).cast("int").alias("n_dims"),
     )
-    # sections 'domain' + 'domain_profile' (X47, round 11): the REAL
-    # assign_domains path against FIXED centroids (the unit embeddings
-    # of vec_id < 8 — the _SEMDEDUP_CELLS move, so the broadcast-argmax
-    # assignment hash-checks cross-engine on the rounded 1e-6 grid) and
-    # the per-domain (n_docs, token-sum) profile card joined from the
-    # documents table — the exact integer inputs materialize_mixture
-    # turns into per-domain targets.  The KMeans-fit form is the
-    # library default, pytest-pinned (ML fit is not SQL-expressible).
     cents = emb.where(F.col("vec_id") < _DOMAIN_CELLS).select(
         F.col("vec_id").alias("cent_id"),
         similarity._unit(F.col("embedding")).alias("cv"),
     )
-    # X52 (round 12): domain_scores carries the OWN-centroid cosine —
-    # the D4 prototypicality score — through the same argmax aggregate;
-    # the 'domain' section derives from it (identical label arithmetic)
-    # and the 'proto' section hashes the 1e-6 fixed-point score per id
-    # staged (r14 opt): THREE sections (domain, proto, domain_profile)
-    # consume this argmax frame — left lazy the union re-runs the
-    # broadcast-crossJoin argmax aggregate once per branch (the before
-    # plan shows the same SortAggregate subtree three times; 52 parquet
-    # scans across the slot).  One lazy localCheckpoint of the ~N-row
-    # (id, domain, proto_sim) frame computes it once (guide §2.4:
-    # remove repeated subtrees; the snap_sigs/semantic_dedup staging
-    # precedent).  A/B at sf0.1 local[32] is in OPTIMIZATION_r14.md.
     scored = similarity.domain_scores(emb, cents, assign_round=6).localCheckpoint(
         eager=False
     )
@@ -4228,19 +3531,9 @@ def embedding_quantize_parts(
         ).alias("codes_csv"),
         F.col("n_docs").cast("int").alias("n_dims"),
     )
-    # sections 'pq' + 'pq_adc' (X64, round 13): product quantization
-    # over the SAME 1e-6-discretized inputs — per-subspace squared-L2
-    # distances and ADC scores are exact integers (three sequential-fold
-    # dots of grid ints), so code assignment AND the compressed-domain
-    # top-k serving path hash-check cross-engine.  fit='sample'
-    # codebooks (subvectors of vec_id < _PQ_CODES — the fixed-centroid
-    # move); the fit='kmeans' codebooks stay pytest-pinned (ML fit).
     pq_cb = similarity.pq_codebooks(
         emb6_v, m=_PQ_M, dim=dim, n_codes=_PQ_CODES
     )
-    # staged (r14 opt): the encoded frame feeds THREE sections (pq,
-    # pq_adc, ivf_pq) — staging the m-codes-per-id rows runs the Arrow
-    # encode pass once instead of once per consuming branch
     pq_codes = similarity.pq_encode(emb6_v, pq_cb, m=_PQ_M, dim=dim).localCheckpoint(
         eager=False
     )
@@ -4292,13 +3585,6 @@ def embedding_quantize_parts(
     pq_adc = _topk_section(
         similarity.pq_topk(pq_codes, pq_q, pq_cb, k=5, m=_PQ_M, dim=dim), "pq_adc"
     )
-    # section='ivf_pq' (X66, round 14): the COMPOSED serving path with
-    # fixed artifacts — raw grid centroids (vec_id < 8, unnormalized:
-    # every coarse dot is an exact integer, class A end-to-end), the
-    # same sample codebooks/codes the 'pq' sections check, 4-probe
-    # candidate join, ADC ranking restricted to the candidates.  The
-    # composition itself is what this section proves cross-engine; the
-    # unit-centroid/multi-assign/kmeans forms stay pytest-pinned.
     ivf_cents = emb6_v.where(F.col("vec_id") < _IVFPQ_CENTS).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cv")
     )
@@ -4317,13 +3603,6 @@ def embedding_quantize_parts(
         ),
         "ivf_pq",
     )
-    # section='ivf_pq_res' (X69): residual-encoded IVFADC over the same
-    # fixed artifacts — squared-L2 coarse assignment to the raw grid
-    # centroids, PQ over the residuals x − c (sample codebooks =
-    # residuals of ids < _PQ_CODES), and the decomposed q·c + Σ q·cv
-    # score; every intermediate an exact grid integer (class A), so the
-    # composition hash-checks cross-engine.  The quality A/B (residual
-    # beats raw at n_cells > n_codes) stays pytest-pinned.
     ivfpqres = _topk_section(
         similarity.ivf_pq_residual_topk(
             emb6_v,
@@ -4512,22 +3791,3 @@ def q_text_normalize_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup.url_host(messy).alias("url_host"),
     ).join(html, "doc_id")
 
-
-# --------------------------------------------------------------------------
-# Per-section attribution map — bench.py times each multi-section slot's
-# parts separately (BENCH_DETAIL.json; r11 verdict item 1).  Each value is
-# a (spark, sf_dir) -> dict[section, DataFrame] builder whose composed
-# output IS the registered slot's frame.
-# --------------------------------------------------------------------------
-
-SECTION_PARTS = {
-    "corpus_shuffle_shards": corpus_shuffle_shards_parts,
-    "neardup_clusters": neardup_clusters_parts,
-    "dedup_incremental": dedup_incremental_parts,
-    "pack_sequences": pack_sequences_parts,
-    "sampling_splits": sampling_splits_parts,
-    "text_perplexity": text_perplexity_parts,
-    "vector_exact_search": vector_exact_search_parts,
-    "text_scrub_repetition": text_scrub_repetition_parts,
-    "embedding_quantize": embedding_quantize_parts,
-}

@@ -27,7 +27,6 @@ from pyspark_dist_explore_spark.functions.numeric import bucket_sql, valid_value
 from pyspark_dist_explore_spark.operators.histogram import (
     compute_density,
     compute_histogram,
-    compute_histogram_dense,
     compute_kde,
 )
 from pyspark_dist_explore_spark.sources.tables import load_table
@@ -38,6 +37,9 @@ class QuerySpec:
     name: str
     build: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL, or None → driver does a rows-only check
+    #: multi-section slots only: the per-section frames ``build`` composes,
+    #: keyed by section tag (bench times each one separately)
+    sections: Callable[[SparkSession, str], dict[str, DataFrame]] | None = None
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -46,6 +48,26 @@ REGISTRY: dict[str, QuerySpec] = {}
 def register(name: str, oracle: str | None):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         REGISTRY[name] = QuerySpec(name, fn, oracle)
+        return fn
+
+    return deco
+
+
+def register_sections(name: str, oracle: str | None, on: str | None = None):
+    """Register a slot from its section builder ``(spark, sf_dir) ->
+    {tag: DataFrame}``: the slot frame is the ``unionByName`` of the
+    sections in dict order or, with ``on``, their inner join on that
+    column in dict order."""
+
+    def deco(fn: Callable[[SparkSession, str], dict[str, DataFrame]]):
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            frames = iter(fn(spark, sf_dir).values())
+            out = next(frames)
+            for df in frames:
+                out = out.unionByName(df) if on is None else out.join(df, on)
+            return out
+
+        REGISTRY[name] = QuerySpec(name, build, oracle, fn)
         return fn
 
     return deco
@@ -115,44 +137,6 @@ def q_hist_lineitem_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("series", "bucket", "cnt")
 
 
-_ACCTBAL = [
-    ("c_acctbal", "customer", "c_acctbal"),
-    ("s_acctbal", "supplier", "s_acctbal"),
-]
-
-
-#: retired round 5 — the sparse result is exactly the dense grid's
-#: cnt>0 rows, so the merged dense registration pins both; still
-#: pytest-pinned (tests/test_histogram.py) against the sparse builder
-HIST_MULTI_SERIES_SPARSE_ORACLE = _hist_oracle(_ACCTBAL, bins=10)
-
-
-#: deregistered late round 5 — `hist_pivot_pandas_shape` pins the SAME
-#: machinery (compute_histogram_dense over the same two acctbal
-#: sources: one-job global min/max, shared bins, per-bin counts, dense
-#: zero-fill) plus the pivot, so the long format no longer earned its
-#: own slot; freed for ``neardup_containment``.  Oracle stays pinned in
-#: tests/test_histogram.py.
-HIST_MULTI_SERIES_DENSE_ORACLE = _hist_oracle(_ACCTBAL, bins=10, dense=True)
-
-
-def q_hist_multi_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4/R5/R6 + R9 in one query: two frames (customer, supplier
-    acctbal) share global one-job min/max bins; the result is the DENSE
-    zero-filled (series, bucket) grid — its cnt>0 rows ARE the sparse
-    histogram.  Deregistered late round 5 (coverage rides in
-    ``hist_pivot_pandas_shape``, same sources + dense machinery);
-    ``HIST_MULTI_SERIES_DENSE_ORACLE`` stays pinned in pytest."""
-    return compute_histogram_dense(_hist_sources(spark, sf_dir, _ACCTBAL), bins=10)
-
-
-def q_hist_multi_series_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-merge sparse form — deregistered round 5, kept callable;
-    ``HIST_MULTI_SERIES_SPARSE_ORACLE`` stays pinned in pytest."""
-    df = compute_histogram(_hist_sources(spark, sf_dir, _ACCTBAL), bins=10)
-    return df.select("series", "bucket", "cnt")
-
-
 _PSIZE = [("p_size", "part", "p_size")]
 
 _ORDERDATE_HIST_ORACLE = f"""
@@ -192,9 +176,9 @@ def q_hist_mixed_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
       the naive value exactly; a plain cast-to-double would shift with
       the driver's session timezone/DST.
 
-    Each series keeps its own data range (they are separate ``hist``
-    calls, not one shared-range multi-series histogram — that semantic
-    is ``hist_multi_series``).
+    Each series keeps its own data range (three separate
+    ``compute_histogram`` calls, not one shared-range multi-series
+    histogram).
     """
     a = compute_histogram(
         _hist_sources(spark, sf_dir, _FLAGSHIP), bins=10, range=(1000.0, 5000.0)
@@ -207,54 +191,15 @@ def q_hist_mixed_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.select(*cols).unionAll(b.select(*cols)).unionAll(c.select(*cols))
 
 
-def q_hist_dense_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R9: dense zero-filled (series, bucket) grid via tiny post-agg join.
-
-    Deregistered round 5: identical plan to the merged
-    ``hist_multi_series`` registration above (same sources, same bins,
-    same dense fill), so it no longer earns its own driver slot."""
-    return compute_histogram_dense(_hist_sources(spark, sf_dir, _ACCTBAL), bins=10)
-
-
 _DENSITY_SRC = [("l_quantity", "lineitem", "l_quantity")]
 
 
-#: retired round 5 (merged into ``hist_density_kde``); pytest-pinned
-HIST_DENSITY_ORACLE = _hist_oracle(_DENSITY_SRC, bins=10).replace(
+_HIST_DENSITY_ORACLE = _hist_oracle(_DENSITY_SRC, bins=10).replace(
     "SELECT series, bucket, cnt FROM sparse",
     """SELECT series, bucket, cnt,
        cnt / SUM(cnt) OVER (PARTITION BY series) / ((SELECT (hi - lo) / 10.0 FROM stats)) AS density
 FROM sparse""",
 )
-
-
-def q_hist_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R10: density normalization — cnt / total / bin_width, integrates to 1.
-
-    Hash-safe without rounding: cnt and the window total are exact
-    integers, bin width is one double subtraction+division — identical
-    operation order on both sides.  Deregistered round 5 (merged with
-    the KDE curve into ``hist_density_kde`` below, freeing a driver
-    slot for ``pack_sequences``); kept callable, oracle pinned in
-    pytest.
-    """
-    df = compute_density(_hist_sources(spark, sf_dir, _DENSITY_SRC), bins=10)
-    return df.select("series", "bucket", "cnt", "density")
-
-
-def q_hist_global_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R5/R6: one-job global min/max across all added series.
-
-    No longer a REGISTERED query — it is a strict sub-plan of
-    ``hist_multi_series`` (whose oracle pins the same global-range
-    arithmetic end-to-end) and the 50-entry driver window is better
-    spent on independent operators.  Kept callable for the library
-    surface; tests/test_histogram pins the one-job property.
-    """
-    from pyspark_dist_explore_spark.operators.histogram import _union_series
-
-    data = _union_series(_hist_sources(spark, sf_dir, _ACCTBAL))
-    return data.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
 
 
 def _kde_oracle(label: str, table: str, col: str, num: int = 300, pre_bins: int = 1024) -> str:
@@ -300,16 +245,7 @@ GROUP BY 1, 2, 3
 """
 
 
-#: retired round 5 (merged into ``hist_density_kde``); pytest-pinned
-HIST_KDE_ORACLE = _kde_oracle("l_extendedprice", "lineitem", "l_extendedprice")
-
-
-def q_hist_kde_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R11: 300-point Gaussian KDE curve (pre-binned, scale-independent).
-    Deregistered round 5 (merged into ``hist_density_kde``); kept
-    callable, oracle pinned in pytest."""
-    df = compute_kde(_hist_sources(spark, sf_dir, _FLAGSHIP), num=300)
-    return df.select("series", "i", "x", F.round("density", 10).alias("density"))
+_HIST_KDE_ORACLE = _kde_oracle("l_extendedprice", "lineitem", "l_extendedprice")
 
 
 _ECDF_ORACLE = """
@@ -334,11 +270,11 @@ FROM (SELECT CAST(range AS BIGINT) AS i FROM range(50)) g, ecdf_stats s
     f"""
 SELECT series, 'hist' AS kind, CAST(bucket AS BIGINT) AS i,
        CAST(NULL AS DOUBLE) AS x, cnt, density
-FROM ({HIST_DENSITY_ORACLE})
+FROM ({_HIST_DENSITY_ORACLE})
 UNION ALL
 SELECT series, 'kde' AS kind, CAST(i AS BIGINT) AS i, x,
        CAST(NULL AS BIGINT) AS cnt, density
-FROM ({HIST_KDE_ORACLE})
+FROM ({_HIST_KDE_ORACLE})
 UNION ALL
 SELECT series, 'ecdf' AS kind, i, x, CAST(NULL AS BIGINT) AS cnt, cdf AS density
 FROM ({_ECDF_ORACLE})

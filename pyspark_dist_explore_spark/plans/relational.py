@@ -98,11 +98,9 @@ FROM top JOIN m
 """,
 )
 def q_q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way join (customer side broadcast), agg, deterministic top-10 —
-    ENRICHED (merged round 6, freeing ``date_funcs_orders``'s slot) with
-    each winning order's calendar-month aggregate from the full orders
-    table: year/month extraction + count-distinct, the date-function
-    surface the standalone query covered, now oracle-checked through a
+    """3-way join (customer side broadcast), agg, deterministic top-10,
+    enriched with each winning order's calendar-month aggregate from the
+    full orders table (year/month extraction + count-distinct) through a
     broadcast join against the ≤ |months|-row stats frame."""
     c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
     o = load_table(spark, sf_dir, "orders")
@@ -252,38 +250,6 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-#: deregistered round 6 (merged into ``grouping_analytics``); original
-#: stays callable, oracle pinned in tests/test_ops.py
-ROLLUP_CUBE_ORACLE = f"""
-SELECT 'rollup' AS grouping_kind, l_returnflag, l_linestatus, count(*) AS cnt,
-       {scaled_sum_sql('l_quantity')} AS sum_qty
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-UNION ALL
-SELECT 'cube' AS grouping_kind, l_returnflag, l_linestatus, count(*) AS cnt,
-       {scaled_sum_sql('l_quantity')} AS sum_qty
-FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-
-def q_rollup_cube_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP and CUBE over the same dimensions, tagged and unioned:
-    sub-total/grand-total rows with NULL markers (rollup) plus the full
-    2^k grouping combinations (cube), each a single expand+aggregate
-    pass with map-side partials."""
-    li = load_table(spark, sf_dir, "lineitem")
-    aggs = [
-        F.count(F.lit(1)).alias("cnt"),
-        scaled_sum(F.col("l_quantity")).alias("sum_qty"),
-    ]
-    rollup = li.rollup("l_returnflag", "l_linestatus").agg(*aggs).select(
-        F.lit("rollup").alias("grouping_kind"), "l_returnflag", "l_linestatus", "cnt", "sum_qty"
-    )
-    cube = li.cube("l_returnflag", "l_linestatus").agg(*aggs).select(
-        F.lit("cube").alias("grouping_kind"), "l_returnflag", "l_linestatus", "cnt", "sum_qty"
-    )
-    return rollup.unionAll(cube)
-
-
 @register(
     "grouping_analytics",
     f"""
@@ -301,13 +267,11 @@ FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
 """,
 )
 def q_grouping_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The whole multi-grouping aggregation surface in one slot (merged
-    round 6 from ``rollup_cube_status`` + ``grouping_sets_priority``):
-    ROLLUP and CUBE over lineitem plus explicit GROUPING SETS over
-    orders via the SQL surface, schema-aligned ``(grouping_kind, dim1,
-    dim2, cnt, sum_qty)`` and unioned.  Each branch stays a single
-    expand+aggregate pass with map-side partials; the standalone
-    builders remain callable with their oracles pinned in pytest."""
+    """The multi-grouping aggregation surface in one slot: ROLLUP and
+    CUBE over lineitem plus explicit GROUPING SETS over orders via the
+    SQL surface, schema-aligned ``(grouping_kind, dim1, dim2, cnt,
+    sum_qty)`` and unioned.  Each branch is a single expand+aggregate
+    pass with map-side partials."""
     li = load_table(spark, sf_dir, "lineitem")
     aggs = [
         F.count(F.lit(1)).alias("cnt"),
@@ -481,22 +445,6 @@ def q_asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-#: deregistered round 5 (merged into ``scalar_unpivot_part`` below, which
-#: carries the identical scalar families as id/metric columns); kept
-#: callable with the oracle pinned in tests/test_ops.py
-SCALAR_FUNCS_PART_ORACLE = """
-SELECT p_partkey,
-       upper(p_brand) AS brand_upper,
-       substr(p_name, 1, 8) AS name_prefix,
-       CAST(len(p_name) AS BIGINT) AS name_len,
-       concat(p_brand, ':', p_type) AS brand_type,
-       round(sqrt(CAST(p_size AS DOUBLE)), 6) AS size_sqrt,
-       round(ln(p_retailprice), 6) AS price_ln,
-       abs(p_size - 25) AS size_dev,
-       CASE WHEN p_size > 25 THEN 'large' ELSE 'small' END AS size_class
-FROM part
-"""
-
 _SCALAR_WIDE_SQL = """
 SELECT p_partkey,
        upper(p_brand) AS brand_upper,
@@ -533,11 +481,9 @@ _SCALAR_IDS = ["p_partkey", "brand_upper", "name_prefix", "brand_type", "size_cl
     ),
 )
 def q_scalar_unpivot_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar families + UNPIVOT merged (round 5): the string/math/
-    conditional scalar expressions ride as id columns while the raw and
-    computed numeric metrics melt to ``(metric, value)`` long format —
-    one part scan exercises every family ``scalar_funcs_part`` covered
-    plus the wide→long unpivot ``unpivot_part_metrics`` covered."""
+    """Scalar function families and UNPIVOT over one part scan: the
+    string/conditional expressions ride as id columns while the raw and
+    computed numeric metrics melt to ``(metric, value)`` long format."""
     p = load_table(spark, sf_dir, "part")
     wide = p.select(
         "p_partkey",
@@ -560,77 +506,9 @@ def q_scalar_unpivot_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_scalar_funcs_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String/math/conditional scalar families, row-parallel, codegen'd.
-
-    Deregistered round 5: every expression here rides inside the merged
-    ``scalar_unpivot_part`` registration; oracle pinned in pytest."""
-    p = load_table(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.upper("p_brand").alias("brand_upper"),
-        F.substring("p_name", 1, 8).alias("name_prefix"),
-        F.length("p_name").cast("bigint").alias("name_len"),
-        F.concat(F.col("p_brand"), F.lit(":"), F.col("p_type")).alias("brand_type"),
-        F.round(F.sqrt(F.col("p_size").cast("double")), 6).alias("size_sqrt"),
-        F.round(F.log(F.col("p_retailprice")), 6).alias("price_ln"),
-        F.abs(F.col("p_size") - 25).alias("size_dev"),
-        F.when(F.col("p_size") > 25, "large").otherwise("small").alias("size_class"),
-    )
-
-
-#: deregistered round 6 — the month stats now ride inside the merged
-#: ``q3_top_orders`` (same orders scan feeds both halves); still
-#: callable, oracle pinned in tests/test_ops.py
-DATE_FUNCS_ORACLE = """
-SELECT CAST(date_part('year', o_orderdate) AS INT) AS o_year,
-       CAST(date_part('month', o_orderdate) AS INT) AS o_month,
-       count(*) AS n_orders,
-       count(DISTINCT o_custkey) AS n_customers
-FROM orders
-GROUP BY 1, 2
-"""
-
-
-def q_date_funcs_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date-part extraction + distinct aggregation by month."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy(
-            F.year("o_orderdate").alias("o_year"), F.month("o_orderdate").alias("o_month")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.countDistinct("o_custkey").alias("n_customers"),
-        )
-    )
-
-
 # --------------------------------------------------------------------------
-# JSON, percentiles, distinct aggregation
+# Percentiles, distinct aggregation
 # --------------------------------------------------------------------------
-
-
-#: deregistered round 5 (the JSON extraction now rides as a grouping key
-#: inside ``events_window_agg``); kept callable, oracle pinned in
-#: tests/test_ops.py
-JSON_EXTRACT_ORACLE = """
-SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k, count(*) AS cnt
-FROM events GROUP BY 1
-"""
-
-
-def q_json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON field extraction from the event props column.
-
-    Deregistered round 5: merged into ``events_window_agg`` (same scan,
-    JSON key added to the window grouping); oracle pinned in pytest."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.select(F.get_json_object("props", "$.k").cast("bigint").alias("k"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 #: deregistered round 4 — merged into ``summary_stats``'s long-format
@@ -802,10 +680,10 @@ SELECT 'hist_numeric', 'all', 'n_buckets', 20.0, CAST(1 AS INT)
 
 @register("approx_sketches", _SKETCH_BOUND_ORACLE)
 def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X7 sketches, PROMOTED from rows-only to a bound-check oracle
-    (round 8): sketch estimates can never hash-match a different
-    engine's sketch, but their published error bounds CAN be
-    driver-checked — every hashed ``value`` is an EXACT statistic both
+    """X7 sketches as a bound-check oracle: sketch estimates can never
+    hash-match a different engine's sketch, but their published error
+    bounds CAN be driver-checked — every hashed ``value`` is an EXACT
+    statistic both
     engines compute identically, and ``within_bound`` folds the sketch
     into the hash as a 0/1 verdict the oracle expects to be 1.  If any
     sketch ever lands outside its bound, the Spark side emits 0 and the
@@ -825,13 +703,15 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two scans of lineitem by design (sketch pass + exact/rank pass —
     verification needs the exact counterpart regardless); all joined
-    frames are ≤ groups rows and broadcast.  The raw sketch SHAPES stay
-    pytest-pinned (test_ops sketch bounds)."""
+    frames are ≤ groups rows and broadcast.  The sketch join is
+    null-safe, so a NULL ``l_returnflag`` forms its own group as in the
+    oracle's GROUP BY.  The raw sketch SHAPES stay pytest-pinned
+    (test_ops sketch bounds)."""
     li = load_table(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("double")
     eps = 1.0 / _KLL_ACCURACY
 
-    sk = li.groupBy("l_returnflag").agg(
+    sk = li.groupBy(F.col("l_returnflag").alias("sk_flag")).agg(
         F.approx_count_distinct("l_partkey", _HLL_RSD).alias("approx_parts"),
         F.percentile_approx(
             "l_quantity", F.lit(0.5), F.lit(_KLL_ACCURACY)
@@ -840,7 +720,7 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact counterpart + the approx median's exact rank in ONE pass
     # (the sketch row is broadcast back onto the scan)
     chk = (
-        li.join(F.broadcast(sk), "l_returnflag")
+        li.join(F.broadcast(sk), F.col("l_returnflag").eqNullSafe(F.col("sk_flag")))
         .groupBy("l_returnflag")
         .agg(
             F.countDistinct("l_partkey").alias("exact_parts"),
@@ -849,11 +729,11 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((qty < F.col("approx_median")).cast("long")).alias("lt"),
             F.sum((qty <= F.col("approx_median")).cast("long")).alias("le"),
             F.first("approx_parts").alias("approx_parts"),
-            # r15 opt (guide §2.4): carry the price extrema through this
-            # pass so the histogram verify's global (n, min, max) derives
-            # from the ≤groups-row chk frame instead of a fourth lineitem
-            # scan — sum of per-flag counts / min of mins / max of maxes
-            # select the identical values bit for bit
+            # carry the price extrema through this pass so the histogram
+            # verify's global (n, min, max) derives from the ≤groups-row
+            # chk frame instead of another lineitem scan — sum of
+            # per-flag counts / min of mins / max of maxes select the
+            # identical values bit for bit
             F.min(F.col("l_extendedprice").cast("double")).alias("p_min_flag"),
             F.max(F.col("l_extendedprice").cast("double")).alias("p_max_flag"),
         )
@@ -883,12 +763,11 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("center").alias("c_min"),
         F.max("center").alias("c_max"),
     )
-    # r15 opt: the exact global (n, p_min, p_max) re-aggregates the
-    # staged per-flag chk frame (every lineitem row carries a flag and
-    # joins sk, so the flags partition the table: sum/min/max over the
-    # per-flag rows select the identical values) — the fourth lineitem
-    # scan this side previously paid is gone (plans/r15/
-    # approx_sketches_{before,after}.txt).
+    # the exact global (n, p_min, p_max) re-aggregates the staged
+    # per-flag chk frame: every lineitem row joins its flag's sk row
+    # (null-safe, so NULL flags included), so the per-flag rows
+    # partition the table and sum/min/max over them select the
+    # identical values
     tot = chk.groupBy().agg(
         F.sum("n").alias("n"),
         F.min("p_min_flag").alias("p_min"),
@@ -933,11 +812,8 @@ GROUP BY 1, 2, 3
 )
 def q_events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour window aggregation (batch form of the streaming
-    histogram X8 — same window expression Structured Streaming uses),
-    additionally keyed by a JSON-extracted props field (merged round 5:
-    absorbs ``json_extract_events`` — same scan, the extraction becomes
-    a grouping key; the original builder stays callable, pytest-pinned).
-    """
+    histogram — same window expression Structured Streaming uses),
+    additionally keyed by a JSON-extracted props field."""
     e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(

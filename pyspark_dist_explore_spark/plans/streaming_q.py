@@ -1,7 +1,7 @@
 """Streaming-shaped query registrations (X8).
 
-The driver's oracle harness collects a batch DataFrame.  Since round 8
-the registered ``events_stream_hist`` AND ``events_session_window`` run
+The driver's oracle harness collects a batch DataFrame.  The registered
+``events_stream_hist`` AND ``events_session_window`` run
 the REAL Structured Streaming engine against it (``readStream`` file
 source → ``availableNow`` trigger → memory sink, complete output mode —
 the final state of a complete-mode aggregation over a finite source
@@ -34,13 +34,22 @@ _BINS = 10
 _LO, _HI = 0.0, 500.0
 
 
+#: Spark byte-size suffixes (binary units, case-insensitive); two-char
+#: suffixes come first so '64mb' is not read as '64m' + a stray 'b'
+_SIZE_SUFFIXES = (
+    ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30), ("tb", 1 << 40), ("pb", 1 << 50),
+    ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40), ("p", 1 << 50),
+    ("b", 1),
+)
+
+
 def _parse_size_bytes(v: str | int) -> int:
-    """Parse a Spark byte-size conf value ('64m', '1g', '67108864')."""
+    """Parse a Spark byte-size conf value ('64m', '64MB', '1t', '67108864')."""
     if isinstance(v, int):
         return v
     s = str(v).strip().lower()
     mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
+    for suffix, m in _SIZE_SUFFIXES:
         if s.endswith(suffix):
             s = s[: -len(suffix)]
             mult = m
@@ -48,9 +57,22 @@ def _parse_size_bytes(v: str | int) -> int:
     return int(float(s) * mult)
 
 
+def _path_bytes(path: str) -> int:
+    """Size of a file, or the summed size of the data files under a
+    dataset directory (Spark skips names starting with '_' or '.')."""
+    if not os.path.isdir(path):
+        return os.stat(path).st_size
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+        if not f.startswith(("_", "."))
+    )
+
+
 def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Scale-adaptive state-store partition count for the registered
-    streaming queries (r15 opt, guide §2.2).
+    streaming histogram.
 
     A streaming aggregation's state partitioning is FIXED by
     ``spark.sql.shuffle.partitions`` at the first micro-batch — AQE's
@@ -64,7 +86,7 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     regime collapses."""
     path = os.path.join(sf_dir, "events.parquet")
     try:
-        nbytes = os.stat(path).st_size
+        nbytes = _path_bytes(path)
     except OSError:
         nbytes = None
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -74,23 +96,6 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
     )
     return max(1, min(cur, -(-nbytes // max(advisory, 1))))
-
-
-class _scoped_shuffle_partitions:
-    """Set ``spark.sql.shuffle.partitions`` around a streaming start and
-    restore the caller's value afterwards (the conf is read when the
-    streaming query plans its first micro-batch)."""
-
-    def __init__(self, spark: SparkSession, n: int):
-        self._spark, self._n = spark, n
-
-    def __enter__(self):
-        self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
-        return False
 
 
 _STREAM_HIST_ORACLE = f"""
@@ -116,17 +121,25 @@ def q_events_stream_hist(
     same bucket expression as the batch histogram; ``window_start``
     emitted as epoch seconds (tz-free).
 
-    ``streaming=True`` (the REGISTERED form, round-8 promotion) executes
-    the REAL Structured Streaming engine: ``readStream`` over the same
-    parquet bytes (:func:`load_events_stream`), ``availableNow``
-    trigger, complete-output memory sink, blocking until the source is
-    drained.  A complete-mode aggregation's final state over a finite
-    source equals the batch aggregate, so the driver's DuckDB oracle now
-    hash-checks actual micro-batch execution — watermark wiring, state
-    store and all — not just the shared plan shape.  Default False keeps
-    the lazy batch twin (identical plan, job-free construction)."""
+    ``streaming=True`` (the REGISTERED form) executes the REAL
+    Structured Streaming engine: ``readStream`` over the same parquet
+    bytes (:func:`load_events_stream`), ``availableNow`` trigger,
+    complete-output memory sink, blocking until the source is drained.
+    A complete-mode aggregation's final state over a finite source
+    equals the batch aggregate, so the DuckDB oracle hash-checks actual
+    micro-batch execution — watermark wiring, state store and all.  The
+    stream runs in ``spark.newSession()`` (separate SQL conf, shared
+    SparkContext) with the state partition count from
+    :func:`_stream_state_partitions` set there, and the memory sink is
+    read back through that session, so the caller's session conf is
+    never written.  Default False keeps the lazy batch twin (identical
+    plan, job-free construction)."""
     if streaming:
-        e = load_events_stream(spark, sf_dir)
+        session = spark.newSession()
+        session.conf.set(
+            "spark.sql.shuffle.partitions", str(_stream_state_partitions(spark, sf_dir))
+        )
+        e = load_events_stream(session, sf_dir)
     else:
         e = load_table(spark, sf_dir, "events")
     out = stream_windowed_histogram(
@@ -139,21 +152,18 @@ def q_events_stream_hist(
     )
     if not streaming:
         return out
-    with _scoped_shuffle_partitions(
-        spark, _stream_state_partitions(spark, sf_dir)
-    ):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(_STREAM_HIST_SINK)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(_STREAM_HIST_SINK)
+    q = (
+        out.writeStream.format("memory")
+        .queryName(_STREAM_HIST_SINK)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return session.table(_STREAM_HIST_SINK)
 
 
 @register("events_stream_hist", _STREAM_HIST_ORACLE)
@@ -263,14 +273,12 @@ def q_events_session_window(
                 "n_events",
             )
         )
-        # NOT wrapped in _scoped_shuffle_partitions (r15): the derived
-        # single state partition was A/B-measured slightly SLOWER here
-        # at both 8 and 32 cores (warm 1.84/1.95 s → 2.08 s and
-        # 1.70/1.74 s → 1.76-2.06 s) — the merging session-window state
-        # op does real per-partition work proportional to rows, so
-        # collapsing partitions serializes the merge instead of shaving
-        # task overhead.  The windowed-histogram query (tiny per-bucket
-        # state) keeps the derived count.
+        # No derived state partition count here (unlike
+        # events_stream_hist): a single state partition was measured
+        # slightly SLOWER — the merging session-window state op does real
+        # per-partition work proportional to rows, so collapsing
+        # partitions serializes the merge instead of shaving task
+        # overhead.
         q = (
             agg.writeStream.format("memory")
             .queryName(_SESSION_SINK)

@@ -153,37 +153,33 @@ def test_to_pandas_explicit_range_empty_edge_buckets(spark):
 
 
 def test_retired_histogram_oracles_still_green(spark):
-    """Round-5 registry merges (sparse multi-series ⊂ dense grid;
-    density + KDE → hist_density_kde) deregistered three queries — the
-    builders stay public API, so their oracles stay pinned here."""
-    from pyspark_dist_explore_spark.plans.queries import (
-        HIST_DENSITY_ORACLE,
-        HIST_KDE_ORACLE,
-        HIST_MULTI_SERIES_DENSE_ORACLE,
-        HIST_MULTI_SERIES_SPARSE_ORACLE,
-        q_hist_density,
-        q_hist_dense_fill,
-        q_hist_kde_curve,
-        q_hist_multi_series,
-        q_hist_multi_series_sparse,
-    )
+    """Two frames sharing one global range (customer and supplier
+    acctbal): the sparse compute_histogram result and the dense
+    zero-filled compute_histogram_dense grid both hash-match their
+    DuckDB renderings.  The density and KDE forms are checked by the
+    hist_density_kde slot oracle."""
+    from pyspark_dist_explore_spark.plans.queries import _hist_oracle, _hist_sources
     from tests.conftest import SF_SMOKE
     from tests.oracle_utils import compare
 
+    acctbal = [
+        ("c_acctbal", "customer", "c_acctbal"),
+        ("s_acctbal", "supplier", "s_acctbal"),
+    ]
     compare(
-        spark, SF_SMOKE, q_hist_multi_series_sparse, HIST_MULTI_SERIES_SPARSE_ORACLE
+        spark,
+        SF_SMOKE,
+        lambda s, d: compute_histogram(_hist_sources(s, d, acctbal), bins=10).select(
+            "series", "bucket", "cnt"
+        ),
+        _hist_oracle(acctbal, bins=10),
     )
-    # hist_multi_series itself deregistered LATE round 5 (coverage rides
-    # in the registered hist_pivot_pandas_shape, same sources + dense
-    # machinery; slot freed for neardup_containment) — oracle pinned here
-    compare(spark, SF_SMOKE, q_hist_multi_series, HIST_MULTI_SERIES_DENSE_ORACLE)
-    compare(spark, SF_SMOKE, q_hist_density, HIST_DENSITY_ORACLE)
-    compare(spark, SF_SMOKE, q_hist_kde_curve, HIST_KDE_ORACLE)
-    # hist_dense_fill is the same plan as q_hist_multi_series —
-    # assert they agree rather than re-oracle it
-    a = sorted(map(tuple, q_hist_dense_fill(spark, SF_SMOKE).collect()))
-    b = sorted(map(tuple, q_hist_multi_series(spark, SF_SMOKE).collect()))
-    assert a == b
+    compare(
+        spark,
+        SF_SMOKE,
+        lambda s, d: compute_histogram_dense(_hist_sources(s, d, acctbal), bins=10),
+        _hist_oracle(acctbal, bins=10, dense=True),
+    )
 
 
 def test_compute_ecdf_matches_duckdb(spark):

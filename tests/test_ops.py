@@ -583,28 +583,6 @@ def test_ivf_multi_assign_recall(spark):
         similarity.ivf_topk(emb, q, k=5, n_assign=0)
 
 
-def test_grouped_sum_pandas_matches_jvm(spark):
-    """The unregistered grouped-agg pandas UDF surface stays pinned: the
-    Arrow scaled-integer sum must equal the JVM scaled_sum exactly."""
-    from pyspark_dist_explore_spark.functions.agg import scaled_sum
-    from pyspark_dist_explore_spark.plans.extended import q_grouped_sum_pandas
-    from pyspark_dist_explore_spark.sources.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    arrow = {
-        r["l_returnflag"]: r["total_price"]
-        for r in q_grouped_sum_pandas(spark, sf).collect()
-    }
-    jvm = {
-        r["l_returnflag"]: r["total_price"]
-        for r in load_table(spark, sf, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(scaled_sum(F.col("l_extendedprice")).alias("total_price"))
-        .collect()
-    }
-    assert arrow == jvm and len(arrow) >= 2
-
-
 def test_kmeans_sample_fit_guards(spark):
     from pyspark_dist_explore_spark.operators import similarity
 
@@ -1042,16 +1020,30 @@ def test_minhash_staged_input_same_pairs(spark):
 
 
 def test_text_quality_still_oracle_green(spark):
-    """Deregistered round 4 (subset of the merged text_stats profile)
-    but still a public query — pin it."""
+    """textstats.quality_score hash-matches its DuckDB twin, rendered
+    from the same SQL fragments the text_stats oracle uses."""
     from pyspark_dist_explore_spark.plans.llm_ops import (
-        TEXT_QUALITY_ORACLE,
-        q_text_quality,
+        _alpha_ratio_sql,
+        _punct_ratio_sql,
+        _quality_sql,
     )
+    from pyspark_dist_explore_spark.sources.tables import load_table
     from tests.conftest import SF_SMOKE
     from tests.oracle_utils import compare
 
-    compare(spark, SF_SMOKE, q_text_quality, TEXT_QUALITY_ORACLE)
+    oracle = f"""
+SELECT doc_id,
+       round({_alpha_ratio_sql('text')}, 6) AS alpha_ratio,
+       round({_punct_ratio_sql('text')}, 6) AS punct_ratio,
+       {_quality_sql('text')} AS quality
+FROM documents
+"""
+    compare(
+        spark,
+        SF_SMOKE,
+        lambda s, d: textstats.quality_score(load_table(s, d, "documents"), "text", "doc_id"),
+        oracle,
+    )
 
 
 def test_scrub_text_redacts_and_counts(spark):
@@ -1536,55 +1528,6 @@ def test_incremental_dedup_validation(spark):
         dedup.incremental_dedup(
             docs, seen, "text", "doc_id", bloom_bits=256, bloom_hashes=17
         )
-
-
-def test_deregistered_json_extract_matches_duckdb(spark):
-    """json_extract_events was merged into events_window_agg (round 5);
-    the original builder stays callable with its oracle pinned here."""
-    from pyspark_dist_explore_spark.plans.relational import (
-        JSON_EXTRACT_ORACLE,
-        q_json_extract_events,
-    )
-    from tests.conftest import SF_SMOKE
-    from tests.oracle_utils import compare
-
-    compare(spark, SF_SMOKE, q_json_extract_events, JSON_EXTRACT_ORACLE)
-
-
-def test_deregistered_part_queries_match_duckdb(spark):
-    """scalar_funcs_part and unpivot_part_metrics were merged into the
-    registered scalar_unpivot_part (round 5); the original builders stay
-    callable with their oracles pinned here."""
-    from pyspark_dist_explore_spark.plans.extended import (
-        UNPIVOT_PART_ORACLE,
-        q_unpivot_part_metrics,
-    )
-    from pyspark_dist_explore_spark.plans.relational import (
-        SCALAR_FUNCS_PART_ORACLE,
-        q_scalar_funcs_part,
-    )
-    from tests.conftest import SF_SMOKE
-    from tests.oracle_utils import compare
-
-    compare(spark, SF_SMOKE, q_scalar_funcs_part, SCALAR_FUNCS_PART_ORACLE)
-    compare(spark, SF_SMOKE, q_unpivot_part_metrics, UNPIVOT_PART_ORACLE)
-
-
-def test_deregistered_join_queries_match_duckdb(spark):
-    """join_semi_anti and join_left_outer were merged into the registered
-    join_variants (round 5, freeing a slot for corpus_shuffle_shards);
-    the original builders stay callable with their oracles pinned here."""
-    from pyspark_dist_explore_spark.plans.extended import (
-        JOIN_LEFT_OUTER_ORACLE,
-        JOIN_SEMI_ANTI_ORACLE,
-        q_join_left_outer,
-        q_join_semi_anti,
-    )
-    from tests.conftest import SF_SMOKE
-    from tests.oracle_utils import compare
-
-    compare(spark, SF_SMOKE, q_join_semi_anti, JOIN_SEMI_ANTI_ORACLE)
-    compare(spark, SF_SMOKE, q_join_left_outer, JOIN_LEFT_OUTER_ORACLE)
 
 
 def test_token_budget_stratified_semantics(spark):
@@ -2973,71 +2916,118 @@ def test_bigram_logprob_validates_params(spark):
 
 
 def test_deregistered_round6_text_queries_match_duckdb(spark):
-    """text_lang_id (folded into text_stats) and date_funcs_orders
-    (folded into q3_top_orders) stay callable, oracles pinned here."""
+    """textstats.language_id hash-matches its DuckDB twin, rendered from
+    the same marker-count and argmax fragments the text_stats oracle
+    uses."""
     from pyspark_dist_explore_spark.plans.llm_ops import (
-        TEXT_LANG_ID_ORACLE,
-        q_text_lang_id,
+        _NORM,
+        _lang_pred_case_sql,
+        _lang_score_sql,
     )
-    from pyspark_dist_explore_spark.plans.relational import (
-        DATE_FUNCS_ORACLE,
-        q_date_funcs_orders,
-    )
+    from pyspark_dist_explore_spark.sources.tables import load_table
     from tests.conftest import SF_SMOKE
     from tests.oracle_utils import compare
 
-    compare(spark, SF_SMOKE, q_text_lang_id, TEXT_LANG_ID_ORACLE)
-    compare(spark, SF_SMOKE, q_date_funcs_orders, DATE_FUNCS_ORACLE)
+    scores = _lang_score_sql()
+    langs = sorted(scores)
+    oracle = f"""
+WITH scored AS (
+  SELECT doc_id, {", ".join(f"{scores[g]} AS score_{g}" for g in langs)}
+  FROM (SELECT doc_id, concat(' ', {_NORM.format(c='text')}, ' ') AS p FROM documents)
+)
+SELECT doc_id, {", ".join(f"score_{g}" for g in langs)},
+       {_lang_pred_case_sql()} AS lang_pred
+FROM scored
+"""
+    compare(
+        spark,
+        SF_SMOKE,
+        lambda s, d: textstats.language_id(load_table(s, d, "documents"), "text", "doc_id"),
+        oracle,
+    )
 
 
 def test_deregistered_round6_sampling_queries_match_duckdb(spark):
-    """dataset_hash_split + stratified_sample_langs were merged into
-    sampling_splits; originals stay callable, oracles pinned here."""
-    from pyspark_dist_explore_spark.plans.llm_ops import (
-        HASH_SPLIT_ORACLE,
-        STRATIFIED_LANGS_ORACLE,
-        q_dataset_hash_split,
-        q_stratified_sample_langs,
+    """hash_split and stratified_sample_hash counts hash-match DuckDB
+    through the library's own SQL renderers."""
+    from pyspark_dist_explore_spark.operators.sampling import (
+        hash_split,
+        hash_split_sql,
+        stratified_sample_hash,
+        stratified_sample_hash_sql,
     )
+    from pyspark_dist_explore_spark.plans.llm_ops import _STRAT_FRACS
+    from pyspark_dist_explore_spark.sources.tables import load_table
     from tests.conftest import SF_SMOKE
     from tests.oracle_utils import compare
 
-    compare(spark, SF_SMOKE, q_dataset_hash_split, HASH_SPLIT_ORACLE)
-    compare(spark, SF_SMOKE, q_stratified_sample_langs, STRATIFIED_LANGS_ORACLE)
-
-
-def test_deregistered_round6_grouping_queries_match_duckdb(spark):
-    """rollup_cube_status + grouping_sets_priority were merged into
-    grouping_analytics; originals stay callable, oracles pinned here."""
-    from pyspark_dist_explore_spark.plans.extended import (
-        GROUPING_SETS_ORACLE,
-        q_grouping_sets_priority,
+    compare(
+        spark,
+        SF_SMOKE,
+        lambda s, d: hash_split(load_table(s, d, "documents"), "doc_id")
+        .groupBy("split")
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        f"SELECT {hash_split_sql('doc_id')} AS split, count(*) AS cnt FROM documents GROUP BY 1",
     )
-    from pyspark_dist_explore_spark.plans.relational import (
-        ROLLUP_CUBE_ORACLE,
-        q_rollup_cube_status,
+    compare(
+        spark,
+        SF_SMOKE,
+        lambda s, d: stratified_sample_hash(
+            load_table(s, d, "documents"), "lang", _STRAT_FRACS, "doc_id"
+        )
+        .groupBy("lang")
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        f"SELECT lang, count(*) AS cnt FROM documents "
+        f"WHERE {stratified_sample_hash_sql('lang', 'doc_id', _STRAT_FRACS)} GROUP BY lang",
     )
-    from tests.conftest import SF_SMOKE
-    from tests.oracle_utils import compare
-
-    compare(spark, SF_SMOKE, q_rollup_cube_status, ROLLUP_CUBE_ORACLE)
-    compare(spark, SF_SMOKE, q_grouping_sets_priority, GROUPING_SETS_ORACLE)
 
 
 def test_deregistered_round6_vector_queries_match_duckdb(spark):
-    """vector_topk_exact + vector_neardup_pairs were merged into
-    vector_exact_search; originals stay callable, oracles pinned here."""
-    from pyspark_dist_explore_spark.plans.llm_ops import (
-        VECTOR_PAIRS_ORACLE,
-        VECTOR_TOPK_ORACLE,
-        q_vector_neardup_pairs,
-        q_vector_topk_exact,
-    )
+    """similarity.exact_topk over the full table and
+    similarity.cosine_neardup_pairs at its default blocking hash-match
+    DuckDB (the vector_exact_search slot runs both on a capped corpus
+    with one block)."""
+    from pyspark_dist_explore_spark.plans.llm_ops import _COS_THRESHOLD, _UNIT_CTE
+    from pyspark_dist_explore_spark.sources.tables import load_table
     from tests.conftest import SF_SMOKE
     from tests.oracle_utils import compare
 
-    compare(spark, SF_SMOKE, q_vector_topk_exact, VECTOR_TOPK_ORACLE)
-    compare(spark, SF_SMOKE, q_vector_neardup_pairs, VECTOR_PAIRS_ORACLE)
+    vecs = f"WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings), {_UNIT_CTE}"
+    topk_oracle = f"""{vecs},
+q AS (SELECT vec_id AS query_id, uv AS qv FROM u WHERE vec_id < 5),
+scored AS (
+  SELECT q.query_id, u.vec_id, round(list_dot_product(qv, uv), 6) AS cos_sim
+  FROM u, q WHERE u.vec_id <> q.query_id
+)
+SELECT query_id, CAST(rank AS INT) AS rank, vec_id, cos_sim FROM (
+  SELECT query_id, vec_id, cos_sim,
+         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id ASC) AS rank
+  FROM scored
+) WHERE rank <= 5
+"""
+    pairs_oracle = f"""{vecs}
+SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+       round(list_dot_product(a.uv, b.uv), 6) AS cos_sim
+FROM u a JOIN u b ON a.vec_id < b.vec_id
+WHERE round(list_dot_product(a.uv, b.uv), 6) >= {_COS_THRESHOLD}
+"""
+
+    def topk(s, d):
+        emb = load_table(s, d, "embeddings")
+        queries = emb.where(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        return similarity.exact_topk(emb, queries, k=5, query_id_col="query_id")
+
+    compare(spark, SF_SMOKE, topk, topk_oracle)
+    compare(
+        spark,
+        SF_SMOKE,
+        lambda s, d: similarity.cosine_neardup_pairs(
+            load_table(s, d, "embeddings"), threshold=_COS_THRESHOLD
+        ),
+        pairs_oracle,
+    )
 
 
 def test_perplexity_staged_inputs_match_lazy(spark):

@@ -107,3 +107,34 @@ def test_text_perplexity_gate_projection_is_integer_only(spark):
             f"{f.name}: {f.dataType} — the gate projection must stay "
             "transcendental-free (ORACLES.md)"
         )
+
+
+def test_approx_sketches_null_flag_matches_oracle(spark, tmp_path):
+    """A NULL l_returnflag forms its own group in the oracle's GROUP BY;
+    the slot's null-safe sketch join keeps those rows in every group
+    and global count."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from pyspark_dist_explore_spark.sources.tables import TABLES
+
+    for t in TABLES:
+        if t != "lineitem":
+            os.symlink(f"{SF_SMOKE}/{t}.parquet", tmp_path / f"{t}.parquet")
+    li = pq.read_table(f"{SF_SMOKE}/lineitem.parquet")
+    flag = li["l_returnflag"]
+    nulled = pc.if_else(
+        pc.equal(pc.bit_wise_and(li["l_orderkey"], 7), 0),
+        pa.scalar(None, flag.type),
+        flag,
+    )
+    assert 0 < nulled.null_count < len(li)
+    pq.write_table(
+        li.set_column(li.schema.get_field_index("l_returnflag"), "l_returnflag", nulled),
+        tmp_path / "lineitem.parquet",
+    )
+    spec = REGISTRY["approx_sketches"]
+    compare(spark, str(tmp_path), spec.build, spec.oracle)

@@ -13,10 +13,8 @@ from pyspark.sql import functions as F
 
 from pyspark_dist_explore_spark.operators import dedup
 from pyspark_dist_explore_spark.pipeline import curate_documents
-from pyspark_dist_explore_spark.plans.llm_ops import (
-    DEDUP_FINGERPRINT_ORACLE,
-    q_dedup_fingerprint,
-)
+from pyspark_dist_explore_spark.plans.llm_ops import _NORM
+from pyspark_dist_explore_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 from tests.oracle_utils import compare
 
@@ -26,9 +24,19 @@ def _docs(spark):
 
 
 def test_dedup_fingerprint_still_oracle_green(spark):
-    """Deregistered from the 50-entry window (subsumed by
-    pipeline_curate's dedup stage) but still a public query — pin it."""
-    compare(spark, SF_SMOKE, q_dedup_fingerprint, DEDUP_FINGERPRINT_ORACLE)
+    """dedup.fingerprint_dedup (md5 over normalized text, min-id
+    survivor, group size) hash-matches its DuckDB twin."""
+    oracle = f"""
+SELECT md5({_NORM.format(c='text')}) AS fingerprint,
+       min(doc_id) AS survivor_id, count(*) AS n_dups
+FROM documents GROUP BY 1
+"""
+    compare(
+        spark,
+        SF_SMOKE,
+        lambda s, d: dedup.fingerprint_dedup(load_table(s, d, "documents"), "text", "doc_id"),
+        oracle,
+    )
 
 
 def test_curate_output_invariants(spark):

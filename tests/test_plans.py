@@ -110,11 +110,13 @@ def test_simhash_partial_aggregation(spark):
 
 def test_blocked_cosine_single_group_shuffle(spark):
     """The blocked matmul shuffles once by block-pair key into the Arrow
-    group map; no per-pair join appears in the plan.  (The builder was
-    merged into vector_exact_search round 6 — pin the standalone plan.)"""
-    from pyspark_dist_explore_spark.plans.llm_ops import q_vector_neardup_pairs
+    group map; no per-pair join appears in the plan (default blocking)."""
+    from pyspark_dist_explore_spark.operators import similarity
+    from pyspark_dist_explore_spark.sources.tables import load_table
 
-    df = q_vector_neardup_pairs(spark, SF_SMOKE)
+    df = similarity.cosine_neardup_pairs(
+        load_table(spark, SF_SMOKE, "embeddings"), threshold=0.45
+    )
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -463,55 +465,8 @@ def test_histogram_drift_by_group_no_cartesian(spark):
 
 
 # --------------------------------------------------------------------------
-# stage= knob: registered-eager queries are lazy by default (round 7)
+# staging localCheckpoints
 # --------------------------------------------------------------------------
-
-
-def _jvm_job_count(spark) -> int:
-    """Total jobs this session has run, from the JVM AppStatusStore —
-    the direct signal for 'constructing this DataFrame ran no jobs'."""
-    return spark._jsparkSession.sparkContext().statusStore().jobsList(None).size()
-
-
-def test_stage_default_constructs_without_running_jobs(spark):
-    """The three formerly eager-at-build registered queries construct
-    FULLY LAZILY by default: `stage=False` (the library default) must
-    not run a single Spark job — no localCheckpoint, no convergence
-    count — until an action is requested.  The registry opts in to
-    `stage=True` explicitly for the one-scan staged plans."""
-    from pyspark_dist_explore_spark.plans.llm_ops import (
-        q_neardup_clusters,
-        q_neardup_containment,
-        q_text_perplexity,
-    )
-    from pyspark_dist_explore_spark.sources.tables import load_table
-
-    # warm the parquet footer-schema cache: the FIRST read of a table
-    # runs Spark's one inference job (unavoidable I/O metadata); every
-    # later load_table is jobless via sources.tables._SCHEMA_CACHE
-    load_table(spark, SF_SMOKE, "documents").schema
-    for q in (q_text_perplexity, q_neardup_containment, q_neardup_clusters):
-        before = _jvm_job_count(spark)
-        df = q(spark, SF_SMOKE)
-        after = _jvm_job_count(spark)
-        assert after == before, f"{q.__name__} ran {after - before} job(s) at construction"
-        assert df.columns  # the plan resolves
-
-
-def test_stage_knob_staged_matches_lazy(spark):
-    """stage=True (registered form: localCheckpoint staging / eager
-    convergent propagation) and stage=False (fully lazy) are pure plan-
-    shape choices — identical rows for all three queries."""
-    from pyspark_dist_explore_spark.plans.llm_ops import (
-        q_neardup_clusters,
-        q_neardup_containment,
-        q_text_perplexity,
-    )
-
-    for q in (q_text_perplexity, q_neardup_containment, q_neardup_clusters):
-        lazy = sorted(map(tuple, q(spark, SF_SMOKE, stage=False).collect()))
-        staged = sorted(map(tuple, q(spark, SF_SMOKE, stage=True).collect()))
-        assert lazy == staged, q.__name__
 
 
 def test_lazy_checkpoint_staging_matches_forced_eager(spark):
@@ -739,13 +694,11 @@ def test_incremental_minhash_snapshot_never_shuffles(spark):
 
 
 def test_text_perplexity_staged_plan_rides_checkpoint(spark):
-    """The registered (staged) form — now carrying the X30 DSIR section —
-    reads ZERO parquet scans in its final plan: both LM scorers AND the
-    DSIR gram/count subtrees consume the one checkpointed pair frame,
-    and no Python stage appears anywhere."""
-    from pyspark_dist_explore_spark.plans.llm_ops import q_text_perplexity
-
-    df = q_text_perplexity(spark, SF_SMOKE, stage=True)
+    """The registered slot reads ZERO parquet scans in its final plan:
+    both LM scorers, the KN aggregates AND the DSIR gram/count subtrees
+    consume the one checkpointed pair frame, and no Python stage appears
+    anywhere."""
+    df = REGISTRY["text_perplexity"].build(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan parquet") == 0
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -970,20 +923,6 @@ def test_sample_negatives_plan_shape(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_rep_battery_frame_matches_oracle(spark):
-    """X32 gate section, retired from the text_scrub_repetition bench
-    path in round 13: the pivoted exact-integer battery numerators stay
-    hash-pinned member-for-member against the DuckDB twin that rode the
-    driver gate rounds 10-12."""
-    from pyspark_dist_explore_spark.plans.llm_ops import (
-        REP_BATTERY_ORACLE,
-        rep_battery_frame,
-    )
-    from tests.oracle_utils import compare
-
-    compare(spark, SF_SMOKE, rep_battery_frame, REP_BATTERY_ORACLE)
-
-
 def test_pq_encode_plan_shape(spark):
     """X64 scale pins: encoding is ONE Arrow pass over the vector rows —
     exactly one ArrowEvalPython stage, no Exchange (no shuffle, no
@@ -1037,3 +976,19 @@ def test_ivf_pq_plan_no_cartesian_scan(spark):
     assert "CartesianProduct" not in plan
     # corpus-side joins are broadcast (centroids, probes, candidates, LUT)
     assert "BroadcastExchange" in plan
+
+
+def test_section_slots_compose_their_sections(spark):
+    """A slot registered from its section builder is exactly the union
+    of its section frames, so the per-section bench times measure the
+    frames the slot runs."""
+    for name in ("corpus_shuffle_shards", "corpus_token_budget"):
+        spec = REGISTRY[name]
+        parts = spec.sections(spark, SF_SMOKE)
+        got = sorted(
+            repr(sorted(r.asDict().items())) for df in parts.values() for r in df.collect()
+        )
+        want = sorted(
+            repr(sorted(r.asDict().items())) for r in spec.build(spark, SF_SMOKE).collect()
+        )
+        assert got == want, name

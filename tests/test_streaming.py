@@ -1211,3 +1211,68 @@ def test_stream_pq_neardup_filter_residual_index(spark, tmp_path):
             stream, cb, codes, sink, m=m, dim=dim,
             threshold=1e11, residual=True,
         )
+
+
+@pytest.mark.parametrize(
+    "value, expected",
+    [
+        ("67108864", 64 << 20),
+        ("64m", 64 << 20),
+        ("64MB", 64 << 20),
+        ("1gb", 1 << 30),
+        ("1t", 1 << 40),
+        ("512k", 512 << 10),
+        ("2KB", 2 << 10),
+        ("1.5g", 3 << 29),
+        ("10b", 10),
+        (4096, 4096),
+    ],
+)
+def test_parse_size_bytes_spark_suffixes(value, expected):
+    """Spark byte-size strings parse with one- and two-character binary
+    suffixes in any case ('64MB' is not read as '64M' + a stray 'B')."""
+    from pyspark_dist_explore_spark.plans.streaming_q import _parse_size_bytes
+
+    assert _parse_size_bytes(value) == expected
+
+
+def test_stream_state_partitions_sum_directory_parts(spark, tmp_path):
+    """A directory-of-parts events dataset counts the bytes of its data
+    files (not the directory inode, and not '_'/'.' metadata files)."""
+    from pyspark_dist_explore_spark.plans.streaming_q import _stream_state_partitions
+
+    events = tmp_path / "events.parquet"
+    events.mkdir()
+    for i, n in enumerate((2000, 1500, 2600)):
+        (events / f"part-{i:05d}.parquet").write_bytes(b"x" * n)
+    (events / "_SUCCESS").write_bytes(b"x" * 50_000)
+    (events / ".part-00000.parquet.crc").write_bytes(b"x" * 50_000)
+    session = spark.newSession()
+    session.conf.set("spark.sql.shuffle.partitions", "16")
+    session.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
+    # ceil(6100 bytes / 1 KiB) = 6, under the 16-partition ceiling
+    assert _stream_state_partitions(session, str(tmp_path)) == 6
+    session.conf.set("spark.sql.shuffle.partitions", "4")
+    assert _stream_state_partitions(session, str(tmp_path)) == 4
+
+
+def test_events_stream_hist_leaves_caller_conf_untouched(spark, monkeypatch):
+    """Building the registered streaming histogram never writes the
+    caller session's conf: the stream runs in its own session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from pyspark_dist_explore_spark.plans.queries import REGISTRY
+    from tests.conftest import SF_SMOKE
+
+    caller = spark.conf._jconf
+    set_conf = RuntimeConfig.set
+
+    def guarded_set(self, key, value):
+        assert not self._jconf.equals(caller), f"caller conf written: {key}={value}"
+        return set_conf(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", guarded_set)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    rows = REGISTRY["events_stream_hist"].build(spark, SF_SMOKE).collect()
+    assert rows
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
