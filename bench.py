@@ -42,7 +42,7 @@ def main() -> None:
         .appName("pyspark_dist_explore_spark-bench")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
-        # r14 opt (guide §2.2): derive post-shuffle partition COUNT from
+        # derive post-shuffle partition COUNT from
         # bytes, not from the core constant — parallelismFirst=true (the
         # compatibility default) coalesces only down to defaultParallelism,
         # so KB-sized shuffles still schedule `cpus` reduce tasks per
@@ -57,7 +57,7 @@ def main() -> None:
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", "8g")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -944,31 +944,6 @@ def simhash_signatures(
     return sums.select("doc_id", sim.alias("sim"))
 
 
-def _simhash_signatures_unpacked(
-    df: DataFrame, text_col: str, id_col: str, *, hash_fn: str = "xxhash64"
-) -> DataFrame:
-    """The r14 wide-aggregate reference form (one SUM(±1) column per
-    signature bit) — kept ONLY as the equality pin for the lane-packed
-    rewrite above (tests/test_ops.py::test_simhash_packed_lanes)."""
-    h_expr = _simhash_token_hash(hash_fn)
-    bits = SIMHASH_BITS[hash_fn]
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
-    ).where(F.col("tok") != "")
-    hashed = toks.select("doc_id", h_expr.alias("h"))
-    sums = hashed.groupBy("doc_id").agg(
-        *[
-            F.sum(F.when(F.col("h").bitwiseAND(_mask(i)) != 0, 1).otherwise(-1)).alias(f"b{i}")
-            for i in range(bits)
-        ]
-    )
-    sim = F.lit(0).cast("bigint")
-    for i in range(bits):
-        sim = sim + F.when(F.col(f"b{i}") > 0, _mask(i)).otherwise(F.lit(0).cast("bigint"))
-    return sums.select("doc_id", sim.alias("sim"))
-
-
 def simhash_neardup(
     df: DataFrame,
     text_col: str,
@@ -976,7 +951,6 @@ def simhash_neardup(
     *,
     max_hamming: int = 3,
     hash_fn: str = "xxhash64",
-    stage: bool = False,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash_a, simhash_b) ≤ ``max_hamming``.
 
@@ -984,20 +958,18 @@ def simhash_neardup(
     xxhash64, 15 for the md5 variant; pigeonhole: distance ≤3 ⇒ ≥1
     identical chunk), so the join is on small buckets, not a cross join.
 
-    ``stage=True`` ``localCheckpoint``s the signature table (lazily)
-    before the chunk self-join — both join sides otherwise re-run the
-    explode → 60/64-column bit-sum aggregate (the dominant cost; the
-    semantic_dedup ``stage=`` pattern).  Default False keeps the
-    operator job-free for callers that persist/land signatures
-    themselves.
+    The signature table is ``localCheckpoint``-ed (lazily: the first
+    consuming action materializes it) before the chunk self-join, so
+    both join sides read one token-explode → bit-sum aggregate instead
+    of re-running it.
     """
     if hash_fn not in SIMHASH_BITS:
         raise ValueError(f"hash_fn must be one of {sorted(SIMHASH_BITS)}, got {hash_fn!r}")
     chunk_bits = SIMHASH_BITS[hash_fn] // 4
     chunk_mask = (1 << chunk_bits) - 1
-    sig = simhash_signatures(df, text_col, id_col, hash_fn=hash_fn)
-    if stage:
-        sig = sig.localCheckpoint(eager=False)
+    sig = simhash_signatures(df, text_col, id_col, hash_fn=hash_fn).localCheckpoint(
+        eager=False
+    )
     chunks = sig.select(
         "doc_id",
         "sim",
@@ -1752,7 +1724,6 @@ def incremental_dedup(
     fp_col: str = "fingerprint",
     bloom_bits: int | None = None,
     bloom_hashes: int = 5,
-    stage: bool = False,
 ) -> DataFrame:
     """Dedup a NEW batch against an existing corpus snapshot: collapse
     the batch to one row per distinct content (deterministic min-id
@@ -1777,14 +1748,11 @@ def incremental_dedup(
     positives are weeded by the verify join, never silently dropped);
     requires the maybe-seen set to be broadcast-small, i.e. a batch
     whose overlap with the snapshot is low — the normal incremental
-    case.  Both paths deterministic; no RNG anywhere.
-
-    ``stage=True`` (bloom path only) ``localCheckpoint``s the flagged
-    batch lazily: its three consumers (the bloom-miss branch, the
-    broadcast candidate probe, the verify anti-join) otherwise each
-    re-run the batch fingerprint aggregate + Arrow membership test
-    (the repo staging pattern; default False keeps the operator
-    job-free).
+    case.  Both paths deterministic; no RNG anywhere.  The bloom path
+    ``localCheckpoint``s the flagged batch (lazily), so its three
+    consumers — the bloom-miss branch, the broadcast candidate probe and
+    the verify anti-join — read one fingerprint aggregate + Arrow
+    membership test instead of re-running it each.
     """
     batch = fingerprint_dedup(new_df, text_col, id_col)
     seen = seen_fps.select(F.col(fp_col).alias("fingerprint")).distinct()
@@ -1814,9 +1782,7 @@ def incremental_dedup(
         return pd.Series(hit)
 
     h1, h2 = _fp_km_hashes(F.col("fingerprint"))
-    flagged = batch.withColumn("__maybe", _maybe_seen(h1, h2))
-    if stage:
-        flagged = flagged.localCheckpoint(eager=False)
+    flagged = batch.withColumn("__maybe", _maybe_seen(h1, h2)).localCheckpoint(eager=False)
     sure_new = flagged.where(~F.col("__maybe")).drop("__maybe")
     cand = flagged.where(F.col("__maybe")).drop("__maybe")
     confirmed = seen.join(
@@ -1836,7 +1802,6 @@ def containment_pairs(
     window: int = 4,
     hash_fn: str = "xxhash64",
     max_df: int = 1000,
-    fp_rows: DataFrame | None = None,
 ) -> DataFrame:
     """ASYMMETRIC near-dup detection: does one document CONTAIN another?
 
@@ -1864,14 +1829,10 @@ def containment_pairs(
     Ratios are over the post-``max_df`` fingerprint sets (documented
     semantics: boilerplate passages don't count toward containment).
 
-    ``fp_rows=`` is the staged-input form (same pattern as
-    ``minhash_neardup(shingle_rows=)``): the lazy plan reads the
-    fingerprint build FOUR times (both pair-join sides, the doc-freq
-    aggregate, the per-doc sizes), so a caller who materializes
-    ``winnowing_fingerprints(...)`` once — ``localCheckpoint()`` or a
-    parquet write — and passes it here pays ONE scan instead of four.
-    Must be (doc_id, fingerprint) rows with k/window/hash_fn semantics
-    of this call (they are ignored when ``fp_rows`` is given).
+    The fingerprint rows are ``localCheckpoint``-ed (lazily) before use:
+    the plan reads them four times (both pair-join sides, the doc-freq
+    aggregate, the per-doc sizes), and the checkpoint makes that one
+    scan of ``df`` and one fingerprint build instead of four.
     """
     from pyspark_dist_explore_spark.operators.textstats import winnowing_fingerprints
 
@@ -1879,15 +1840,9 @@ def containment_pairs(
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     if max_df < 1:
         raise ValueError(f"max_df must be >= 1 (it caps fingerprint doc-frequency), got {max_df}")
-    if fp_rows is not None:
-        missing = {"doc_id", "fingerprint"} - set(fp_rows.columns)
-        if missing:
-            raise ValueError(f"fp_rows missing columns: {sorted(missing)}")
-        fps = fp_rows
-    else:
-        fps = winnowing_fingerprints(
-            df, text_col, id_col, k=k, window=window, hash_fn=hash_fn
-        )
+    fps = winnowing_fingerprints(
+        df, text_col, id_col, k=k, window=window, hash_fn=hash_fn
+    ).localCheckpoint(eager=False)
     common = (
         fps.groupBy("fingerprint")
         .agg(F.count(F.lit(1)).alias("doc_freq"))
@@ -2018,8 +1973,6 @@ def corpus_overlap_matrix(
     group_col: str = "source",
     text_col: str = "text",
     id_col: str = "doc_id",
-    *,
-    stage: bool = True,
 ) -> DataFrame:
     """X43: K-way cross-source overlap matrix — :func:`corpus_overlap`
     generalized to every unordered source pair of ONE mixed corpus in
@@ -2045,18 +1998,12 @@ def corpus_overlap_matrix(
     shuffle.
 
     The ``(src, fp, docs)`` table feeds THREE consumers (totals + both
-    self-join sides); ``stage=True`` (default) pins it with
-    ``localCheckpoint(eager=False)`` so the corpus text is scanned and
-    fingerprinted ONCE.  A/B at sf0.1 (mirror-mixed, warm): staged
-    0.67–0.79 s vs lazy 0.51–0.57 s — at gate size the checkpoint's
-    constant overhead LOSES to the rescan, but the lazy plan re-runs
-    the corpus scan+fingerprint pipeline (post-run adaptive plan: 5
-    parquet scans, only 1 ReusedExchange — AQE reuse covers the two
-    self-join sides, not the totals branch), which is the dominant
-    cost at real corpus size: the 100× two-decade probe (BASELINE.md
-    r10) measured staged 8.8 s vs lazy 64.8 s at 500k mirrored docs —
-    the single-scan default wins 7.4× where it matters, and
-    ``stage=False`` stays available for gate-sized calls.
+    self-join sides) and is pinned with ``localCheckpoint(eager=False)``,
+    so the corpus text is scanned and fingerprinted ONCE.  Without it
+    the plan re-runs the corpus scan + fingerprint pipeline per consumer
+    (AQE exchange reuse covers the two self-join sides, not the totals
+    branch): at 500k mirrored docs (BASELINE.md) the staged form took
+    8.8 s against 64.8 s for the lazy one.
     """
     per = (
         df.select(
@@ -2068,9 +2015,8 @@ def corpus_overlap_matrix(
         )
         .groupBy("src", "fp")
         .agg(F.count(F.lit(1)).cast("bigint").alias("docs"))
+        .localCheckpoint(eager=False)
     )
-    if stage:
-        per = per.localCheckpoint(eager=False)
     tot = per.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_fp"),
         F.sum("docs").cast("bigint").alias("n_docs"),

@@ -1016,7 +1016,6 @@ def semantic_dedup(
     resolve_rounds: int = 8,
     centroids: DataFrame | None = None,
     assign_round: int | None = None,
-    stage: bool = False,
     max_cell_rows: int | None = 1 << 20,
 ) -> DataFrame:
     """SemDeDup-style SEMANTIC deduplication (Abbas et al. 2023,
@@ -1068,15 +1067,12 @@ def semantic_dedup(
     single cell may cost — see :func:`semantic_pairs`, which enforces
     it; a degenerate fit errors loudly instead of grinding.
 
-    ``stage=True`` ``localCheckpoint``s the pair frame before the
-    cluster resolution (the repo-wide staging pattern): the lazy
-    ``resolve_rounds``-round propagation references the edge list every
-    round, and each reference re-executes the blocked-matmul pair
-    subtree — measured 7.5–9 s vs ~2 s staged on the sf0.1 registered
-    query.  The checkpoint is LAZY (r14): the first consuming action
-    materializes the pair blocks, so construction stays job-free even
-    with ``stage=True`` (beyond the KMeans fit, when one runs) — A/B'd
-    −0.6 s on the registered slot vs the eager form.
+    The pair frame is ``localCheckpoint``-ed before the cluster
+    resolution: the ``resolve_rounds``-round propagation references the
+    edge list every round, and without the checkpoint each reference
+    re-executes the blocked-matmul pair subtree.  The checkpoint is
+    lazy — the first consuming action materializes the pair blocks — so
+    construction runs no job beyond the KMeans fit, when one runs.
     """
     from pyspark_dist_explore_spark.operators.dedup import neardup_clusters_lazy
 
@@ -1092,9 +1088,7 @@ def semantic_dedup(
         centroids=centroids,
         assign_round=assign_round,
         max_cell_rows=max_cell_rows,
-    )
-    if stage:
-        pairs = pairs.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     return neardup_clusters_lazy(
         pairs,
         a_col="id_a",

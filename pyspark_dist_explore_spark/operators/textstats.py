@@ -1010,7 +1010,7 @@ def unigram_logprob_scores(
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0 (Laplace smoothing mass), got {alpha}")
     if tf_rows is not None:
-        # staged input (the containment fp_rows= pattern): a caller who
+        # staged input (the minhash_neardup shingle_rows= pattern): a caller who
         # already materialized (doc_id, term, tf) — e.g. a checkpointed
         # token frame shared with the bigram scorer — skips the second
         # tokenize scan; plan shape change only, results identical
@@ -1129,7 +1129,7 @@ def bigram_logprob_scores(
     if (lm_unigrams is None) != (lm_bigrams is None):
         raise ValueError("pass BOTH lm_unigrams and lm_bigrams, or neither")
     if pairs_rows is not None:
-        # staged input (the containment fp_rows= pattern): a caller who
+        # staged input (the minhash_neardup shingle_rows= pattern): a caller who
         # already materialized the lag-window pair frame — e.g. a
         # checkpointed token frame shared with the unigram scorer —
         # skips the tokenize scan + window; results identical
@@ -2774,7 +2774,6 @@ def unigram_seed_candidates(
     max_piece_len: int = 4,
     seed_size: int = 256,
     word_freqs: DataFrame | None = None,
-    stage: bool = True,
 ) -> DataFrame:
     """X48 seed: the candidate-piece table ``(piece, cnt)`` — ALL
     single characters (the coverage floor Viterbi falls back on) plus
@@ -2790,12 +2789,12 @@ def unigram_seed_candidates(
     (:func:`unigram_seed_sql` is the DuckDB twin).  Sentinel code
     points are stripped per the module contract.
 
-    ``stage=True`` (default) ``localCheckpoint``-s the piece-count
-    table once so the chars branch and the top-N branch derive from
-    ONE corpus scan — lazily, the unshared union subtrees would scan
-    the corpus twice (the pushed ``length(piece)`` filters break
-    subtree reuse; A/B in BASELINE.md r12).  The staged table is
-    substring-type-sized (content-bounded).  ``word_freqs=`` feeds a
+    The piece-count table is ``localCheckpoint``-ed (lazily) so the
+    chars branch and the top-N branch derive from ONE corpus scan;
+    unstaged, the two union subtrees would scan the corpus twice (the
+    pushed ``length(piece)`` filters break subtree reuse).  The staged
+    table is substring-type-sized (content-bounded) and its blocks are
+    released when the returned frame is dropped.  ``word_freqs=`` feeds a
     precomputed (w, freq) type table — :func:`unigram_lm_learn` passes
     its own checkpoint so seed + EM share one corpus aggregate."""
     if max_piece_len < 2:
@@ -2820,12 +2819,8 @@ def unigram_seed_candidates(
         src.select(F.explode(subs).alias("piece"), "freq")
         .groupBy("piece")
         .agg(F.sum("freq").cast("bigint").alias("cnt"))
+        .localCheckpoint(eager=False)
     )
-    if stage:
-        # blocks are released by the ContextCleaner when the returned
-        # frame is dropped — the caller owns the lifetime.  Lazy: the
-        # caller's first action materializes (r14 — no build job)
-        counts = counts.localCheckpoint(eager=False)
     chars = counts.where(F.length("piece") == 1)
     multi = (
         counts.where(F.length("piece") > 1)

@@ -27,21 +27,17 @@ Laziness caveat: CONSTRUCTION is not free.  ``neardup_clusters``
 executes its propagation rounds with one count action per round
 (materializing the round's lazily-checkpointed label state, and — in
 round 1 — the edge list, i.e. the scoring scan, exact dedup, and the
-pair self-join), all inside the ``curate_documents`` call;
-``materialize=True`` checkpoints the deduped stage (lazily — the first
-downstream action runs it), and ``snapshot_dir=...`` eagerly WRITES
-it to parquet and re-reads the files.  Only the RETURNED frame
-(survivor join + split) is lazy.  The deduped intermediate is
-referenced by the pair generator, the cluster label init, and the
-final survivor join, so a production run over a large corpus should
-pass ``snapshot_dir`` (durable, resumable, audit-able) — or at least
-``materialize=True`` — rather than recompute the scoring scan three
-times.
+pair self-join), all inside the ``curate_documents`` call.  The deduped
+intermediate, which the pair generator, the cluster label init and the
+final survivor join all read, is ``localCheckpoint``-ed (lazily — the
+first downstream action runs it), or with ``snapshot_dir=...`` eagerly
+WRITTEN to parquet and read back (durable, resumable, audit-able).
+Only the RETURNED frame (survivor join + split) is lazy.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import Callable, Literal, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -62,29 +58,25 @@ def minhash_pair_fn(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    stage: bool = True,
 ) -> PairFn:
     """Ready-made MinHash-LSH ``pair_fn`` for :func:`curate_documents` —
     the scale path that replaces the demo's quadratic exact-Jaccard
     self-join with banded candidate generation.
 
-    ``stage=True`` (default) builds the ``(doc_id, sh)`` shingle rows
-    ONCE and ``localCheckpoint``s them before handing them to
+    The pair fn builds the ``(doc_id, sh)`` shingle rows ONCE and
+    ``localCheckpoint``s them (lazily) before handing them to
     ``minhash_neardup`` via its staged ``shingle_rows=`` input: the four
     shingle consumers (signature agg, size agg, both verify sides) read
     the materialized blocks instead of re-running shingling + the
     upstream scoring scan 4×.  The blocks live until the driver-side
-    reference is garbage-collected (pair generation is fully consumed
-    inside the ``curate_documents`` call, so that is the natural
-    lifetime — same accepted pattern as the cluster-resolution rounds).
-    ``stage=False`` keeps the fully-lazy plan (useful when the caller
-    already persisted the input frame).
+    reference is garbage-collected; pair generation is fully consumed
+    inside the ``curate_documents`` call, so that is their lifetime.
     """
 
     def fn(kept: DataFrame) -> DataFrame:
-        rows = dedup.shingle_rows(kept, "__text", "doc_id", shingle_n)
-        if stage:
-            rows = rows.localCheckpoint(eager=False)
+        rows = dedup.shingle_rows(kept, "__text", "doc_id", shingle_n).localCheckpoint(
+            eager=False
+        )
         return dedup.minhash_neardup(
             kept,
             "__text",
@@ -105,7 +97,6 @@ def containment_pair_fn(
     k: int = 5,
     window: int = 4,
     max_df: int = 1000,
-    stage: bool = True,
 ) -> PairFn:
     """Ready-made asymmetric-containment ``pair_fn`` for
     :func:`curate_documents` — catches the crawl shape symmetric
@@ -116,21 +107,10 @@ def containment_pair_fn(
     shared winnowing fingerprints, ``max_df`` boilerplate drop), so it
     is a drop-in scale-safe alternative/complement; to combine both
     signals union the two pair frames in a custom ``pair_fn``.
-
-    ``stage=True`` (default) materializes the winnowing fingerprints
-    once (``localCheckpoint``) and hands them to ``containment_pairs``
-    via its staged ``fp_rows=`` input — the lazy plan otherwise re-runs
-    the fingerprint build (and the upstream scoring scan) four times;
-    same lifetime pattern as :func:`minhash_pair_fn`.
+    ``containment_pairs`` stages its winnowing fingerprints itself.
     """
-    from pyspark_dist_explore_spark.operators.textstats import winnowing_fingerprints
 
     def fn(kept: DataFrame) -> DataFrame:
-        rows = None
-        if stage:
-            rows = winnowing_fingerprints(
-                kept, "__text", "doc_id", k=k, window=window
-            ).localCheckpoint(eager=False)
         return dedup.containment_pairs(
             kept,
             "__text",
@@ -139,7 +119,6 @@ def containment_pair_fn(
             k=k,
             window=window,
             max_df=max_df,
-            fp_rows=rows,
         ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
 
     return fn
@@ -303,7 +282,7 @@ def curate_documents(
     neardup_keep_score: Column | None = None,
     neardup_keep_higher_is_better: bool = True,
     split_fractions: dict[str, float] | None = None,
-    materialize: bool = False,
+    materialize: Literal[True] = True,
     snapshot_dir: str | None = None,
     scrub: bool = False,
     unicode_form: str | None = None,
@@ -362,19 +341,25 @@ def curate_documents(
     scores).  Ties and score-less docs fall back to min id, so a
     constant score is exactly the default convention.
 
-    ``materialize=True`` localCheckpoints the deduped intermediate,
-    which three downstream consumers re-read (the pair generator, the
-    cluster label init, the final survivor join) — one scoring scan
-    instead of three.  ``snapshot_dir`` is the 100 TB form of the same
-    idea and takes precedence over ``materialize``: the deduped stage is
-    written to parquet there (eager, one scoring scan) and every
-    downstream consumer reads the files back — durable across executor
-    loss, resumable, and the snapshot doubles as the audit copy of the
-    post-dedup corpus.  The write refuses a non-empty ``snapshot_dir``
-    that lacks a ``_SUCCESS`` marker (i.e. anything that is not a
-    previous snapshot) so a typo'd path can't silently delete data.
+    The deduped intermediate, which three downstream consumers re-read
+    (the pair generator, the cluster label init, the final survivor
+    join), is ``localCheckpoint``-ed lazily — one scoring scan instead
+    of three.  When any text rewrite runs (``unicode_form``,
+    ``c4_rules``, ``drop_boilerplate_lines``, ``dedup_doc_lines``,
+    ``span_dedup_k``), the rewritten corpus is checkpointed the same
+    way, so the downstream gates and fingerprints do not re-run the
+    rewrite chain per scan.  ``snapshot_dir`` is the 100 TB form of the
+    deduped checkpoint: the deduped stage is written to parquet there
+    (eager, one scoring scan) and every downstream consumer reads the
+    files back — durable across executor loss, resumable, and the
+    snapshot doubles as the audit copy of the post-dedup corpus.  The
+    write refuses a non-empty ``snapshot_dir`` that lacks a
+    ``_SUCCESS`` marker (i.e. anything that is not a previous snapshot)
+    so a typo'd path can't silently delete data.  ``materialize`` is
+    accepted for existing callers and must be True; staging is not
+    optional.
 
-    ``strip_markup=True`` (opt-in, round 12) rewrites the text through
+    ``strip_markup=True`` (opt-in) rewrites the text through
     the X51 heuristic markup stripper FIRST among the text rewrites —
     decoded entities feed the unicode fold below, and every downstream
     gate/fingerprint sees prose instead of tags (crawl text that
@@ -495,7 +480,7 @@ def curate_documents(
     the word-order-aware interpolated bigram scorer
     (:func:`operators.textstats.bigram_logprob_scores`, self-trained)
     — it additionally flags word salad built from common words, which
-    unigram perplexity cannot see; ``ppl_model="kn"`` (round 12) swaps
+    unigram perplexity cannot see; ``ppl_model="kn"`` swaps
     in Kneser-Ney smoothing
     (:func:`operators.textstats.kn_bigram_logprob_scores`) — the
     canonical absolute-discount/continuation-backoff form.
@@ -562,6 +547,8 @@ def curate_documents(
         repetition_signals,
     )
 
+    if materialize is not True:
+        raise ValueError("curate_documents always stages its intermediates; drop materialize=")
     if host_cap is not None:
         # X41: per-host/URL document cap FIRST of every stage — the
         # C4/FineWeb policy order (cap on metadata before any content
@@ -664,18 +651,14 @@ def curate_documents(
             span_dedup_k is not None,
         )
     )
-    if rewrote and (materialize or snapshot_dir is not None):
-        # stage the REWRITTEN corpus once (r10, A/B'd in BASELINE.md:
-        # full-config 1× run 70.1 → 36.9 s, identical survivors): every
-        # downstream consumer —
-        # the span/line aggregates, repetition signals, the ppl fit AND
-        # score passes, decontamination, fingerprints, the pair
-        # generator — otherwise re-executes the whole NFC → C4 → line →
-        # span rewrite chain per scan.  Opt-in via the same materialize/
-        # snapshot_dir knobs as the post-dedup stage (the 100 TB form
-        # lands the rewrite to parquet; localCheckpoint is the
-        # single-session equivalent — lazy since r14: the first
-        # downstream action materializes, construction stays job-free).
+    if rewrote:
+        # stage the REWRITTEN corpus once (BASELINE.md: full-config 1×
+        # run 70.1 → 36.9 s, identical survivors): every downstream
+        # consumer — the span/line aggregates, repetition signals, the
+        # ppl fit AND score passes, decontamination, fingerprints, the
+        # pair generator — otherwise re-executes the whole NFC → C4 →
+        # line → span rewrite chain per scan.  Lazy: the first
+        # downstream action materializes it.
         # When this mark sits BELOW another lazy mark in one job's
         # lineage (e.g. under neardup_clusters' round state), the
         # default checkpointAllMarkedAncestors=false materializes it as
@@ -796,7 +779,7 @@ def curate_documents(
                 )
             scores = bigram_logprob_scores(base, "__text", "doc_id")
         elif ppl_model == "kn":
-            # Kneser-Ney smoothing (round 12, X54): the canonical
+            # Kneser-Ney smoothing (X54): the canonical
             # count-LM smoothing — continuation-unigram backoff scores
             # context DIVERSITY, not frequency.  Self-trained here;
             # reference LMs go through kn_bigram_logprob_scores
@@ -890,8 +873,8 @@ def curate_documents(
         _check_snapshot_dir_overwritable(docs.sparkSession, snapshot_dir)
         kept.write.mode("overwrite").parquet(snapshot_dir)
         kept = docs.sparkSession.read.parquet(snapshot_dir)
-    elif materialize:
-        # nested-mark caveat: see the stage-1 checkpoint above
+    else:
+        # nested-mark caveat: see the rewritten-corpus checkpoint above
         kept = kept.localCheckpoint(eager=False)
 
     if pair_fn is None:

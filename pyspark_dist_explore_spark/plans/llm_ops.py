@@ -287,8 +287,7 @@ def dedup_incremental_sections(
         F.md5(dedup.normalize_text(F.col("text"))).alias("fingerprint")
     ).distinct()
     incr = dedup.incremental_dedup(
-        batch, seen, "text", "doc_id", bloom_bits=4096, bloom_hashes=5,
-        stage=True,
+        batch, seen, "text", "doc_id", bloom_bits=4096, bloom_hashes=5
     ).select(F.lit("batch").alias("section"), "fingerprint", "survivor_id", "n_dups")
     census = dedup.corpus_overlap(batch, snap, "text", "doc_id")
     stack = "stack({n}, {pairs}) as (fingerprint, n_dups)".format(
@@ -765,13 +764,7 @@ def q_neardup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter — is DuckDB-hash-checked.  The 64-bit xxhash64 variant stays
     the library default (faster; same algorithm, wider hash)."""
     docs = load_table(spark, sf_dir, "documents")
-    # stage=True (r14 opt): the chunk self-join otherwise runs the
-    # 60-column signature aggregate on BOTH sides — staging the tiny
-    # (doc_id, sim) frame halves the heavy pass (A/B in
-    # OPTIMIZATION_r14.md); identical rows, oracle-checked
-    return dedup.simhash_neardup(
-        docs, "text", "doc_id", max_hamming=3, hash_fn="md5", stage=True
-    )
+    return dedup.simhash_neardup(docs, "text", "doc_id", max_hamming=3, hash_fn="md5")
 
 
 # --------------------------------------------------------------------------
@@ -1516,7 +1509,6 @@ def q_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_quality=_CURATE_MIN_QUALITY,
         allowed_langs=sorted(textstats.LANG_MARKERS),
         jaccard_threshold=_JACCARD_THRESHOLD,
-        materialize=True,
     )
 
 
@@ -1995,8 +1987,8 @@ def vector_exact_search_sections(
       ``topk``.
 
     The exact sections are the baselines the ANN paths are
-    recall-pinned against.  Building the dict runs ``semantic_dedup``'s
-    ``stage=True`` localCheckpoint.
+    recall-pinned against.  ``semantic_dedup`` stages its pair frame
+    with a lazy localCheckpoint.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5).select(
@@ -2056,9 +2048,6 @@ def vector_exact_search_sections(
         n_blocks=1,
         centroids=cents,
         assign_round=6,
-        # checkpoint the pairs once: the lazy propagation re-executes
-        # the blocked matmul per round
-        stage=True,
     ).select(
         F.lit("semdedup").alias("kind"),
         F.col("vec_id").alias("id_a"),
@@ -2180,18 +2169,10 @@ def q_neardup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain (fingerprints → max_df boilerplate drop → bucketed pair join →
     per-direction ratios) is DuckDB-hash-checked.  Pairs flow only
     through shared-fingerprint buckets, never all-pairs, and the max_df
-    drop caps bucket width.  The winnowing fingerprints are staged with
-    a lazy ``localCheckpoint`` and fed via ``fp_rows=``; otherwise the
-    plan re-derives them four times."""
-    from pyspark_dist_explore_spark.operators.dedup import containment_pairs
-    from pyspark_dist_explore_spark.operators.textstats import winnowing_fingerprints
-
+    drop caps bucket width."""
     docs = load_table(spark, sf_dir, "documents")
-    fps = winnowing_fingerprints(
-        docs, "text", "doc_id", k=5, window=4, hash_fn="md5"
-    ).localCheckpoint(eager=False)
-    return containment_pairs(
-        docs, "text", "doc_id", threshold=0.5, hash_fn="md5", max_df=50, fp_rows=fps
+    return dedup.containment_pairs(
+        docs, "text", "doc_id", threshold=0.5, k=5, window=4, hash_fn="md5", max_df=50
     )
 
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_dist_explore_spark.functions.numeric import bucket_sql
@@ -113,35 +113,29 @@ GROUP BY 1, 2
 _STREAM_HIST_SINK = "pyspark_dist_explore_events_stream_hist_sink"
 
 
-def q_events_stream_hist(
-    spark: SparkSession, sf_dir: str, *, streaming: bool = False
-) -> DataFrame:
+@register("events_stream_hist", _STREAM_HIST_ORACLE)
+def q_events_stream_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X8: the streaming windowed histogram — 6-hour tumbling windows,
     fixed range [0, 500] (streams can't take a global min/max pre-pass),
     same bucket expression as the batch histogram; ``window_start``
     emitted as epoch seconds (tz-free).
 
-    ``streaming=True`` (the REGISTERED form) executes the REAL
-    Structured Streaming engine: ``readStream`` over the same parquet
-    bytes (:func:`load_events_stream`), ``availableNow`` trigger,
-    complete-output memory sink, blocking until the source is drained.
-    A complete-mode aggregation's final state over a finite source
-    equals the batch aggregate, so the DuckDB oracle hash-checks actual
-    micro-batch execution — watermark wiring, state store and all.  The
-    stream runs in ``spark.newSession()`` (separate SQL conf, shared
-    SparkContext) with the state partition count from
+    Executes the real Structured Streaming engine: ``readStream`` over
+    the events parquet (:func:`load_events_stream`), ``availableNow``
+    trigger, complete-output memory sink, blocking until the source is
+    drained.  A complete-mode aggregation's final state over a finite
+    source equals the batch aggregate, so the DuckDB oracle hash-checks
+    actual micro-batch execution — watermark wiring, state store and
+    all.  The stream runs in ``spark.newSession()`` (separate SQL conf,
+    shared SparkContext) with the state partition count from
     :func:`_stream_state_partitions` set there, and the memory sink is
     read back through that session, so the caller's session conf is
-    never written.  Default False keeps the lazy batch twin (identical
-    plan, job-free construction)."""
-    if streaming:
-        session = spark.newSession()
-        session.conf.set(
-            "spark.sql.shuffle.partitions", str(_stream_state_partitions(spark, sf_dir))
-        )
-        e = load_events_stream(session, sf_dir)
-    else:
-        e = load_table(spark, sf_dir, "events")
+    never written."""
+    session = spark.newSession()
+    session.conf.set(
+        "spark.sql.shuffle.partitions", str(_stream_state_partitions(spark, sf_dir))
+    )
+    e = load_events_stream(session, sf_dir)
     out = stream_windowed_histogram(
         e, window_duration="6 hours", bins=_BINS, range=(_LO, _HI)
     )
@@ -150,8 +144,6 @@ def q_events_stream_hist(
         "bucket",
         "cnt",
     )
-    if not streaming:
-        return out
     q = (
         out.writeStream.format("memory")
         .queryName(_STREAM_HIST_SINK)
@@ -164,13 +156,6 @@ def q_events_stream_hist(
     finally:
         q.stop()
     return session.table(_STREAM_HIST_SINK)
-
-
-@register("events_stream_hist", _STREAM_HIST_ORACLE)
-def _q_events_stream_hist_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered form of :func:`q_events_stream_hist` — executes the
-    real Structured Streaming path (``streaming=True``)."""
-    return q_events_stream_hist(spark, sf_dir, streaming=True)
 
 
 @register(
@@ -189,8 +174,7 @@ def q_events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The PLAN here (key equi-join + event-time interval condition) is the
     one ``readStream`` executes; the streaming path itself (dual
     watermark, bounded state, late-data eviction) is pytest-pinned in
-    tests/test_streaming.py.  Registered round 4 so the last round-3
-    flagship gains a driver oracle row."""
+    tests/test_streaming.py."""
     ev = load_table(spark, sf_dir, "events")
     views = ev.where(F.col("event_type") == "view").select("user_id", "ts", "event_id")
     clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts", "event_id")
@@ -227,105 +211,61 @@ FROM sessions GROUP BY user_id, session_id
 _SESSION_SINK = "pyspark_dist_explore_events_session_window_sink"
 
 
-def q_events_session_window(
-    spark: SparkSession, sf_dir: str, *, streaming: bool = False
-) -> DataFrame:
+@register("events_session_window", _SESSION_ORACLE)
+def q_events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-min gap) per user — ``session_window`` is the
     Structured Streaming primitive; the DuckDB oracle is the classic
     gaps-and-islands rewrite of the same semantics.
 
     Second-granularity epochs on both sides (sub-second event spacing
-    within one user never straddles the 30-min gap test).  The gap test
-    is ``> gap``, matching the streaming engine's tie behavior measured
-    on real data: an event arriving EXACTLY ``gap`` seconds after the
-    last one MERGES into the session (``session_window``'s merge test
-    treats the window end inclusively) — the sf0.1 corpus contains
-    exactly one such tie, and ``>= gap`` would split it where the
-    engine does not, flipping the row count.
+    within one user never straddles the 30-min gap test).  The oracle's
+    gap test is ``> gap``, matching the streaming engine's tie behavior:
+    an event arriving EXACTLY ``gap`` seconds after the last one MERGES
+    into the session (``session_window``'s merge test treats the window
+    end inclusively) — the sf0.1 corpus contains exactly one such tie,
+    and ``>= gap`` would split it where the engine does not.
 
-    ``streaming=True`` (the REGISTERED form, round-8 promotion like
-    ``events_stream_hist``) executes the REAL streaming engine:
-    ``readStream`` → ``groupBy(session_window(...))`` (merging session
-    state store) → complete-mode memory sink drained with
-    ``availableNow`` — a complete-mode session aggregation's final
-    state over a finite source equals the batch result, so the oracle
-    hash-checks actual streaming session merging.  ``session_last`` is
-    recovered as ``window.end − gap`` (the window end IS last + gap)."""
-    if streaming:
-        stream = load_events_stream(spark, sf_dir).select(
+    Executes the real streaming engine: ``readStream`` →
+    ``groupBy(session_window(...))`` (merging session state store) →
+    complete-mode memory sink drained with ``availableNow``.  A
+    complete-mode session aggregation's final state over a finite
+    source equals the batch result, so the oracle hash-checks actual
+    streaming session merging.  ``session_last`` is recovered as
+    ``window.end − gap`` (the window end IS last + gap).  The state
+    partition count stays at the session's
+    ``spark.sql.shuffle.partitions``: the merging state operator does
+    per-partition work proportional to rows, so collapsing partitions
+    (as ``events_stream_hist`` does) serializes the merge."""
+    stream = load_events_stream(spark, sf_dir).select(
+        "user_id",
+        F.timestamp_micros(
+            F.expr("ts_ns div 1000000000") * F.lit(1_000_000)
+        ).alias("tsec"),
+    )
+    agg = (
+        stream.groupBy(
             "user_id",
-            F.timestamp_micros(
-                F.expr("ts_ns div 1000000000") * F.lit(1_000_000)
-            ).alias("tsec"),
+            F.session_window("tsec", f"{_SESSION_GAP_S} seconds").alias("w"),
         )
-        agg = (
-            stream.groupBy(
-                "user_id",
-                F.session_window("tsec", f"{_SESSION_GAP_S} seconds").alias("w"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "user_id",
-                F.expr("unix_micros(w.start) div 1000000").alias("session_start"),
-                (
-                    F.expr("unix_micros(w.end) div 1000000") - F.lit(_SESSION_GAP_S)
-                ).alias("session_last"),
-                "n_events",
-            )
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.expr("unix_micros(w.start) div 1000000").alias("session_start"),
+            (
+                F.expr("unix_micros(w.end) div 1000000") - F.lit(_SESSION_GAP_S)
+            ).alias("session_last"),
+            "n_events",
         )
-        # No derived state partition count here (unlike
-        # events_stream_hist): a single state partition was measured
-        # slightly SLOWER — the merging session-window state op does real
-        # per-partition work proportional to rows, so collapsing
-        # partitions serializes the merge instead of shaving task
-        # overhead.
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(_SESSION_SINK)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(_SESSION_SINK)
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id", F.expr("ts_ns div 1000000000").alias("sec")
     )
-    flagged = e.select(
-        "user_id",
-        "sec",
-        F.when(
-            F.col("sec")
-            - F.lag("sec").over(Window.partitionBy("user_id").orderBy("sec"))
-            > _SESSION_GAP_S,
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(_SESSION_SINK)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
     )
-    sessions = flagged.select(
-        "user_id",
-        "sec",
-        F.sum("new_session")
-        .over(
-            Window.partitionBy("user_id")
-            .orderBy("sec")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        .alias("session_id"),
-    )
-    return sessions.groupBy("user_id", "session_id").agg(
-        F.min("sec").alias("session_start"),
-        F.max("sec").alias("session_last"),
-        F.count(F.lit(1)).alias("n_events"),
-    ).drop("session_id")
-
-
-@register("events_session_window", _SESSION_ORACLE)
-def _q_events_session_window_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered form of :func:`q_events_session_window` — executes the
-    real streaming session-window engine (``streaming=True``)."""
-    return q_events_session_window(spark, sf_dir, streaming=True)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.table(_SESSION_SINK)

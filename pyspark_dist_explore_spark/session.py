@@ -15,18 +15,16 @@ Sizing rules (SURVEY §6 / the 100 TB design notes):
   the static number is an upper bound that gets coalesced down, so err
   high; each post-shuffle partition should land well under executor
   memory (~128-200 MB of shuffle data is the classic target).
-- **maxPartitionBytes 128-256 MB** — scan tasks sized so a full row-group
-  batch fits in memory; the multimodal path (whole binary payloads per
-  row) prefers the low end so Arrow batches stay bounded.
+- **maxPartitionBytes 256 MB** — scan tasks sized so a full row-group
+  batch fits in memory.
 - **broadcast threshold** — dims in the star schema and all this engine's
   side-inputs (histogram ranges, centroids, probe sets, vocabulary DF)
   are orders below even the default 10 MB; raise it only when a real
   dimension table hovers near the line.
 - **Arrow batch size** — the pandas-UDF hot paths (BLAS dot, codec
   decode) batch by ``maxRecordsPerBatch``; 10k rows of 64-dim doubles
-  ≈ 5 MB which is fine, but DECODED media rows are MBs each, so
-  multimodal jobs should drop it (the default here, 2048, keeps a batch
-  of 1 MB payloads ≈ 2 GB worst-case bounded at the executor).
+  ≈ 5 MB.  Jobs whose rows carry whole decoded media payloads (MBs
+  each) should pass a lower value as a ``build_session`` override.
 """
 
 from __future__ import annotations
@@ -34,26 +32,16 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 
-def recommended_conf(
-    *,
-    total_cores: int,
-    media_heavy: bool = False,
-) -> dict[str, str]:
-    """Conf dict for a cluster with ``total_cores`` executor cores.
-
-    ``media_heavy`` tightens scan-partition and Arrow batch sizes for
-    jobs whose rows carry whole binary payloads (multimodal decode).
-    """
+def recommended_conf(*, total_cores: int) -> dict[str, str]:
+    """Conf dict for a cluster with ``total_cores`` executor cores."""
     return {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.shuffle.partitions": str(max(3 * total_cores, 8)),
-        "spark.sql.files.maxPartitionBytes": "128m" if media_heavy else "256m",
+        "spark.sql.files.maxPartitionBytes": "256m",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": (
-            "2048" if media_heavy else "10000"
-        ),
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         # oracle-parity queries compare against a UTC DuckDB session;
         # pinning the session tz makes temporal binning reproducible
         "spark.sql.session.timeZone": "UTC",
@@ -65,7 +53,6 @@ def build_session(
     *,
     master: str | None = None,
     total_cores: int | None = None,
-    media_heavy: bool = False,
     **overrides: str,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with :func:`recommended_conf`.
@@ -82,7 +69,7 @@ def build_session(
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
-    conf = recommended_conf(total_cores=total_cores, media_heavy=media_heavy)
+    conf = recommended_conf(total_cores=total_cores)
     conf.update(overrides)
     for k, v in conf.items():
         builder = builder.config(k, v)

@@ -9,6 +9,7 @@ measured growth reflects the operator's scaling shape — the bucketed
 paths should grow ~linearly, never quadratically.
 
 Usage: python scale_probe.py  [SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1]
+                              [SPARK_GRAFT_CPUS=<host CPU count>]
 Prints one JSON line per probe.
 """
 
@@ -30,7 +31,7 @@ def timed(df: DataFrame) -> tuple[float, int]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     from pyspark.sql import SparkSession
 
     spark = (
@@ -39,7 +40,7 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", "8g")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -135,7 +136,7 @@ def main() -> None:
         t0 = time.perf_counter()
         n = curate_documents(
             d, "text", "doc_id", min_quality=0.0,
-            pair_fn=minhash_pair_fn(threshold=0.8), materialize=True,
+            pair_fn=minhash_pair_fn(threshold=0.8),
         ).count()
         return round(time.perf_counter() - t0, 3), n
 
@@ -760,7 +761,7 @@ def main() -> None:
             t0 = time.perf_counter()
             kept = curate_documents(
                 d, "text", "doc_id", min_quality=0.0,
-                pair_fn=minhash_pair_fn(threshold=0.8), materialize=True,
+                pair_fn=minhash_pair_fn(threshold=0.8),
             )
             n = shuffle_shards(kept, "doc_id", shards=32, salt="probe").count()
             return round(time.perf_counter() - t0, 3), n
@@ -1042,7 +1043,6 @@ def main() -> None:
                 decontaminate_against=eval_df,
                 decontam_ngram=13,
                 pair_fn=minhash_pair_fn(threshold=0.8),
-                materialize=True,
                 dsir_target=dsir_tgt,
                 dsir_n_keep=2_000 * ncopies,
                 temperature_coeff=1e6,
@@ -1054,7 +1054,7 @@ def main() -> None:
             t0 = time.perf_counter()
             n = curate_documents(
                 d, "text", "doc_id", min_quality=0.0,
-                pair_fn=minhash_pair_fn(threshold=0.8), materialize=True,
+                pair_fn=minhash_pair_fn(threshold=0.8),
             ).count()
             return round(time.perf_counter() - t0, 3), n
 

@@ -315,9 +315,32 @@ def test_simhash_close_for_neardups(spark, hash_fn):
     assert ham(sig[1], sig[3]) < ham(sig[1], sig[4])
 
 
+def _simhash_signatures_unpacked(docs, text_col, id_col, *, hash_fn):
+    """Wide-aggregate reference form of ``dedup.simhash_signatures``:
+    one SUM(±1) column per signature bit, sign > 0 sets the bit."""
+    h_expr = dedup._simhash_token_hash(hash_fn)
+    bits = dedup.SIMHASH_BITS[hash_fn]
+    toks = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(F.array_distinct(dedup.tokens(F.col(text_col)))).alias("tok"),
+    ).where(F.col("tok") != "")
+    sums = toks.select("doc_id", h_expr.alias("h")).groupBy("doc_id").agg(
+        *[
+            F.sum(F.when(F.col("h").bitwiseAND(dedup._mask(i)) != 0, 1).otherwise(-1)).alias(
+                f"b{i}"
+            )
+            for i in range(bits)
+        ]
+    )
+    sim = F.lit(0).cast("bigint")
+    for i in range(bits):
+        sim = sim + F.when(F.col(f"b{i}") > 0, dedup._mask(i)).otherwise(F.lit(0).cast("bigint"))
+    return sums.select("doc_id", sim.alias("sim"))
+
+
 @pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
 def test_simhash_packed_lanes(spark, hash_fn):
-    """The r15 lane-packed bit-count aggregate must reproduce the wide
+    """The lane-packed bit-count aggregate must reproduce the wide
     SUM(±1) reference form bit for bit — sign_i>0 ⇔ 2·c_i>n is exact
     integer arithmetic, so any mismatch is a packing bug.  Checked on
     the hand fixtures AND the sf0.001 corpus (real token spread)."""
@@ -332,7 +355,7 @@ def test_simhash_packed_lanes(spark, hash_fn):
         )
         want = sorted(
             (r["doc_id"], r["sim"])
-            for r in dedup._simhash_signatures_unpacked(
+            for r in _simhash_signatures_unpacked(
                 docs, "text", "doc_id", hash_fn=hash_fn
             ).collect()
         )
@@ -2083,28 +2106,6 @@ def test_containment_pairs_validates_params(spark):
         containment_pairs(docs, "text", "doc_id", threshold=0.0)
     with _pytest.raises(ValueError, match="max_df"):
         containment_pairs(docs, "text", "doc_id", max_df=0)
-
-
-def test_containment_staged_fp_rows_matches_lazy(spark):
-    """fp_rows= staging is an execution-shape change only: staged and
-    lazy agree row for row, and a wrong-schema fp_rows fails fast."""
-    import pytest as _pytest
-
-    from pyspark_dist_explore_spark.operators.dedup import containment_pairs
-    from pyspark_dist_explore_spark.operators.textstats import winnowing_fingerprints
-    from tests.conftest import SF_SMOKE
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").limit(100)
-    lazy = containment_pairs(docs, "text", "doc_id", threshold=0.5, max_df=50)
-    rows = winnowing_fingerprints(docs, "text", "doc_id", k=5, window=4).localCheckpoint()
-    staged = containment_pairs(
-        docs, "text", "doc_id", threshold=0.5, max_df=50, fp_rows=rows
-    )
-    assert sorted(map(tuple, lazy.collect())) == sorted(map(tuple, staged.collect()))
-    with _pytest.raises(ValueError, match="fp_rows missing"):
-        containment_pairs(
-            docs, "text", "doc_id", fp_rows=rows.withColumnRenamed("fingerprint", "fp")
-        )
 
 
 # --------------------------------------------------------------------------
@@ -9359,47 +9360,6 @@ def test_exact_scores_shared_grid_matches_per_ranker_scoring(spark):
         similarity.mine_hard_negatives(
             emb, anchors, route="ivf", scores=grid
         )
-
-
-def test_simhash_neardup_staged_matches_lazy(spark):
-    """stage=True (signature localCheckpoint before the chunk self-join)
-    is a pure execution-shape change — identical pair rows."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-    def rows(stage):
-        return sorted(
-            tuple(r)
-            for r in dedup.simhash_neardup(
-                docs, "text", "doc_id", max_hamming=3, hash_fn="md5", stage=stage
-            ).collect()
-        )
-
-    staged = rows(True)
-    assert staged and staged == rows(False)
-
-
-def test_incremental_dedup_staged_matches_lazy(spark):
-    """stage=True (lazy checkpoint of the bloom-flagged batch) is a pure
-    execution-shape change — identical survivor rows on both paths."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    batch = docs.where(F.col("doc_id") % 7 != 0).select("doc_id", "text")
-    seen = (
-        docs.where(F.col("doc_id") % 7 == 0)
-        .select(F.md5(dedup.normalize_text(F.col("text"))).alias("fingerprint"))
-        .distinct()
-    )
-
-    def rows(stage):
-        return sorted(
-            tuple(r)
-            for r in dedup.incremental_dedup(
-                batch, seen, "text", "doc_id",
-                bloom_bits=4096, bloom_hashes=5, stage=stage,
-            ).collect()
-        )
-
-    staged = rows(True)
-    assert staged and staged == rows(False)
 
 
 def test_compute_kde_staged_matches_lazy(spark):

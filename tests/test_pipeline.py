@@ -115,10 +115,8 @@ def test_curate_neardup_keep_best_elects_scored_copy(spark):
 
 def test_curate_pluggable_minhash_pair_fn(spark):
     """The scale path: swap the quadratic exact-Jaccard pair stage for
-    banded MinHash-LSH via the ready-made staged factory.  Same output
-    contract (schema, unique survivors, subset of input), and the staged
-    (localCheckpoint-ed shingles) and unstaged variants agree row for
-    row — staging is an execution-shape change only."""
+    banded MinHash-LSH via the ready-made factory.  Same output contract
+    (schema, unique survivors)."""
     from pyspark_dist_explore_spark.pipeline import minhash_pair_fn
 
     docs = _docs(spark)
@@ -130,10 +128,15 @@ def test_curate_pluggable_minhash_pair_fn(spark):
     assert out.columns == ["doc_id", "lang_pred", "quality", "split"]
     ids = [r.doc_id for r in rows]
     assert len(ids) == len(set(ids))
-    unstaged = curate_documents(
-        docs, "text", "doc_id", min_quality=0.0, pair_fn=minhash_pair_fn(stage=False)
-    )
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, unstaged.collect()))
+
+
+def test_curate_rejects_unstaged_materialize(spark):
+    """Staging is not optional: materialize=False fails loudly instead of
+    being ignored."""
+    import pytest
+
+    with pytest.raises(ValueError, match="materialize"):
+        curate_documents(_docs(spark), min_quality=0.0, materialize=False)
 
 
 def test_curate_scrub_and_repetition_stages(spark):
@@ -1355,29 +1358,6 @@ def test_curate_quality_top_frac_gate(spark):
     # and the gate did real work vs the unrestricted run
     assert wired.count() < curate_documents(docs, min_quality=0.0).count()
 
-
-def test_curate_materialize_stages_rewritten_corpus(spark):
-    """materialize=True must not change the survivor set when the
-    text-rewriting stages are on (the staged-rewrite checkpoint is a
-    pure execution optimization — r10 A/B: full-config 1× 70.1 → 36.9 s
-    with identical survivors)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    kw = dict(
-        min_quality=0.0,
-        unicode_form="NFC",
-        drop_boilerplate_lines=2,
-        dedup_doc_lines=True,
-        span_dedup_k=8,
-        split_fractions={"train": 1.0},
-    )
-    plain = sorted(r["doc_id"] for r in curate_documents(docs, **kw).collect())
-    staged = sorted(
-        r["doc_id"]
-        for r in curate_documents(docs, materialize=True, **kw).collect()
-    )
-    assert plain == staged and plain
 
 def test_curate_strip_markup_stage(spark):
     """strip_markup=True: a markup-wrapped corpus curates to the SAME

@@ -14,12 +14,15 @@ from pyspark_dist_explore_spark.plans.queries import REGISTRY
 from tests.conftest import SF_SMOKE
 
 
-def _explain(spark, name: str, mode: str = "formatted") -> str:
-    df = REGISTRY[name].build(spark, SF_SMOKE)
+def _explain_df(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain(mode)
     return buf.getvalue()
+
+
+def _explain(spark, name: str, mode: str = "formatted") -> str:
+    return _explain_df(REGISTRY[name].build(spark, SF_SMOKE), mode)
 
 
 def _plan(spark, name: str) -> str:
@@ -294,25 +297,56 @@ def test_interval_join_equi_key_not_cartesian(spark):
     ), plan
 
 
+def _sql_plans_run_by(spark, action) -> list[str]:
+    """Formatted physical plans of every SQL execution ``action()`` runs,
+    read from the session's SQL status store (kept with the UI off)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def plans() -> dict[int, str]:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        ex = store.executionsList()
+        return {
+            ex.apply(i).executionId(): ex.apply(i).physicalPlanDescription()
+            for i in range(ex.length())
+        }
+
+    before = set(plans())
+    action()
+    return [p for i, p in plans().items() if i not in before]
+
+
 def test_pipeline_scan_pruned_and_pushed(spark):
-    """The composed curation pipeline's ONLY parquet scan must read just
-    (doc_id, text) — lang/source/n_chars pruned — with the id cap pushed
-    to the scan, and the survivor keep-list must arrive as a broadcast
-    (it is a shrunken id set, never a shuffle of the corpus)."""
+    """Every parquet scan the composed curation pipeline runs (inside the
+    staged deduped intermediate) must read just (doc_id, text) —
+    lang/source/n_chars pruned — with the id cap pushed to the scan, and
+    the survivor keep-list must arrive as a broadcast (it is a shrunken
+    id set, never a shuffle of the corpus)."""
     import pyspark.sql.functions as F
 
     from pyspark_dist_explore_spark.pipeline import curate_documents
     from pyspark_dist_explore_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents").where(F.col("doc_id") < 300)
-    out = curate_documents(docs, "text", "doc_id", min_quality=0.908)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
+    built = []
+
+    def build_and_collect():
+        built.append(curate_documents(docs, "text", "doc_id", min_quality=0.908))
+        built[0].collect()
+
+    executed = _sql_plans_run_by(spark, build_and_collect)
+    scan_lines = {
+        ln
+        for p in executed
+        for ln in p.splitlines()
+        if ln.startswith(("PushedFilters:", "ReadSchema:"))
+    }
+    assert any("Scan parquet" in p for p in executed)
+    assert scan_lines == {
+        "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,300)]",
+        "ReadSchema: struct<doc_id:bigint,text:string>",
+    }, scan_lines
+    plan = _explain_df(built[0])
     assert "CartesianProduct" not in plan
-    assert "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,300)]" in plan
-    assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
     # the survivor join itself must be a broadcast; SortMergeJoins may
     # appear ONLY inside InMemoryRelation nodes (the display of the
     # ALREADY-EXECUTED cached label-propagation rounds, which rightly
@@ -324,12 +358,16 @@ def test_pipeline_scan_pruned_and_pushed(spark):
 
 
 def test_pipeline_materialized_scans_source_once(spark):
-    """With materialize=True (the registered query), the deduped
-    intermediate is localCheckpointed: the final plan must read ONLY
-    checkpointed RDDs — zero parquet re-scans of the scoring stage for
-    the three downstream consumers."""
-    plan = _plan(spark, "pipeline_curate")
-    assert plan.count("Scan parquet") == 0
+    """A default curate_documents call localCheckpoints its deduped
+    intermediate: the final plan must read ONLY checkpointed RDDs — zero
+    parquet re-scans of the scoring stage for the three downstream
+    consumers."""
+    from pyspark_dist_explore_spark.pipeline import curate_documents
+    from pyspark_dist_explore_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents").where("doc_id < 200")
+    plan = _explain_df(curate_documents(docs))
+    assert plan.count("Scan parquet") == 0, plan
     assert "ExistingRDD" in plan
     assert "CartesianProduct" not in plan
 
@@ -380,27 +418,70 @@ def test_decontaminate_broadcast_probe_no_cartesian(spark):
 
 
 def test_containment_staged_fp_rows_zero_parquet_scans(spark):
-    """With fp_rows= staged (localCheckpoint), every fingerprint consumer
-    in containment_pairs (both pair-join sides, doc-freq, sizes) reads
+    """containment_pairs stages its winnowing fingerprints, so every
+    fingerprint consumer (both pair-join sides, doc-freq, sizes) reads
     the staged blocks: the final plan has ZERO parquet scans and no
-    cartesian — the corpus text was scanned exactly once, when the stage
-    materialized."""
+    cartesian — the corpus text is scanned exactly once, when the stage
+    materializes."""
     from pyspark_dist_explore_spark.operators.dedup import containment_pairs
-    from pyspark_dist_explore_spark.operators.textstats import winnowing_fingerprints
     from pyspark_dist_explore_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents").where("doc_id < 200")
-    rows = winnowing_fingerprints(docs, "text", "doc_id").localCheckpoint()
-    out = containment_pairs(
-        docs, "text", "doc_id", threshold=0.5, max_df=50, fp_rows=rows
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
+    plan = _explain_df(containment_pairs(docs, "text", "doc_id", threshold=0.5, max_df=50))
     assert plan.count("Scan parquet") == 0, plan
     assert "ExistingRDD" in plan
     assert "CartesianProduct" not in plan
+
+
+def _simhash_pairs(spark):
+    from pyspark_dist_explore_spark.operators.dedup import simhash_neardup
+    from pyspark_dist_explore_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    return simhash_neardup(docs, "text", "doc_id", max_hamming=3)
+
+
+def _incremental_survivors(spark):
+    from pyspark_dist_explore_spark.operators.dedup import (
+        incremental_dedup,
+        normalize_text,
+    )
+    from pyspark_dist_explore_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    seen = docs.where(F.col("doc_id") % 7 == 0).select(
+        F.md5(normalize_text(F.col("text"))).alias("fingerprint")
+    )
+    batch = docs.where(F.col("doc_id") % 7 != 0)
+    return incremental_dedup(batch, seen, "text", "doc_id", bloom_bits=4096)
+
+
+def _semantic_keep_list(spark):
+    from pyspark_dist_explore_spark.operators.similarity import _unit, semantic_dedup
+    from pyspark_dist_explore_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    cents = emb.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("cent_id"), _unit(F.col("embedding")).alias("cv")
+    )
+    return semantic_dedup(emb, threshold=0.45, n_blocks=1, centroids=cents)
+
+
+@pytest.mark.parametrize(
+    "build, max_scans",
+    [(_simhash_pairs, 0), (_incremental_survivors, None), (_semantic_keep_list, None)],
+    ids=["simhash_neardup", "incremental_dedup", "semantic_dedup"],
+)
+def test_default_call_stages_reused_intermediate(spark, build, max_scans):
+    """Default calls checkpoint the intermediate their plan reads more
+    than once (simhash signatures, the bloom-flagged batch, the semantic
+    pair frame): the plan reads it back as an ``ExistingRDD``.  Both
+    simhash join sides read the staged signatures, so that plan scans
+    no parquet at all."""
+    plan = _explain_df(build(spark))
+    assert "ExistingRDD" in plan, plan
+    if max_scans is not None:
+        assert plan.count("Scan parquet") <= max_scans, plan
 
 
 def test_shuffle_shards_registered_no_global_sort(spark):

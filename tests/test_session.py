@@ -13,12 +13,6 @@ def test_recommended_conf_scales_with_cores():
     assert small["spark.sql.adaptive.enabled"] == "true"
 
 
-def test_media_heavy_tightens_batches():
-    conf = recommended_conf(total_cores=32, media_heavy=True)
-    assert conf["spark.sql.files.maxPartitionBytes"] == "128m"
-    assert int(conf["spark.sql.execution.arrow.maxRecordsPerBatch"]) <= 2048
-
-
 def test_build_session_applies_conf(spark):
     # reuse the test session: getOrCreate() returns the active one, so
     # assert against a fresh builder's conf dict instead of the session

@@ -322,18 +322,15 @@ def test_load_events_stream_matches_batch(spark, tmp_path):
 
 def test_events_stream_hist_streaming_equals_batch(spark):
     """The registered events_stream_hist (real Structured Streaming:
-    availableNow -> complete-mode memory sink) returns exactly the batch
-    twin's rows — the property that lets the driver's DuckDB oracle
-    hash-check actual micro-batch execution."""
-    from pyspark_dist_explore_spark.plans.streaming_q import q_events_stream_hist
+    availableNow -> complete-mode memory sink) returns exactly the
+    DuckDB batch oracle's rows."""
+    from pyspark_dist_explore_spark.plans.streaming_q import (
+        _STREAM_HIST_ORACLE,
+        q_events_stream_hist,
+    )
+    from tests.oracle_utils import compare
 
-    batch = {
-        tuple(r) for r in q_events_stream_hist(spark, SF_SMOKE, streaming=False).collect()
-    }
-    streamed = {
-        tuple(r) for r in q_events_stream_hist(spark, SF_SMOKE, streaming=True).collect()
-    }
-    assert streamed == batch and len(batch) > 0
+    compare(spark, SF_SMOKE, q_events_stream_hist, _STREAM_HIST_ORACLE)
 
 
 def test_neardup_snapshot_round_trip(spark, tmp_path):

@@ -690,33 +690,29 @@ def test_interval_join_state_plateaus_at_10x_rate(spark, tmp_path):
 def test_events_session_window_streaming_equals_batch(spark):
     """The registered events_session_window (real streaming
     session_window: merging state store, complete mode, availableNow)
-    returns exactly the batch gaps-and-islands rows — including tie
-    semantics: an event exactly gap seconds after the last MERGES
-    (engine-measured; `>` in the batch/oracle gap test, not `>=`)."""
-    from pyspark.sql import functions as F
+    returns exactly the DuckDB gaps-and-islands oracle's rows — including
+    tie semantics: an event exactly gap seconds after the last MERGES
+    (engine-measured; `>` in the oracle gap test, not `>=`)."""
+    import os
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from pyspark_dist_explore_spark.plans.streaming_q import (
         _SESSION_GAP_S,
+        _SESSION_ORACLE,
         q_events_session_window,
     )
+    from pyspark_dist_explore_spark.sources.tables import TABLES
     from tests.conftest import SF_SMOKE
+    from tests.oracle_utils import compare
 
-    batch = {
-        tuple(r)
-        for r in q_events_session_window(spark, SF_SMOKE, streaming=False).collect()
-    }
-    streamed = {
-        tuple(r)
-        for r in q_events_session_window(spark, SF_SMOKE, streaming=True).collect()
-    }
-    assert streamed == batch and len(batch) > 0
+    compare(spark, SF_SMOKE, q_events_session_window, _SESSION_ORACLE)
 
     # tie pin on a planted corpus: events at t0 and t0+gap exactly must
-    # land in ONE session on both paths
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import tempfile, os
-
+    # land in ONE session (the other tables link to SF_SMOKE, since the
+    # oracle connection registers every table)
     with tempfile.TemporaryDirectory() as d:
         base = 1_700_000_000
         ts = [base, base + _SESSION_GAP_S, base + 3 * _SESSION_GAP_S]
@@ -735,15 +731,18 @@ def test_events_session_window_streaming_equals_batch(spark):
             ),
             os.path.join(d, "events.parquet"),
         )
-        b = sorted(
-            tuple(r) for r in q_events_session_window(spark, d, streaming=False).collect()
-        )
-        s = sorted(
-            tuple(r) for r in q_events_session_window(spark, d, streaming=True).collect()
-        )
-        assert b == s
+        for t in TABLES:
+            if t != "events":
+                os.symlink(f"{SF_SMOKE}/{t}.parquet", os.path.join(d, f"{t}.parquet"))
+        built = []
+
+        def build(spark, sf_dir):
+            built.append(q_events_session_window(spark, sf_dir))
+            return built[-1]
+
+        compare(spark, d, build, _SESSION_ORACLE)
         # two sessions: {t0, t0+gap} merged, {t0+3gap} alone
-        assert [row[3] for row in b] == [2, 1]
+        assert [row[3] for row in sorted(tuple(r) for r in built[0].collect())] == [2, 1]
 
 
 def test_quality_gates_run_on_streams(spark, tmp_path):
