@@ -17,7 +17,13 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+REPO = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
+sys.path.insert(0, REPO)
+# Python workers import the package too; they inherit PYTHONPATH from the
+# JVM, which takes the driver's environment when the session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 from pyspark.sql import SparkSession, functions as F
 

@@ -62,7 +62,6 @@ def decontaminate(
     *,
     ngram_n: int = 13,
     eval_text_col: str | None = None,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Per-training-document contamination verdict against an eval corpus.
 
@@ -71,12 +70,11 @@ def decontaminate(
     ``ngram_n``-grams of the document that also occur anywhere in
     ``eval_df``; ``contaminated`` = 1 when that count is positive.
 
-    ``broadcast_eval=True`` (default) marks the eval gram set for
-    broadcast — the right call whenever the eval corpus is
-    benchmark-sized (it removes the shuffle of the full training gram
-    stream; only the per-doc count aggregate shuffles, keyed on doc id
-    with map-side partials).  Set it False if the "eval" side is itself
-    corpus-scale and let AQE pick the join.
+    The eval gram set is broadcast-hinted (an eval corpus is
+    benchmark-sized), so the training gram stream never shuffles; only
+    the per-doc count aggregate shuffles, keyed on doc id with map-side
+    partials.  For an eval side too large to broadcast use
+    :func:`contaminated_ids` with ``bloom_bits``.
 
     Docs shorter than ``ngram_n`` tokens contribute one whole-doc gram
     (shingle semantics) — they are flagged only when the eval set
@@ -85,10 +83,8 @@ def decontaminate(
     """
     grams = shingle_rows(train, text_col, id_col, ngram_n)
     ev = eval_gram_set(eval_df, eval_text_col or text_col, ngram_n=ngram_n)
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     hits = (
-        grams.join(ev, "sh")
+        grams.join(F.broadcast(ev), "sh")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_eval_grams"))
     )
@@ -110,7 +106,6 @@ def decontaminate_winnow(
     k: int = 5,
     window: int = 4,
     eval_text_col: str | None = None,
-    broadcast_eval: bool = True,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Winnowing-fingerprint decontamination — the reduced-storage scale
@@ -149,10 +144,8 @@ def decontaminate_winnow(
         .select("fingerprint")
         .distinct()
     )
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     hits = (
-        fps.join(ev, "fingerprint")
+        fps.join(F.broadcast(ev), "fingerprint")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_eval_fps"))
     )
@@ -173,7 +166,6 @@ def contaminated_ids(
     *,
     ngram_n: int = 13,
     eval_text_col: str | None = None,
-    broadcast_eval: bool = True,
     bloom_bits: int | None = None,
     bloom_hashes: int = 5,
 ) -> DataFrame:
@@ -192,9 +184,8 @@ def contaminated_ids(
     verify semi-join against the eval gram set, so the trillion-gram
     training side never shuffles and the eval side shuffles once
     instead of broadcasting whole.  False positives are weeded by the
-    verify join — the result EXACTLY equals the plain path.
-    ``broadcast_eval`` is ignored under ``bloom_bits`` (the premise is
-    the eval set does not broadcast).
+    verify join — the result EXACTLY equals the plain path.  Without
+    ``bloom_bits`` the eval gram set is broadcast-hinted.
     """
     grams = shingle_rows(train, text_col, id_col, ngram_n)
     ev = eval_gram_set(eval_df, eval_text_col or text_col, ngram_n=ngram_n)
@@ -234,9 +225,7 @@ def contaminated_ids(
             F.col("__maybe")
         )
         return cand.join(ev, "sh", "leftsemi").select("doc_id").distinct()
-    if broadcast_eval:
-        ev = F.broadcast(ev)
-    return grams.join(ev, "sh").select("doc_id").distinct()
+    return grams.join(F.broadcast(ev), "sh").select("doc_id").distinct()
 
 
 def contamination_report(
@@ -248,7 +237,6 @@ def contamination_report(
     ngram_n: int = 13,
     eval_id_col: str,
     eval_text_col: str | None = None,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """WHICH eval items leaked into WHICH training docs — the audit
     companion to :func:`contaminated_ids`: ``(doc_id, eval_id,
@@ -263,7 +251,7 @@ def contamination_report(
 
     Scale shape: identical to the probe path — training grams built
     row-locally and map-side probed against the (benchmark-sized,
-    broadcast by default) eval gram table, which here keeps its
+    broadcast-hinted) eval gram table, which here keeps its
     ``eval_id`` instead of collapsing to a DISTINCT set; the only
     aggregate is the ≤ |flagged pairs|-row count.  The training side
     still never shuffles.
@@ -274,10 +262,8 @@ def contamination_report(
     ev = shingle_rows(
         eval_df, eval_text_col or text_col, eval_id_col, ngram_n
     ).select(F.col("doc_id").alias("eval_id"), "sh")
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     return (
-        grams.join(ev, "sh")
+        grams.join(F.broadcast(ev), "sh")
         .groupBy("doc_id", "eval_id")
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
     )

@@ -44,23 +44,38 @@ def tokens(col: Column) -> Column:
     return F.split(normalize_text(col), " ")
 
 
+def n_tokens(col: Column) -> Column:
+    """Whitespace token count of the normalized text (bigint; 0 for an
+    empty or all-whitespace text) — the token measure budgets, packing
+    and profiles share.  DuckDB twin: :func:`n_tokens_sql`."""
+    norm = normalize_text(col)
+    return F.when(norm == "", 0).otherwise(F.size(F.split(norm, " "))).cast("bigint")
+
+
+def n_tokens_sql(norm: str) -> str:
+    """DuckDB twin of :func:`n_tokens` over an already-normalized text
+    expression ``norm`` (e.g. ``NORMALIZE_SQL.format(c="text")``)."""
+    return (
+        f"CAST(CASE WHEN {norm} = '' THEN 0 "
+        f"ELSE len(string_split({norm}, ' ')) END AS BIGINT)"
+    )
+
+
 #: C0 control characters (minus \t \n \r, which are whitespace the
 #: normalizer already handles) + DEL — the same class both engines strip
 CONTROL_CHAR_RE = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]"
-CONTROL_CHAR_SQL = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]"
 
 
 def unicode_normalize_col(
     col: Column,
     *,
     form: str = "NFC",
-    strip_control: bool = True,
     accent_fold: bool = False,
 ) -> Column:
     """Unicode canonicalization BEFORE dedup normalization: ``form``
     normalization (NFC by default — NFD-vs-NFC encodings of the same
     string, e.g. "café", otherwise defeat exact AND near-dup dedup),
-    optional C0-control/DEL stripping, optional accent folding (NFD →
+    C0-control/DEL stripping, optional accent folding (NFD →
     drop combining marks — the utf8proc ``strip_accents`` semantics, so
     the DuckDB twin is ``strip_accents()``; ligatures like ``ﬁ`` are
     NOT folded, matching DuckDB).
@@ -94,10 +109,7 @@ def unicode_normalize_col(
 
         return s.map(one, na_action="ignore")
 
-    out = _unorm(col)
-    if strip_control:
-        out = F.regexp_replace(out, CONTROL_CHAR_RE, "")
-    return out
+    return F.regexp_replace(_unorm(col), CONTROL_CHAR_RE, "")
 
 
 def normalize_unicode(
@@ -106,7 +118,6 @@ def normalize_unicode(
     id_col: str,
     *,
     form: str = "NFC",
-    strip_control: bool = True,
     accent_fold: bool = False,
 ) -> DataFrame:
     """Corpus-level Unicode canonicalization: ``(doc_id, text, changed)``
@@ -120,9 +131,7 @@ def normalize_unicode(
     ``nfc_normalize()`` + the same control-char ``regexp_replace`` (+
     ``strip_accents()`` when ``accent_fold``).
     """
-    t = unicode_normalize_col(
-        F.col(text_col), form=form, strip_control=strip_control, accent_fold=accent_fold
-    )
+    t = unicode_normalize_col(F.col(text_col), form=form, accent_fold=accent_fold)
     base = df.select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("__orig"),
@@ -2227,12 +2236,7 @@ def corpus_diff(
         if token_col is not None:
             tok = F.col(token_col).cast("bigint")
         else:
-            norm = normalize_text(F.coalesce(F.col(text_col), F.lit("")))
-            tok = (
-                F.when(norm == "", F.lit(0))
-                .otherwise(F.size(F.split(norm, " ")))
-                .cast("bigint")
-            )
+            tok = n_tokens(F.coalesce(F.col(text_col), F.lit("")))
         return df.select(
             F.col(id_col).alias("id"),
             grp.alias(f"{p}_grp"),
@@ -2303,11 +2307,10 @@ def corpus_diff_sql(
         if group_col is not None
         else "''"
     )
-    tok = (
-        f"CAST(CASE WHEN {norm} = '' THEN 0 "
-        f"ELSE len(string_split({norm}, ' ')) END AS BIGINT)"
+    proj = (
+        f"SELECT doc_id AS id, {grp} AS grp, md5({norm}) AS fp, "
+        f"{n_tokens_sql(norm)} AS tok"
     )
-    proj = f"SELECT doc_id AS id, {grp} AS grp, md5({norm}) AS fp, {tok} AS tok"
     return f"""
 WITH cd_o AS ({proj} FROM ({old_src}) zo),
 cd_n AS ({proj} FROM ({new_src}) zn),

@@ -200,9 +200,6 @@ def attach_binary_payload(df: DataFrame, text_col: str, id_col: str) -> DataFram
     )
 
 
-IMAGE_META_SCHEMA = "mime string, size bigint, width int, height int, n_frames int"
-
-
 def attach_image_payload(
     df: DataFrame,
     id_col: str,

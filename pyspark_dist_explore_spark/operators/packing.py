@@ -49,6 +49,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pyspark_dist_explore_spark.operators import dedup
+
 #: bucket·2^40 keeps pack_id collision-free while staying far from the
 #: BIGINT ceiling (buckets < 2^22, packs-per-bucket < 2^40)
 _PACK_STRIDE = 1 << 40
@@ -108,12 +110,7 @@ def pack_sequences(
     if token_count_col is not None:
         n_tokens = F.col(token_count_col).cast("bigint")
     else:
-        from pyspark_dist_explore_spark.operators.dedup import normalize_text
-
-        norm = normalize_text(F.col(text_col))
-        n_tokens = (
-            F.when(norm == "", F.lit(0)).otherwise(F.size(F.split(norm, " ")))
-        ).cast("bigint")
+        n_tokens = dedup.n_tokens(F.col(text_col))
     # ids must be non-null and bigint-castable: a non-numeric string id
     # would otherwise become NULL (non-ANSI) or raise a bare CAST error
     # (ANSI), collapsing ordering/dedup of the output or burying the
@@ -502,12 +499,7 @@ def pack_related_documents(
     if token_count_col is not None:
         n_tokens = F.col(token_count_col).cast("bigint")
     else:
-        from pyspark_dist_explore_spark.operators.dedup import normalize_text
-
-        norm = normalize_text(F.col(text_col))
-        n_tokens = (
-            F.when(norm == "", F.lit(0)).otherwise(F.size(F.split(norm, " ")))
-        ).cast("bigint")
+        n_tokens = dedup.n_tokens(F.col(text_col))
 
     if order not in ("rp", "greedy_nn"):
         raise ValueError(f"order must be 'rp' or 'greedy_nn', got {order!r}")
@@ -827,22 +819,21 @@ def chunk_pack_modes_sql(
     max_tokens: int,
     buckets: int,
     norm_text_expr: str,
-    include_ffd: bool = False,
-    include_span: bool = False,
 ) -> str:
     """DuckDB rendering of the chunk chain packed under every mode,
-    mode-tagged and unioned: cumsum (window SQL) and greedy (the
-    strictly-≤-budget first-fit, rendered as a per-bucket recursive
-    CTE carrying the identical loop state) — so the mode real training
-    dumps use is hash-checked at the driver gate, not just in pytest.
-    ``include_ffd=True`` (round 13) appends the X62 first-fit-decreasing
-    assignment via a second recursive CTE whose state is the open-pack
-    capacity list itself.  ``include_span=True`` (round 14, requires
-    ``include_ffd``) appends the X65 SPAN MAP over the FFD packs as
-    ``mode='span'`` rows — the per-(pack, chunk) half-open token span
-    ``[start, end)`` in FFD concatenation order, carried in the shared
-    schema as ``bucket``=start / ``oversize``=end (both < 2³¹: spans
-    are bounded by ``max_tokens``)."""
+    mode-tagged and unioned, so each mode is hash-checked at the driver
+    gate, not just in pytest:
+
+    - ``cumsum`` (window SQL);
+    - ``greedy``, the strictly-≤-budget first-fit, rendered as a
+      per-bucket recursive CTE carrying the identical loop state;
+    - ``ffd``, the X62 first-fit-decreasing assignment, via a second
+      recursive CTE whose state is the open-pack capacity list itself;
+    - ``span``, the X65 SPAN MAP over the FFD packs — the per-(pack,
+      chunk) half-open token span ``[start, end)`` in FFD concatenation
+      order, carried in the shared schema as ``bucket``=start /
+      ``oversize``=end (both < 2³¹: spans are bounded by
+      ``max_tokens``)."""
     prefix = _chunk_base_ctes(
         table,
         id_col,
@@ -853,35 +844,21 @@ def chunk_pack_modes_sql(
     )
     cumsum = _CUMSUM_SELECT.format(stride=_PACK_STRIDE, max_tokens=max_tokens)
     greedy = _greedy_ctes_sql(max_tokens)
-    ffd = f",\n{_ffd_ctes_sql(max_tokens)}" if include_ffd else ""
-    ffd_sel = (
-        "\nUNION ALL\n"
-        "SELECT 'ffd' AS mode, chunk_id, n_tokens, bucket, pack_id, oversize "
-        "FROM ffd_out"
-        if include_ffd
-        else ""
-    )
-    if include_span and not include_ffd:
-        raise ValueError("include_span requires include_ffd (spans map FFD packs)")
-    span_sel = (
-        "\nUNION ALL\n"
-        "SELECT 'span' AS mode, doc_id AS chunk_id, n_tokens, "
-        'CAST(start AS INT) AS bucket, pack_id, CAST("end" AS INT) AS oversize\n'
-        "FROM ("
-        + pack_span_map_sql(
-            "SELECT chunk_id AS doc_id, n_tokens, pack_id FROM ffd_out",
-            order="ffd",
-        )
-        + ")"
-        if include_span
-        else ""
+    span = pack_span_map_sql(
+        "SELECT chunk_id AS doc_id, n_tokens, pack_id FROM ffd_out", order="ffd"
     )
     return f"""
 WITH RECURSIVE {prefix},
-{greedy}{ffd}
+{greedy},
+{_ffd_ctes_sql(max_tokens)}
 SELECT 'cumsum' AS mode, * FROM ({cumsum})
 UNION ALL
-SELECT 'greedy' AS mode, chunk_id, n_tokens, bucket, pack_id, oversize FROM greedy_out{ffd_sel}{span_sel}
+SELECT 'greedy' AS mode, chunk_id, n_tokens, bucket, pack_id, oversize FROM greedy_out
+UNION ALL
+SELECT 'ffd' AS mode, chunk_id, n_tokens, bucket, pack_id, oversize FROM ffd_out
+UNION ALL
+SELECT 'span' AS mode, doc_id AS chunk_id, n_tokens, CAST(start AS INT) AS bucket, pack_id, CAST("end" AS INT) AS oversize
+FROM ({span})
 """
 
 
@@ -899,14 +876,10 @@ def pack_sequences_sql(
         f"(CAST(('0x' || substr(md5(CAST({id_col} AS VARCHAR)), 1, 4)) AS BIGINT)"
         f" % {buckets})"
     )
-    n_tok = (
-        f"CAST(CASE WHEN {norm_text_expr} = '' THEN 0 "
-        f"ELSE len(string_split({norm_text_expr}, ' ')) END AS BIGINT)"
-    )
     return f"""
 WITH base AS (
   SELECT CAST({id_col} AS BIGINT) AS doc_id,
-         {n_tok} AS n_tokens,
+         {dedup.n_tokens_sql(norm_text_expr)} AS n_tokens,
          CAST({bucket} AS INT) AS bucket
   FROM {table}
 )
@@ -1036,12 +1009,7 @@ def bucket_batches(
     if token_count_col is not None:
         n_tokens = F.col(token_count_col).cast("bigint")
     else:
-        from pyspark_dist_explore_spark.operators.dedup import normalize_text
-
-        norm = normalize_text(F.col(text_col))
-        n_tokens = (
-            F.when(norm == "", F.lit(0)).otherwise(F.size(F.split(norm, " ")))
-        ).cast("bigint")
+        n_tokens = dedup.n_tokens(F.col(text_col))
     base = df.select(F.col(id_col).alias("id"), n_tokens.alias("n_tokens"))
     # level 1: per-length counts (tiny) -> exclusive offsets in global
     # (n DESC) order; single-partition window over the distinct-length

@@ -10,13 +10,18 @@ hash-match without rounding games; only multi-term scores are rounded.
 from __future__ import annotations
 
 import re
+from typing import Sequence
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyspark_dist_explore_spark.operators.dedup import normalize_text, tokens
+from pyspark_dist_explore_spark.operators.dedup import (
+    n_tokens,
+    normalize_text,
+    tokens,
+)
 
 #: BPE-ish tokenization: letter runs, digit runs, or punctuation runs.
 TOKEN_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+"
@@ -1056,23 +1061,56 @@ def unigram_logprob_scores(
         .groupBy("doc_id")
         .agg(*aggs)
     )
-    # mean on the exact 1e-6 grid (same rationale as the bigram scorer):
-    # round(x, 10) of the raw quotient hits engine-dependent decimal-
-    # rounding knife edges on boundary values; integer-rounding the
-    # micro-logprob mean is identical on both engines
+    return scored.select(
+        *_mean_logprob_cols(["u_terms", "u_mass"] if count_stats else [])
+    )
+
+
+def _mean_logprob_cols(extra: Sequence[str]) -> list[Column]:
+    """``(doc_id, n_tok, mean_logprob, ppl, *extra)`` over a scorer's
+    per-doc ``(n_tok, __ssum)`` aggregate.  The mean lives on the exact
+    1e-6 grid: rounding the BIGINT micro-logprob mean gives the same
+    integer on both engines, where a round(x, 10) of the raw double
+    quotient hits decimal-rounding knife edges on boundary values."""
     mean_e6 = F.round(
         F.col("__ssum").cast("double") / F.col("n_tok").cast("double")
     ).cast("bigint")
     mean_lp = mean_e6.cast("double") / F.lit(1e6)
-    cols = [
+    return [
         F.col("doc_id"),
         F.col("n_tok"),
         mean_lp.alias("mean_logprob"),
         F.round(F.exp(-mean_lp), 6).alias("ppl"),
+        *[F.col(c) for c in extra],
     ]
-    if count_stats:
-        cols += [F.col("u_terms"), F.col("u_mass")]
-    return scored.select(*cols)
+
+
+def _bigram_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    pairs_rows: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(toks, pairs)`` of the bigram scorers: ``toks`` holds ``(doc_id,
+    idx, tok)`` for every non-empty normalized whitespace token and
+    ``pairs`` adds ``prev``, the token before it in the same doc (a
+    ``lag`` window keyed by doc, ordered by idx; NULL for the first).
+    A staged ``pairs_rows`` frame with those four columns (a caller
+    sharing one checkpointed pair frame across scorers) is used as
+    given, skipping the tokenize scan and the window."""
+    if pairs_rows is not None:
+        missing = {"doc_id", "idx", "tok", "prev"} - set(pairs_rows.columns)
+        if missing:
+            raise ValueError(f"pairs_rows missing column(s): {sorted(missing)}")
+        return pairs_rows.select("doc_id", "idx", "tok"), pairs_rows
+    norm = normalize_text(F.col(text_col))
+    toks = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(F.split(norm, " ")).alias("idx", "tok"),
+    ).where(F.col("tok") != "")
+    w = Window.partitionBy("doc_id").orderBy("idx")
+    pairs = toks.select("doc_id", "idx", "tok", F.lag("tok", 1).over(w).alias("prev"))
+    return toks, pairs
 
 
 def bigram_logprob_scores(
@@ -1128,31 +1166,7 @@ def bigram_logprob_scores(
         raise ValueError(f"lam must be in (0, 1) (interpolation weight), got {lam}")
     if (lm_unigrams is None) != (lm_bigrams is None):
         raise ValueError("pass BOTH lm_unigrams and lm_bigrams, or neither")
-    if pairs_rows is not None:
-        # staged input (the minhash_neardup shingle_rows= pattern): a caller who
-        # already materialized the lag-window pair frame — e.g. a
-        # checkpointed token frame shared with the unigram scorer —
-        # skips the tokenize scan + window; results identical
-        missing = {"doc_id", "idx", "tok", "prev"} - set(pairs_rows.columns)
-        if missing:
-            raise ValueError(f"pairs_rows missing column(s): {sorted(missing)}")
-        toks = pairs_rows.select("doc_id", "idx", "tok")
-        pairs = pairs_rows
-    else:
-        from pyspark.sql import Window
-
-        norm = normalize_text(F.col(text_col))
-        toks = (
-            df.select(
-                F.col(id_col).alias("doc_id"),
-                F.posexplode(F.split(norm, " ")).alias("idx", "tok"),
-            )
-            .where(F.col("tok") != "")
-        )
-        w = Window.partitionBy("doc_id").orderBy("idx")
-        pairs = toks.select(
-            "doc_id", "idx", "tok", F.lag("tok", 1).over(w).alias("prev")
-        )
+    toks, pairs = _bigram_pairs(df, text_col, id_col, pairs_rows)
     if lm_unigrams is not None:
         uni = lm_unigrams.groupBy("term").agg(F.sum("cnt").alias("cnt"))
         bi = lm_bigrams.groupBy("prev", "term").agg(F.sum("cnt").alias("bcnt"))
@@ -1210,23 +1224,11 @@ def bigram_logprob_scores(
         .groupBy("doc_id")
         .agg(*aggs)
     )
-    # mean on the exact 1e-6 grid: rounding the BIGINT micro-logprob
-    # mean (identical integer both engines) sidesteps the decimal-
-    # rounding-of-doubles knife edge that a round(x, 10) of the raw
-    # quotient hits on boundary values
-    mean_e6 = F.round(
-        F.col("__ssum").cast("double") / F.col("n_tok").cast("double")
-    ).cast("bigint")
-    mean_lp = mean_e6.cast("double") / F.lit(1e6)
-    cols = [
-        F.col("doc_id"),
-        F.col("n_tok"),
-        mean_lp.alias("mean_logprob"),
-        F.round(F.exp(-mean_lp), 6).alias("ppl"),
-    ]
-    if count_stats:
-        cols += [F.col("b_hits"), F.col("b_matched"), F.col("ctx_mass")]
-    return agg.select(*cols)
+    return agg.select(
+        *_mean_logprob_cols(
+            ["b_hits", "b_matched", "ctx_mass"] if count_stats else []
+        )
+    )
 
 
 def kn_bigram_logprob_scores(
@@ -1280,27 +1282,7 @@ def kn_bigram_logprob_scores(
         raise ValueError(f"discount must be in [0, 1), got {discount}")
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0 (continuation floor), got {alpha}")
-    if pairs_rows is not None:
-        missing = {"doc_id", "idx", "tok", "prev"} - set(pairs_rows.columns)
-        if missing:
-            raise ValueError(f"pairs_rows missing column(s): {sorted(missing)}")
-        toks = pairs_rows.select("doc_id", "idx", "tok")
-        pairs = pairs_rows
-    else:
-        from pyspark.sql import Window
-
-        norm = normalize_text(F.col(text_col))
-        toks = (
-            df.select(
-                F.col(id_col).alias("doc_id"),
-                F.posexplode(F.split(norm, " ")).alias("idx", "tok"),
-            )
-            .where(F.col("tok") != "")
-        )
-        w = Window.partitionBy("doc_id").orderBy("idx")
-        pairs = toks.select(
-            "doc_id", "idx", "tok", F.lag("tok", 1).over(w).alias("prev")
-        )
+    toks, pairs = _bigram_pairs(df, text_col, id_col, pairs_rows)
     if lm_bigrams is not None:
         bi = lm_bigrams.groupBy("prev", "term").agg(F.sum("cnt").alias("bcnt"))
     else:
@@ -1367,19 +1349,11 @@ def kn_bigram_logprob_scores(
         .groupBy("doc_id")
         .agg(*aggs)
     )
-    mean_e6 = F.round(
-        F.col("__ssum").cast("double") / F.col("n_tok").cast("double")
-    ).cast("bigint")
-    mean_lp = mean_e6.cast("double") / F.lit(1e6)
-    cols = [
-        F.col("doc_id"),
-        F.col("n_tok"),
-        mean_lp.alias("mean_logprob"),
-        F.round(F.exp(-mean_lp), 6).alias("ppl"),
-    ]
-    if count_stats:
-        cols += [F.col("kn_cont_mass"), F.col("kn_fert_mass"), F.col("kn_ctx_mass")]
-    return agg.select(*cols)
+    return agg.select(
+        *_mean_logprob_cols(
+            ["kn_cont_mass", "kn_fert_mass", "kn_ctx_mass"] if count_stats else []
+        )
+    )
 
 
 def perplexity_buckets(
@@ -1800,14 +1774,12 @@ def corpus_profile(
     keyed by (group, fingerprint) — map-side partials collapse repeats
     before it — then a ≤|groups|-row re-aggregate keyed by group.
     """
-    from pyspark_dist_explore_spark.operators.dedup import normalize_text
-
     # NULL text profiles as an empty doc (counted in n_empty, one ''
     # fingerprint) — without the coalesce its NULL token/quality/md5
     # values would silently drop out of every aggregate but n_docs
     t = F.coalesce(F.col(text_col), F.lit(""))
     norm = normalize_text(t)
-    n_tok = F.when(norm == "", 0).otherwise(F.size(F.split(norm, " "))).cast("bigint")
+    n_tok = n_tokens(t)
     _, _, quality = quality_ratio_exprs(t)
     g = (
         F.coalesce(F.col(group_col).cast("string"), F.lit(""))
@@ -2354,6 +2326,11 @@ def _bpe_learn_driver(
     return merges
 
 
+#: rounds between ``localCheckpoint``s of the Spark BPE fit state — bounds
+#: the lineage depth of the merge loop
+BPE_CHECKPOINT_INTERVAL = 16
+
+
 def _apply_replaces(enc: str, picked: "list[tuple[str, int]]") -> str:
     for pr, _cnt in picked:
         enc = enc.replace(pr, pr.replace(_BPE_SEP, ""))
@@ -2365,7 +2342,6 @@ def bpe_learn(
     text_col: str,
     *,
     k: int = 8,
-    checkpoint_interval: int = 16,
     max_merges: int = 512,
     batch_merges: int = 1,
     word_freqs: DataFrame | None = None,
@@ -2396,7 +2372,7 @@ def bpe_learn(
     jobs over the type table — an adjacent-pair count (explode + hash
     aggregate, pairs ≤ chars per type) and a row-local literal
     replacement — with the state ``localCheckpoint``-ed every
-    ``checkpoint_interval`` rounds and the superseded state released
+    ``BPE_CHECKPOINT_INTERVAL`` rounds and the superseded state released
     (the :func:`~pyspark_dist_explore_spark.operators.dedup.
     neardup_clusters` loop discipline; between checkpoints the pending
     replaces collapse into one projection, so lineage depth stays ≤ the
@@ -2407,39 +2383,37 @@ def bpe_learn(
     count), bounded at one metadata row per step.  The merge TABLE is
     the model: k rows, driver-sized by definition.
 
-    ``batch_merges`` (round 12, opt-in — default 1 keeps the exact
-    sequential greedy the gate hash-checks): apply up to ``b``
-    SYMBOL-DISJOINT top pairs per round in one projection, lifting the
-    practical k ceiling ~b× (k merges in ~k/b driver round-trips).
+    ``batch_merges`` (default 1 keeps the exact sequential greedy the
+    gate hash-checks): apply up to ``b`` SYMBOL-DISJOINT top pairs per
+    round in one projection, lifting the practical k ceiling ~b× (k
+    merges in ~k/b driver round-trips).
     Disjointness (no symbol shared between any two picked pairs) makes
     the in-round replacements commute — a merge of (a,b) can neither
     create nor destroy occurrences of (c,d) when {a,b}∩{c,d}=∅, so
     each recorded count is exact AT ROUND START.  The learned table is
     a standard batched-greedy APPROXIMATION of sequential BPE (pair
     ranks that would change mid-round are only refreshed between
-    rounds); recorded counts are the round-start counts.  A/B at
-    sf0.1, k=64: see BASELINE.md round-12 row.
+    rounds); recorded counts are the round-start counts.
 
-    ``word_freqs=`` (round 14) feeds a precomputed ``(w, freq)`` type
-    table — the :func:`unigram_seed_candidates` convention, so callers
-    fitting BOTH tokenizers (the sampling_splits gate) share ONE
-    corpus scan.
+    ``word_freqs=`` feeds a precomputed ``(w, freq)`` type table — the
+    :func:`unigram_seed_candidates` convention, so callers fitting BOTH
+    tokenizers (the sampling_splits gate) share ONE corpus scan.
 
-    ``fit='driver'`` (round 14, opt-in) runs the identical greedy loop
-    in driver Python over the COLLECTED type table instead of ``k``
-    Spark job rounds — the single-machine move the paragraph above
-    recommends, made exact: the char-wrap encoding still renders
-    through the Spark expression (one job), and the Python loop
-    replays the very same integer pair counts, ``(cnt DESC, pair
-    ASC)`` pick (UTF-8 byte order == code-point order, so Python's
-    string sort matches Spark's binary collation), conflict sets, and
-    left-to-right non-overlapping literal replaces — pytest pins
-    driver == spark row-for-row on real data.  The collect is bounded
-    by ``max_driver_types`` (default 1M types; beyond it the fit
-    refuses and the caller stays on ``fit='spark'``, whose per-round
-    state is never collected).  The win is wall-clock, not semantics:
-    k merges cost ONE type-table job instead of k scheduler
-    round-trips (the sample-sliced gate fit drops ~2.5 s → ~0.3 s).
+    ``fit='driver'`` runs the identical greedy loop in driver Python
+    over the COLLECTED type table instead of ``k`` Spark job rounds —
+    the single-machine move the paragraph above recommends, made exact:
+    the char-wrap encoding still renders through the Spark expression
+    (one job), and the Python loop replays the very same integer pair
+    counts, ``(cnt DESC, pair ASC)`` pick (UTF-8 byte order ==
+    code-point order, so Python's string sort matches Spark's binary
+    collation), conflict sets, and left-to-right non-overlapping literal
+    replaces — pytest pins driver == spark row-for-row on real data.
+    The collect is bounded by ``max_driver_types`` (default 1M types;
+    beyond it the fit refuses and the caller stays on ``fit='spark'``,
+    whose per-round state is never collected).  The win is wall-clock,
+    not semantics: k merges cost ONE type-table job instead of k
+    scheduler round-trips (the sample-sliced gate fit drops ~2.5 s →
+    ~0.3 s).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -2452,10 +2426,6 @@ def bpe_learn(
             "export bpe_word_freqs(df, text_col) — the type table is "
             "driver-sized — and train single-machine; or pass an "
             "explicit max_merges if you accept k rounds."
-        )
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}"
         )
     if batch_merges < 1:
         raise ValueError(f"batch_merges must be >= 1, got {batch_merges}")
@@ -2546,7 +2516,7 @@ def bpe_learn(
                 )
             types = types.withColumn("enc", enc_col)
             since_ckpt += 1
-            if since_ckpt >= checkpoint_interval and len(merges) < k:
+            if since_ckpt >= BPE_CHECKPOINT_INTERVAL and len(merges) < k:
                 types = types.localCheckpoint()
                 _release_local_checkpoint(anchor)
                 anchor = types
@@ -3092,7 +3062,6 @@ def unigram_encode(
     *,
     extra_cols: Sequence[str] = (),
     max_piece_len: int = 4,
-    broadcast_segments: bool = True,
 ) -> DataFrame:
     """Apply a learned unigram vocab to a corpus: ``(doc_id[, extras],
     n_tokens, n_subwords)`` per document — the fertility card on the
@@ -3102,10 +3071,9 @@ def unigram_encode(
 
     Scale shape: Viterbi runs ONCE per distinct word (the type table),
     not per occurrence — tokens explode row-locally, join the
-    type-sized segment table (broadcast by default;
-    ``broadcast_segments=False`` for a type table past executor
-    memory), and re-aggregate per doc: two exchanges (distinct-words,
-    per-doc rollup) + an optional broadcast, no corpus-sized Python.
+    broadcast type-sized segment table, and re-aggregate per doc: two
+    exchanges (distinct-words, per-doc rollup) + one broadcast, no
+    corpus-sized Python.
     The corpus is scanned twice (the distinct-words branch and the
     explode branch) — the alternative single-scan form would run the
     Viterbi UDF once per token OCCURRENCE instead of once per type,
@@ -3129,15 +3097,13 @@ def unigram_encode(
         .distinct()
         .select("w", F.size(seg(F.col("w"))).cast("bigint").alias("n_pieces"))
     )
-    if broadcast_segments:
-        words = F.broadcast(words)
     ex = df.select(
         F.col(id_col).alias("doc_id"),
         *[F.col(c) for c in extra_cols],
         F.explode_outer(toks).alias("w"),
     )
     return (
-        ex.join(words, "w", "left")
+        ex.join(F.broadcast(words), "w", "left")
         .groupBy("doc_id", *extra_cols)
         .agg(
             F.count("w").cast("bigint").alias("n_tokens"),

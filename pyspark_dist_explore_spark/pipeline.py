@@ -993,10 +993,7 @@ def curate_documents(
             select_by_token_budget_stratified,
         )
 
-        norm = dedup.normalize_text(F.col("__text"))
-        n_tok = (
-            F.when(norm == "", F.lit(0)).otherwise(F.size(F.split(norm, " ")))
-        ).cast("bigint")
+        n_tok = dedup.n_tokens(F.col("__text"))
         out = out.withColumn("__n_tok", n_tok)
         if token_budgets is not None:
             out = select_by_token_budget_stratified(
@@ -1010,10 +1007,7 @@ def curate_documents(
             materialize_mixture,
         )
 
-        norm = dedup.normalize_text(F.col("__text"))
-        n_tok = (
-            F.when(norm == "", F.lit(0)).otherwise(F.size(F.split(norm, " ")))
-        ).cast("bigint")
+        n_tok = dedup.n_tokens(F.col("__text"))
         out = materialize_mixture(
             out.withColumn("__n_tok", n_tok),
             "lang_pred",

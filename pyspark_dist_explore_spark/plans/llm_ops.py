@@ -975,20 +975,7 @@ _BPE_K = 8
 
 #: normalized whitespace token count shared by the mixture queries
 #: (`corpus_token_budget` budgets and the X44 `mix_epochs` section)
-_MIX_NTOK = (
-    f"CAST(CASE WHEN {_NORM.format(c='text')} = '' THEN 0 "
-    f"ELSE len(string_split({_NORM.format(c='text')}, ' ')) END AS BIGINT)"
-)
-
-
-def _spark_mix_ntok() -> Column:
-    """Spark form of :data:`_MIX_NTOK` (normalized whitespace tokens)."""
-    from pyspark_dist_explore_spark.operators.dedup import normalize_text
-
-    norm = normalize_text(F.col("text"))
-    return (
-        F.when(norm == "", F.lit(0)).otherwise(F.size(F.split(norm, " ")))
-    ).cast("bigint")
+_MIX_NTOK = dedup.n_tokens_sql(_NORM.format(c="text"))
 
 
 #: X44 mix_epochs section: per-source token targets derived FROM the
@@ -1258,7 +1245,7 @@ def sampling_splits_sections(
     mixdocs = docs.where(F.col("source").isin(list(_MIX_EPOCH_SOURCES))).select(
         "doc_id",
         F.col("source").cast("string").alias("source"),
-        _spark_mix_ntok().alias("n_tok"),
+        dedup.n_tokens(F.col("text")).alias("n_tok"),
     )
     tots = {
         r["source"]: int(r["tot"])
@@ -1372,7 +1359,6 @@ def corpus_token_budget_sections(
       The ``ln()`` in the key is class C in ORACLES.md (measured key
       gaps are ~10¹² ulps).
     """
-    from pyspark_dist_explore_spark.operators.dedup import normalize_text
     from pyspark_dist_explore_spark.operators.sampling import (
         select_by_token_budget_stratified,
         weighted_reservoir_sample,
@@ -1380,10 +1366,7 @@ def corpus_token_budget_sections(
 
     docs = load_table(spark, sf_dir, "documents")
     t = F.col("text")
-    norm = normalize_text(t)
-    n_tok = (
-        F.when(norm == "", F.lit(0)).otherwise(F.size(F.split(norm, " ")))
-    ).cast("bigint")
+    n_tok = dedup.n_tokens(t)
     _, _, quality = textstats.quality_ratio_exprs(t)
     scored = docs.select(
         "doc_id",
@@ -1689,9 +1672,7 @@ asg AS (
 rp AS (SELECT vec_id, ({rp1})[1] AS rp1 FROM v6),
 rel AS (
   SELECT d.doc_id,
-         CAST(CASE WHEN {_NORM.format(c="text")} = '' THEN 0
-              ELSE len(string_split({_NORM.format(c="text")}, ' ')) END AS BIGINT)
-           AS n_tokens,
+         {_MIX_NTOK} AS n_tokens,
          COALESCE(a.dom, -1) AS domain, r.rp1
   FROM documents d
   LEFT JOIN asg a ON d.doc_id = a.vec_id
@@ -1718,8 +1699,6 @@ FROM rel"""
         max_tokens=_PACK_MAX,
         buckets=32,
         norm_text_expr=_NORM.format(c="text"),
-        include_ffd=True,
-        include_span=True,
     )
     + f"""
 UNION ALL
@@ -2422,7 +2401,7 @@ WITH n AS (
 scored AS (
   SELECT doc_id,
          CAST(len(text) AS BIGINT) AS n_chars,
-         CAST(CASE WHEN norm = '' THEN 0 ELSE len(string_split(norm, ' ')) END AS BIGINT) AS n_tokens,
+         {dedup.n_tokens_sql("norm")} AS n_tokens,
          CAST(len(regexp_extract_all(text, {sql_str_lit(textstats.TOKEN_RE)})) AS BIGINT) AS n_bpe_tokens,
          CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS BIGINT) AS n_punct,
          round(CAST(len(replace(norm, ' ', '')) AS DOUBLE)
@@ -2836,8 +2815,7 @@ _FUNNEL_MIN_TOKENS = 40
     f"""
 WITH scored AS (
   SELECT COALESCE(CAST(source AS VARCHAR), '') AS "group",
-         CASE WHEN {_NORM.format(c="COALESCE(text, '')")} = '' THEN 0
-              ELSE len(string_split({_NORM.format(c="COALESCE(text, '')")}, ' ')) END AS tok,
+         {dedup.n_tokens_sql(_NORM.format(c="COALESCE(text, '')"))} AS tok,
          CAST(round({_quality_sql("COALESCE(text, '')")} * 1e6) AS BIGINT) AS q6,
          md5({_NORM.format(c="COALESCE(text, '')")}) AS fp,
          CASE WHEN {_NORM.format(c="COALESCE(text, '')")} = '' THEN 1 ELSE 0 END AS empty
@@ -3205,21 +3183,12 @@ def text_perplexity_sections(
     ``localCheckpoint``); all four families read it (``tf_rows=``,
     ``pairs_rows=``, and the DSIR uni+bigram gram stream), so the slot
     scans the corpus once instead of once per LM subtree."""
-    from pyspark.sql import Window
-
     from pyspark_dist_explore_spark.operators.dsir import dsir_scores
 
     docs = load_table(spark, sf_dir, "documents")
-    # the staged frames MUST tokenize exactly like the scorers' lazy
-    # paths — reuse the shared normalizer instead of hand-copying it
-    norm = dedup.normalize_text(F.col("text"))
-    toks = docs.select(
-        F.col("doc_id"), F.posexplode(F.split(norm, " ")).alias("idx", "tok")
-    ).where(F.col("tok") != "")
-    w = Window.partitionBy("doc_id").orderBy("idx")
-    pairs = toks.select(
-        "doc_id", "idx", "tok", F.lag("tok", 1).over(w).alias("prev")
-    ).localCheckpoint(eager=False)
+    # the staged frame tokenizes exactly like the scorers' lazy paths
+    _, pairs = textstats._bigram_pairs(docs, "text", "doc_id")
+    pairs = pairs.localCheckpoint(eager=False)
     tf = pairs.groupBy("doc_id", F.col("tok").alias("term")).agg(
         F.count(F.lit(1)).alias("tf")
     )
@@ -3500,7 +3469,7 @@ def embedding_quantize_sections(
         F.col("domain").cast("int").alias("n_dims"),
     )
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _spark_mix_ntok().alias("n_tok")
+        "doc_id", dedup.n_tokens(F.col("text")).alias("n_tok")
     )
     prof = similarity.domain_profile(
         asg.join(docs, asg["vec_id"] == docs["doc_id"]), token_col="n_tok"

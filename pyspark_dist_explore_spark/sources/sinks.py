@@ -118,16 +118,6 @@ def write_bucketed_table(
     )
 
 
-def read_partition_pruned(
-    spark: SparkSession, path: str, fmt: str = "parquet"
-) -> DataFrame:
-    """Scan a partitioned layout; apply partition-column filters on the
-    RESULT and Catalyst prunes directories (no special API needed — this
-    exists so the read side of the layout contract has a named, tested
-    entry point)."""
-    return spark.read.format(fmt).load(path)
-
-
 def write_training_shards(
     df: DataFrame,
     key_col: str,
@@ -137,8 +127,6 @@ def write_training_shards(
     salt: str = "shuffle",
     mode: str = "overwrite",
     max_records_per_file: int | None = None,
-    manifest: bool = True,
-    stage_manifest: bool = True,
     manifest_content_col: str | None = None,
 ) -> None:
     """The training DUMP in one call: deterministic global shuffle +
@@ -167,27 +155,20 @@ def write_training_shards(
     independent epoch.  One shuffle + one per-shard sort total — the
     write-side twin of the registered ``corpus_shuffle_shards`` query.
 
-    ``manifest=True`` (default) also records the per-shard integrity
-    card as a ``_manifest.json`` sidecar (:func:`write_shard_manifest`)
-    for :func:`verify_training_shards` — computed from the writer's
-    INTENT frame, so a partial/corrupt landing is detectable.  The
-    sharded frame is ``persist``-ed (memory-then-disk) and BOTH the
-    writer and the manifest read the staged rows: the md5 shuffle is
-    deterministic but the CALLER'S input need not be (``rand()``, a
-    ``sample``, a re-read of mutating source files), and re-executing
-    the plan for the manifest would fingerprint a different dataset
-    than the one that landed (r10 advisor catch).  The staging copy is
-    released after the sidecar lands; callers who guarantee a
-    deterministic input and want to keep the default single-
-    materialization write path pass ``stage_manifest=False`` (the
-    sidecar still lands, computed from a re-execution of the same
-    deterministic plan), or ``manifest=False`` to skip the sidecar and
-    call :func:`write_shard_manifest` themselves.  Caveat: ``persist``
-    recomputes LOST partitions from lineage, so an executor loss
-    mid-write re-opens the window for a nondeterministic input — the
-    staging guarantee is best-effort there, exact everywhere else.
-    Manifest is skipped under ``mode='append'`` (the sidecar describes
-    one complete dump, not an accumulation).
+    The call also lands the per-shard integrity card as a
+    ``_manifest.json`` sidecar (:func:`write_shard_manifest`) for
+    :func:`verify_training_shards`.  The sharded frame is ``persist``-ed
+    (memory-then-disk) and both the writer and the manifest read the
+    staged rows: the md5 shuffle is deterministic but the caller's input
+    need not be (``rand()``, a ``sample``, a nondeterministic UDF, a
+    re-read of mutating source files), and re-executing the plan for the
+    manifest would fingerprint a different dataset than the one that
+    landed.  The staging copy is released after the sidecar lands.
+    Caveat: ``persist`` recomputes lost partitions from lineage, so an
+    executor loss mid-write re-opens the window for a nondeterministic
+    input.  Under ``mode='append'`` no sidecar is written and nothing is
+    staged (the sidecar describes one complete dump, not an
+    accumulation).
     """
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
@@ -195,9 +176,8 @@ def write_training_shards(
     from pyspark_dist_explore_spark.operators.sampling import shuffle_shards
 
     sharded = shuffle_shards(df, key_col, shards=shards, salt=salt)
-    write_sidecar = manifest and mode != "append"
-    stage = write_sidecar and stage_manifest
-    if stage:
+    write_sidecar = mode != "append"
+    if write_sidecar:
         sharded = sharded.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         writer = (
@@ -218,7 +198,7 @@ def write_training_shards(
                 extra={"shards": shards, "salt": salt},
             )
     finally:
-        if stage:
+        if write_sidecar:
             sharded.unpersist()
 
 
@@ -854,7 +834,6 @@ def write_tar_shards(
     members: dict,
     key_col: str = "doc_id",
     salt: str = "wds0",
-    manifest: bool = True,
 ) -> DataFrame:
     """Land a corpus as WEBDATASET-STYLE TAR SHARDS — the sequential-IO
     layout multimodal training loaders consume (the public WebDataset
@@ -883,12 +862,13 @@ def write_tar_shards(
     driver-side funnel, no local staging).  Each shard's rows pass
     through one Arrow group (the applyInPandas contract), so size
     shards to the usual ~0.1–1 GB trainer convention — exactly the
-    regime where whole-shard batches fit executor memory.  Returns the
-    per-shard manifest frame ``(shard, n_samples, n_members, n_bytes,
-    tar_md5)``; with ``manifest=True`` it also lands at
-    ``path/_tar_manifest`` plus a ``path/_params.json`` sidecar
-    (shards, salt, member schema) that :func:`read_tar_shards`
-    verifies.
+    regime where whole-shard batches fit executor memory.  The per-shard
+    manifest ``(shard, n_samples, n_members, n_bytes, tar_md5)`` lands
+    at ``path/_tar_manifest`` in the same job that writes the tars,
+    next to a ``path/_params.json`` sidecar (shards, salt, member
+    schema) that :func:`read_tar_shards` verifies; the return value is
+    the manifest read back from ``path/_tar_manifest``, so actions on
+    it never write the tars again.
 
     Reference parity note: this is the write side the reference's
     single-node pipelines get from the ``webdataset`` library's
@@ -992,22 +972,20 @@ def write_tar_shards(
             "tar_md5 string",
         )
     )
-    if manifest:
-        # materialize ONCE: the write both triggers the tar side-effects
-        # and lands the manifest rows
-        manifest_df.write.mode("overwrite").parquet(f"{path}/_tar_manifest")
-        _write_json_sidecar(
-            df.sparkSession,
-            f"{path}/_params.json",
-            {
-                "shards": shards,
-                "salt": salt,
-                "key_col": key_col,
-                "members": {k: v for k, v in member_items},
-            },
-        )
-        return df.sparkSession.read.parquet(f"{path}/_tar_manifest")
-    return manifest_df
+    # the write both triggers the tar side-effects and lands the
+    # manifest rows
+    manifest_df.write.mode("overwrite").parquet(f"{path}/_tar_manifest")
+    _write_json_sidecar(
+        df.sparkSession,
+        f"{path}/_params.json",
+        {
+            "shards": shards,
+            "salt": salt,
+            "key_col": key_col,
+            "members": {k: v for k, v in member_items},
+        },
+    )
+    return df.sparkSession.read.parquet(f"{path}/_tar_manifest")
 
 
 def read_tar_shards(

@@ -150,32 +150,23 @@ def stream_dedup(
     return events.dropDuplicates(keys)
 
 
-def stream_enrich(
-    events: DataFrame,
-    dim: DataFrame,
-    on: str,
-    *,
-    how: str = "left",
-    broadcast: bool = True,
-) -> DataFrame:
+def stream_enrich(events: DataFrame, dim: DataFrame, on: str) -> DataFrame:
     """Stream-static enrichment join: attach dimension attributes (user
     profile, document metadata, …) to a stream.
 
     Stream-static joins are STATELESS in Structured Streaming — each
     micro-batch joins against the current static frame, nothing is
     buffered, no watermark is needed — which makes this the cheapest
-    join shape a streaming pipeline has.  ``broadcast=True`` (default)
-    hints the dim side so every executor joins map-side with zero
-    shuffle of the stream; turn it off only when the dimension is too
-    big to broadcast (then pre-bucket both sides instead).  ``how`` is
-    ``left`` by default: enrichment must never DROP stream rows just
-    because the dimension is missing one key.
+    join shape a streaming pipeline has.  The dim side is
+    broadcast-hinted, so every executor joins map-side with zero
+    shuffle of the stream, and the join is ``left``: enrichment must
+    never DROP stream rows just because the dimension is missing one
+    key.
 
     Works identically on batch frames (it is a plain join) — tests pin
     the streaming execution path via the memory sink.
     """
-    d = F.broadcast(dim) if broadcast else dim
-    return events.join(d, on, how)
+    return events.join(F.broadcast(dim), on, "left")
 
 
 def stream_interval_join(
@@ -319,17 +310,14 @@ def stream_curate_lite(
     host_cap: int | None = None,
     min_words: int = 2,
     min_stop_words: int = 0,
-    use_classifier: bool = False,
 ):
     """Streaming CURATE-LITE: the curation gates composed over a
     document STREAM — X2 content dedup on the stream (engine-managed
     state, bounded by the watermark), then per micro-batch via
-    ``foreachBatch``: the X31 Gopher gate (+ optionally the X29
-    classifier gate) and the X41 per-host cap, all the UNCHANGED batch
-    operators — proving the gate expressions are row-local enough to
-    run inside the streaming engine without a parallel implementation
-    (the X8f precedent: pin it with a memory-sink test, don't assert
-    it).
+    ``foreachBatch``: the X31 Gopher gate and the X41 per-host cap, all
+    the UNCHANGED batch operators — the gate expressions are row-local
+    enough to run inside the streaming engine without a parallel
+    implementation (pinned by a memory-sink test).
 
     Returns a ``DataStreamWriter`` — the caller adds trigger/checkpoint
     and ``.start()``.  ``sink_fn(kept_batch, batch_id)`` receives each
@@ -381,9 +369,6 @@ def stream_curate_lite(
             )
             == 1
         )
-        if use_classifier:
-            sig = textstats.with_classifier_gate(sig, tq, bigrams=False)
-            gate = gate & (F.col("cls_keep") == 1)
         kept = sig.where(gate).select(*batch.columns)
         if host_col is not None and host_cap is not None:
             kept = cap_per_key(kept, host_col, id_col, host_cap)

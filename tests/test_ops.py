@@ -3796,17 +3796,10 @@ def test_assign_domains_unassignable_rows_and_retag_guard(spark):
         domain_tag(tagged, emb, centroids=cents)
 
 
-def test_shard_manifest_backticked_column_and_unstaged_sidecar(spark, tmp_path):
+def test_shard_manifest_backticked_column(spark):
     """shard_manifest survives a backtick in the id column name (the
-    one SQL-string interpolation in the family — r11 advisor catch),
-    and write_training_shards(stage_manifest=False) keeps the
-    single-materialization write path while still landing a sidecar
-    that verifies clean for a deterministic input."""
-    from pyspark_dist_explore_spark.sources.sinks import (
-        shard_manifest,
-        verify_training_shards,
-        write_training_shards,
-    )
+    one SQL-string interpolation in the family)."""
+    from pyspark_dist_explore_spark.sources.sinks import shard_manifest
 
     weird = spark.range(20).select(
         F.col("id").alias("the `odd` id"), F.lit(0).alias("shard")
@@ -3814,16 +3807,6 @@ def test_shard_manifest_backticked_column_and_unstaged_sidecar(spark, tmp_path):
     rows = shard_manifest(weird, "shard", "the `odd` id").collect()
     assert len(rows) == 1 and rows[0]["n_rows"] == 20
     assert rows[0]["sum_id"] == sum(range(20)) and rows[0]["max_id"] == 19
-
-    df = spark.range(100).select(
-        F.col("id").alias("doc_id"), (F.col("id") * 3).alias("payload")
-    )
-    path = str(tmp_path / "dump_unstaged")
-    write_training_shards(
-        df, "doc_id", path, shards=4, stage_manifest=False
-    )
-    report = verify_training_shards(spark, path)
-    assert report.count() == 4 and all(r.ok for r in report.collect())
 
 
 # --------------------------------------------------------------------------

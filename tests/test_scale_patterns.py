@@ -52,16 +52,13 @@ def test_partitioned_write_prunes_directories(spark, tmp_path):
     """A filter on the partition column must become a PartitionFilter
     (directory-level pruning — no file of the other partitions is even
     listed), and the partitioned round-trip must preserve the data."""
-    from pyspark_dist_explore_spark.sources.sinks import (
-        read_partition_pruned,
-        write_partitioned,
-    )
+    from pyspark_dist_explore_spark.sources.sinks import write_partitioned
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     dest = str(tmp_path / "events_by_type")
     write_partitioned(events, dest, ["event_type"])
 
-    back = read_partition_pruned(spark, dest)
+    back = spark.read.parquet(dest)
     assert back.count() == events.count()
 
     clicks = back.where(F.col("event_type") == "click")

@@ -196,6 +196,32 @@ def test_shard_manifest_composite_string_key(spark, tmp_path):
     assert a == b
 
 
+def test_write_training_shards_sidecar_describes_landed_rows(spark, tmp_path):
+    """The sidecar fingerprints the rows that landed even when the
+    input differs on every execution: the writer and the manifest read
+    one staged copy of the sharded frame, so a nondeterministic content
+    column still verifies clean."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from pyspark_dist_explore_spark.sources.sinks import (
+        verify_training_shards,
+        write_training_shards,
+    )
+
+    fresh = F.udf(lambda _: uuid.uuid4().hex, "string").asNondeterministic()
+    docs = spark.range(200).select(
+        F.col("id").alias("doc_id"), fresh("id").alias("payload")
+    )
+    out = str(tmp_path / "dump")
+    write_training_shards(
+        docs, "doc_id", out, shards=4, salt="e0", manifest_content_col="payload"
+    )
+    report = verify_training_shards(spark, out)
+    assert report.count() == 4 and all(r.ok for r in report.collect())
+
+
 def test_verify_training_shards_names_mismatched_stat(spark, tmp_path):
     """The strict error must say WHICH stat diverged — a content swap
     that keeps the row count must not print 'expected X rows, landed
