@@ -1091,52 +1091,6 @@ def hamming_neardup(
     )
 
 
-def minhash_ml_neardup(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    threshold: float = 0.4,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Spark-ML MinHashLSH variant (SURVEY §2.2 X3's built-in mapping):
-    ``Tokenizer → HashingTF → MinHashLSH.approxSimilarityJoin``.
-
-    Distance is Jaccard DISTANCE over hashed-feature sets (1 − J), seeded
-    for reproducibility.  The hand-rolled :func:`minhash_neardup` stays
-    the primary path (fully deterministic across Spark versions, no
-    feature-hash collisions); this one demonstrates the ML-pipeline
-    route and its ``approxSimilarityJoin`` bucket-join execution.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH, RegexTokenizer
-
-    base = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    tok = RegexTokenizer(
-        inputCol="text", outputCol="toks", pattern=r"\s+", toLowercase=True
-    ).transform(base)
-    # MinHashLSH requires ≥1 nonzero feature; a nonempty token list hashes
-    # to a nonzero binary TF vector, so the guard is a JVM-side size check
-    # BEFORE HashingTF — no Python row UDF in the pipeline
-    tok = tok.where(F.size(F.col("toks")) > 0)
-    tf = HashingTF(
-        inputCol="toks", outputCol="features", numFeatures=num_features, binary=True
-    ).transform(tok)
-    model = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
-    ).fit(tf)
-    joined = model.approxSimilarityJoin(tf, tf, 1.0 - threshold, distCol="jaccard_dist")
-    return (
-        joined.where(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            F.round(F.lit(1.0) - F.col("jaccard_dist"), 6).alias("jaccard"),
-        )
-    )
-
-
 # --------------------------------------------------------------------------
 # Cluster resolution: near-dup pairs → duplicate clusters → one survivor
 # --------------------------------------------------------------------------

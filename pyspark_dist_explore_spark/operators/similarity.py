@@ -81,6 +81,140 @@ def _unit(arr: Column) -> Column:
     )
 
 
+# --------------------------------------------------------------------------
+# The nearest-centroid and top-k decisions every IVF/ANN operator shares.
+# One total order each: cells rank by (sim DESC, cent_id ASC), neighbours
+# by (score DESC, vec_id ASC).  Callers pass their own similarity
+# expression (dot, _dot_arrow, packed dot; rounded or not).
+# --------------------------------------------------------------------------
+
+
+def _round_to(sim: Column, digits: int | None) -> Column:
+    """``sim`` rounded HALF_UP to ``digits`` decimals (unchanged for
+    ``None``) — the grid both engines rank on in the fixed-centroid forms."""
+    return sim if digits is None else F.round(sim, digits)
+
+
+def _first_per_query(df: DataFrame, n: int, *order: Column) -> DataFrame:
+    """The rows ranked ``1..n`` within each ``query_id`` under ``order``
+    (a total order), the position in column ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= n)
+
+
+def _topk_rank(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """Per query the ``k`` rows of highest ``score_col``, ties to the
+    smaller ``vec_id``: ``(query_id, rank, vec_id, score_col)``."""
+    return _first_per_query(
+        scored, k, F.col(score_col).desc(), F.col("vec_id").asc()
+    ).select("query_id", "rank", "vec_id", score_col)
+
+
+def _nearest_cell(payload: Column, sim: Column) -> Column:
+    """Aggregate: ``payload`` of the row with the highest ``sim``, ties
+    to the smaller ``cent_id``.  ``max_by`` keeps O(1) state, so the
+    aggregate runs as map-side partials."""
+    return F.max_by(payload, F.struct(sim, (-F.col("cent_id")).alias("neg_cent")))
+
+
+def _nearest_cells(sim: Column, n: int) -> Column:
+    """Aggregate: the ``n`` ``(sim, neg_cent, cent_id)`` structs of
+    highest ``sim``, ties to the smaller ``cent_id`` — the order of
+    :func:`_nearest_cell`, truncated to ``n``."""
+    return F.slice(
+        F.sort_array(
+            F.collect_list(
+                F.struct(sim, (-F.col("cent_id")).alias("neg_cent"), F.col("cent_id"))
+            ),
+            asc=False,
+        ),
+        1,
+        n,
+    )
+
+
+def _assign_cells(
+    v: DataFrame, cents: DataFrame, sim: Column, n_assign: int, *payload: str
+) -> DataFrame:
+    """Each ``vec_id`` of ``v`` with its ``n_assign`` nearest cells of
+    ``cents`` by ``sim``: ``(vec_id, *payload, cent_id)``, one row per
+    assigned cell.
+
+    The ``v × cents`` crossJoin collapses back to one row per vector in
+    map-side partials before the shuffle (a window here would shuffle
+    the replicated corpus).  ``n_assign > 1`` carries a sorted list of
+    ``n_centroids`` structs per vector and explodes its head."""
+    grouped = (
+        v.crossJoin(cents)
+        .select("vec_id", *payload, "cent_id", sim.alias("sim"))
+        .groupBy("vec_id")
+    )
+    if n_assign == 1:
+        return grouped.agg(
+            _nearest_cell(F.struct("cent_id", *payload), F.col("sim")).alias("best")
+        ).select(
+            "vec_id",
+            *[F.col(f"best.{c}").alias(c) for c in payload],
+            F.col("best.cent_id").alias("cent_id"),
+        )
+    return grouped.agg(
+        _nearest_cells(F.col("sim"), n_assign).alias("top"),
+        *[F.first(c).alias(c) for c in payload],
+    ).select("vec_id", *payload, F.explode("top.cent_id").alias("cent_id"))
+
+
+def _probe_pick(
+    q: DataFrame, cents: DataFrame, sim: Column, n_probe: int, *cols: str
+) -> DataFrame:
+    """Each ``query_id`` of ``q`` with its ``n_probe`` nearest cells of
+    ``cents`` by ``sim``, ties to the smaller ``cent_id``:
+    ``(query_id, *cols, cent_id)``."""
+    pairs = q.crossJoin(cents).select("query_id", *cols, "cent_id", sim.alias("sim"))
+    return _first_per_query(
+        pairs, n_probe, F.col("sim").desc(), F.col("cent_id").asc()
+    ).select("query_id", *cols, "cent_id")
+
+
+def _fixed_centroids(centroids: DataFrame) -> DataFrame:
+    """A caller's ``(cent_id, cv)`` frame, checked and with ``cv`` cast
+    to ``array<double>``; a frame without those columns raises."""
+    missing = {"cent_id", "cv"} - set(centroids.columns)
+    if missing:
+        raise ValueError(
+            f"centroids frame missing column(s): {sorted(missing)} "
+            "(expected (cent_id, cv) with cv unit-normalized)"
+        )
+    return centroids.select("cent_id", F.col("cv").cast("array<double>").alias("cv"))
+
+
+def _resolve_centroids(
+    centroids: DataFrame | None,
+    fit_src: DataFrame,
+    n_centroids: int,
+    *,
+    id_col: str,
+    vec_col: str,
+    fit_sample_mod: int | None,
+    max_fit_rows: int | None,
+) -> DataFrame:
+    """The broadcast-hinted ``(cent_id, cv)`` cells: the fixed
+    ``centroids`` (see :func:`_fixed_centroids`), or, when ``None``, a
+    :func:`kmeans_centroids` fit on ``fit_src``'s unit ``vec_col`` —
+    that fit runs Spark jobs at call time."""
+    if centroids is not None:
+        return F.broadcast(_fixed_centroids(centroids))
+    return F.broadcast(
+        kmeans_centroids(
+            fit_src,
+            n_centroids,
+            vec_col=vec_col,
+            id_col=id_col,
+            fit_sample_mod=fit_sample_mod,
+            max_fit_rows=max_fit_rows,
+        )
+    )
+
+
 def exact_scores(
     vectors: DataFrame,
     queries: DataFrame,
@@ -97,7 +231,7 @@ def exact_scores(
     grid (:func:`exact_topk` AND :func:`mine_hard_negatives`, say) can
     compute it once — stage it and pass it via their ``scores=`` —
     instead of paying the broadcast-crossJoin scoring pass per ranking
-    (guide §2.4: shared subtrees are computed per consumer otherwise).
+    (a shared subtree is otherwise computed once per consumer).
     """
     q = queries.select(
         F.col(query_id_col).alias("query_id"), _unit(F.col(vec_col)).alias("qv")
@@ -144,12 +278,7 @@ def exact_topk(
         if scores is None
         else scores
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos_sim")
-    )
+    return _topk_rank(scored, "cos_sim", k)
 
 
 def cosine_neardup_pairs(
@@ -325,7 +454,7 @@ def _plane_sign(plane: int, dim_idx: Column, hash_fn: str = "xxhash64") -> Colum
     first hex digit of ``md5('{plane}:{dim}')`` — slower, but DuckDB
     reproduces it bit-for-bit (``('0x'||substr(md5(...),1,1))::INT``),
     so the ENTIRE LSH pipeline gains a hash oracle — the same
-    md5-variant move as the MinHash/SimHash families (round 4)."""
+    md5-variant move as the MinHash/SimHash families."""
     if hash_fn == "xxhash64":
         h = F.xxhash64(F.lit(plane), dim_idx)
         return F.when(h.bitwiseAND(F.lit(1)) == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
@@ -485,9 +614,9 @@ def random_projection_exprs(
     """The per-plane projection COLUMNS of :func:`random_projection`
     (identical arithmetic — that function is now a thin select over
     these), exposed so a caller can ride an EXISTING projection/scan
-    instead of joining a second vectors-derived frame by id (r15:
-    ``pack_related_documents`` folds the JL order key into its
-    assignment pass this way — guide §2.4)."""
+    instead of joining a second vectors-derived frame by id
+    (``pack_related_documents`` folds the JL order key into its
+    assignment pass this way)."""
     vec = _as_double(vec_col)
     if hash_fn == "md5" and dim is not None:
         vec = F.when(
@@ -627,14 +756,7 @@ def rp_topk(
     # deriving it (instead of a hardcoded bigint DDL) keeps string/any
     # caller-supplied id types working through the Arrow conversion
     pruned = coarse.mapInPandas(_prune, schema=coarse.schema)
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.col("rp_sim").desc(), F.col("vec_id").asc()
-    )
-    survivors = (
-        pruned.withColumn("rn", F.row_number().over(w_c))
-        .where(F.col("rn") <= m)
-        .select("query_id", "vec_id")
-    )
+    survivors = _topk_rank(pruned, "rp_sim", m).select("query_id", "vec_id")
     rerank = (
         survivors.join(v, "vec_id")
         .join(F.broadcast(q), "query_id")
@@ -644,14 +766,7 @@ def rp_topk(
             F.round(_dot_arrow(F.col("qv"), F.col("vv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        rerank.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos_sim")
-    )
+    return _topk_rank(rerank, "cos_sim", k)
 
 
 def ann_lsh_topk(
@@ -691,12 +806,7 @@ def ann_lsh_topk(
             F.round(_dot_arrow(F.col("qv"), F.col("vv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos_sim")
-    )
+    return _topk_rank(scored, "cos_sim", k)
 
 
 def kmeans_centroids(
@@ -815,9 +925,12 @@ def ivf_topk(
     assign_round: int | None = None,
 ) -> DataFrame:
     """IVF-style ANN: coarse-quantize into inverted lists, probe the
-    ``n_probe`` nearest lists, exact re-rank inside them.
+    ``n_probe`` nearest lists, exact re-rank inside them.  Output
+    ``(query_id, rank, vec_id, cos_sim)``; cells rank by (sim DESC,
+    cent_id ASC), neighbours by (cos_sim DESC, vec_id ASC).
+    ``n_assign < 1`` raises before any Spark job runs.
 
-    ``n_assign`` (round 13) is the MULTI-ASSIGNMENT recall lever: each
+    ``n_assign`` is the MULTI-ASSIGNMENT recall lever: each
     vector is indexed into its ``n_assign`` nearest lists instead of
     just the argmax one (the FAISS/SPANN-style replication move — a
     neighbor sitting just across a Voronoi boundary becomes reachable
@@ -851,109 +964,35 @@ def ivf_topk(
     both engines share the very bits, not just rounded values) instead
     of the Arrow einsum, and ``assign_round=`` rounds the assignment
     AND probe-selection similarities to that many decimals before their
-    argmax / top-``n_probe`` windows — the oracle twin rounds
+    argmax / top-``n_probe`` pick (it is ignored when the cells are
+    fitted) — the oracle twin rounds
     identically, so both engines rank the same grid.  A production
     pipeline uses the same form to keep list assignments stable across
     incremental index builds.
     """
-    v = vectors.select(F.col(id_col).alias("vec_id"), _unit(F.col(vec_col)).alias("vv"))
-    if centroids is not None:
-        missing = {"cent_id", "cv"} - set(centroids.columns)
-        if missing:
-            raise ValueError(
-                f"centroids frame missing column(s): {sorted(missing)} "
-                "(expected (cent_id, cv) with cv unit-normalized)"
-            )
-        cents = F.broadcast(
-            centroids.select("cent_id", F.col("cv").cast("array<double>").alias("cv"))
-        )
-
-        def _sim(a: Column, b: Column) -> Column:
-            s = dot(a, b)
-            return F.round(s, assign_round) if assign_round is not None else s
-
-        def _rerank(a: Column, b: Column) -> Column:
-            return F.round(dot(a, b), 6)
-
-    else:
-        cents = F.broadcast(
-            kmeans_centroids(
-                v,
-                n_centroids,
-                id_col="vec_id",
-                fit_sample_mod=fit_sample_mod,
-                max_fit_rows=max_fit_rows,
-            )
-        )
-
-        def _sim(a: Column, b: Column) -> Column:
-            return _dot_arrow(a, b)
-
-        def _rerank(a: Column, b: Column) -> Column:
-            return F.round(_dot_arrow(a, b), 6)
-
     if n_assign < 1:
         raise ValueError(f"n_assign must be >= 1, got {n_assign}")
-    # nearest-centroid assignment as map-side-partial aggregation: the
-    # n_centroids× replicated crossJoin output collapses back to N rows
-    # BEFORE the shuffle (a row_number window here would shuffle the
-    # full replicated corpus just to pick each vector's max).  n_assign=1
-    # keeps the O(1)-state max_by; n_assign>1 carries a sorted
-    # n_centroids-struct list per vector (still partial-agged) and
-    # explodes the top n_assign cells — the replication lands in the
-    # probe join's build side, never in a second corpus scan.
-    replicated = v.crossJoin(cents).select(
-        "vec_id", "vv", "cent_id", _sim(F.col("vv"), F.col("cv")).alias("sim")
+    v = vectors.select(F.col(id_col).alias("vec_id"), _unit(F.col(vec_col)).alias("vv"))
+    cents = _resolve_centroids(
+        centroids,
+        v,
+        n_centroids,
+        id_col="vec_id",
+        vec_col="vv",
+        fit_sample_mod=fit_sample_mod,
+        max_fit_rows=max_fit_rows,
     )
-    if n_assign == 1:
-        assigned = (
-            replicated.groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    F.struct("cent_id", "vv"),
-                    F.struct(F.col("sim"), (-F.col("cent_id")).alias("neg_cent")),
-                ).alias("best")
-            )
-            .select(
-                "vec_id", F.col("best.vv").alias("vv"), F.col("best.cent_id").alias("cent_id")
-            )
-        )
-    else:
-        # sort desc by (sim, -cent_id): same (sim DESC, cent_id ASC)
-        # total order as the max_by tie-break, truncated to n_assign
-        assigned = (
-            replicated.groupBy("vec_id")
-            .agg(
-                F.slice(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                F.col("sim"),
-                                (-F.col("cent_id")).alias("neg_cent"),
-                                F.col("cent_id"),
-                            )
-                        ),
-                        asc=False,
-                    ),
-                    1,
-                    n_assign,
-                ).alias("top"),
-                F.first("vv").alias("vv"),
-            )
-            .select("vec_id", "vv", F.explode("top.cent_id").alias("cent_id"))
-        )
+    # fixed cells score with the sequential JVM fold (DuckDB's order) on
+    # the assign_round grid; fitted cells with the Arrow einsum, unrounded
+    pair_dot, digits = (dot, assign_round) if centroids is not None else (_dot_arrow, None)
+    assigned = _assign_cells(
+        v, cents, _round_to(pair_dot(F.col("vv"), F.col("cv")), digits), n_assign, "vv"
+    )
     q = queries.select(
         F.col(query_id_col).alias("query_id"), _unit(F.col(vec_col)).alias("qv")
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("cent_id").asc()
-    )
-    probes = (
-        q.crossJoin(cents)
-        .select("query_id", "qv", "cent_id", _sim(F.col("qv"), F.col("cv")).alias("sim"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", "qv", "cent_id")
+    probes = _probe_pick(
+        q, cents, _round_to(pair_dot(F.col("qv"), F.col("cv")), digits), n_probe, "qv"
     )
     scored = (
         assigned.join(F.broadcast(probes), "cent_id")
@@ -961,16 +1000,11 @@ def ivf_topk(
         .select(
             "query_id",
             "vec_id",
-            _rerank(F.col("qv"), F.col("vv")).alias("cos_sim"),
+            F.round(pair_dot(F.col("qv"), F.col("vv")), 6).alias("cos_sim"),
         )
         .distinct()  # a (query, vec) pair can meet in several probed lists
     )
-    w_rank = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos_sim")
-    )
+    return _topk_rank(scored, "cos_sim", k)
 
 
 def ann_lsh_neardup_pairs(
@@ -1137,62 +1171,34 @@ def semantic_pairs(
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     v = vectors.select(F.col(id_col).alias("vec_id"), _unit(F.col(vec_col)).alias("vv"))
-    if centroids is not None:
-        missing = {"cent_id", "cv"} - set(centroids.columns)
-        if missing:
-            raise ValueError(
-                f"centroids frame missing column(s): {sorted(missing)} "
-                "(expected (cent_id, cv) with cv unit-normalized)"
-            )
-        cents = F.broadcast(
-            centroids.select("cent_id", F.col("cv").cast("array<double>").alias("cv"))
-        )
-    else:
-        cents = F.broadcast(
-            kmeans_centroids(
-                v,
-                n_centroids,
-                id_col="vec_id",
-                fit_sample_mod=fit_sample_mod,
-                max_fit_rows=max_fit_rows,
-            )
-        )
+    cents = _resolve_centroids(
+        centroids,
+        v,
+        n_centroids,
+        id_col="vec_id",
+        vec_col="vv",
+        fit_sample_mod=fit_sample_mod,
+        max_fit_rows=max_fit_rows,
+    )
     # JVM sequential-fold dot for the N×K assignment rows: K is small, so
-    # the interpreted HOF beats paying a Python-worker stage here (the
+    # the interpreted fold beats paying a Python-worker stage here (the
     # O(N²) pair side below keeps the Arrow BLAS matmul), and the
     # left-to-right fold matches DuckDB's list_dot_product order exactly
     # — the oracle's assignment grid shares the very bits, not just the
     # rounded values
-    sim = dot(F.col("vv"), F.col("cv"))
-    if assign_round is not None:
-        sim = F.round(sim, assign_round)
-    # nearest-centroid assignment, map-side max_by partials (IVF pattern)
-    assigned = (
-        v.crossJoin(cents)
-        .select("vec_id", "vv", "cent_id", sim.alias("sim"))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cent_id", "vv"),
-                F.struct(F.col("sim"), (-F.col("cent_id")).alias("neg_cent")),
-            ).alias("best")
-        )
-        .select(
-            "vec_id",
-            F.col("best.vv").alias("embedding"),
-            F.col("best.cent_id").alias("cent_id"),
-        )
+    assigned = _assign_cells(
+        v, cents, _round_to(dot(F.col("vv"), F.col("cv")), assign_round), 1, "vv"
     )
     return cosine_neardup_pairs(
         assigned,
         threshold=threshold,
         id_col="vec_id",
-        vec_col="embedding",
+        vec_col="vv",
         n_blocks=n_blocks,
         partition_col="cent_id",
-        # `best.vv` is already unit-normalized (the assignment stage
-        # needed the unit vectors); re-normalizing would perturb last-ulp
-        # bits vs the single-normalized oracle uv
+        # `vv` is already unit-normalized (the assignment stage needed
+        # the unit vectors); re-normalizing would perturb last-ulp bits
+        # vs the single-normalized oracle uv
         assume_unit=True,
         max_partition_rows=max_cell_rows,
     )
@@ -1209,6 +1215,62 @@ def semantic_pairs(
 # --------------------------------------------------------------------------
 
 
+def _domain_argmax(
+    vectors: DataFrame,
+    centroids: DataFrame | None,
+    keep: tuple,
+    *,
+    n_domains: int,
+    id_col: str,
+    vec_col: str,
+    assign_round: int | None,
+    fit_sample_mod: int | None,
+    max_fit_rows: int | None,
+) -> tuple[DataFrame, Column]:
+    """The nearest-centroid aggregate of :func:`assign_domains` and
+    :func:`domain_scores`: ``(id_col, __cell, __maxsim, __bad, *keep)``
+    with ``__cell`` the argmax ``cent_id`` and ``__maxsim`` its cosine,
+    plus the predicate that holds where that label is real.
+
+    ``__bad`` marks an embedding that is NULL or carries a NULL element:
+    ``_unit`` turns those into all-zero vectors (the Arrow-matmul
+    contract), which would otherwise tie at cosine 0 and take the
+    smallest ``cent_id``.  ``max(__sim)`` skips NULLs, so ``__maxsim``
+    is NULL exactly when no centroid gave a comparable score (length
+    mismatch).  True all-zero vectors stay assignable at cosine 0."""
+    v = vectors.select(
+        F.col(id_col),
+        _unit(F.col(vec_col)).alias("__uv"),
+        F.coalesce(
+            F.exists(_as_double(F.col(vec_col)), lambda x: x.isNull()),
+            F.lit(True),
+        ).alias("__bad"),
+        *[F.col(c) for c in keep],
+    )
+    cents = _resolve_centroids(
+        centroids,
+        v,
+        n_domains,
+        id_col=id_col,
+        vec_col="__uv",
+        fit_sample_mod=fit_sample_mod,
+        max_fit_rows=max_fit_rows,
+    )
+    sim = _round_to(dot(F.col("__uv"), F.col("cv")), assign_round)
+    grouped = (
+        v.crossJoin(cents)
+        .select(id_col, "cent_id", sim.alias("__sim"), "__bad", *[F.col(c) for c in keep])
+        .groupBy(id_col)
+        .agg(
+            _nearest_cell(F.col("cent_id"), F.col("__sim")).alias("__cell"),
+            F.max("__sim").alias("__maxsim"),
+            F.first("__bad").alias("__bad"),
+            *[F.first(c).alias(c) for c in keep],
+        )
+    )
+    return grouped, F.col("__maxsim").isNotNull() & ~F.col("__bad")
+
+
 def assign_domains(
     vectors: DataFrame,
     centroids: DataFrame | None = None,
@@ -1223,11 +1285,10 @@ def assign_domains(
     keep: tuple = (),
 ) -> DataFrame:
     """Nearest-centroid DOMAIN assignment: ``(id_col, domain)`` with
-    ``domain`` the ``cent_id`` of the highest-cosine centroid
-    (ties break to the smaller id, the house argmax convention shared
-    with :func:`semantic_pairs`).  A row whose similarity is NULL
-    against EVERY centroid (a NULL embedding element, a vector whose
-    length mismatches the centroids') gets a NULL domain rather than a
+    ``domain`` the ``cent_id`` of the highest-cosine centroid, ties to
+    the smaller id.  A row whose similarity is NULL against EVERY
+    centroid (a NULL embedding element, a vector whose length
+    mismatches the centroids') gets a NULL domain rather than a
     silently laundered label; :func:`domain_tag` folds those into its
     ``missing_domain`` sentinel.
 
@@ -1244,84 +1305,29 @@ def assign_domains(
 
     Scale shape: ONE broadcast crossJoin (K centroid rows ship to every
     executor) collapsed by map-side ``max_by`` partials — N rows
-    shuffle once, by id; no per-row Python, no global sort.  This is
-    the IVF assignment pattern with the vector payload DROPPED from the
-    aggregation buffer (a tag needs the label only, unlike
-    :func:`semantic_pairs` which carries ``vv`` through to the pair
-    stage).
+    shuffle once, by id; no per-row Python, no global sort.  The
+    aggregation buffer carries the label only, not the vector.
 
     ``keep=`` carries extra input columns through the aggregate
     unchanged (``F.first`` over the centroid-replicated rows — every
     replica holds the same value, so the pick is deterministic): a
     caller needing a row-local companion column (e.g. the JL order key
-    in ``pack_related_documents``) rides this ONE pass instead of
-    computing a second vectors-derived frame and joining it back by id
-    (r15, guide §2.4)."""
-    # __bad: the embedding itself is NULL or carries a NULL element —
-    # _unit coerces those to all-zero vectors (the Arrow-matmul
-    # contract), which would otherwise launder them into the smallest
-    # cent_id at cosine 0 (r11 advisor catch); TRUE all-zero vectors
-    # stay assignable at cosine 0 per _unit's documented semantics
-    v = vectors.select(
-        F.col(id_col),
-        _unit(F.col(vec_col)).alias("__uv"),
-        F.coalesce(
-            F.exists(_as_double(F.col(vec_col)), lambda x: x.isNull()),
-            F.lit(True),
-        ).alias("__bad"),
-        *[F.col(c) for c in keep],
+    in ``pack_related_documents``) rides this one pass instead of
+    computing a second vectors-derived frame and joining it back by
+    id."""
+    grouped, ok = _domain_argmax(
+        vectors,
+        centroids,
+        keep,
+        n_domains=n_domains,
+        id_col=id_col,
+        vec_col=vec_col,
+        assign_round=assign_round,
+        fit_sample_mod=fit_sample_mod,
+        max_fit_rows=max_fit_rows,
     )
-    if centroids is not None:
-        missing = {"cent_id", "cv"} - set(centroids.columns)
-        if missing:
-            raise ValueError(
-                f"centroids frame missing column(s): {sorted(missing)} "
-                "(expected (cent_id, cv) with cv unit-normalized)"
-            )
-        cents = centroids.select(
-            "cent_id", F.col("cv").cast("array<double>").alias("cv")
-        )
-    else:
-        cents = kmeans_centroids(
-            v,
-            n_domains,
-            vec_col="__uv",
-            id_col=id_col,
-            fit_sample_mod=fit_sample_mod,
-            max_fit_rows=max_fit_rows,
-        )
-    sim = dot(F.col("__uv"), F.col("cv"))
-    if assign_round is not None:
-        sim = F.round(sim, assign_round)
-    # rows whose similarity is NULL against EVERY centroid (NULL
-    # embedding element, length mismatch vs the centroids) must not
-    # launder into the smallest cent_id through the tie-breaker (r11
-    # advisor catch): max(__sim) skips NULLs, so it is NULL exactly
-    # when no centroid produced a comparable score — those rows come
-    # back with a NULL domain (domain_tag maps them to missing_domain)
-    return (
-        v.crossJoin(F.broadcast(cents))
-        .select(
-            id_col, "cent_id", sim.alias("__sim"), "__bad", *[F.col(c) for c in keep]
-        )
-        .groupBy(id_col)
-        .agg(
-            F.max_by(
-                "cent_id",
-                F.struct(F.col("__sim"), (-F.col("cent_id")).alias("neg_cent")),
-            ).alias(domain_col),
-            F.max("__sim").alias("__maxsim"),
-            F.first("__bad").alias("__bad"),
-            *[F.first(c).alias(c) for c in keep],
-        )
-        .select(
-            id_col,
-            F.when(
-                F.col("__maxsim").isNotNull() & ~F.col("__bad"),
-                F.col(domain_col),
-            ).alias(domain_col),
-            *[F.col(c) for c in keep],
-        )
+    return grouped.select(
+        id_col, F.when(ok, F.col("__cell")).alias(domain_col), *[F.col(c) for c in keep]
     )
 
 
@@ -1341,64 +1347,30 @@ def domain_scores(
     to the OWN (assigned) centroid: the PROTOTYPICALITY score of the
     D4 recipe (Tirumala et al. 2023, arXiv:2308.12284 — after
     SemDeDup, also prune the most PROTOTYPICAL points near each
-    cluster center; what survives is the diverse shell).  Same
-    broadcast-argmax aggregate as :func:`assign_domains` (the max
-    similarity rides the same buffer — zero extra work), same
-    unassignable semantics (NULL domain/proto_sim for NULL-element /
-    length-mismatched embeddings).
+    cluster center; what survives is the diverse shell).  The same
+    aggregate as :func:`assign_domains` (the max similarity rides the
+    same buffer), the same NULL domain/proto_sim for NULL-element or
+    length-mismatched embeddings.
 
     ``prune = `` :func:`~pyspark_dist_explore_spark.operators.sampling.
     top_frac_per_group` over the NEGATED score keeps the least-
     prototypical fraction per domain — the composition
     :func:`prune_prototypes` wires up."""
-    v = vectors.select(
-        F.col(id_col),
-        _unit(F.col(vec_col)).alias("__uv"),
-        F.coalesce(
-            F.exists(_as_double(F.col(vec_col)), lambda x: x.isNull()),
-            F.lit(True),
-        ).alias("__bad"),
+    grouped, ok = _domain_argmax(
+        vectors,
+        centroids,
+        (),
+        n_domains=n_domains,
+        id_col=id_col,
+        vec_col=vec_col,
+        assign_round=assign_round,
+        fit_sample_mod=fit_sample_mod,
+        max_fit_rows=max_fit_rows,
     )
-    if centroids is not None:
-        missing = {"cent_id", "cv"} - set(centroids.columns)
-        if missing:
-            raise ValueError(
-                f"centroids frame missing column(s): {sorted(missing)} "
-                "(expected (cent_id, cv) with cv unit-normalized)"
-            )
-        cents = centroids.select(
-            "cent_id", F.col("cv").cast("array<double>").alias("cv")
-        )
-    else:
-        cents = kmeans_centroids(
-            v,
-            n_domains,
-            vec_col="__uv",
-            id_col=id_col,
-            fit_sample_mod=fit_sample_mod,
-            max_fit_rows=max_fit_rows,
-        )
-    sim = dot(F.col("__uv"), F.col("cv"))
-    if assign_round is not None:
-        sim = F.round(sim, assign_round)
-    ok = F.col("__maxsim").isNotNull() & ~F.col("__bad")
-    return (
-        v.crossJoin(F.broadcast(cents))
-        .select(id_col, "cent_id", sim.alias("__sim"), "__bad")
-        .groupBy(id_col)
-        .agg(
-            F.max_by(
-                "cent_id",
-                F.struct(F.col("__sim"), (-F.col("cent_id")).alias("neg_cent")),
-            ).alias("domain"),
-            F.max("__sim").alias("__maxsim"),
-            F.first("__bad").alias("__bad"),
-        )
-        .select(
-            id_col,
-            F.when(ok, F.col("domain")).alias("domain"),
-            F.when(ok, F.col("__maxsim")).alias("proto_sim"),
-        )
+    return grouped.select(
+        id_col,
+        F.when(ok, F.col("__cell")).alias("domain"),
+        F.when(ok, F.col("__maxsim")).alias("proto_sim"),
     )
 
 
@@ -1713,12 +1685,7 @@ def topk_quantized(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos_sim")
-    )
+    return _topk_rank(scored, "cos_sim", k)
 
 
 def ivf_topk_packed(
@@ -1762,11 +1729,8 @@ def ivf_topk_packed(
     _dot_packed = _make_dot_packed(bits)
     levels = float((1 << bits) - 1)
 
-    def _asim(c: Column) -> Column:
-        return F.round(c, assign_round) if assign_round is not None else c
-
-    # fit-side dequantization (sample only): codes -> lo + c*(hi-lo)/levels,
-    # a row-local JVM transform — no Python, no shuffle
+    # fit-side dequantization: codes -> lo + c*(hi-lo)/levels, a
+    # row-local JVM transform — no Python, no shuffle
     def _dequant(codes: Column) -> Column:
         return F.transform(
             codes,
@@ -1778,78 +1742,42 @@ def ivf_topk_packed(
             / F.lit(levels),
         )
 
-    if centroids is not None:
-        missing = {"cent_id", "cv"} - set(centroids.columns)
-        if missing:
-            raise ValueError(
-                f"centroids frame missing column(s): {sorted(missing)} "
-                "(expected (cent_id, cv) with cv unit-normalized)"
-            )
-        cents = F.broadcast(
-            centroids.select("cent_id", F.col("cv").cast("array<double>").alias("cv"))
-        )
-    else:
-        fit_src = quantized.crossJoin(F.broadcast(arrs)).select(
-            "vec_id", _unit(_dequant(F.col("codes"))).alias("vv")
-        )
-        cents = F.broadcast(
-            kmeans_centroids(
-                fit_src,
-                n_centroids,
-                id_col="vec_id",
-                fit_sample_mod=fit_sample_mod,
-                max_fit_rows=max_fit_rows,
-            )
-        )
-    # nearest-centroid assignment over packed codes: same map-side
-    # max_by collapse as ivf_topk, but the corpus column is 1 byte/dim
-    assigned = (
-        quantized.select("vec_id", "packed")
-        .crossJoin(F.broadcast(arrs))
-        .crossJoin(cents)
-        .select(
-            "vec_id",
-            "packed",
-            "cent_id",
-            _asim(
-                _dot_packed(F.col("packed"), F.col("cv"), F.col("los"), F.col("his"))
-            ).alias("sim"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cent_id", "packed"),
-                F.struct(F.col("sim"), (-F.col("cent_id")).alias("neg_cent")),
-            ).alias("best")
-        )
-        .select(
-            "vec_id", F.col("best.packed").alias("packed"), F.col("best.cent_id").alias("cent_id")
-        )
+    fit_src = quantized.crossJoin(F.broadcast(arrs)).select(
+        "vec_id", _unit(_dequant(F.col("codes"))).alias("vv")
+    )
+    cents = _resolve_centroids(
+        centroids,
+        fit_src,
+        n_centroids,
+        id_col="vec_id",
+        vec_col="vv",
+        fit_sample_mod=fit_sample_mod,
+        max_fit_rows=max_fit_rows,
+    )
+    # nearest-centroid assignment over packed codes: the corpus column
+    # stays 1 byte/dim through the aggregate
+    assigned = _assign_cells(
+        quantized.select("vec_id", "packed").crossJoin(F.broadcast(arrs)),
+        cents,
+        _round_to(
+            _dot_packed(F.col("packed"), F.col("cv"), F.col("los"), F.col("his")),
+            assign_round,
+        ),
+        1,
+        "packed",
     )
     q = queries.select(
         F.col(query_id_col).alias("query_id"), _unit(F.col(vec_col)).alias("qv")
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("cent_id").asc()
-    )
-    probes = (
-        q.crossJoin(cents)
-        .select(
-            "query_id",
-            "qv",
-            "cent_id",
-            # sequential fold in the deterministic form (same bits as the
-            # oracle's list_dot_product — queries are float-side, so this
-            # costs nothing at Q×K rows); Arrow einsum otherwise
-            _asim(
-                dot(F.col("qv"), F.col("cv"))
-                if centroids is not None
-                else _dot_arrow(F.col("qv"), F.col("cv"))
-            ).alias("sim"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", "qv", "cent_id")
+    # queries are float-side: the sequential fold in the fixed form (the
+    # oracle's list_dot_product bits, free at Q×K rows), Arrow otherwise
+    query_dot = dot if centroids is not None else _dot_arrow
+    probes = _probe_pick(
+        q,
+        cents,
+        _round_to(query_dot(F.col("qv"), F.col("cv")), assign_round),
+        n_probe,
+        "qv",
     )
     scored = (
         assigned.join(F.broadcast(probes), "cent_id")
@@ -1864,13 +1792,7 @@ def ivf_topk_packed(
         )
         .distinct()  # a (query, vec) pair can meet in several probed lists
     )
-    w_rank = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos_sim")
-    )
-
+    return _topk_rank(scored, "cos_sim", k)
 
 def quantize_codes_sql(
     vectors_sql: str, *, id_col: str = "vec_id", vec_col: str = "embedding", bits: int = 8
@@ -2033,8 +1955,8 @@ def _pq_fit_source(
     per-subspace rows (the ``kmeans_centroids`` cap move).  The bounded
     ``limit(cap+1).count()`` is ONLY the engage probe — deriving the
     keep fraction from it would truncate ``n_src`` at ``cap+1`` and
-    keep ≈ 100% of any corpus well past the cap (the cap silently
-    no-ops, the r13 advice finding); once engaged, the keep fraction
+    keep ≈ 100% of any corpus well past the cap (the cap would
+    silently no-op); once engaged, the keep fraction
     comes from the exact count."""
     fitsrc = subs
     if fit_sample_mod is not None:
@@ -2231,7 +2153,7 @@ def pq_topk(
     :func:`ivf_topk`-style list probing for the IVF-PQ shape where
     even the compressed full scan is too much.
 
-    ``scan='batch'`` (round 14, the micro-batch serving path): instead
+    ``scan='batch'`` (the micro-batch serving path): instead
     of the exploded-row LUT equi-join (m rows per scored pair plus the
     per-pair sum aggregate), the LUT is collected driver-side
     (``Q·m·n_codes`` entries — MICRO-BATCH-BOUNDED by definition; this
@@ -2273,8 +2195,8 @@ def pq_topk(
         # query-probe-bounded (Q · n_probe/n_lists · N) — NO broadcast
         # hint: for a handful of queries AQE broadcasts it at runtime
         # anyway, while a forced hint on a 1000-query micro-batch ships
-        # a Q·N/n_lists-row table to every executor (the r14 probe
-        # measured the forced form at 124 s vs ~30 s for a 1000-query
+        # a Q·N/n_lists-row table to every executor (measured: the
+        # forced form took 124 s vs ~30 s for a 1000-query
         # batch against a 200k-vector index; sizes are only knowable at
         # runtime, which is exactly AQE's job).
         scored = (
@@ -2291,14 +2213,7 @@ def pq_topk(
             .groupBy("query_id", "vec_id")
             .agg(F.sum("part").alias("score"))
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"), "vec_id", "score")
-    )
+    return _topk_rank(scored, "score", k)
 
 
 def pq_rotation(
@@ -2361,8 +2276,8 @@ def rotate_embeddings(
     bit-identical to any per-element form); row-local, no shuffle.
     The original 64-literal ``F.array(element_at(...))`` projection
     re-cast the input array once PER OUTPUT ELEMENT (no CSE across
-    ``CreateArray`` children) — the r14 probe measured it at +14 s per
-    200k-row pass.  NULL vectors pass through as NULL.  Corpus and
+    ``CreateArray`` children) — measured at +14 s per 200k-row
+    pass.  NULL vectors pass through as NULL.  Corpus and
     queries must be rotated with the SAME salt before PQ
     encode/serving; scores then equal the unrotated scores exactly
     (see :func:`pq_rotation`)."""
@@ -2531,14 +2446,7 @@ def _pq_topk_batch(
             )
             .where(F.col("vec_id") != F.col("query_id"))
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"), "vec_id", "score")
-    )
+    return _topk_rank(scored, "score", k)
 
 
 def pq_codes_sql(
@@ -2685,7 +2593,7 @@ def ivf_coarse_assign(
     extracting it guarantees the landed inverted lists are bit-for-bit
     the lists the in-memory path would derive.
 
-    Scale shape (round 14, the ``pq_encode`` lesson re-applied): ONE
+    Scale shape: ONE
     Arrow pass over the N vector rows, zero shuffle, zero joins — the
     centroids are collected driver-side (``n_centroids`` rows, the
     LSH-plane-literal precedent) into a numpy matrix, each Arrow batch
@@ -2694,20 +2602,17 @@ def ivf_coarse_assign(
     ordered by ascending ``cent_id``, so ties break to the smaller
     cell — the same (sim DESC, cent_id ASC) total order as the SQL
     twin; on grid-integer inputs every sim is an exact integer, so the
-    matmul equals any fold bit for bit).  The original
-    crossJoin → Arrow-pair-dot → max_by form re-evaluated the VECTOR
-    EXPRESSION per joined row — an upstream rotation or unit-normalize
-    projection ran n_centroids× per vector, which the r14 probe
-    measured as 66 s (vs ~4 s) for the 100×-decade index build; it
-    survives only as the ``assign_round`` legacy branch, whose
-    HALF-UP-rounds-before-argmax semantics live in the Spark layer.
+    matmul equals any fold bit for bit).  ``assign_round`` callers get
+    the crossJoin → Arrow-pair-dot → argmax form instead
+    (:func:`_ivf_coarse_assign_pairs`), whose HALF-UP rounding before
+    the argmax lives in the Spark layer; it re-evaluates the vector
+    expression per joined row (measured 66 s vs ~4 s for the
+    100×-corpus index build behind an upstream rotation).
     ``n_assign>1`` replicates into the index size, never the probe
     cost."""
     if n_assign < 1:
         raise ValueError(f"n_assign must be >= 1, got {n_assign}")
-    cents_df = centroids.select(
-        "cent_id", F.col("cv").cast("array<double>").alias("cv")
-    )
+    cents_df = _fixed_centroids(centroids)
     if assign_round is not None:
         return _ivf_coarse_assign_pairs(
             vectors, cents_df,
@@ -2760,37 +2665,8 @@ def _ivf_coarse_assign_pairs(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("vv"),
     )
-    cents = F.broadcast(cents_df)
     sim = F.round(_dot_arrow(F.col("vv"), F.col("cv")), assign_round)
-    replicated = v.crossJoin(cents).select(
-        "vec_id", "cent_id", sim.alias("sim")
-    )
-    if n_assign == 1:
-        return replicated.groupBy("vec_id").agg(
-            F.max_by(
-                "cent_id", F.struct(F.col("sim"), (-F.col("cent_id")).alias("nc"))
-            ).alias("cent_id")
-        )
-    return (
-        replicated.groupBy("vec_id")
-        .agg(
-            F.slice(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col("sim"),
-                            (-F.col("cent_id")).alias("nc"),
-                            F.col("cent_id"),
-                        )
-                    ),
-                    asc=False,
-                ),
-                1,
-                n_assign,
-            ).alias("top")
-        )
-        .select("vec_id", F.explode("top.cent_id").alias("cent_id"))
-    )
+    return _assign_cells(v, F.broadcast(cents_df), sim, n_assign)
 
 
 def ivf_pq_topk(
@@ -2860,14 +2736,7 @@ def ivf_pq_topk(
         centroids = vectors.where(F.col(id_col) < n_centroids).select(
             F.col(id_col).alias("cent_id"), _unit(F.col(vec_col)).alias("cv")
         )
-    cents = F.broadcast(
-        centroids.select("cent_id", F.col("cv").cast("array<double>").alias("cv"))
-    )
-
-    def _sim(a: Column, b: Column) -> Column:
-        s = _dot_arrow(a, b)
-        return F.round(s, assign_round) if assign_round is not None else s
-
+    cents = F.broadcast(_fixed_centroids(centroids))
     if assignments is not None:
         assigned = assignments.select("vec_id", "cent_id")
     else:
@@ -2883,15 +2752,8 @@ def ivf_pq_topk(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("cent_id").asc()
-    )
-    probes = (
-        q.crossJoin(cents)
-        .select("query_id", "cent_id", _sim(F.col("qv"), F.col("cv")).alias("sim"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", "cent_id")
+    probes = _probe_pick(
+        q, cents, _round_to(_dot_arrow(F.col("qv"), F.col("cv")), assign_round), n_probe
     )
     cands = (
         assigned.join(F.broadcast(probes), "cent_id")
@@ -3118,12 +2980,10 @@ def ivf_pq_residual_topk(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    # probe: nearest lists by squared L2 (|q|² row-constant dropped);
-    # qc = q·c rides along — it is the score's coarse term
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("cent_id").asc()
-    )
-    probes = (
+    # probe: nearest lists by squared L2 (|q|² row-constant dropped),
+    # ties to the smaller cent_id; qc = q·c rides along — it is the
+    # score's coarse term
+    pairs = (
         q.crossJoin(cents)
         .select(
             "query_id",
@@ -3135,10 +2995,10 @@ def ivf_pq_residual_topk(
             "query_id", "cent_id", "qc",
             (F.col("csq") - 2 * F.col("qc")).alias("d2"),
         )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", "cent_id", "qc")
     )
+    probes = _first_per_query(
+        pairs, n_probe, F.col("d2").asc(), F.col("cent_id").asc()
+    ).select("query_id", "cent_id", "qc")
     # per-(query, subspace, code) residual-codebook LUT — broadcast,
     # Q·m·n_codes rows
     q_subs = pq_subvectors(
@@ -3170,14 +3030,7 @@ def ivf_pq_residual_topk(
         scored = scored.groupBy("query_id", "vec_id").agg(
             F.max("score").alias("score")
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("int").alias("rank"), "vec_id", "score")
-    )
+    return _topk_rank(scored, "score", k)
 
 
 def ivf_pq_residual_sql(
@@ -3365,11 +3218,4 @@ def mine_hard_negatives(
     band = scored.where(F.col("cos_sim") < dup_threshold)
     if floor is not None:
         band = band.where(F.col("cos_sim") >= floor)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        band.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos_sim")
-    )
+    return _topk_rank(band, "cos_sim", k)

@@ -47,15 +47,13 @@ def _stats_exprs(t: Column) -> list[Column]:
     """The five per-document stat columns, aliased — shared by
     :func:`text_stats` and the merged :func:`text_profile`."""
     norm = normalize_text(t)
-    ws_tokens = F.when(norm == "", F.lit(0)).otherwise(
-        F.size(F.split(norm, " "))
-    )
+    ws_tokens = n_tokens(t)
     re_tokens = F.size(F.regexp_extract_all(t, F.lit(TOKEN_RE), F.lit(0)))
     n_punct = F.size(F.regexp_extract_all(t, F.lit(r"[^a-zA-Z0-9\s]"), F.lit(0)))
     n_chars = F.length(t)
     return [
         n_chars.cast("bigint").alias("n_chars"),
-        ws_tokens.cast("bigint").alias("n_tokens"),
+        ws_tokens.alias("n_tokens"),
         re_tokens.cast("bigint").alias("n_bpe_tokens"),
         n_punct.cast("bigint").alias("n_punct"),
         F.round(

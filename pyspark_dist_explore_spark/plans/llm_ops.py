@@ -2405,7 +2405,7 @@ scored AS (
          CAST(len(regexp_extract_all(text, {sql_str_lit(textstats.TOKEN_RE)})) AS BIGINT) AS n_bpe_tokens,
          CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS BIGINT) AS n_punct,
          round(CAST(len(replace(norm, ' ', '')) AS DOUBLE)
-               / greatest(CASE WHEN norm = '' THEN 0 ELSE len(string_split(norm, ' ')) END, 1), 6)
+               / greatest({dedup.n_tokens_sql("norm")}, 1), 6)
            AS avg_token_len,
          round({_alpha_ratio_sql('text')}, 6) AS alpha_ratio,
          round({_punct_ratio_sql('text')}, 6) AS punct_ratio,

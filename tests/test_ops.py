@@ -924,13 +924,6 @@ def test_word2vec_doc_vectors(spark):
     assert np.allclose(vecs[1], vecs[2])  # identical docs → identical vectors
 
 
-def test_minhash_ml_variant_finds_dups(spark):
-    out = dedup.minhash_ml_neardup(_docs(spark), "text", "doc_id", threshold=0.7).collect()
-    found = {(r["doc_a"], r["doc_b"]) for r in out}
-    assert (1, 2) in found  # exact dups always share all buckets
-    assert all(4 not in p for p in found)
-
-
 def test_approx_sketches_within_error_bounds(spark):
     """The approximate sketches (X7c) stay inside their published error
     envelopes against exact answers on real data — the accuracy check the
@@ -4075,11 +4068,14 @@ def test_ivf_fixed_centroids_full_probe_equals_exact(spark):
 
 
 def test_ivf_fixed_centroids_validate_inputs(spark):
-    """Bad centroids frames fail loudly at build on both IVF forms."""
+    """Bad centroids frames fail loudly at build on both IVF forms and
+    on the domain assigners."""
     import pytest as _pytest
 
     from pyspark_dist_explore_spark.operators.similarity import (
+        assign_domains,
         dimension_minmax,
+        domain_scores,
         ivf_topk,
         ivf_topk_packed,
         quantize_embeddings,
@@ -4096,6 +4092,30 @@ def test_ivf_fixed_centroids_validate_inputs(spark):
     quant = quantize_embeddings(emb, mm)
     with _pytest.raises(ValueError, match="cent_id"):
         ivf_topk_packed(quant, mm, q, centroids=bad)
+    with _pytest.raises(ValueError, match="cent_id"):
+        assign_domains(emb, bad)
+    with _pytest.raises(ValueError, match="cent_id"):
+        domain_scores(emb, bad)
+
+
+def test_ivf_topk_rejects_n_assign_before_any_job(spark):
+    """``n_assign < 1`` raises before the KMeans fit runs a Spark job."""
+    from tests.conftest import SF_SMOKE
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    q = emb.limit(2).select(F.col("vec_id").alias("query_id"), "embedding")
+    sc = spark.sparkContext
+    group = "ivf_topk_n_assign_check"
+    sc.setJobGroup(group, "ivf_topk n_assign validation")
+    try:
+        with pytest.raises(ValueError, match="n_assign"):
+            similarity.ivf_topk(emb, q, n_assign=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_ivf_packed_fixed_centroids_same_cells_as_float(spark):
@@ -8427,7 +8447,30 @@ def test_ivf_coarse_assign_matches_numpy_reference(spark):
         r["vec_id"]: r["cent_id"]
         for r in similarity.ivf_coarse_assign(emb6, dup, n_assign=1).collect()
     }
-    assert 7_000 not in set(one.values())
+    assert 0 in set(one.values()) and 7_000 not in set(one.values())
+    # the Spark argmax forms break the same tie the same way
+    one_r = {
+        r["vec_id"]: r["cent_id"]
+        for r in similarity.ivf_coarse_assign(
+            emb6, dup, n_assign=1, assign_round=6
+        ).collect()
+    }
+    assert 0 in set(one_r.values()) and 7_000 not in set(one_r.values())
+    two_r = {}
+    for r in similarity.ivf_coarse_assign(
+        emb6, dup, n_assign=2, assign_round=6
+    ).collect():
+        two_r.setdefault(r["vec_id"], set()).add(r["cent_id"])
+    for vid, cell in one_r.items():
+        if cell == 0:
+            assert two_r[vid] == {0, 7_000}, (vid, two_r[vid])
+        assert 7_000 not in two_r[vid] or 0 in two_r[vid], (vid, two_r[vid])
+    for frame in (
+        similarity.assign_domains(emb6, dup, assign_round=6),
+        similarity.domain_scores(emb6, dup, assign_round=6),
+    ):
+        doms = {r["domain"] for r in frame.collect()}
+        assert 0 in doms and 7_000 not in doms, doms
     with pytest.raises(ValueError, match="empty"):
         similarity.ivf_coarse_assign(emb6, cents.where(F.lit(False)))
 

@@ -159,23 +159,6 @@ def test_ivf_assignment_map_side_partial(spark):
             assert "query_id" in line and "[vec_id" not in line
 
 
-def test_minhash_ml_no_python_row_udf(spark):
-    """The ML MinHashLSH pipeline must stay JVM-side — empty-vector
-    filtering via F.size(toks), not a pickled per-row UDF."""
-    import contextlib
-    import io
-
-    from pyspark_dist_explore_spark.operators import dedup
-    from pyspark_dist_explore_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents").where("doc_id < 50")
-    df = dedup.minhash_ml_neardup(docs, "text", "doc_id", threshold=0.8)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    assert "BatchEvalPython" not in buf.getvalue()
-
-
 def test_minhash_staged_shingles_single_text_scan(spark):
     """With a localCheckpoint-ed frame passed via ``shingle_rows=``, every
     shingle consumer in minhash_neardup reads the staged blocks: the
