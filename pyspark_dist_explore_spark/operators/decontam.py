@@ -33,7 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_dist_explore_spark.operators.dedup import shingle_rows
+from pyspark_dist_explore_spark.operators.dedup import (
+    _bloom_maybe,
+    build_fp_bloom,
+    shingle_rows,
+)
 
 
 def eval_gram_set(
@@ -83,16 +87,27 @@ def decontaminate(
     """
     grams = shingle_rows(train, text_col, id_col, ngram_n)
     ev = eval_gram_set(eval_df, eval_text_col or text_col, ngram_n=ngram_n)
+    return _verdict(train, id_col, grams, ev, "n_eval_grams")
+
+
+def _verdict(
+    train: DataFrame, id_col: str, rows: DataFrame, ev: DataFrame, n_col: str
+) -> DataFrame:
+    """One row per training document, ``(doc_id, n_col, contaminated)``:
+    ``n_col`` counts the doc's ``rows`` (``doc_id`` + one key column)
+    whose key is in the broadcast eval set ``ev`` (that key column
+    alone), 0 for a doc with none; ``contaminated`` is 1 when it is
+    positive."""
     hits = (
-        grams.join(F.broadcast(ev), "sh")
+        rows.join(F.broadcast(ev), ev.columns)
         .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_eval_grams"))
+        .agg(F.count(F.lit(1)).alias(n_col))
     )
     ids = train.select(F.col(id_col).alias("doc_id")).distinct()
-    n = F.coalesce(F.col("n_eval_grams"), F.lit(0).cast("bigint"))
+    n = F.coalesce(F.col(n_col), F.lit(0).cast("bigint"))
     return ids.join(hits, "doc_id", "left").select(
         "doc_id",
-        n.alias("n_eval_grams"),
+        n.alias(n_col),
         (n > 0).cast("int").alias("contaminated"),
     )
 
@@ -144,18 +159,7 @@ def decontaminate_winnow(
         .select("fingerprint")
         .distinct()
     )
-    hits = (
-        fps.join(F.broadcast(ev), "fingerprint")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_eval_fps"))
-    )
-    ids = train.select(F.col(id_col).alias("doc_id")).distinct()
-    n = F.coalesce(F.col("n_eval_fps"), F.lit(0).cast("bigint"))
-    return ids.join(hits, "doc_id", "left").select(
-        "doc_id",
-        n.alias("n_eval_fps"),
-        (n > 0).cast("int").alias("contaminated"),
-    )
+    return _verdict(train, id_col, fps, ev, "n_eval_fps")
 
 
 def contaminated_ids(
@@ -190,40 +194,14 @@ def contaminated_ids(
     grams = shingle_rows(train, text_col, id_col, ngram_n)
     ev = eval_gram_set(eval_df, eval_text_col or text_col, ngram_n=ngram_n)
     if bloom_bits is not None:
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        from pyspark_dist_explore_spark.operators.dedup import (
-            _fp_km_hashes,
-            build_fp_bloom,
-        )
-
         # sh is the raw gram string — hash it to the md5-hex form the
         # Kirsch–Mitzenmacher position derivation expects, on BOTH sides
         arr = build_fp_bloom(
             ev.select(F.md5("sh").alias("sh")), "sh",
             bits=bloom_bits, hashes=bloom_hashes,
         )
-        bits, hashes = bloom_bits, bloom_hashes
-
-        @pandas_udf("boolean")
-        def _maybe_hit(h1, h2):
-            import numpy as np
-
-            a1 = h1.to_numpy(dtype=np.int64)
-            a2 = h2.to_numpy(dtype=np.int64)
-            hit = np.ones(len(a1), dtype=bool)
-            for i in range(hashes):
-                p = (a1 + i * a2) % bits
-                w = p >> 6
-                b = (p & 63).astype(np.uint64)
-                hit &= ((arr[w] >> b) & np.uint64(1)).astype(bool)
-            return pd.Series(hit)
-
-        h1, h2 = _fp_km_hashes(F.md5(F.col("sh")))
-        cand = grams.withColumn("__maybe", _maybe_hit(h1, h2)).where(
-            F.col("__maybe")
-        )
+        maybe = _bloom_maybe(arr, F.md5(F.col("sh")), bits=bloom_bits, hashes=bloom_hashes)
+        cand = grams.withColumn("__maybe", maybe).where(F.col("__maybe"))
         return cand.join(ev, "sh", "leftsemi").select("doc_id").distinct()
     return grams.join(F.broadcast(ev), "sh").select("doc_id").distinct()
 

@@ -403,6 +403,30 @@ def shingles(col: Column, n: int = 3) -> Column:
     return F.element_at(F.transform(F.array(toks), _grams), 1)
 
 
+def _token_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(doc_id, idx, tok)`` — one row per non-empty whitespace token of
+    the normalized text, ``idx`` its position in the token array."""
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(tokens(F.col(text_col))).alias("idx", "tok"),
+    ).where(F.col("tok") != "")
+
+
+def _gram_rows(toks: DataFrame, n: int) -> DataFrame:
+    """``(doc_id, idx, gram, n_tok)`` over :func:`_token_rows`: every full
+    word ``n``-gram, built as ``concat_ws(tok, lead(tok,1) … lead(tok,n-1))``
+    over a ``(doc_id, idx)`` window, plus one whole-doc gram for a doc
+    shorter than ``n`` tokens (``concat_ws`` skips the NULL leads).
+    ``n_tok`` is the doc's token count."""
+    w_ord = Window.partitionBy("doc_id").orderBy("idx")
+    gram = F.concat_ws(" ", F.col("tok"), *[F.lead("tok", j).over(w_ord) for j in range(1, n)])
+    n_tok = F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
+    return toks.select("doc_id", "idx", gram.alias("gram"), n_tok.alias("n_tok")).where(
+        (F.col("idx") <= F.col("n_tok") - n)  # full n-grams
+        | ((F.col("n_tok") < n) & (F.col("idx") == 0))  # short doc: one gram
+    )
+
+
 def shingle_rows(df: DataFrame, text_col: str, id_col: str, shingle_n: int = 3) -> DataFrame:
     """(doc_id, sh) — one row per distinct shingle per doc.
 
@@ -410,17 +434,10 @@ def shingle_rows(df: DataFrame, text_col: str, id_col: str, shingle_n: int = 3) 
     aggregate / hash join over it (vectorized, partial-agg friendly),
     instead of nested array lambdas re-evaluated per expression.
 
-    Build (round 5): ``posexplode`` the token stream once, construct
-    each gram as ``concat_ws(tok, lead(tok,1) … lead(tok,n-1))`` over a
-    ``(doc_id, idx)`` window, keep full grams (plus the whole-doc gram
-    for docs shorter than ``n`` — ``concat_ws`` skips the NULL leads,
-    matching slice semantics), DISTINCT.  Same shape as winnowing's gram
-    stage and the DuckDB oracle twins; measured 3-4× faster than the
-    earlier per-row ``transform``+``slice`` array build at n=3..13
-    (sf0.1: 3.5 s → ~1.0 s) — the window's shuffle+sort is cheaper than
-    O(tokens·n) array re-slicing inside a projection, and the relational
-    form is the one Catalyst can pipeline into the downstream
-    aggregates.
+    Build: the word ``shingle_n``-grams of :func:`_gram_rows` (a
+    lead-window over the exploded token stream; a doc shorter than
+    ``shingle_n`` tokens gives one whole-doc gram), DISTINCT per doc.
+    ``shingle_n=1`` skips the window: the grams are the tokens.
 
     This is also the STAGED-INPUT handle for the MinHash family: the
     full ``minhash_neardup`` pipeline reads these rows up to 4× (the
@@ -431,7 +448,6 @@ def shingle_rows(df: DataFrame, text_col: str, id_col: str, shingle_n: int = 3) 
     leak a CacheManager entry the caller never knows to drop).
     """
     if shingle_n == 1:
-        # degenerate case: grams ARE the tokens — no window needed
         return (
             df.select(
                 F.col(id_col).alias("doc_id"),
@@ -440,27 +456,15 @@ def shingle_rows(df: DataFrame, text_col: str, id_col: str, shingle_n: int = 3) 
             .where(F.col("sh") != "")
             .distinct()
         )
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.col(text_col))).alias("idx", "tok"),
-    ).where(F.col("tok") != "")
-    w_ord = Window.partitionBy("doc_id").orderBy("idx")
-    gram = F.concat_ws(
-        " ", F.col("tok"), *[F.lead("tok", j).over(w_ord) for j in range(1, shingle_n)]
-    )
-    n_tok = F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
     return (
-        toks.select("doc_id", "idx", gram.alias("sh"), n_tok.alias("n_tok"))
-        .where(
-            (F.col("idx") <= F.col("n_tok") - shingle_n)
-            | ((F.col("n_tok") < shingle_n) & (F.col("idx") == 0))
-        )
-        .select("doc_id", "sh")
+        _gram_rows(_token_rows(df, text_col, id_col), shingle_n)
+        .select("doc_id", F.col("gram").alias("sh"))
         .distinct()
     )
 
 
-#: backward-compat private alias (public name since round 4)
+#: the builder under a second name, for the operators whose
+#: ``shingle_rows=`` parameter shadows it
 _shingle_rows = shingle_rows
 
 
@@ -692,7 +696,6 @@ def minhash_neardup(
     ``test_minhash_staged_shingles_single_text_scan``.
     """
     rows = shingle_rows if shingle_rows is not None else _shingle_rows(df, text_col, id_col, shingle_n)
-    sizes = rows.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     cands = minhash_candidates(
         df,
         text_col,
@@ -714,8 +717,17 @@ def minhash_neardup(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    return _jaccard_at_least(inter, rows, threshold)
+
+
+def _jaccard_at_least(inter: DataFrame, rows: DataFrame, threshold: float) -> DataFrame:
+    """``(doc_a, doc_b, jaccard)`` with ``jaccard ≥ threshold`` from the
+    per-pair intersection counts ``inter`` ``(doc_a, doc_b, n_inter)``
+    and the ``(doc_id, …)`` set rows (one row per distinct element per
+    doc): ``|A∩B| / (|A| + |B| − |A∩B|)``, rounded to 6."""
+    sizes = rows.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     jac = F.round(
         F.col("n_inter").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
     )
@@ -820,7 +832,7 @@ def incremental_minhash_neardup(
     b = batch_sigs.select(
         "doc_id", *[F.col(f"h{i}").alias(f"__bh{i}") for i in range(num_hashes)]
     )
-    agree = sum_cols_int(
+    agree = sum_cols(
         [
             (F.col(f"h{i}") == F.col(f"__bh{i}")).cast("int")
             for i in range(num_hashes)
@@ -835,7 +847,8 @@ def incremental_minhash_neardup(
     )
 
 
-def sum_cols_int(cols: list[Column]) -> Column:
+def sum_cols(cols: list[Column]) -> Column:
+    """``cols[0] + cols[1] + …`` as one left-folded column expression."""
     out = cols[0]
     for c in cols[1:]:
         out = out + c
@@ -961,57 +974,22 @@ def simhash_neardup(
     max_hamming: int = 3,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash_a, simhash_b) ≤ ``max_hamming``.
-
-    Candidate generation bands the hash into 4 equal chunks (16 bits for
-    xxhash64, 15 for the md5 variant; pigeonhole: distance ≤3 ⇒ ≥1
-    identical chunk), so the join is on small buckets, not a cross join.
+    """Near-dup pairs with Hamming(simhash_a, simhash_b) ≤ ``max_hamming``:
+    :func:`hamming_neardup` over the :func:`simhash_signatures` table
+    (64 bits for xxhash64, 60 for md5), so candidates come from
+    ``max_hamming + 1`` pigeonhole chunks and no pair within the bound
+    is missed.  Output ``(doc_a, doc_b, hamming)``, ``doc_a < doc_b``.
 
     The signature table is ``localCheckpoint``-ed (lazily: the first
     consuming action materializes it) before the chunk self-join, so
     both join sides read one token-explode → bit-sum aggregate instead
     of re-running it.
     """
-    if hash_fn not in SIMHASH_BITS:
-        raise ValueError(f"hash_fn must be one of {sorted(SIMHASH_BITS)}, got {hash_fn!r}")
-    chunk_bits = SIMHASH_BITS[hash_fn] // 4
-    chunk_mask = (1 << chunk_bits) - 1
     sig = simhash_signatures(df, text_col, id_col, hash_fn=hash_fn).localCheckpoint(
         eager=False
     )
-    chunks = sig.select(
-        "doc_id",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned("sim", c * chunk_bits)
-                        .bitwiseAND(F.lit(chunk_mask))
-                        .alias("ck"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "sim", "b.chunk", "b.ck")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    ham = F.bit_count(F.col("a.sim").bitwiseXOR(F.col("b.sim")))
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.ck") == F.col("b.ck"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    return hamming_neardup(
+        sig, "sim", "doc_id", bits=SIMHASH_BITS[hash_fn], max_hamming=max_hamming
     )
 
 
@@ -1027,8 +1005,7 @@ def hamming_neardup(
     column (SimHash, image dHash, audio fingerprints): pairs with
     ``popcount(a XOR b) <= max_hamming``, found WITHOUT a cross join.
 
-    Pigeonhole banding generalized from :func:`simhash_neardup`'s fixed
-    4-chunk form: the signature splits into ``max_hamming + 1`` chunks
+    Pigeonhole banding: the signature splits into ``max_hamming + 1`` chunks
     (uneven widths allowed — boundaries at ``i·bits/(h+1)``), so any
     pair within distance ``max_hamming`` shares at least one identical
     chunk and the join runs on (chunk, value) buckets.  More chunks =
@@ -1508,24 +1485,13 @@ def jaccard_pairs_exact(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
     ).where(F.col("tok") != "")
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     a, b = tok.alias("a"), tok.alias("b")
     inter = (
         a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_tok").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_tok").alias("n_b"))
-    jac = F.round(
-        F.col("n_inter").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-    )
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_at_least(inter, tok, threshold)
 
 
 def edit_distance_pairs(
@@ -1678,6 +1644,34 @@ def build_fp_bloom(seen_fps: DataFrame, fp_col: str, *, bits: int, hashes: int):
     return arr
 
 
+def _bloom_maybe(arr, fp: Column, *, bits: int, hashes: int) -> Column:
+    """Boolean column: TRUE when the md5 hex fingerprint ``fp`` MAY be in
+    the :func:`build_fp_bloom` bitmap ``arr`` built with the same
+    ``bits``/``hashes`` (all ``hashes`` Kirsch–Mitzenmacher positions
+    set), FALSE when it is certainly absent.  An Arrow-batched pandas
+    UDF with ``arr`` shipped in its closure."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    # no pd.Series annotations: pandas is imported locally, so string
+    # hints can't resolve — the bare signature defaults to scalar eval
+    @pandas_udf("boolean")
+    def _maybe(h1, h2):
+        import numpy as np
+
+        a1 = h1.to_numpy(dtype=np.int64)
+        a2 = h2.to_numpy(dtype=np.int64)
+        hit = np.ones(len(a1), dtype=bool)
+        for i in range(hashes):
+            p = (a1 + i * a2) % bits
+            w = p >> 6
+            b = (p & 63).astype(np.uint64)
+            hit &= ((arr[w] >> b) & np.uint64(1)).astype(bool)
+        return pd.Series(hit)
+
+    return _maybe(*_fp_km_hashes(fp))
+
+
 def incremental_dedup(
     new_df: DataFrame,
     seen_fps: DataFrame,
@@ -1722,30 +1716,9 @@ def incremental_dedup(
     if bloom_bits is None:
         return batch.join(seen, "fingerprint", "left_anti")
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     arr = build_fp_bloom(seen, "fingerprint", bits=bloom_bits, hashes=bloom_hashes)
-    bits, hashes = bloom_bits, bloom_hashes
-
-    # no pd.Series annotations: pandas is imported locally, so string
-    # hints can't resolve — the bare signature defaults to scalar eval
-    @pandas_udf("boolean")
-    def _maybe_seen(h1, h2):
-        import numpy as np
-
-        a1 = h1.to_numpy(dtype=np.int64)
-        a2 = h2.to_numpy(dtype=np.int64)
-        hit = np.ones(len(a1), dtype=bool)
-        for i in range(hashes):
-            p = (a1 + i * a2) % bits
-            w = p >> 6
-            b = (p & 63).astype(np.uint64)
-            hit &= ((arr[w] >> b) & np.uint64(1)).astype(bool)
-        return pd.Series(hit)
-
-    h1, h2 = _fp_km_hashes(F.col("fingerprint"))
-    flagged = batch.withColumn("__maybe", _maybe_seen(h1, h2)).localCheckpoint(eager=False)
+    maybe = _bloom_maybe(arr, F.col("fingerprint"), bits=bloom_bits, hashes=bloom_hashes)
+    flagged = batch.withColumn("__maybe", maybe).localCheckpoint(eager=False)
     sure_new = flagged.where(~F.col("__maybe")).drop("__maybe")
     cand = flagged.where(F.col("__maybe")).drop("__maybe")
     confirmed = seen.join(

@@ -478,26 +478,23 @@ def _md5_sign_value(plane: int, i: int) -> float:
     return 1.0 if int(d, 16) % 2 == 0 else -1.0
 
 
-def lsh_bucket(
-    vec: Column, n_planes: int = 8, *, hash_fn: str = "xxhash64", dim: int | None = None
-) -> Column:
-    """Random-hyperplane signature: bit p = sign(Σ_i w(p,i)·x_i) ≥ 0.
+def _plane_projections(
+    vec: Column, n: int, hash_fn: str, dim: int | None
+) -> list[Column]:
+    """The ``n`` unscaled projections ``Σ_i w(p,i)·x_i`` of ``vec`` on
+    the ±1 planes p = 0…n-1 of :func:`_plane_sign`.
 
-    ``dim=`` (with ``hash_fn='md5'``) inlines the ±1 plane vectors as
-    ARRAY LITERALS computed once on the driver: the generic path
-    re-derives the same n_planes×dim signs per ROW inside an interpreted
-    HOF (md5 + hex-conv per element — measured ~2× the whole bucketing
-    pass), which is pure waste since the signs depend only on (plane,
-    dim).  At 100 TB the literal form is the only sane one; pass the
-    embedding dimension explicitly.
-
-    The literal path VALIDATES each row's vector length against ``dim``
-    and raises at execution time on a mismatch: ``zip_with`` would
-    otherwise pad the shorter side with NULLs, the projection would go
-    NULL, and every plane bit would silently resolve to 0 — a wrong
-    bucket with no error (and a divergence from the DuckDB twin, which
-    builds its sign list from the ACTUAL vector length)."""
-    if hash_fn == "md5" and dim is not None:
+    ``hash_fn='md5'`` with ``dim=`` inlines the plane vectors as ARRAY
+    LITERALS computed once on the driver (:func:`_md5_sign_value`)
+    instead of re-deriving the n×dim signs per row inside an
+    interpreted HOF (md5 + hex-conv per element).  That form VALIDATES
+    each row's vector length against ``dim`` and raises at execution
+    time on a mismatch: ``zip_with`` would otherwise pad the shorter
+    side with NULLs and every projection would silently go NULL (and
+    diverge from the DuckDB twin, which builds its sign list from the
+    ACTUAL vector length)."""
+    literal = hash_fn == "md5" and dim is not None
+    if literal:
         # assert_true returns NULL when the predicate holds (making the
         # when() branch take `vec` unchanged) and raises the message at
         # execution time when it does not — the standard loud-guard shape
@@ -506,57 +503,70 @@ def lsh_bucket(
             F.assert_true(
                 F.size(vec) == F.lit(dim),
                 F.format_string(
-                    "lsh_bucket: vector length %s != dim=%s (literal md5 "
-                    "planes are rendered for exactly dim elements)",
+                    "vector length %s != dim=%s (literal md5 planes are "
+                    "rendered for exactly dim elements)",
                     F.size(vec).cast("string"),
                     F.lit(str(dim)),
                 ),
             ).isNull(),
             vec,
         )
-    out = F.lit(0).cast("bigint")
-    for p in range(n_planes):
-        if hash_fn == "md5" and dim is not None:
+    projs = []
+    for p in range(n):
+        if literal:
             signs = F.array(*[F.lit(_md5_sign_value(p, i)) for i in range(dim)])
-            proj = F.aggregate(
-                F.zip_with(vec, signs, lambda x, s: x * s),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
+            terms = F.zip_with(vec, signs, lambda x, s: x * s)
         else:
-            proj = F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.sequence(F.lit(0), F.size(vec) - 1),
-                    lambda x, i: x * _plane_sign(p, i, hash_fn),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+            terms = F.zip_with(
+                vec,
+                F.sequence(F.lit(0), F.size(vec) - 1),
+                lambda x, i: x * _plane_sign(p, i, hash_fn),
             )
+        projs.append(F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x))
+    return projs
+
+
+def _md5_projection_sql(vec_expr: str, p: int) -> str:
+    """DuckDB rendering of plane ``p``'s unscaled md5-plane projection:
+    ``list_dot_product`` against a ±1 list built from the same
+    md5-parity rule as :func:`_md5_sign_value`."""
+    sign = (
+        f"CASE WHEN CAST(('0x' || substr(md5(CAST({p} AS VARCHAR) || ':' || "
+        f"CAST(i AS VARCHAR)), 1, 1)) AS INT) % 2 = 0 THEN 1.0 ELSE -1.0 END"
+    )
+    return (
+        f"list_dot_product({vec_expr}, "
+        f"list_transform(range(len({vec_expr})), i -> {sign}))"
+    )
+
+
+def lsh_bucket(
+    vec: Column, n_planes: int = 8, *, hash_fn: str = "xxhash64", dim: int | None = None
+) -> Column:
+    """Random-hyperplane signature: bit p = sign(Σ_i w(p,i)·x_i) ≥ 0 —
+    the signs of :func:`_plane_projections`, packed into a BIGINT.
+
+    ``dim=`` (with ``hash_fn='md5'``) inlines the ±1 plane vectors as
+    driver-computed array literals and checks every row's vector length
+    against it at execution time; at scale pass the embedding dimension
+    explicitly."""
+    out = F.lit(0).cast("bigint")
+    for p, proj in enumerate(_plane_projections(vec, n_planes, hash_fn, dim)):
         out = out + F.when(proj >= 0, F.lit(1 << p).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         )
     return out
 
 
-def lsh_bucket_sql(vec_expr: str, n_planes: int, *, dialect_note: str = "duckdb") -> str:
-    """DuckDB rendering of :func:`lsh_bucket` with ``hash_fn='md5'`` —
-    ONE definition of the plane-sign and projection arithmetic for both
-    engines (the `functions/numeric.bucket_sql` pattern): sequential
-    ``list_dot_product`` against a ±1 list built from the identical
-    md5-parity rule, ``>= 0`` sign, same power-of-two bit packing."""
-    terms = []
-    for p in range(n_planes):
-        sign = (
-            f"CASE WHEN CAST(('0x' || substr(md5(CAST({p} AS VARCHAR) || ':' || "
-            f"CAST(i AS VARCHAR)), 1, 1)) AS INT) % 2 = 0 THEN 1.0 ELSE -1.0 END"
-        )
-        proj = (
-            f"list_dot_product({vec_expr}, "
-            f"list_transform(range(len({vec_expr})), i -> {sign}))"
-        )
-        terms.append(f"CASE WHEN {proj} >= 0 THEN CAST({1 << p} AS BIGINT) ELSE CAST(0 AS BIGINT) END")
-    return " + ".join(terms)
+def lsh_bucket_sql(vec_expr: str, n_planes: int) -> str:
+    """DuckDB rendering of :func:`lsh_bucket` with ``hash_fn='md5'``:
+    the sign of each :func:`_md5_projection_sql` (``>= 0``), same
+    power-of-two bit packing."""
+    return " + ".join(
+        f"CASE WHEN {_md5_projection_sql(vec_expr, p)} >= 0 "
+        f"THEN CAST({1 << p} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for p in range(n_planes)
+    )
 
 
 def random_projection(
@@ -611,48 +621,15 @@ def random_projection_exprs(
     dim: int | None = None,
     scale: bool = True,
 ) -> list[Column]:
-    """The per-plane projection COLUMNS of :func:`random_projection`
-    (identical arithmetic — that function is now a thin select over
-    these), exposed so a caller can ride an EXISTING projection/scan
-    instead of joining a second vectors-derived frame by id
-    (``pack_related_documents`` folds the JL order key into its
+    """The per-plane projection COLUMNS of :func:`random_projection`:
+    :func:`_plane_projections` of the double-cast vector, times
+    1/√out_dim when ``scale``.  Exposed so a caller can ride an EXISTING
+    projection/scan instead of joining a second vectors-derived frame
+    by id (``pack_related_documents`` folds the JL order key into its
     assignment pass this way)."""
-    vec = _as_double(vec_col)
-    if hash_fn == "md5" and dim is not None:
-        vec = F.when(
-            F.assert_true(
-                F.size(vec) == F.lit(dim),
-                F.format_string(
-                    "random_projection: vector length %s != dim=%s (literal "
-                    "md5 planes are rendered for exactly dim elements)",
-                    F.size(vec).cast("string"),
-                    F.lit(str(dim)),
-                ),
-            ).isNull(),
-            vec,
-        )
-    projs = []
-    for p in range(out_dim):
-        if hash_fn == "md5" and dim is not None:
-            signs = F.array(*[F.lit(_md5_sign_value(p, i)) for i in range(dim)])
-            proj = F.aggregate(
-                F.zip_with(vec, signs, lambda x, s: x * s),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        else:
-            proj = F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.sequence(F.lit(0), F.size(vec) - 1),
-                    lambda x, i: x * _plane_sign(p, i, hash_fn),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        if scale:
-            proj = proj / F.lit(float(out_dim) ** 0.5)
-        projs.append(proj)
+    projs = _plane_projections(_as_double(vec_col), out_dim, hash_fn, dim)
+    if scale:
+        projs = [p / F.lit(float(out_dim) ** 0.5) for p in projs]
     return projs
 
 
@@ -660,20 +637,11 @@ def random_projection_sql(
     vec_expr: str, out_dim: int, *, scale: bool = True
 ) -> str:
     """DuckDB rendering of :func:`random_projection` with
-    ``hash_fn='md5'`` — ONE definition of the plane-sign and projection
-    arithmetic for both engines (the :func:`lsh_bucket_sql` pattern):
-    sequential ``list_dot_product`` against the identical md5-parity ±1
-    list.  Returns a list expression."""
+    ``hash_fn='md5'``: the list of :func:`_md5_projection_sql`, each
+    divided by ``sqrt(out_dim)`` when ``scale``."""
     terms = []
     for p in range(out_dim):
-        sign = (
-            f"CASE WHEN CAST(('0x' || substr(md5(CAST({p} AS VARCHAR) || ':' || "
-            f"CAST(i AS VARCHAR)), 1, 1)) AS INT) % 2 = 0 THEN 1.0 ELSE -1.0 END"
-        )
-        proj = (
-            f"list_dot_product({vec_expr}, "
-            f"list_transform(range(len({vec_expr})), i -> {sign}))"
-        )
+        proj = _md5_projection_sql(vec_expr, p)
         if scale:
             proj = f"({proj}) / sqrt({out_dim})"
         terms.append(proj)
@@ -964,14 +932,20 @@ def ivf_topk(
     both engines share the very bits, not just rounded values) instead
     of the Arrow einsum, and ``assign_round=`` rounds the assignment
     AND probe-selection similarities to that many decimals before their
-    argmax / top-``n_probe`` pick (it is ignored when the cells are
-    fitted) — the oracle twin rounds
-    identically, so both engines rank the same grid.  A production
-    pipeline uses the same form to keep list assignments stable across
+    argmax / top-``n_probe`` pick — the oracle twin rounds identically,
+    so both engines rank the same grid.  ``assign_round`` without
+    ``centroids`` raises, like ``n_assign < 1``, before any Spark job
+    runs: fitted cells rank on the unrounded Arrow dot.  A production
+    pipeline uses the fixed form to keep list assignments stable across
     incremental index builds.
     """
     if n_assign < 1:
         raise ValueError(f"n_assign must be >= 1, got {n_assign}")
+    if assign_round is not None and centroids is None:
+        raise ValueError(
+            "assign_round applies only to fixed centroids= (fitted cells "
+            "rank on the unrounded Arrow dot)"
+        )
     v = vectors.select(F.col(id_col).alias("vec_id"), _unit(F.col(vec_col)).alias("vv"))
     cents = _resolve_centroids(
         centroids,
@@ -983,16 +957,16 @@ def ivf_topk(
         max_fit_rows=max_fit_rows,
     )
     # fixed cells score with the sequential JVM fold (DuckDB's order) on
-    # the assign_round grid; fitted cells with the Arrow einsum, unrounded
-    pair_dot, digits = (dot, assign_round) if centroids is not None else (_dot_arrow, None)
+    # the assign_round grid; fitted cells with the Arrow einsum
+    pair_dot = dot if centroids is not None else _dot_arrow
     assigned = _assign_cells(
-        v, cents, _round_to(pair_dot(F.col("vv"), F.col("cv")), digits), n_assign, "vv"
+        v, cents, _round_to(pair_dot(F.col("vv"), F.col("cv")), assign_round), n_assign, "vv"
     )
     q = queries.select(
         F.col(query_id_col).alias("query_id"), _unit(F.col(vec_col)).alias("qv")
     )
     probes = _probe_pick(
-        q, cents, _round_to(pair_dot(F.col("qv"), F.col("cv")), digits), n_probe, "qv"
+        q, cents, _round_to(pair_dot(F.col("qv"), F.col("cv")), assign_round), n_probe, "qv"
     )
     scored = (
         assigned.join(F.broadcast(probes), "cent_id")

@@ -18,8 +18,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_dist_explore_spark.operators.dedup import (
+    _gram_rows,
+    _token_rows,
     n_tokens,
     normalize_text,
+    sum_cols,
     tokens,
 )
 
@@ -453,13 +456,6 @@ def language_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def sum_cols(cols: list[Column]) -> Column:
-    out = cols[0]
-    for c in cols[1:]:
-        out = out + c
-    return out
-
-
 def winnowing_fingerprints(
     df: DataFrame,
     text_col: str,
@@ -486,38 +482,19 @@ def winnowing_fingerprints(
     end-to-end; the window-min selection logic is byte-identical between
     the two).
 
-    Execution shape: ``posexplode`` the token stream once, then build
-    each gram RELATIONALLY as ``concat_ws(tok, lead(tok,1) …
-    lead(tok,k-1))`` — the lead window and the sliding fingerprint
-    minimum share the same ``(doc_id, idx)`` partitioning+sort, so the
-    whole operator is ONE shuffle + one sort + the final distinct.
-    (Earlier formulations measured on 5k docs @ sf0.1: nested
-    ``transform(win, i -> array_min(slice(...)))`` 80× slower —
-    quadratic re-evaluation; per-gram ``slice``+``concat_ws`` over a
-    token array 4.5× slower — O(n·k) array work outside the window.)
-    Docs shorter than ``k`` tokens produce one whole-doc gram
-    (``concat_ws`` skips the NULL leads), matching slice semantics.
+    Execution shape: the word ``k``-grams of
+    :func:`dedup._gram_rows` (a ``lead`` window over the exploded token
+    stream; a doc shorter than ``k`` tokens gives one whole-doc gram),
+    hashed; the gram window and the sliding fingerprint minimum share
+    the same ``(doc_id, idx)`` partitioning+sort, so the whole operator
+    is ONE shuffle + one sort + the final distinct.
     """
-    from pyspark.sql import Window
-
     if hash_fn not in ("xxhash64", "md5"):
         raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.col(text_col))).alias("idx", "tok"),
-    ).where(F.col("tok") != "")
-    w_ord = Window.partitionBy("doc_id").orderBy("idx")
-    gram = F.concat_ws(" ", F.col("tok"), *[F.lead("tok", j).over(w_ord) for j in range(1, k)])
+    gram = F.col("gram")
     hashed = F.xxhash64(gram) if hash_fn == "xxhash64" else F.md5(gram)
-    n_tok = F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-    grams = toks.select(
-        "doc_id",
-        "idx",
-        hashed.alias("h"),
-        n_tok.alias("n_tok"),
-    ).where(
-        (F.col("idx") <= F.col("n_tok") - k)  # full k-grams
-        | ((F.col("n_tok") < k) & (F.col("idx") == 0))  # short doc: one gram
+    grams = _gram_rows(_token_rows(df, text_col, id_col), k).select(
+        "doc_id", "idx", hashed.alias("h"), "n_tok"
     )
     w_min = Window.partitionBy("doc_id").orderBy("idx").rowsBetween(
         Window.currentRow, window - 1
@@ -726,12 +703,7 @@ def repetition_signals(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     aggregate, reduced per-doc with ``max``/``sum`` partials.  Ratios
     round to 6 so the DuckDB twin hash-matches.
     """
-    from pyspark.sql import Window
-
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.col(text_col))).alias("idx", "tok"),
-    ).where(F.col("tok") != "")
+    toks = _token_rows(df, text_col, id_col)
     tok_stats = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.count_distinct(F.col("tok")).alias("n_distinct"),
@@ -1101,11 +1073,7 @@ def _bigram_pairs(
         if missing:
             raise ValueError(f"pairs_rows missing column(s): {sorted(missing)}")
         return pairs_rows.select("doc_id", "idx", "tok"), pairs_rows
-    norm = normalize_text(F.col(text_col))
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(norm, " ")).alias("idx", "tok"),
-    ).where(F.col("tok") != "")
+    toks = _token_rows(df, text_col, id_col)
     w = Window.partitionBy("doc_id").orderBy("idx")
     pairs = toks.select("doc_id", "idx", "tok", F.lag("tok", 1).over(w).alias("prev"))
     return toks, pairs
@@ -1472,18 +1440,9 @@ def drop_repeated_lines(
     keeps its husk row without a separate presence join).  Two hash
     shuffles total, no sort of the corpus.
     """
-    import re as _re
-
     if min_df < 2:
         raise ValueError(f"min_df must be >= 2 (1 would drop every line), got {min_df}")
-    lines = df.select(
-        F.col(id_col).alias("doc_id"),
-        # NULL text coalesces to '' so the doc survives as a one-empty-
-        # line husk instead of silently vanishing from the output
-        F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), _re.escape(sep))
-        ).alias("pos", "line"),
-    ).withColumn("key", F.trim(F.col("line")))
+    lines = _line_rows(df, text_col, id_col, sep)
     common = (
         lines.where(F.col("key") != "")
         .groupBy("key")
@@ -1492,10 +1451,33 @@ def drop_repeated_lines(
         .select("key", F.lit(1).alias("__bp"))
     )
     flagged = lines.join(common, "key", "left")
-    keep = F.col("__bp").isNull()
+    return _rebuild_lines(flagged, F.col("__bp").isNull(), sep)
+
+
+def _line_rows(df: DataFrame, text_col: str, id_col: str, sep: str) -> DataFrame:
+    """``(doc_id, pos, line, key)`` — one row per ``sep``-separated line,
+    ``pos`` its position and ``key`` its trimmed form.  NULL text
+    coalesces to '' so the doc survives as a one-empty-line husk
+    instead of silently vanishing from the output."""
+    import re as _re
+
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(
+            F.split(F.coalesce(F.col(text_col), F.lit("")), _re.escape(sep))
+        ).alias("pos", "line"),
+    ).withColumn("key", F.trim(F.col("line")))
+
+
+def _rebuild_lines(flagged: DataFrame, keep: Column, sep: str) -> DataFrame:
+    """``(doc_id, text, n_lines_kept, n_lines_dropped)`` from
+    :func:`_line_rows`-shaped rows: ONE per-doc aggregate rebuilds the
+    text from the lines where ``keep`` holds, in ``pos`` order, and
+    counts kept and dropped lines (an all-dropped doc keeps its husk
+    row with empty text)."""
     rebuilt = flagged.groupBy("doc_id").agg(
-        # collect_list skips NULLs, so boilerplate rows drop out of the
-        # rebuild while still counting toward the per-doc total
+        # collect_list skips NULLs, so dropped rows leave the rebuild
+        # while still counting toward the per-doc total
         F.array_sort(
             F.collect_list(F.when(keep, F.struct("pos", "line")))
         ).alias("__s"),
@@ -1533,32 +1515,11 @@ def dedup_lines_within_doc(
     + line), so the operator is a per-doc shuffle+sort with no global
     state at all — embarrassingly parallel at any corpus size.
     """
-    import re as _re
-
-    from pyspark.sql import Window
-
-    lines = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), _re.escape(sep))
-        ).alias("pos", "line"),
-    ).withColumn("key", F.trim(F.col("line")))
     w = Window.partitionBy("doc_id", "key").orderBy("pos")
-    flagged = lines.withColumn("__occ", F.row_number().over(w))
-    keep = (F.col("key") == "") | (F.col("__occ") == 1)
-    rebuilt = flagged.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(F.when(keep, F.struct("pos", "line")))
-        ).alias("__s"),
-        F.sum(F.when(keep, 1).otherwise(0)).cast("bigint").alias("n_lines_kept"),
-        F.count(F.lit(1)).alias("__n_all"),
+    flagged = _line_rows(df, text_col, id_col, sep).withColumn(
+        "__occ", F.row_number().over(w)
     )
-    return rebuilt.select(
-        "doc_id",
-        F.concat_ws(sep, F.transform("__s", lambda r: r["line"])).alias("text"),
-        "n_lines_kept",
-        (F.col("__n_all") - F.col("n_lines_kept")).alias("n_lines_dropped"),
-    )
+    return _rebuild_lines(flagged, (F.col("key") == "") | (F.col("__occ") == 1), sep)
 
 
 def span_grams(df: DataFrame, text_col: str, id_col: str, k: int = 8) -> DataFrame:

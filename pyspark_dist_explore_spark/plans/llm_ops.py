@@ -31,9 +31,6 @@ from pyspark_dist_explore_spark.operators.sampling import (
 from pyspark_dist_explore_spark.plans.queries import register, register_sections
 from pyspark_dist_explore_spark.sources.tables import embedding_dim, load_table
 
-#: DuckDB rendering of dedup.normalize_text
-_NORM = "trim(regexp_replace(lower({c}), '\\s+', ' ', 'g'))"
-
 # Unit-normalize then dot — the SAME arithmetic shape as the Spark side
 # (similarity._unit + dot of unit vectors), so hash parity does not rely
 # on round(...,6) absorbing a different operation order.  Zero-norm
@@ -139,7 +136,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: survivor (copies of NEW docs) both do real work
 _RECRAWL_OFFSET = 1_000_000
 
-_INCR_FP = f"md5({_NORM.format(c='text')})"
+_INCR_FP = f"md5({dedup.NORMALIZE_SQL.format(c='text')})"
 
 
 #: the X36 overlap-census stats that unpivot into the ``'overlap'``
@@ -380,7 +377,7 @@ _EDITDIST_PREFIX = 256
     "neardup_jaccard_exact",
     f"""
 WITH tok AS (
-  SELECT doc_id, unnest(list_distinct(string_split({_NORM.format(c='text')}, ' '))) AS tok
+  SELECT doc_id, unnest(list_distinct(string_split({dedup.NORMALIZE_SQL.format(c='text')}, ' '))) AS tok
   FROM documents WHERE doc_id < {_JACCARD_MAX_ID}
 ),
 tok2 AS (SELECT doc_id, tok FROM tok WHERE tok <> ''),
@@ -460,7 +457,7 @@ def _minhash_oracle(
     exact dyadic rational (k a power of two), so the section is
     knife-edge-free by construction."""
     rows_per_band = num_hashes // bands
-    norm = _NORM.format(c="text")
+    norm = dedup.NORMALIZE_SQL.format(c="text")
     leads = ", ".join(f"lead(tok, {j}) OVER w" for j in range(1, shingle_n))
     mins = ", ".join(f"min(h1 + {i} * h2) AS h{i}" for i in range(num_hashes))
     band_selects = " UNION ALL ".join(
@@ -622,7 +619,7 @@ def q_neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CLUSTER_ORACLE = f"""
 WITH RECURSIVE tok AS (
-  SELECT doc_id, unnest(list_distinct(string_split({_NORM.format(c='text')}, ' '))) AS tok
+  SELECT doc_id, unnest(list_distinct(string_split({dedup.NORMALIZE_SQL.format(c='text')}, ' '))) AS tok
   FROM documents WHERE doc_id < {_JACCARD_MAX_ID}
 ),
 tok2 AS (SELECT doc_id, tok FROM tok WHERE tok <> ''),
@@ -720,11 +717,13 @@ def _simhash_oracle(max_hamming: int) -> str:
     hash is ('0x'||substr(md5(tok),1,15))::BIGINT — bit-identical to
     Spark's conv(substr(md5,1,15),16,10) (pinned in tests) — and every
     later stage (±1 bit sums, sign reassembly, 4×15-bit chunk banding,
-    bit_count hamming) is plain integer SQL on both sides."""
+    bit_count hamming) is plain integer SQL on both sides.  Four
+    pigeonhole chunks find every pair only for ``max_hamming ≤ 3``, the
+    bound the registered slot uses."""
     bits = dedup.SIMHASH_BITS["md5"]
     chunk_bits = bits // 4
     chunk_mask = (1 << chunk_bits) - 1
-    norm = _NORM.format(c="text")
+    norm = dedup.NORMALIZE_SQL.format(c="text")
     bit_sums = ", ".join(
         f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
         for i in range(bits)
@@ -758,8 +757,9 @@ WHERE bit_count(xor(a.sim, b.sim)) <= {max_hamming}
 
 @register("neardup_simhash", _simhash_oracle(max_hamming=3))
 def q_neardup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (hamming ≤ 3) via 4-chunk banding,
-    registered with the md5-derived 60-bit hash so the ENTIRE pipeline —
+    """SimHash near-dup pairs (hamming ≤ 3, so 4 pigeonhole chunks of
+    15 bits in :func:`dedup.hamming_neardup`), registered with the
+    md5-derived 60-bit hash so the ENTIRE pipeline —
     token hash, bit sums, sign reassembly, chunk-bucket join, hamming
     filter — is DuckDB-hash-checked.  The 64-bit xxhash64 variant stays
     the library default (faster; same algorithm, wider hash)."""
@@ -975,7 +975,7 @@ _BPE_K = 8
 
 #: normalized whitespace token count shared by the mixture queries
 #: (`corpus_token_budget` budgets and the X44 `mix_epochs` section)
-_MIX_NTOK = dedup.n_tokens_sql(_NORM.format(c="text"))
+_MIX_NTOK = dedup.n_tokens_sql(dedup.NORMALIZE_SQL.format(c="text"))
 
 
 #: X44 mix_epochs section: per-source token targets derived FROM the
@@ -1417,7 +1417,7 @@ def _curate_oracle() -> str:
     scoring (shared fragments with text_quality / text_lang_id), md5
     fingerprint dedup with arg_min survivor, exact-Jaccard pairs, the
     recursive-CTE connected components, survivor filter, md5 split."""
-    norm = _NORM.format(c="text")
+    norm = dedup.NORMALIZE_SQL.format(c="text")
     langs = sorted(textstats.LANG_MARKERS)
     score_exprs = _lang_score_sql()
     in_list = ", ".join(sql_str_lit(lang) for lang in langs)
@@ -1509,7 +1509,7 @@ def _decontam_oracle(n: int) -> str:
     same zip-unnest + lead-window + short-doc + DISTINCT stages as the
     minhash oracle) split into the two sides, an equi-join probe, and
     the per-doc verdict with a keep-all left join."""
-    norm = _NORM.format(c="text")
+    norm = dedup.NORMALIZE_SQL.format(c="text")
     leads = ", ".join(f"lead(tok, {j}) OVER w" for j in range(1, n))
     return f"""
 WITH toks AS (
@@ -1698,7 +1698,7 @@ FROM rel"""
         overlap=_CHUNK_OVERLAP,
         max_tokens=_PACK_MAX,
         buckets=32,
-        norm_text_expr=_NORM.format(c="text"),
+        norm_text_expr=dedup.NORMALIZE_SQL.format(c="text"),
     )
     + f"""
 UNION ALL
@@ -2059,7 +2059,7 @@ def _winnowing_oracle(k: int, window: int) -> str:
     lead-window gram build, both boundary filters, and the sliding
     window-min — structurally identical stages, so the fingerprint SET
     hash-matches without rounding games (md5 hex strings, exact)."""
-    norm = _NORM.format(c="text")
+    norm = dedup.NORMALIZE_SQL.format(c="text")
     leads = ", ".join(f"lead(tok, {j}) OVER w" for j in range(1, k))
     return f"""
 WITH toks AS (
@@ -2394,8 +2394,8 @@ def _text_stats_merged_oracle() -> str:
     score_exprs = _lang_score_sql()
     return f"""
 WITH n AS (
-  SELECT doc_id, text, {_NORM.format(c='text')} AS norm,
-         concat(' ', {_NORM.format(c='text')}, ' ') AS p
+  SELECT doc_id, text, {dedup.NORMALIZE_SQL.format(c='text')} AS norm,
+         concat(' ', {dedup.NORMALIZE_SQL.format(c='text')}, ' ') AS p
   FROM documents
 ),
 scored AS (
@@ -2468,7 +2468,7 @@ def _scrub_repetition_oracle() -> str:
     """DuckDB twin of scrub_text ⋈ repetition_signals: the same ordered
     regexp_replace chain (counts measured on the ORIGINAL text), md5 of
     the scrubbed bytes, zip-unnest tokens, lead-window bigrams."""
-    norm = _NORM.format(c="text")
+    norm = dedup.NORMALIZE_SQL.format(c="text")
     repl = "<redacted>"
     count_cols = ", ".join(
         f"CAST(len(regexp_extract_all(text, {sql_str_lit(pat)})) AS BIGINT) AS n_{kind}"
@@ -2671,7 +2671,7 @@ def text_scrub_repetition_sections(
     "text_tfidf",
     f"""
 WITH tok AS (
-  SELECT doc_id, unnest(string_split({_NORM.format(c='text')}, ' ')) AS term
+  SELECT doc_id, unnest(string_split({dedup.NORMALIZE_SQL.format(c='text')}, ' ')) AS term
   FROM documents
 ),
 tf AS (
@@ -2815,10 +2815,10 @@ _FUNNEL_MIN_TOKENS = 40
     f"""
 WITH scored AS (
   SELECT COALESCE(CAST(source AS VARCHAR), '') AS "group",
-         {dedup.n_tokens_sql(_NORM.format(c="COALESCE(text, '')"))} AS tok,
+         {dedup.n_tokens_sql(dedup.NORMALIZE_SQL.format(c="COALESCE(text, '')"))} AS tok,
          CAST(round({_quality_sql("COALESCE(text, '')")} * 1e6) AS BIGINT) AS q6,
-         md5({_NORM.format(c="COALESCE(text, '')")}) AS fp,
-         CASE WHEN {_NORM.format(c="COALESCE(text, '')")} = '' THEN 1 ELSE 0 END AS empty
+         md5({dedup.NORMALIZE_SQL.format(c="COALESCE(text, '')")}) AS fp,
+         CASE WHEN {dedup.NORMALIZE_SQL.format(c="COALESCE(text, '')")} = '' THEN 1 ELSE 0 END AS empty
   FROM documents
 ),
 prof AS (
@@ -3080,7 +3080,7 @@ def _perplexity_oracle() -> str:
     probabilities stay in the pytest twin
     (tests/test_ops.py::test_kn_bigram_*).
     """
-    norm = _NORM.format(c="text")
+    norm = dedup.NORMALIZE_SQL.format(c="text")
     b = f"('0x' || substr(md5(g), 1, 15))::BIGINT % {_DSIR_BUCKETS}"
     return f"""
 WITH toks AS (

@@ -314,6 +314,30 @@ def test_simhash_close_for_neardups(spark, hash_fn):
 
     assert ham(sig[1], sig[3]) < ham(sig[1], sig[4])
 
+    # the banded join finds exactly the pairs a brute-force all-pairs
+    # popcount finds, also past the 4-chunk bound (max_hamming ≥ 4)
+    from tests.conftest import SF_SMOKE
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    sigs = dedup.simhash_signatures(docs, "text", "doc_id", hash_fn=hash_fn).localCheckpoint()
+    a, b = sigs.alias("a"), sigs.alias("b")
+    brute = (
+        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.bit_count(F.col("a.sim").bitwiseXOR(F.col("b.sim"))).alias("hamming"),
+        )
+        .where(F.col("hamming") <= 8)
+        .collect()
+    )
+    for h in (4, 8):
+        want = {tuple(r) for r in brute if r["hamming"] <= h}
+        got = dedup.simhash_neardup(docs, "text", "doc_id", max_hamming=h, hash_fn=hash_fn)
+        rows = [tuple(r) for r in got.collect()]
+        assert len(rows) == len(set(rows))
+        assert set(rows) == want, (h, len(rows), len(want))
+
 
 def _simhash_signatures_unpacked(docs, text_col, id_col, *, hash_fn):
     """Wide-aggregate reference form of ``dedup.simhash_signatures``:
@@ -2914,7 +2938,6 @@ def test_deregistered_round6_text_queries_match_duckdb(spark):
     the same marker-count and argmax fragments the text_stats oracle
     uses."""
     from pyspark_dist_explore_spark.plans.llm_ops import (
-        _NORM,
         _lang_pred_case_sql,
         _lang_score_sql,
     )
@@ -2927,7 +2950,7 @@ def test_deregistered_round6_text_queries_match_duckdb(spark):
     oracle = f"""
 WITH scored AS (
   SELECT doc_id, {", ".join(f"{scores[g]} AS score_{g}" for g in langs)}
-  FROM (SELECT doc_id, concat(' ', {_NORM.format(c='text')}, ' ') AS p FROM documents)
+  FROM (SELECT doc_id, concat(' ', {dedup.NORMALIZE_SQL.format(c='text')}, ' ') AS p FROM documents)
 )
 SELECT doc_id, {", ".join(f"score_{g}" for g in langs)},
        {_lang_pred_case_sql()} AS lang_pred
@@ -4112,6 +4135,27 @@ def test_ivf_topk_rejects_n_assign_before_any_job(spark):
     try:
         with pytest.raises(ValueError, match="n_assign"):
             similarity.ivf_topk(emb, q, n_assign=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_ivf_topk_rejects_assign_round_without_centroids(spark):
+    """``assign_round`` only applies to fixed cells: with fitted cells
+    (``centroids=None``) it raises before the KMeans fit runs a job."""
+    from tests.conftest import SF_SMOKE
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    q = emb.limit(2).select(F.col("vec_id").alias("query_id"), "embedding")
+    sc = spark.sparkContext
+    group = "ivf_topk_assign_round_check"
+    sc.setJobGroup(group, "ivf_topk assign_round validation")
+    try:
+        with pytest.raises(ValueError, match="assign_round"):
+            similarity.ivf_topk(emb, q, assign_round=6)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

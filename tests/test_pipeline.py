@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from pyspark_dist_explore_spark.operators import dedup
 from pyspark_dist_explore_spark.pipeline import curate_documents
-from pyspark_dist_explore_spark.plans.llm_ops import _NORM
 from pyspark_dist_explore_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 from tests.oracle_utils import compare
@@ -27,7 +26,7 @@ def test_dedup_fingerprint_still_oracle_green(spark):
     """dedup.fingerprint_dedup (md5 over normalized text, min-id
     survivor, group size) hash-matches its DuckDB twin."""
     oracle = f"""
-SELECT md5({_NORM.format(c='text')}) AS fingerprint,
+SELECT md5({dedup.NORMALIZE_SQL.format(c='text')}) AS fingerprint,
        min(doc_id) AS survivor_id, count(*) AS n_dups
 FROM documents GROUP BY 1
 """
