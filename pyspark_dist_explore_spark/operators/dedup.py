@@ -25,6 +25,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_dist_explore_spark.functions.hashing import hex_int
+
 # --------------------------------------------------------------------------
 # Normalization / tokenization shared by the text-dedup families.
 # Spark and DuckDB renderings kept adjacent (see plans/llm_ops.py oracles).
@@ -412,6 +414,15 @@ def _token_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ).where(F.col("tok") != "")
 
 
+def _distinct_token_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(doc_id, tok)`` — one row per DISTINCT non-empty whitespace token
+    of the normalized text."""
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
+    ).where(F.col("tok") != "")
+
+
 def _gram_rows(toks: DataFrame, n: int) -> DataFrame:
     """``(doc_id, idx, gram, n_tok)`` over :func:`_token_rows`: every full
     word ``n``-gram, built as ``concat_ws(tok, lead(tok,1) … lead(tok,n-1))``
@@ -520,8 +531,8 @@ def minhash_signatures(
         # the optimized plan (CSE only partially collapses them).
         halves = rows.select(
             "doc_id",
-            F.conv(F.substring(F.md5("sh"), 1, 12), 16, 10).cast("bigint").alias("__h1"),
-            F.conv(F.substring(F.md5("sh"), 13, 12), 16, 10).cast("bigint").alias("__h2"),
+            hex_int(F.md5("sh"), 1, 12).alias("__h1"),
+            hex_int(F.md5("sh"), 13, 12).alias("__h2"),
         )
         return halves.groupBy("doc_id").agg(
             *[
@@ -866,8 +877,8 @@ def _mask(i: int) -> Column:
 
 
 #: bit width per hash_fn: xxhash64 is a native 64-bit long; the md5
-#: variant uses the leading 15 hex chars = 60 bits (16 would overflow a
-#: signed BIGINT, and DuckDB's '0x…'::BIGINT twin has the same ceiling)
+#: variant uses the leading 15 hex digits = 60 bits, the widest
+#: :func:`~pyspark_dist_explore_spark.functions.hashing.hex_int` reads
 SIMHASH_BITS = {"xxhash64": 64, "md5": 60}
 
 
@@ -875,8 +886,7 @@ def _simhash_token_hash(hash_fn: str) -> Column:
     if hash_fn == "xxhash64":
         return F.xxhash64("tok")
     if hash_fn == "md5":
-        # identical in DuckDB as ('0x' || substr(md5(tok),1,15))::BIGINT
-        return F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("bigint")
+        return hex_int(F.md5("tok"), 1, 15)
     raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
 
 
@@ -900,7 +910,7 @@ def simhash_signatures(
     lambda folds — ~10× cheaper than the nested-array formulation.
 
     The per-bit ±1 sums are NOT materialized as ``n_bits`` aggregate
-    columns (the r14 form: 60-64 SUM(CASE…) buffer slots per row).
+    columns (the wide form: 60-64 SUM(CASE…) buffer slots per row).
     Instead each BIGINT aggregate column packs ``_SIMHASH_LANES``
     21-bit set-bit COUNTERS (per-token contribution = the 0/1 bit
     values shifted into their lanes — pure arithmetic, no branches),
@@ -920,10 +930,7 @@ def simhash_signatures(
     """
     h_expr = _simhash_token_hash(hash_fn)  # validates hash_fn
     bits = SIMHASH_BITS[hash_fn]
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
-    ).where(F.col("tok") != "")
+    toks = _distinct_token_rows(df, text_col, id_col)
     hashed = toks.select("doc_id", h_expr.alias("h"))
     lane_groups = [
         list(range(g, min(g + _SIMHASH_LANES, bits)))
@@ -1481,10 +1488,7 @@ def jaccard_pairs_exact(
     counts → |A∪B| = |A|+|B|−|A∩B|.  Quadratic only within shared-token
     groups; at scale, prune stopword-like ultra-frequent tokens first.
     """
-    tok = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
-    ).where(F.col("tok") != "")
+    tok = _distinct_token_rows(df, text_col, id_col)
     a, b = tok.alias("a"), tok.alias("b")
     inter = (
         a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -1602,9 +1606,7 @@ def _fp_km_hashes(fp_col: Column) -> tuple[Column, Column]:
     h1 = first 12 hex digits (48 bits), h2 = next 12 forced odd
     (< 2^49), so h1 + i·h2 stays < 2^54 for i ≤ 16 — overflow-free
     bigint arithmetic, same trick as the md5 MinHash variant above."""
-    h1 = F.conv(F.substring(fp_col, 1, 12), 16, 10).cast("bigint")
-    h2 = F.conv(F.substring(fp_col, 13, 12), 16, 10).cast("bigint") * 2 + 1
-    return h1, h2
+    return hex_int(fp_col, 1, 12), hex_int(fp_col, 13, 12) * 2 + 1
 
 
 def build_fp_bloom(seen_fps: DataFrame, fp_col: str, *, bits: int, hashes: int):

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark_dist_explore_spark.operators.dedup import NORMALIZE_SQL
 from pyspark_dist_explore_spark.operators.textstats import (
     _cls_bucket_expr,
+    _cls_bucket_sql,
     _cls_gram_col,
 )
 
@@ -336,7 +337,7 @@ def dsir_sql(
         "i -> l[i] || ' ' || l[i + 1]) ELSE []::VARCHAR[] END"
     )
     gram_expr = f"list_concat(l, {bi})" if bigrams else "l"
-    b = f"('0x' || substr(md5(gram), 1, 15))::BIGINT % {n_buckets}"
+    b = _cls_bucket_sql("gram", n_buckets)
     aB = f"{alpha!r} * {n_buckets}"
     lam = (
         f"CAST(round(1e6 * ln((COALESCE(t.cnt, 0) + {alpha!r}) / (nt + {aB}))) AS BIGINT)"

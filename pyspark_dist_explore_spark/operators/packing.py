@@ -50,6 +50,7 @@ from pyspark.sql.types import (
 )
 
 from pyspark_dist_explore_spark.operators import dedup
+from pyspark_dist_explore_spark.operators.sampling import _shard16, _shard16_sql
 
 #: bucket·2^40 keeps pack_id collision-free while staying far from the
 #: BIGINT ceiling (buckets < 2^22, packs-per-bucket < 2^40)
@@ -67,23 +68,15 @@ _PACK_SCHEMA = StructType(
 
 
 def _bucket_expr(id_col: str, buckets: int):
-    """Deterministic engine-portable bucket: leading 4 md5 hex chars mod
-    ``buckets`` — DuckDB renders the identical expression.
+    """Deterministic engine-portable bucket: the 16-bit md5 shard pick of
+    the id (:func:`~.sampling._shard16`, which bounds ``buckets`` to
+    [1, 65536]); :func:`_bucket_sql` is the DuckDB rendering."""
+    return _shard16(F.md5(F.col(id_col).cast("string")), buckets)
 
-    The hash draw has 65 536 values, so ``buckets`` must be ≤ 65536 (a
-    larger value would silently leave buckets empty) and non-power-of-two
-    values carry a tiny mod bias (≤ 1/65536 relative — irrelevant for
-    load-balancing, which is all the bucket is for).
-    """
-    if not 1 <= buckets <= 65536:
-        raise ValueError(
-            f"buckets must be in [1, 65536] (the md5 draw has 16 bits), got {buckets}"
-        )
-    return (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % buckets
-    )
+
+def _bucket_sql(id_expr: str, buckets: int) -> str:
+    """DuckDB rendering of :func:`_bucket_expr`."""
+    return _shard16_sql(f"md5(CAST({id_expr} AS VARCHAR))", buckets)
 
 
 def pack_sequences(
@@ -660,10 +653,7 @@ def _chunk_base_ctes(
     """Shared CTE prefix (tokenize → chunk → chunk ids → md5 bucket)
     used by both DuckDB pack renderers."""
     stride = chunk_max_tokens - overlap
-    bucket = (
-        f"(CAST(('0x' || substr(md5(CAST(chunk_id AS VARCHAR)), 1, 4)) AS BIGINT)"
-        f" % {buckets})"
-    )
+    bucket = _bucket_sql("chunk_id", buckets)
     return f"""toks AS (
   SELECT {id_col} AS doc_id,
          CASE WHEN {norm_text_expr} = '' THEN CAST([] AS VARCHAR[])
@@ -686,7 +676,7 @@ base AS (
   FROM chunks
 ),
 bucketed AS (
-  SELECT chunk_id, n_tokens, CAST({bucket} AS INT) AS bucket FROM base
+  SELECT chunk_id, n_tokens, {bucket} AS bucket FROM base
 )"""
 
 
@@ -872,15 +862,12 @@ def pack_sequences_sql(
 ) -> str:
     """DuckDB rendering of ``pack_sequences(mode='cumsum')`` — identical
     bucket hash, exclusive window cumsum, floor division, stride."""
-    bucket = (
-        f"(CAST(('0x' || substr(md5(CAST({id_col} AS VARCHAR)), 1, 4)) AS BIGINT)"
-        f" % {buckets})"
-    )
+    bucket = _bucket_sql(id_col, buckets)
     return f"""
 WITH base AS (
   SELECT CAST({id_col} AS BIGINT) AS doc_id,
          {dedup.n_tokens_sql(norm_text_expr)} AS n_tokens,
-         CAST({bucket} AS INT) AS bucket
+         {bucket} AS bucket
   FROM {table}
 )
 SELECT doc_id, n_tokens, bucket,

@@ -3,9 +3,10 @@
 ``hash_split`` is the canonical deterministic train/val/test assignment:
 bucket by a stable content hash of the key, not by RNG — the same row
 lands in the same split on every run, every engine, any partitioning.
-The hash is md5 (available and identical in Spark and DuckDB), compared
-on its leading hex chars, so the DuckDB oracle renders the exact same
-logic and the split is auditable in plain SQL.
+The hash is md5 (available and identical in Spark and DuckDB), read as
+the integer of its leading 4 hex digits (``functions/hashing.py``), so
+the DuckDB oracle renders the exact same logic and the split is
+auditable in plain SQL.
 
 ``stratified_sample_hash`` applies the same md5-bucket scheme
 PER-STRATUM: keep a row when its content-hash bucket falls below the
@@ -20,16 +21,46 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_dist_explore_spark.functions.hashing import (
+    hex_int,
+    hex_int_sql,
+    salted_md5,
+    salted_md5_sql,
+)
 
-def _split_expr(key: Column, cuts: list[tuple[str, str]]) -> Column:
-    """CASE over the first 4 hex chars of md5(key) — 65536 buckets."""
-    h = F.substring(F.md5(key.cast("string")), 1, 4)
-    expr = None
-    for name, upper in cuts[:-1]:
-        cond = h < upper
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    last_name = cuts[-1][0]
-    return expr.otherwise(last_name) if expr is not None else F.lit(last_name)
+
+def _check_shards(shards: int) -> int:
+    if not 1 <= shards <= 65536:
+        raise ValueError(
+            f"shards/buckets must be in [1, 65536] (the md5 draw has 16 bits), "
+            f"got {shards}"
+        )
+    return shards
+
+
+def _shard16(h: Column, shards: int) -> Column:
+    """INT shard of an md5 hex column: its leading 16 bits mod ``shards``.
+    Non-power-of-two counts carry a mod bias of at most 1/65536."""
+    return (hex_int(h, 1, 4) % _check_shards(shards)).cast("int")
+
+
+def _shard16_sql(h: str, shards: int) -> str:
+    """DuckDB rendering of :func:`_shard16`."""
+    return f"CAST({hex_int_sql(h, 1, 4)} % {_check_shards(shards)} AS INT)"
+
+
+def _cut(frac: float) -> int:
+    """Upper bound of the first ``frac`` of the 65536 16-bit draws."""
+    return int(round(frac * 65536))
+
+
+def _split_cuts(fractions: dict[str, float]) -> list[tuple[str, int]]:
+    """(split name, exclusive 16-bit upper bound) per split, in order."""
+    cuts, acc = [], 0.0
+    for name, frac in fractions.items():
+        acc += frac
+        cuts.append((name, min(_cut(acc), 65535)))
+    return cuts
 
 
 def hash_split(
@@ -48,24 +79,23 @@ def hash_split(
     fractions = fractions or {"train": 0.8, "val": 0.1, "test": 0.1}
     if abs(sum(fractions.values()) - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {fractions}")
-    cuts, acc = [], 0.0
-    for name, frac in fractions.items():
-        acc += frac
-        cuts.append((name, f"{min(int(round(acc * 65536)), 65535):04x}"))
-    return df.withColumn(split_col, _split_expr(F.col(key_col), cuts))
+    cuts = _split_cuts(fractions)
+    h = hex_int(F.md5(F.col(key_col).cast("string")), 1, 4)
+    last = cuts[-1][0]
+    if len(cuts) == 1:
+        return df.withColumn(split_col, F.lit(last))
+    expr = F
+    for name, upper in cuts[:-1]:
+        expr = expr.when(h < upper, name)
+    return df.withColumn(split_col, expr.otherwise(last))
 
 
 def hash_split_sql(key: str, fractions: dict[str, float] | None = None) -> str:
     """DuckDB CASE expression matching :func:`hash_split` exactly."""
-    fractions = fractions or {"train": 0.8, "val": 0.1, "test": 0.1}
-    h = f"substr(md5(CAST({key} AS VARCHAR)), 1, 4)"
-    parts, acc = [], 0.0
-    names = list(fractions)
-    for name in names[:-1]:
-        acc += fractions[name]
-        upper = f"{min(int(round(acc * 65536)), 65535):04x}"
-        parts.append(f"WHEN {h} < '{upper}' THEN {sql_str_lit(name)}")
-    return "CASE " + " ".join(parts) + f" ELSE {sql_str_lit(names[-1])} END"
+    cuts = _split_cuts(fractions or {"train": 0.8, "val": 0.1, "test": 0.1})
+    h = hex_int_sql(f"md5(CAST({key} AS VARCHAR))", 1, 4)
+    parts = [f"WHEN {h} < {upper} THEN {sql_str_lit(name)}" for name, upper in cuts[:-1]]
+    return "CASE " + " ".join(parts) + f" ELSE {sql_str_lit(cuts[-1][0])} END"
 
 
 def stratified_sample(
@@ -86,12 +116,12 @@ def stratified_sample(
     return df.sampleBy(stratum_col, fractions=fractions, seed=seed)
 
 
-def _stratum_threshold(frac: float) -> str | None:
-    """4-hex upper bound for a fraction, or None for keep-all (frac≥1)."""
+def _stratum_threshold(frac: float) -> int | None:
+    """16-bit upper bound for a fraction, or None for keep-all (frac≥1)."""
     if not 0.0 <= frac <= 1.0:
         raise ValueError(f"fractions must be in [0, 1], got {frac}")
-    thr = int(round(frac * 65536))
-    return None if thr >= 65536 else f"{thr:04x}"
+    thr = _cut(frac)
+    return None if thr >= 65536 else thr
 
 
 def stratified_sample_hash(
@@ -100,9 +130,9 @@ def stratified_sample_hash(
     fractions: dict[str, float],
     key_col: str,
 ) -> DataFrame:
-    """Deterministic stratified sampling: keep a row iff the leading 4 hex
-    chars of ``md5(stratum || ':' || key)`` fall below the stratum's
-    fraction (65536 buckets — granularity 1/65536 ≈ 0.0015%).
+    """Deterministic stratified sampling: keep a row iff the integer of
+    the leading 4 hex digits of ``md5(stratum:key)`` falls below the
+    stratum's fraction of 65536 (granularity 1/65536 ≈ 0.0015%).
 
     Same row → same decision on every run, every engine, any
     partitioning: the predicate is pure row-local expression work (no
@@ -123,13 +153,9 @@ def stratified_sample_hash(
     stratum share one keep/drop decision — pass a unique non-null key
     for per-row sampling.
     """
-    h = F.substring(
-        F.md5(
-            F.concat_ws(
-                ":",
-                F.coalesce(F.col(stratum_col).cast("string"), F.lit("")),
-                F.coalesce(F.col(key_col).cast("string"), F.lit("")),
-            )
+    h = hex_int(
+        salted_md5(
+            F.coalesce(F.col(stratum_col).cast("string"), F.lit("")), F.col(key_col)
         ),
         1,
         4,
@@ -272,7 +298,7 @@ def shuffle_shards(
     pseudo-randomly, split it into ``shards`` balanced shards, and give
     every row a stable position within its shard.
 
-    Order key is ``md5(salt || ':' || key)`` — pseudo-random but
+    Order key is ``md5(salt:key)`` — pseudo-random but
     reproducible (same corpus → same order, every run, every engine; a
     different ``salt`` yields an independent reshuffle, which is how you
     get epoch-distinct orders without RNG).  The shard is the leading 16
@@ -291,19 +317,8 @@ def shuffle_shards(
     Write with ``df.write.partitionBy(shard_col)`` (or the bucketed sink
     in ``sources/sinks.py``) for one directory per shard.
     """
-    if shards < 1 or shards > 65536:
-        raise ValueError(
-            f"shards must be in [1, 65536] (the md5 draw has 16 bits), got {shards}"
-        )
-    # explicit coalesce on the key (Spark concat_ws skips NULLs, DuckDB
-    # concat keeps the separator — same divergence as stratified_sample)
-    h = F.md5(
-        F.concat_ws(
-            ":", F.lit(salt), F.coalesce(F.col(key_col).cast("string"), F.lit(""))
-        )
-    )
-    shard = F.conv(F.substring(h, 1, 4), 16, 10).cast("int") % shards
-    tagged = df.withColumn("__h", h).withColumn(shard_col, shard)
+    h = salted_md5(F.lit(salt), F.col(key_col))
+    tagged = df.withColumn("__h", h).withColumn(shard_col, _shard16(h, shards))
     w = Window.partitionBy(shard_col).orderBy(F.col("__h"), F.col(key_col))
     return tagged.withColumn(pos_col, F.row_number().over(w)).drop("__h")
 
@@ -318,13 +333,12 @@ def shuffle_shards_sql(
 ) -> str:
     """DuckDB twin of :func:`shuffle_shards` — identical hash, shard,
     and row_number arithmetic over a subquery."""
-    h = f"md5(concat({sql_str_lit(salt)}, ':', COALESCE(CAST({key} AS VARCHAR), '')))"
-    shard = f"CAST((CAST(('0x' || substr({h}, 1, 4)) AS BIGINT) % {shards}) AS INT)"
+    h = salted_md5_sql(sql_str_lit(salt), key)
     cols = ", ".join(out_cols) if out_cols else "*"
     return f"""
 SELECT {cols}, shard,
        CAST(row_number() OVER (PARTITION BY shard ORDER BY {h}, {key}) AS INT) AS pos
-FROM (SELECT *, {shard} AS shard FROM ({table_sql}))
+FROM (SELECT *, {_shard16_sql(h, shards)} AS shard FROM ({table_sql}))
 """
 
 
@@ -388,14 +402,13 @@ def stratified_sample_hash_sql(
     """DuckDB boolean expression matching :func:`stratified_sample_hash`
     exactly (use in a WHERE clause) — including the NULL→'' coalesce and
     quote-escaped stratum literals."""
-    h = (
-        f"substr(md5(concat(COALESCE(CAST({stratum} AS VARCHAR), ''), ':', "
-        f"COALESCE(CAST({key} AS VARCHAR), ''))), 1, 4)"
+    h = hex_int_sql(
+        salted_md5_sql(f"COALESCE(CAST({stratum} AS VARCHAR), '')", key), 1, 4
     )
     whens = []
     for name, frac in fractions.items():
         thr = _stratum_threshold(frac)
-        cond = "TRUE" if thr is None else f"{h} < '{thr}'"
+        cond = "TRUE" if thr is None else f"{h} < {thr}"
         whens.append(f"WHEN {stratum} = {sql_str_lit(name)} THEN {cond}")
     if not whens:
         return "FALSE"
@@ -452,16 +465,11 @@ def temperature_resample(
         .agg(F.count(F.lit(1)).alias("__n"))
         .select(group_col, thr.alias("__thr"))
     )
-    h = F.substring(
-        F.md5(
-            F.concat_ws(
-                ":", F.lit(salt), F.coalesce(F.col(key_col).cast("string"), F.lit(""))
-            )
-        ),
-        1,
-        4,
-    )
-    keep = (F.col("__thr") >= 65536) | (h < F.format_string("%04x", F.col("__thr")))
+    # the 16-bit draw is below a 65536 threshold anyway; the explicit
+    # keep-all branch stops the join condition from implying
+    # isnotnull(__thr), which would add a Filter to the broadcast side
+    h = hex_int(salted_md5(F.lit(salt), F.col(key_col)), 1, 4)
+    keep = (F.col("__thr") >= 65536) | (h < F.col("__thr"))
     return df.join(F.broadcast(rates), group_col).where(keep).drop("__thr")
 
 
@@ -482,10 +490,7 @@ def temperature_resample_sql(
     """
     if not coeff > 0:
         raise ValueError(f"coeff must be > 0, got {coeff}")
-    h = (
-        f"substr(md5(concat({sql_str_lit(salt)}, ':', "
-        f"COALESCE(CAST({key_col} AS VARCHAR), ''))), 1, 4)"
-    )
+    h = hex_int_sql(salted_md5_sql(sql_str_lit(salt), key_col), 1, 4)
     return f"""
 SELECT d.*
 FROM ({src}) d
@@ -494,7 +499,7 @@ JOIN (
          CAST(floor(least(1.0, {float(coeff)!r} / sqrt(CAST(count(*) AS DOUBLE))) * 65536.0) AS BIGINT) AS __thr
   FROM ({src}) GROUP BY {group_col}
 ) r USING ({group_col})
-WHERE r.__thr >= 65536 OR {h} < printf('%04x', r.__thr)
+WHERE r.__thr >= 65536 OR {h} < r.__thr
 """
 
 
@@ -532,11 +537,7 @@ def stratified_take_exact(
     for name, target in targets.items():
         if target < 0:
             raise ValueError(f"targets must be >= 0, got {name}={target}")
-    h = F.md5(
-        F.concat_ws(
-            ":", F.lit(salt), F.coalesce(F.col(key_col).cast("string"), F.lit(""))
-        )
-    )
+    h = salted_md5(F.lit(salt), F.col(key_col))
     # unlisted strata drop anyway — filter them BEFORE the window so the
     # rank shuffle carries only rows that can survive (row_number within
     # a stratum is unaffected: window partitions are independent)
@@ -581,19 +582,14 @@ def cap_per_key(
     ``stratified_take_exact`` the cap applies to EVERY key (no target
     dict), which is what a host policy means.
 
-    The full row (text included) rides the rank exchange BY DESIGN: a
-    projected-window + id-semi-join variant was A/B'd at 100× sf0.1 in
-    round 10 and REJECTED (56–78 s vs 5–12 s) — the semi-join re-scans
-    the corpus and shuffles it a SECOND time by id, so one full-row
-    exchange is strictly cheaper (probe row in BASELINE.md).
+    The full row (text included) rides the rank exchange by design: a
+    projected-window + id-semi-join variant measured 56–78 s against
+    5–12 s at 100× sf0.1, because the semi-join re-scans the corpus and
+    shuffles it a second time by id (probe row in BASELINE.md).
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    h = F.md5(
-        F.concat_ws(
-            ":", F.lit(salt), F.coalesce(F.col(id_col).cast("string"), F.lit(""))
-        )
-    )
+    h = salted_md5(F.lit(salt), F.col(id_col))
     # a Column key (e.g. dedup.url_host over a raw url column) rides the
     # same window without a pre-projection
     key = key_col if isinstance(key_col, Column) else F.col(key_col)
@@ -618,10 +614,7 @@ def cap_per_key_sql(
     identical cap; ``src`` must yield the sampled relation."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    h = (
-        f"md5(concat({sql_str_lit(salt)}, ':', "
-        f"COALESCE(CAST({id_col} AS VARCHAR), '')))"
-    )
+    h = salted_md5_sql(sql_str_lit(salt), id_col)
     return f"""
 SELECT * EXCLUDE (__rk) FROM (
   SELECT *, row_number() OVER (
@@ -645,10 +638,7 @@ def stratified_take_exact_sql(
     """DuckDB twin of :func:`stratified_take_exact` — identical hash
     order, identical per-stratum caps; ``src`` must yield the sampled
     relation.  Returns a SELECT of the kept rows (without the rank)."""
-    h = (
-        f"md5(concat({sql_str_lit(salt)}, ':', "
-        f"COALESCE(CAST({key_col} AS VARCHAR), '')))"
-    )
+    h = salted_md5_sql(sql_str_lit(salt), key_col)
     whens = " ".join(
         f"WHEN {stratum_col} = {sql_str_lit(name)} THEN __rk <= {int(target)}"
         for name, target in targets.items()
@@ -726,11 +716,7 @@ def materialize_mixture(
         *[x for n in live for x in (F.lit(n), F.lit(int(targets[n])))]
     )[s].cast("bigint")
     tot = base.groupBy(s.alias("__src")).agg(F.sum(t).alias("__tot"))
-    h = F.md5(
-        F.concat_ws(
-            ":", F.lit(salt), F.coalesce(F.col(id_col).cast("string"), F.lit(""))
-        )
-    )
+    h = salted_md5(F.lit(salt), F.col(id_col))
     w = (
         Window.partitionBy("__src")
         .orderBy(h, F.col(id_col).cast("string"))
@@ -800,10 +786,7 @@ def materialize_mixture_sql(
         f"WHEN {s} = {sql_str_lit(n)} THEN {int(t)}" for n, t in live.items()
     )
     in_list = ", ".join(sql_str_lit(n) for n in live)
-    h = (
-        f"md5(concat({sql_str_lit(salt)}, ':', "
-        f"COALESCE(CAST({id_col} AS VARCHAR), '')))"
-    )
+    h = salted_md5_sql(sql_str_lit(salt), id_col)
     return f"""
 SELECT * EXCLUDE (__tot, __cum, __tgt, __full, __rem, __copies)
      , CAST(unnest(generate_series(1, CAST(__copies AS INT))) AS INT) AS {epoch_col}
@@ -875,11 +858,7 @@ def top_frac_per_group(
     base = df.where(s.isNotNull())
     if num == 0:
         return base.where(F.lit(False))
-    h = F.md5(
-        F.concat_ws(
-            ":", F.lit(salt), F.coalesce(F.col(id_col).cast("string"), F.lit(""))
-        )
-    )
+    h = salted_md5(F.lit(salt), F.col(id_col))
     w = Window.partitionBy(g).orderBy(s.desc(), h, F.col(id_col).cast("string"))
     # the group size rides the SAME (partition, order) spec with an
     # unbounded frame, and both columns land in ONE select — chained
@@ -917,10 +896,7 @@ def top_frac_per_group_sql(
     if num == 0:
         return f"SELECT * FROM ({src}) WHERE FALSE"
     g = f"COALESCE(CAST({group_col} AS VARCHAR), '')"
-    h = (
-        f"md5(concat({sql_str_lit(salt)}, ':', "
-        f"COALESCE(CAST({id_col} AS VARCHAR), '')))"
-    )
+    h = salted_md5_sql(sql_str_lit(salt), id_col)
     return f"""
 SELECT * EXCLUDE (__rk, __n) FROM (
   SELECT *,
@@ -995,20 +971,16 @@ def proportional_interleave(
     ``min(n_t, (v-1) // stride_t)`` (groups after) — pure BIGINT
     arithmetic over the K-row group-total table, rendered as literals
     into one whole-stage-codegen projection.  The within-group rank is
-    built WITHOUT a per-group single-partition window: rows sub-shard
-    by the leading 16 md5 bits (``% shards``), rank within (group,
-    shard), and add per-shard offsets from a K·S-row count frame —
+    :func:`_sharded_rank` over the K·S-row (group, shard) count table,
     equal by construction to ``row_number() OVER (PARTITION BY group
     ORDER BY shard, md5, id)``, which is what the DuckDB twin renders.
 
-    Eager note: building the closed form runs ONE K·S-row count
-    aggregate at construction (the :func:`materialize_mixture`
-    precedent).  ``id_col`` must be unique per row (hash input + tie
-    break, as in :func:`shuffle_shards`).
+    Building the closed form collects the K group totals from that
+    count table, so construction runs its jobs.  ``id_col`` must be
+    unique per row (hash input + tie break, as in
+    :func:`shuffle_shards`).
     """
     strides, _ = _interleave_strides(weights)
-    if shards < 1 or shards > 65536:
-        raise ValueError(f"shards must be in [1, 65536], got {shards}")
     clash = {rank_col, pos_col} & set(df.columns)
     if clash:
         raise ValueError(
@@ -1017,48 +989,18 @@ def proportional_interleave(
         )
     groups = sorted(weights)
     g = F.coalesce(F.col(group_col).cast("string"), F.lit(""))
-    h = F.md5(
-        F.concat_ws(
-            ":", F.lit(salt), F.coalesce(F.col(id_col).cast("string"), F.lit(""))
-        )
-    )
+    h = salted_md5(F.lit(salt), F.col(id_col))
     tagged = (
         df.where(g.isin(groups))
         .withColumn("__g", g)
         .withColumn("__h", h)
-        .withColumn(
-            "__sh", F.conv(F.substring(F.col("__h"), 1, 4), 16, 10).cast("int") % shards
-        )
+        .withColumn("__sh", _shard16(F.col("__h"), shards))
     )
-    # ONE corpus scan feeds the K·S count table; localCheckpoint it so
-    # the totals collect, the offsets window, AND the main pass all read
-    # the (K·S)-row blocks instead of re-deriving the aggregate — the
-    # whole operator is exactly TWO corpus scans at any size.  Lazy: the
-    # totals collect is the materializing action (r14 — no build job)
-    counts = (
-        tagged.groupBy("__g", "__sh")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=False)
-    )
-    woff = (
-        Window.partitionBy("__g")
-        .orderBy("__sh")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "__g", "__sh", F.coalesce(F.sum("__c").over(woff), F.lit(0)).alias("__off")
-    )
+    counts, ranked = _sharded_rank(tagged, ["__g"], id_col)
     totals = {g_: 0 for g_ in groups}
     for row in counts.groupBy("__g").agg(F.sum("__c").alias("n")).collect():  # bounded-collect: K-row group totals (the closed form's literals)
         totals[row["__g"]] = int(row["n"])
-    wrk = Window.partitionBy("__g", "__sh").orderBy("__h", F.col(id_col))
-    ranked = (
-        tagged.join(F.broadcast(offsets), ["__g", "__sh"])
-        .withColumn(
-            rank_col,
-            (F.col("__off") + F.row_number().over(wrk)).cast("bigint"),
-        )
-    )
+    ranked = ranked.withColumnRenamed("__rk", rank_col)
     # v = rank * stride_g and pos as literal K-term sums over the
     # integer group-index column — pure BIGINT arithmetic (SQL DIV, not
     # double floor(), which would corrupt counts past 2^53), all
@@ -1078,8 +1020,43 @@ def proportional_interleave(
     pos = F.expr("CAST(" + " + ".join(terms) + " AS BIGINT)")
     return (
         staged.withColumn(pos_col, pos)
-        .drop("__g", "__h", "__sh", "__off", "__gi", "__v")
+        .drop("__g", "__h", "__sh", "__gi", "__v")
     )
+
+
+def _sharded_rank(
+    tagged: DataFrame, by: list[str], id: str
+) -> tuple[DataFrame, DataFrame]:
+    """Dense 1-based rank ``__rk`` of ``tagged`` within ``by``, ordered by
+    (``__sh``, ``__h``, ``id``), without a per-group single-partition
+    window.  ``tagged`` carries the md5 hex ``__h`` and its 16-bit shard
+    ``__sh``.  Rows rank within (``by``, shard) and add the row count of
+    the group's earlier shards, read from a (``by``, shard) count table.
+
+    Returns ``(counts, ranked)``.  ``counts`` (``by``, ``__sh``, ``__c``)
+    is lazily ``localCheckpoint``-ed: the caller's first action on it
+    materializes the table, and the offsets window and the ranked pass
+    then read it instead of re-aggregating the corpus."""
+    counts = (
+        tagged.groupBy(*by, "__sh")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .localCheckpoint(eager=False)
+    )
+    woff = (
+        Window.partitionBy(*by)
+        .orderBy("__sh")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = counts.select(
+        *by, "__sh", F.coalesce(F.sum("__c").over(woff), F.lit(0)).alias("__off")
+    )
+    wrk = Window.partitionBy(*by, "__sh").orderBy("__h", F.col(id))
+    ranked = (
+        tagged.join(F.broadcast(offsets), [*by, "__sh"])
+        .withColumn("__rk", (F.col("__off") + F.row_number().over(wrk)).cast("bigint"))
+        .drop("__off")
+    )
+    return counts, ranked
 
 
 def _case_over_groups(gi: Column, values: list[int]) -> Column:
@@ -1112,15 +1089,10 @@ def proportional_interleave_sql(
     LEFT JOIN against the counts CTE (fan-out K per row — fine at
     oracle scale; the Spark side renders literals instead)."""
     strides, _ = _interleave_strides(weights)
-    if shards < 1 or shards > 65536:
-        raise ValueError(f"shards must be in [1, 65536], got {shards}")
     groups = sorted(weights)
     in_list = ", ".join(sql_str_lit(x) for x in groups)
     g = f"COALESCE(CAST({group_col} AS VARCHAR), '')"
-    h = (
-        f"md5(concat({sql_str_lit(salt)}, ':', "
-        f"COALESCE(CAST({id_col} AS VARCHAR), '')))"
-    )
+    h = salted_md5_sql(sql_str_lit(salt), id_col)
     stride_case = "CASE __g " + " ".join(
         f"WHEN {sql_str_lit(t)} THEN {strides[t]}" for t in groups
     ) + " END"
@@ -1135,7 +1107,7 @@ def proportional_interleave_sql(
     return f"""
 WITH tagged AS (
   SELECT *, {g} AS __g,
-         CAST(CAST(('0x' || substr({h}, 1, 4)) AS BIGINT) % {shards} AS INT) AS __sh,
+         {_shard16_sql(h, shards)} AS __sh,
          {h} AS __h
   FROM ({src}) z
   WHERE {g} IN ({in_list})
@@ -1194,7 +1166,7 @@ def sample_negatives(
 
     Output: one row per (anchor, draw): ``(anchor_col, draw_col 0..k-1,
     neg_col)``.  The draw targets a DENSE md5-shuffle rank: ``idx =
-    md5int(salt:'d':anchor_id:draw) % N`` (15 hex digits — exact BIGINT,
+    md5int(salt:d:anchor_id:draw) % N`` (15 hex digits — exact BIGINT,
     mod bias ≤ 2⁻⁴⁴ relative), bumped by one (mod N) when it lands on
     the anchor itself, so no anchor is its own negative.  Two draws of
     one anchor MAY collide (true uniform sampling with replacement —
@@ -1207,11 +1179,9 @@ def sample_negatives(
     Corpora of size 0 or 1 return no rows (there is no valid negative).
     ``id_col`` must be unique and non-null per row (snapshot semantics).
 
-    Scale shape: the dense rank is the X53 two-level build — sub-shard
-    by the leading 16 md5 bits, ``row_number`` within (shard), plus
-    per-shard offsets from an S-row count frame (no single-partition
-    window); one eager S-row count aggregate at construction (the
-    ``proportional_interleave`` precedent) also yields N.  Draws are a
+    Scale shape: the dense rank is :func:`_sharded_rank` over an S-row
+    shard count table (no single-partition window); construction
+    collects that table, which also yields N.  Draws are a
     row-local ``explode(sequence(0, k-1))``; resolving a draw to its
     negative is ONE BIGINT equi-join against the rank frame (both sides
     exchange on the rank key, co-partitioned) — output is k·N rows,
@@ -1219,19 +1189,13 @@ def sample_negatives(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if not 1 <= shards <= 65536:
-        raise ValueError(f"shards must be in [1, 65536], got {shards}")
     for c in (anchor_col, neg_col, draw_col):
         if c in df.columns:
             raise ValueError(
                 f"output column {c!r} already exists in the input — rename via "
                 "anchor_col=/neg_col=/draw_col="
             )
-    h = F.md5(
-        F.concat_ws(
-            ":", F.lit(salt), F.coalesce(F.col(id_col).cast("string"), F.lit(""))
-        )
-    )
+    h = salted_md5(F.lit(salt), F.col(id_col))
     grp = (
         F.coalesce(F.col(group_col).cast("string"), F.lit(""))
         if group_col is not None
@@ -1241,17 +1205,9 @@ def sample_negatives(
         F.col(id_col).alias("__id"),
         grp.alias("__grp"),
         h.alias("__h"),
-        (F.conv(F.substring(h, 1, 4), 16, 10).cast("int") % shards).alias("__sh"),
+        _shard16(h, shards).alias("__sh"),
     )
-    counts = (
-        tagged.groupBy("__sh")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=False)
-    )
-    woff = Window.orderBy("__sh").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__sh", F.coalesce(F.sum("__c").over(woff), F.lit(0)).alias("__off")
-    )
+    counts, ranked = _sharded_rank(tagged, [], "__id")
     n = sum(
         int(r["__c"]) for r in counts.collect()  # bounded-collect: S-row shard counts (N + the offset literals ride the same frame)
     )
@@ -1261,38 +1217,17 @@ def sample_negatives(
             F.lit(0).cast("int").alias(draw_col),
             F.col("__id").alias(neg_col),
         )
-    wrk = Window.partitionBy("__sh").orderBy("__h", "__id")
-    ranked = tagged.join(F.broadcast(offsets), "__sh").select(
-        "__id",
-        "__grp",
-        (F.col("__off") + F.row_number().over(wrk) - 1).cast("bigint").alias("__rk"),
-    )
+    ranked = ranked.select("__id", "__grp", (F.col("__rk") - 1).alias("__rk"))
     draws = ranked.select(
         F.col("__id").alias(anchor_col),
         F.col("__grp").alias("__agrp"),
         "__rk",
         F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias(draw_col),
     )
-    raw_idx = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.lit(salt),
-                        F.lit("d"),
-                        F.col(anchor_col).cast("string"),
-                        F.col(draw_col).cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % n
+    draw_key = F.concat_ws(
+        ":", F.col(anchor_col).cast("string"), F.col(draw_col).cast("string")
     )
+    raw_idx = hex_int(salted_md5(F.lit(f"{salt}:d"), draw_key), 1, 15) % n
     idx = F.when(raw_idx == F.col("__rk"), (raw_idx + 1) % n).otherwise(raw_idx)
     lookup = ranked.select(
         F.col("__rk").alias("__nrk"),
@@ -1327,8 +1262,8 @@ def sample_negatives_sql(
     X55 codepoint-vs-byte collation divergence — rank ties across such
     ids are broken by the md5 column first, so divergence needs an md5
     collision and is theoretical."""
-    if k < 1 or not 1 <= shards <= 65536:
-        raise ValueError("k must be >= 1 and shards in [1, 65536]")
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     idq = id_col.replace('"', '""')
     grp = (
         f"COALESCE(CAST({group_col} AS VARCHAR), '')"
@@ -1336,25 +1271,26 @@ def sample_negatives_sql(
         else "''"
     )
     guard = "WHERE d.grp <> n.grp" if group_col is not None else ""
+    draw_h = salted_md5_sql(
+        sql_str_lit(f"{salt}:d"), "CAST(a.id AS VARCHAR) || ':' || CAST(d.draw AS VARCHAR)"
+    )
     return f"""
 WITH sn_base AS (
   SELECT "{idq}" AS id, {grp} AS grp,
-         md5({sql_str_lit(salt)} || ':' || COALESCE(CAST("{idq}" AS VARCHAR), '')) AS h
+         {salted_md5_sql(sql_str_lit(salt), f'"{idq}"')} AS h
   FROM ({src})
 ),
 sn_rk AS (
   SELECT id, grp,
          row_number() OVER (
-           ORDER BY CAST(('0x' || substr(h, 1, 4)) AS BIGINT) % {shards}, h, id
+           ORDER BY {_shard16_sql("h", shards)}, h, id
          ) - 1 AS rk,
          count(*) OVER () AS n
   FROM sn_base
 ),
 sn_draw AS (
   SELECT a.id AS anchor_id, a.grp, d.draw, a.n,
-         CAST(('0x' || substr(md5({sql_str_lit(salt)} || ':d:' ||
-               CAST(a.id AS VARCHAR) || ':' || CAST(d.draw AS VARCHAR)), 1, 15))
-              AS BIGINT) % a.n AS raw_idx,
+         {hex_int_sql(draw_h, 1, 15)} % a.n AS raw_idx,
          a.rk
   FROM sn_rk a, (SELECT unnest(generate_series(0, {k - 1})) AS draw) d
   WHERE a.n > 1
@@ -1390,9 +1326,10 @@ def weighted_reservoir_sample(
     sampling with a reservoir": rank by ``key = u^(1/w)`` DESC and take
     the top k; equivalently, and numerically safer, by ``ln(u)/w``
     DESC).  The uniform is the house md5 scheme — a 60-bit integer from
-    ``md5(salt:id)`` mapped to ``u = (h + 1)/2^60`` ∈ (0, 1] — so the
-    selected SET is identical on every run, engine, and partitioning; a
-    new ``salt`` is an independent re-draw, and with ``k=1`` the draw
+    ``md5(salt:id)`` (a NULL id hashes as ``''``) mapped to
+    ``u = (h + 1)/2^60`` ∈ (0, 1] — so the selected SET is identical on
+    every run, engine, and partitioning; a new ``salt`` is an
+    independent re-draw, and with ``k=1`` the draw
     probability is exactly ``w_i / Σw`` (pytest-pinned against a pure
     numpy/hashlib reference over thousands of salts).
 
@@ -1423,19 +1360,7 @@ def weighted_reservoir_sample(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     w = F.col(weight_col).cast("double")
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.lit(salt), F.col(id_col).cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = hex_int(salted_md5(F.lit(salt), F.col(id_col)), 1, 15)
     # (h + 1) / 2^60: exact power-of-two scale into (0, 1]
     u = (h + F.lit(1)).cast("double") / F.lit(float(1 << 60))
     key = F.log(u) / w
@@ -1460,18 +1385,14 @@ def weighted_reservoir_sample_sql(
     salt: str = "wrs0",
 ) -> str:
     """DuckDB twin of :func:`weighted_reservoir_sample`: the identical
-    60-bit md5 uniform (``('0x'||substr(md5,1,15))::BIGINT`` — the
-    simhash/manifest idiom), the same ``ln((h+1)/2^60)/w`` key, the
-    same (key DESC, id ASC) rank.  Returns the kept rows of ``src``
-    plus ``wrs_rank``."""
+    60-bit md5 uniform, the same ``ln((h+1)/2^60)/w`` key, the same
+    (key DESC, id ASC) rank.  Returns the kept rows of ``src`` plus
+    ``wrs_rank``."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     part = f"PARTITION BY {group_col} " if group_col is not None else ""
-    key = (
-        f"ln((CAST(('0x' || substr(md5(concat({sql_str_lit(salt)}, ':', "
-        f"CAST({id_col} AS VARCHAR))), 1, 15)) AS BIGINT) + 1) "
-        f"/ 1152921504606846976.0) / CAST({weight_col} AS DOUBLE)"
-    )
+    h = hex_int_sql(salted_md5_sql(sql_str_lit(salt), id_col), 1, 15)
+    key = f"ln(({h} + 1) / 1152921504606846976.0) / CAST({weight_col} AS DOUBLE)"
     return f"""
 SELECT * FROM (
   SELECT *, CAST(row_number() OVER (

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, DoubleType
 from pyspark.sql.window import Window
 
+from pyspark_dist_explore_spark.functions.hashing import hex_int, hex_int_sql
+
 
 def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -452,16 +454,14 @@ def _plane_sign(plane: int, dim_idx: Column, hash_fn: str = "xxhash64") -> Colum
     xxhash64) rather than building a string per (plane, element) — ~20%
     off the whole bucketing pass.  ``md5`` derives the sign from the
     first hex digit of ``md5('{plane}:{dim}')`` — slower, but DuckDB
-    reproduces it bit-for-bit (``('0x'||substr(md5(...),1,1))::INT``),
-    so the ENTIRE LSH pipeline gains a hash oracle — the same
-    md5-variant move as the MinHash/SimHash families."""
+    reproduces it bit-for-bit (:func:`_md5_projection_sql`), so the
+    ENTIRE LSH pipeline gains a hash oracle — the same md5-variant move
+    as the MinHash/SimHash families."""
     if hash_fn == "xxhash64":
         h = F.xxhash64(F.lit(plane), dim_idx)
         return F.when(h.bitwiseAND(F.lit(1)) == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
     if hash_fn == "md5":
-        d = F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.lit(plane), dim_idx)), 1, 1), 16, 10
-        ).cast("int")
+        d = hex_int(F.md5(F.concat_ws(":", F.lit(plane), dim_idx)), 1, 1)
         return F.when(d % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
     raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
 
@@ -530,10 +530,8 @@ def _md5_projection_sql(vec_expr: str, p: int) -> str:
     """DuckDB rendering of plane ``p``'s unscaled md5-plane projection:
     ``list_dot_product`` against a ±1 list built from the same
     md5-parity rule as :func:`_md5_sign_value`."""
-    sign = (
-        f"CASE WHEN CAST(('0x' || substr(md5(CAST({p} AS VARCHAR) || ':' || "
-        f"CAST(i AS VARCHAR)), 1, 1)) AS INT) % 2 = 0 THEN 1.0 ELSE -1.0 END"
-    )
+    d = hex_int_sql(f"md5(CAST({p} AS VARCHAR) || ':' || CAST(i AS VARCHAR))", 1, 1)
+    sign = f"CASE WHEN {d} % 2 = 0 THEN 1.0 ELSE -1.0 END"
     return (
         f"list_dot_product({vec_expr}, "
         f"list_transform(range(len({vec_expr})), i -> {sign}))"

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_dist_explore_spark.functions.hashing import hex_int, hex_int_sql
 from pyspark_dist_explore_spark.operators.dedup import (
     _gram_rows,
     _token_rows,
@@ -3131,16 +3132,19 @@ def _cls_grams_from_tokens(toks: Column, *, bigrams: bool) -> Column:
 def _cls_bucket_expr(gram: Column, *, n_buckets: int, hash_fn: str) -> Column:
     """Feature bucket of one gram.  ``xxhash64`` (default) is the fast
     native path (``pmod`` keeps the signed hash non-negative);
-    ``md5`` derives the bucket from the hex digest exactly as the
-    DuckDB twin does (``('0x'||substr(md5,1,15))::BIGINT % B``) — the
-    oracle-checkable variant, same convention as the MinHash/SimHash
-    families."""
+    ``md5`` derives the bucket from the 60-bit integer of the hex digest
+    (:func:`_cls_bucket_sql` is the DuckDB twin) — the oracle-checkable
+    variant, same convention as the MinHash/SimHash families."""
     if hash_fn == "xxhash64":
         return F.pmod(F.xxhash64(gram), F.lit(n_buckets))
     if hash_fn == "md5":
-        h = F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("bigint")
-        return h % F.lit(n_buckets)
+        return hex_int(F.md5(gram), 1, 15) % F.lit(n_buckets)
     raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
+
+
+def _cls_bucket_sql(gram: str, n_buckets: int) -> str:
+    """DuckDB rendering of the ``hash_fn='md5'`` :func:`_cls_bucket_expr`."""
+    return f"{hex_int_sql(f'md5({gram})', 1, 15)} % {n_buckets}"
 
 
 def _cls_weight_expr(
@@ -3499,7 +3503,7 @@ def classifier_train_counts_sql(
         )
         gram_expr = f"list_concat(l, {bi})" if bigrams else "l"
         return f"""
-  SELECT ('0x' || substr(md5(g), 1, 15))::BIGINT % {n_buckets} AS bucket
+  SELECT {_cls_bucket_sql("g", n_buckets)} AS bucket
   FROM (
     SELECT unnest({gram_expr}) AS g
     FROM (SELECT list_filter(string_split({norm}, ' '), x -> x <> '') AS l
@@ -3536,7 +3540,7 @@ def classifier_sql(
     norm = NORMALIZE_SQL.format(c="COALESCE(text, '')")
     half = weight_scale // 2
     w = (
-        f"((('0x' || substr(md5(g), 1, 15))::BIGINT % {n_buckets}) * {CLS_MIX}) "
+        f"(({_cls_bucket_sql('g', n_buckets)}) * {CLS_MIX}) "
         f"% {weight_scale} - {half}"
     )
     bi = (
@@ -3791,18 +3795,8 @@ def inject_punctuation(t: Column) -> Column:
 
     # transform with index; rebuild via a lambda-local suffix CASE
     def _suffix(x: Column, i: Column) -> Column:
-        d = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("c4:"), x, F.lit(":"), i.cast("string"))),
-                    1,
-                    1,
-                ),
-                16,
-                10,
-            ).cast("int")
-            % 4
-        )
+        h = F.md5(F.concat(F.lit("c4:"), x, F.lit(":"), i.cast("string")))
+        d = hex_int(h, 1, 1) % 4
         return F.concat(
             x,
             F.when(d == 0, F.lit(". "))
@@ -3828,7 +3822,7 @@ FROM ({src}) s
 LEFT JOIN (
   SELECT doc_id,
          string_agg(
-           tok || CASE CAST(('0x' || substr(md5('c4:' || tok || ':' || CAST(pos AS VARCHAR)), 1, 1)) AS INT) % 4
+           tok || CASE {hex_int_sql("md5('c4:' || tok || ':' || CAST(pos AS VARCHAR))", 1, 1)} % 4
                   WHEN 0 THEN '. ' WHEN 1 THEN '? ' WHEN 2 THEN ' '
                   ELSE '.' || chr(10) END,
            '' ORDER BY pos) AS text

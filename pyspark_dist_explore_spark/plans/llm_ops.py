@@ -16,6 +16,11 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_dist_explore_spark.functions.hashing import (
+    hex_int,
+    hex_int_sql,
+    salted_md5_sql,
+)
 from pyspark_dist_explore_spark.operators import (
     decontam,
     dedup,
@@ -447,7 +452,7 @@ def _minhash_oracle(
     ``num_hashes`` MIN aggregates, raw-string band keys, the band-bucket
     self-join, and the exact shingle-Jaccard verify.
 
-    ``incremental_mod=m`` (late round 8, X27) appends the
+    ``incremental_mod=m`` (X27) appends the
     ``'incremental'`` section: the snapshot slice (doc_id % m ≠ 0) is
     probed by the batch slice (doc_id % m = 0) through shared bands,
     verified by the SIGNATURE-estimated Jaccard (the fraction of
@@ -507,8 +512,8 @@ sh AS (
 ),
 hashed AS (
   SELECT doc_id,
-         ('0x' || substr(md5(sh), 1, 12))::BIGINT AS h1,
-         ('0x' || substr(md5(sh), 13, 12))::BIGINT AS h2
+         {hex_int_sql("md5(sh)", 1, 12)} AS h1,
+         {hex_int_sql("md5(sh)", 13, 12)} AS h2
   FROM sh
 ),
 sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id),
@@ -714,15 +719,19 @@ def neardup_clusters_sections(
 
 def _simhash_oracle(max_hamming: int) -> str:
     """DuckDB twin of simhash_neardup(hash_fn='md5'): the 60-bit token
-    hash is ('0x'||substr(md5(tok),1,15))::BIGINT — bit-identical to
-    Spark's conv(substr(md5,1,15),16,10) (pinned in tests) — and every
-    later stage (±1 bit sums, sign reassembly, 4×15-bit chunk banding,
-    bit_count hamming) is plain integer SQL on both sides.  Four
-    pigeonhole chunks find every pair only for ``max_hamming ≤ 3``, the
-    bound the registered slot uses."""
+    hash is the ``hex_int_sql`` of md5(tok)'s leading 15 hex digits, and
+    every later stage (±1 bit sums, sign reassembly, banding, bit_count
+    hamming) is plain integer SQL on both sides.  The banding is
+    :func:`dedup.hamming_neardup`'s: ``max_hamming + 1`` chunks with
+    boundaries at ``i·bits // (max_hamming + 1)``, so the twin finds
+    every pair within any bound."""
     bits = dedup.SIMHASH_BITS["md5"]
-    chunk_bits = bits // 4
-    chunk_mask = (1 << chunk_bits) - 1
+    nchunks = max_hamming + 1
+    bounds = [i * bits // nchunks for i in range(nchunks + 1)]
+    chunk_rows = ", ".join(
+        f"({c}, {bounds[c]}, {(1 << (bounds[c + 1] - bounds[c])) - 1})"
+        for c in range(nchunks)
+    )
     norm = dedup.NORMALIZE_SQL.format(c="text")
     bit_sums = ", ".join(
         f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
@@ -738,14 +747,14 @@ WITH tok AS (
   FROM documents
 ),
 tok2 AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
+  SELECT doc_id, {hex_int_sql("md5(tok)", 1, 15)} AS h
   FROM tok WHERE tok <> ''
 ),
 sums AS (SELECT doc_id, {bit_sums} FROM tok2 GROUP BY doc_id),
 sig AS (SELECT doc_id, ({reassemble}) AS sim FROM sums),
 chunks AS (
-  SELECT doc_id, sim, c.chunk, (sim >> (c.chunk * {chunk_bits})) & {chunk_mask} AS ck
-  FROM sig, (VALUES (0), (1), (2), (3)) c(chunk)
+  SELECT doc_id, sim, c.chunk, (sim >> c.lo) & c.mask AS ck
+  FROM sig, (VALUES {chunk_rows}) c(chunk, lo, mask)
 )
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        bit_count(xor(a.sim, b.sim)) AS hamming
@@ -797,15 +806,15 @@ from pyspark_dist_explore_spark.pipeline import curate_documents  # noqa: E402
 
 #: the X46 per-shard integrity stats that unpivot into the
 #: ``source='manifest:*'`` rows of ``corpus_shuffle_shards`` — the
-#: md5-fold (conv base-16 in Spark, '0x'-cast in DuckDB) is the one
-#: piece of the manifest arithmetic the full-assignment hash doesn't
-#: already prove; sums fit BIGINT at any test SF (44-bit folds)
-_MANIFEST_STATS_SQL = """
+#: 44-bit md5 fold is the one piece of the manifest arithmetic the
+#: full-assignment hash doesn't already prove; sums fit BIGINT at any
+#: test SF
+_MANIFEST_STATS_SQL = f"""
 SELECT shard, CAST(count(*) AS BIGINT) AS n_rows,
        CAST(sum(doc_id) AS BIGINT) AS sum_id,
        CAST(min(doc_id) AS BIGINT) AS min_id,
        CAST(max(doc_id) AS BIGINT) AS max_id,
-       CAST(sum(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 11)) AS BIGINT)) AS BIGINT)
+       CAST(sum({hex_int_sql("md5(CAST(doc_id AS VARCHAR))", 1, 11)}) AS BIGINT)
          AS hash_sum
 FROM sh GROUP BY 1
 """
@@ -1008,7 +1017,7 @@ FROM (
         SELECT doc_id, source,
                CAST(sum(n_tok) OVER (
                  PARTITION BY source
-                 ORDER BY md5(concat('mix0', ':', CAST(doc_id AS VARCHAR))),
+                 ORDER BY {salted_md5_sql("'mix0'", "doc_id")},
                           CAST(doc_id AS VARCHAR)
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
                ) AS BIGINT) AS __cum,
@@ -3051,28 +3060,27 @@ _DSIR_BUCKETS = 1 << 12
 
 
 def _perplexity_oracle() -> str:
-    """Transcendental-free gate oracle for ``text_perplexity`` (round 7).
+    """Transcendental-free gate oracle for ``text_perplexity``.
 
-    Round 6 hashed the ln/exp-derived score columns and the row went red
-    at the driver while reproducing green locally ×2 configs: `ln`/`exp`
-    may differ in the LAST ULP across libm/DuckDB builds, flipping the
-    fixed-point rounding knife edge.  The gate projection now hashes
-    ONLY exact integer LM statistics — they pin tokenization, both LM
-    training aggregates, and every scoring join bit-for-bit on any
-    engine build; the exact double `mean_logprob`/`ppl` surfaces stay
-    pinned in the pytest DuckDB twins (controlled engine pair,
+    It hashes ONLY exact integer LM statistics.  ``ln``/``exp`` may
+    differ in the last ULP across libm/DuckDB builds and flip a
+    fixed-point rounding edge, so the ln/exp-derived score columns are
+    left out.  The integer statistics pin tokenization, both LM training
+    aggregates, and every scoring join bit-for-bit on any engine build;
+    the exact double `mean_logprob`/`ppl` surfaces stay pinned in the
+    pytest DuckDB twins (controlled engine pair,
     tests/test_ops.py::test_{unigram,bigram}_logprob_matches_duckdb).
 
-    Round 8 merges the DSIR section (X30, operators/dsir.py): per-doc
-    hashed uni+bigram bucket statistics against a target slice
-    (doc_id % 10 = 0 — the semantic-decontam eval-slice convention) and
-    the raw corpus — ``ds_grams``/``ds_t_mass``/``ds_t_hits``/
-    ``ds_r_mass`` are exact BIGINTs that pin the gram build, the md5
-    bucket chain, and BOTH corpus count tables on any engine build; the
-    ln-derived importance weights (class C) stay in the pytest twins
-    (tests/test_ops.py::test_dsir_*).
+    The DSIR section (X30, operators/dsir.py): per-doc hashed uni+bigram
+    bucket statistics against a target slice (doc_id % 10 = 0 — the
+    semantic-decontam eval-slice convention) and the raw corpus —
+    ``ds_grams``/``ds_t_mass``/``ds_t_hits``/``ds_r_mass`` are exact
+    BIGINTs that pin the gram build, the md5 bucket chain
+    (``textstats._cls_bucket_sql``), and BOTH corpus count tables on any
+    engine build; the ln-derived importance weights (class C) stay in
+    the pytest twins (tests/test_ops.py::test_dsir_*).
 
-    Round 12 adds the X54 KNESER-NEY columns off the same pair frame:
+    The X54 KNESER-NEY columns come off the same pair frame:
     ``kn_cont_mass``/``kn_fert_mass``/``kn_ctx_mass`` — per-doc sums of
     the continuation (N1+(·w)), fertility (N1+(u·)) and bigram context
     totals (c(u·)) that KN smoothing is built from — exact BIGINTs
@@ -3081,7 +3089,7 @@ def _perplexity_oracle() -> str:
     (tests/test_ops.py::test_kn_bigram_*).
     """
     norm = dedup.NORMALIZE_SQL.format(c="text")
-    b = f"('0x' || substr(md5(g), 1, 15))::BIGINT % {_DSIR_BUCKETS}"
+    b = textstats._cls_bucket_sql("g", _DSIR_BUCKETS)
     return f"""
 WITH toks AS (
   SELECT doc_id, unnest(generate_series(1, len(l))) - 1 AS idx, unnest(l) AS tok
@@ -3618,9 +3626,8 @@ def _messy_url_sql() -> str:
     deterministic md5-parity variant choices (the `inject_punctuation`
     convention), one definition rendered into both dialects."""
     def d(i: int, k: int) -> str:
-        return (
-            f"CAST(('0x' || substr(md5('url:' || CAST(doc_id AS VARCHAR)), {i}, 1)) AS INT) % {k}"
-        )
+        h = "md5('url:' || CAST(doc_id AS VARCHAR))"
+        return f"{hex_int_sql(h, i, 1)} % {k}"
 
     return (
         f"CASE {d(1, 4)} WHEN 0 THEN 'http' WHEN 1 THEN 'HTTP' WHEN 2 THEN 'https' ELSE 'HtTpS' END"
@@ -3640,18 +3647,8 @@ def _messy_url_col() -> F.Column:
     """Spark rendering of :func:`_messy_url_sql` (same digits, same
     variants)."""
     def d(i: int, k: int) -> F.Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("url:"), F.col("doc_id").cast("string"))),
-                    i,
-                    1,
-                ),
-                16,
-                10,
-            ).cast("int")
-            % k
-        )
+        h = F.md5(F.concat(F.lit("url:"), F.col("doc_id").cast("string")))
+        return hex_int(h, i, 1) % k
 
     did = F.col("doc_id").cast("string")
     scheme = (

@@ -221,7 +221,7 @@ def shard_manifest(
     redundancy stats use ``try_cast`` and come back NULL rather than
     throwing under ANSI mode.
 
-    ``content_col`` (round 12, X49's input) adds ``content_sum`` — the
+    ``content_col`` (X49's input) adds ``content_sum`` — the
     same 44-bit md5-fold sum over the CONTENT column, so two dumps with
     identical manifests are identical in content, not just id multiset
     (a re-crawled doc keeps its id; without a content sum, manifest
@@ -233,14 +233,19 @@ def shard_manifest(
     """
     from pyspark.sql import functions as F
 
+    from pyspark_dist_explore_spark.functions.hashing import hex_int
+
+    def fold(c):
+        """44-bit md5 fold of a string column, as DECIMAL(38,0)."""
+        return hex_int(F.md5(c), 1, 11).cast("decimal(38,0)")
+
     # every name resolution here parses quoted identifiers (F.col and
     # df[...] alike), so escape backticks once and use the quoted form
     # everywhere — an exotic column name can neither break nor rewrite
-    # the try_cast expressions (r11 advisor catch)
+    # the try_cast expressions
     idq = id_col.replace("`", "``")
     shq = shard_col.replace("`", "``")
-    ids = F.expr(f"`{idq}`").cast("string")
-    h = F.conv(F.substring(F.md5(ids), 1, 11), 16, 10).cast("decimal(38,0)")
+    h = fold(F.expr(f"`{idq}`").cast("string"))
     return df.groupBy(F.expr(f"`{shq}`").cast("int").alias("shard")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.sum(F.expr(f"try_cast(`{idq}` AS DECIMAL(38,0))")).alias("sum_id"),
@@ -250,24 +255,13 @@ def shard_manifest(
         *(
             [
                 F.sum(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.coalesce(
-                                    F.expr(
-                                        "`{}`".format(
-                                            content_col.replace("`", "``")
-                                        )
-                                    ).cast("string"),
-                                    F.lit(""),
-                                )
-                            ),
-                            1,
-                            11,
-                        ),
-                        16,
-                        10,
-                    ).cast("decimal(38,0)")
+                    fold(
+                        F.coalesce(
+                            F.expr("`{}`".format(content_col.replace("`", "``")))
+                            .cast("string"),
+                            F.lit(""),
+                        )
+                    )
                 ).alias("content_sum")
             ]
             if content_col is not None

@@ -315,8 +315,11 @@ def test_simhash_close_for_neardups(spark, hash_fn):
     assert ham(sig[1], sig[3]) < ham(sig[1], sig[4])
 
     # the banded join finds exactly the pairs a brute-force all-pairs
-    # popcount finds, also past the 4-chunk bound (max_hamming ≥ 4)
+    # popcount finds, also past the 4-chunk bound (max_hamming ≥ 4), and
+    # so does the md5 variant's DuckDB twin
     from tests.conftest import SF_SMOKE
+    from tests.oracle_utils import duckdb_con
+    from pyspark_dist_explore_spark.plans.llm_ops import _simhash_oracle
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     sigs = dedup.simhash_signatures(docs, "text", "doc_id", hash_fn=hash_fn).localCheckpoint()
@@ -337,6 +340,13 @@ def test_simhash_close_for_neardups(spark, hash_fn):
         rows = [tuple(r) for r in got.collect()]
         assert len(rows) == len(set(rows))
         assert set(rows) == want, (h, len(rows), len(want))
+        if hash_fn == "md5":
+            con = duckdb_con(SF_SMOKE)
+            try:
+                twin = set(con.execute(_simhash_oracle(max_hamming=h)).fetchall())
+            finally:
+                con.close()
+            assert twin == want, (h, len(twin), len(want))
 
 
 def _simhash_signatures_unpacked(docs, text_col, id_col, *, hash_fn):
@@ -344,10 +354,7 @@ def _simhash_signatures_unpacked(docs, text_col, id_col, *, hash_fn):
     one SUM(±1) column per signature bit, sign > 0 sets the bit."""
     h_expr = dedup._simhash_token_hash(hash_fn)
     bits = dedup.SIMHASH_BITS[hash_fn]
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(dedup.tokens(F.col(text_col)))).alias("tok"),
-    ).where(F.col("tok") != "")
+    toks = dedup._distinct_token_rows(docs, text_col, id_col)
     sums = toks.select("doc_id", h_expr.alias("h")).groupBy("doc_id").agg(
         *[
             F.sum(F.when(F.col("h").bitwiseAND(dedup._mask(i)) != 0, 1).otherwise(-1)).alias(
@@ -9063,6 +9070,27 @@ def test_weighted_reservoir_matches_duckdb(spark):
             )
             assert got == want
             assert len(got) == (100 if grp else 5)
+        # a NULL id hashes as '' on both engines (the house NULL-key rule)
+        rows = [(None, 5.0)] + [(i, float(i % 3 + 1)) for i in range(1, 8)]
+        small = spark.createDataFrame(rows, "doc_id bigint, w double")
+        values = ", ".join(f"({'NULL' if d is None else d}, {w!r})" for d, w in rows)
+        src = f"SELECT * FROM (VALUES {values}) t(doc_id, w)"
+        for salt in [f"n{i}" for i in range(12)]:
+            got = sorted(
+                (r["doc_id"] is None, r["doc_id"] or 0, r["wrs_rank"])
+                for r in sampling.weighted_reservoir_sample(
+                    small, 3, weight_col="w", salt=salt
+                ).collect()
+            )
+            want = sorted(
+                (r[0] is None, r[0] or 0, r[2])
+                for r in con.execute(
+                    sampling.weighted_reservoir_sample_sql(
+                        src, 3, weight_col="w", salt=salt
+                    )
+                ).fetchall()
+            )
+            assert got == want, salt
     finally:
         con.close()
 
