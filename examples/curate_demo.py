@@ -62,31 +62,17 @@ def main() -> None:
     # responsible for which loss, per source (X38) ------------------------
     from pyspark_dist_explore_spark import curation_funnel
     from pyspark_dist_explore_spark.operators.textstats import (
-        gopher_keep_expr,
-        gopher_signal_exprs,
-        tokens,
         with_classifier_gate,
+        with_gopher_gate,
     )
 
-    tq = F.coalesce(F.col("text"), F.lit(""))
-    staged = corpus.select(
-        F.col("source").alias("grp"),
-        F.filter(tokens(tq), lambda x: x != "").alias("__toks"),
-        F.split(tq, "\n").alias("__lines"),
-        tq.alias("__raw"),
-    )
-    sig = with_classifier_gate(
-        staged.select(
-            "grp",
-            *gopher_signal_exprs(F.col("__toks"), F.col("__lines"), F.col("__raw")),
-            "__raw",
-        ),
-        F.col("__raw"),
-    )
+    raw = corpus.select(F.col("source").alias("grp"), F.col("text").alias("__raw"))
+    gq = with_gopher_gate(raw, F.col("__raw"), min_words=20, min_stop_words=1)
+    sig = with_classifier_gate(gq, F.col("__raw"))
     flags = sig.select(
         "grp",
         (F.col("gq_n_words") >= 40).cast("int").alias("len_keep"),
-        gopher_keep_expr(min_words=20, min_stop_words=1).alias("gq_keep"),
+        "gq_keep",
         "cls_keep",
     )
     curation_funnel(flags, ["len_keep", "gq_keep", "cls_keep"], group_col="grp").show(6)

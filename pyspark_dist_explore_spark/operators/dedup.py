@@ -33,17 +33,36 @@ from pyspark_dist_explore_spark.functions.hashing import hex_int
 # --------------------------------------------------------------------------
 
 
+#: The whitespace class every text rule splits and trims on, written out
+#: because the engines' ``\s`` differ: Java's is exactly this set, RE2's
+#: lacks ``\x0B``.  The same pattern text reads the same in both dialects.
+WHITESPACE_RE = r"[ \t\n\x0B\f\r]"
+
+
 def normalize_text(col: Column) -> Column:
     """lower + collapse whitespace + trim — canonical dedup form."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+    return F.trim(F.regexp_replace(F.lower(col), WHITESPACE_RE + "+", " "))
 
 
-NORMALIZE_SQL = "trim(regexp_replace(lower({c}), '\\s+', ' ', 'g'))"
+NORMALIZE_SQL = f"trim(regexp_replace(lower({{c}}), '{WHITESPACE_RE}+', ' ', 'g'))"
 
 
 def tokens(col: Column) -> Column:
     """Whitespace tokens of the normalized text (array<string>)."""
     return F.split(normalize_text(col), " ")
+
+
+def word_tokens(t: Column) -> Column:
+    """The non-empty whitespace tokens of the normalized ``t``, a NULL
+    text read as ``''`` (so an empty or all-whitespace text gives
+    ``[]``).  DuckDB twin: :func:`word_tokens_sql`."""
+    return F.filter(tokens(F.coalesce(t, F.lit(""))), lambda x: x != "")
+
+
+def word_tokens_sql(t: str) -> str:
+    """DuckDB twin of :func:`word_tokens` over the SQL text expression ``t``."""
+    norm = NORMALIZE_SQL.format(c=f"COALESCE({t}, '')")
+    return f"list_filter(string_split({norm}, ' '), x -> x <> '')"
 
 
 def n_tokens(col: Column) -> Column:

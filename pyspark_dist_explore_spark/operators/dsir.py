@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyspark_dist_explore_spark.operators.dedup import NORMALIZE_SQL
+from pyspark_dist_explore_spark.operators.dedup import word_tokens_sql
 from pyspark_dist_explore_spark.operators.textstats import (
     _cls_bucket_expr,
     _cls_bucket_sql,
@@ -331,7 +331,7 @@ def dsir_sql(
     exact integers on any build; the ``ds_logw*`` columns share the grid
     only on a controlled engine pair (pytest scope — ORACLES.md class C).
     """
-    norm = NORMALIZE_SQL.format(c="COALESCE(text, '')")
+    words = word_tokens_sql("text")
     bi = (
         "CASE WHEN len(l) >= 2 THEN list_transform(generate_series(1, len(l) - 1), "
         "i -> l[i] || ' ' || l[i + 1]) ELSE []::VARCHAR[] END"
@@ -356,12 +356,12 @@ WITH raw_src AS ({raw_src}),
 tgt_src AS ({target_src}),
 raw_g AS (
   SELECT doc_id, unnest({gram_expr}) AS gram
-  FROM (SELECT doc_id, list_filter(string_split({norm}, ' '), x -> x <> '') AS l
+  FROM (SELECT doc_id, {words} AS l
         FROM raw_src) z
 ),
 tgt_g AS (
   SELECT doc_id, unnest({gram_expr}) AS gram
-  FROM (SELECT doc_id, list_filter(string_split({norm}, ' '), x -> x <> '') AS l
+  FROM (SELECT doc_id, {words} AS l
         FROM tgt_src) z
 ),
 raw_b AS (SELECT doc_id, {b} AS bucket FROM raw_g),

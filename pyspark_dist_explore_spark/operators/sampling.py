@@ -91,11 +91,15 @@ def hash_split(
 
 
 def hash_split_sql(key: str, fractions: dict[str, float] | None = None) -> str:
-    """DuckDB CASE expression matching :func:`hash_split` exactly."""
+    """DuckDB CASE expression matching :func:`hash_split` exactly (the
+    last split's literal alone for a one-split spec)."""
     cuts = _split_cuts(fractions or {"train": 0.8, "val": 0.1, "test": 0.1})
+    last = sql_str_lit(cuts[-1][0])
+    if len(cuts) == 1:
+        return last
     h = hex_int_sql(f"md5(CAST({key} AS VARCHAR))", 1, 4)
     parts = [f"WHEN {h} < {upper} THEN {sql_str_lit(name)}" for name, upper in cuts[:-1]]
-    return "CASE " + " ".join(parts) + f" ELSE {sql_str_lit(cuts[-1][0])} END"
+    return "CASE " + " ".join(parts) + f" ELSE {last} END"
 
 
 def stratified_sample(

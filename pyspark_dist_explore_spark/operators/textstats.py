@@ -19,12 +19,15 @@ from pyspark.sql import functions as F
 
 from pyspark_dist_explore_spark.functions.hashing import hex_int, hex_int_sql
 from pyspark_dist_explore_spark.operators.dedup import (
+    WHITESPACE_RE,
     _gram_rows,
     _token_rows,
     n_tokens,
     normalize_text,
     sum_cols,
     tokens,
+    word_tokens,
+    word_tokens_sql,
 )
 
 #: BPE-ish tokenization: letter runs, digit runs, or punctuation runs.
@@ -98,24 +101,23 @@ def text_profile_lang(
     classifier: bool = False,
     gopher: dict | None = None,
 ) -> DataFrame:
-    """:func:`text_profile` ∪ :func:`language_id` in ONE row-local
-    projection over ONE scan (merged registration, round 6): ``(doc_id,
-    n_chars, n_tokens, n_bpe_tokens, n_punct, avg_token_len,
-    alpha_ratio, punct_ratio, quality, score_<lang>…, lang_pred)``.
-    Every column is a pure expression, so the merge costs nothing at
-    any corpus size — it is strictly cheaper than the join the two
-    separate outputs would need.
+    """:func:`text_profile` ∪ :func:`language_id` in one row-local
+    projection over one scan: ``(doc_id, n_chars, n_tokens,
+    n_bpe_tokens, n_punct, avg_token_len, alpha_ratio, punct_ratio,
+    quality, score_<lang>…, lang_pred)``.  Every column is a pure
+    expression, so the merged form is cheaper than joining the two
+    separate outputs.
 
-    ``classifier=True`` (round 8, X29) appends the hashed n-gram
-    linear-classifier gate columns ``(n_cls_grams, cls_logit_num,
-    cls_keep)`` — :func:`classifier_exprs` with its defaults — still
-    one scan, still zero shuffle.
+    ``gopher=`` (a kwargs dict for :func:`gopher_keep_expr`, ``{}`` for
+    the paper's bounds) appends the Gopher signals and gate (``gq_*``,
+    ``gq_keep``) through :func:`with_gopher_gate`.
 
-    ``gopher=`` (round 8, X31 — a kwargs dict for
-    :func:`gopher_keep_expr`'s exposed knobs, ``{}`` for the paper's
-    defaults) appends the Gopher rule-set signals + gate
-    (``gq_*``, :func:`gopher_quality_gate`) — same scan, the token and
-    line arrays staged once like the classifier grams."""
+    ``classifier=True`` appends the hashed n-gram classifier gate
+    ``(n_cls_grams, cls_logit_num, cls_keep)`` in its md5 form (1<<20
+    buckets, weight scale 1<<16, uni+bigrams, threshold 0/1), which
+    :func:`classifier_sql` reproduces in DuckDB.  With both gates the
+    classifier grams come from the Gopher pass's staged token array, so
+    each row is tokenized once.  Still one scan and no shuffle."""
     t = F.col(text_col)
     alpha_ratio, punct_ratio, score = quality_ratio_exprs(t)
     scores = lang_score_exprs(t)
@@ -128,69 +130,60 @@ def text_profile_lang(
         *[scores[lang].alias(f"score_{lang}") for lang in sorted(scores)],
         lang_pred_expr(t).alias("lang_pred"),
     ]
-    if not classifier and gopher is None:
+    if gopher is not None:
+        staged = _gopher_gate(
+            df.select(*cols, t.alias("__gq_raw")),
+            F.col("__gq_raw"),
+            gopher,
+            cls_grams=classifier,
+        ).drop("__gq_raw")
+    elif classifier:
+        staged = df.select(*cols, _cls_gram_col(t, bigrams=True).alias("__cls_grams"))
+    else:
         return df.select(*cols)
-    # md5 is the oracle-checkable classifier variant (the DuckDB twin
-    # renders the same digest chain); xxhash64 stays the library default
-    # for direct classifier_score callers.  Both gates ride the SAME
-    # scan as staged projections (gram/token/line arrays each built once
-    # per row — see _gate_from_grams).
-    staged_cols = list(cols)
-    if gopher is not None:
-        staged_cols += [
-            F.filter(tokens(F.coalesce(t, F.lit(""))), lambda x: x != "").alias(
-                "__gq_toks"
-            ),
-            F.split(F.coalesce(t, F.lit("")), "\n").alias("__gq_lines"),
-            t.alias("__gq_raw"),
-        ]
-    if classifier and gopher is None:
-        staged_cols.append(_cls_gram_col(t, bigrams=True).alias("__cls_grams"))
-    staged = df.select(*staged_cols)
-    if gopher is not None:
-        if classifier:
-            # derive the classifier grams from the STAGED token array —
-            # the tokenize chain (the heaviest per-row regex work here)
-            # runs once per row instead of once per gate
-            staged = staged.select(
-                "*",
-                _cls_grams_from_tokens(F.col("__gq_toks"), bigrams=True).alias(
-                    "__cls_grams"
-                ),
-            )
-        staged = staged.select(
-            "*",
-            *gopher_signal_exprs(
-                F.col("__gq_toks"), F.col("__gq_lines"), F.col("__gq_raw")
-            ),
-        ).drop("__gq_toks", "__gq_lines", "__gq_raw")
-        staged = staged.select("*", gopher_keep_expr(**gopher).alias("gq_keep"))
-    if classifier:
-        staged = _gate_from_grams(
-            staged,
-            n_buckets=1 << 20,
-            weight_scale=1 << 16,
-            threshold=(0, 1),
-            hash_fn="md5",
-        )
-    return staged
+    if not classifier:
+        return staged
+    return _gate_from_grams(
+        staged,
+        n_buckets=1 << 20,
+        weight_scale=1 << 16,
+        threshold=(0, 1),
+        hash_fn="md5",
+    )
 
 
 #: Gopher rule 7's stop-word list, verbatim (Rae et al. 2021, A1.1)
 GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
+#: an ellipsis, as the Gopher symbol and line rules count it
+_ELLIPSIS_RE = r"\.\.\.|…"
+
+
+def _line_ends(x: Column, pat: str) -> Column:
+    """Line ``x`` ends in regex ``pat`` once trailing whitespace
+    (``WHITESPACE_RE``) is stripped.  ``\\z`` is the true end of input
+    in both Java and RE2 (Java's ``$`` also matches before a final
+    ``\\r``).  DuckDB twin: :func:`_line_ends_sql`."""
+    return x.rlike(f"(?:{pat}){WHITESPACE_RE}*\\z")
+
+
+def _line_ends_sql(x: str, pat: str) -> str:
+    """DuckDB twin of :func:`_line_ends` over the SQL expression ``x``."""
+    return f"regexp_matches({x}, '(?:{pat}){WHITESPACE_RE}*\\z')"
+
 
 def gopher_signal_exprs(toks: Column, lines: Column, t: Column) -> list[Column]:
-    """The per-document INTEGER signals behind the Gopher/MassiveText
+    """The per-document integer signals behind the Gopher/MassiveText
     quality rules (Rae et al. 2021, arXiv:2112.11446 appendix A1.1),
-    aliased ``gq_*`` — all BIGINT counts over a STAGED token array /
-    line array (pass bound lambda variables or staged columns: HOFs are
-    CodegenFallback, so an unstaged ``tokens(t)`` here would re-run the
-    normalize+split chain once per consumer — the X29 lesson).
+    aliased ``gq_*`` — all BIGINT counts over a staged token array and
+    line array (pass staged columns: higher-order functions are
+    CodegenFallback, so an unstaged array would be rebuilt once per
+    consumer).  :func:`with_gopher_gate` is the staged caller.
 
-    ``toks`` = non-empty tokens of the normalized text; ``lines`` =
-    raw-text lines (``split('\\n')``); ``t`` = the raw text (symbol
-    counting wants original bytes).
+    ``toks`` = :func:`word_tokens` of the text; ``lines`` = raw-text
+    lines (``split('\\n')``; an ellipsis line ends in ``...``/``…``
+    once trailing whitespace is stripped, :func:`_line_ends`); ``t`` =
+    the raw text (symbol counting wants original bytes).
     """
     return [
         F.size(toks).cast("bigint").alias("gq_n_words"),
@@ -202,7 +195,7 @@ def gopher_signal_exprs(toks: Column, lines: Column, t: Column) -> list[Column]:
         F.regexp_count(F.coalesce(t, F.lit("")), F.lit(r"#"))
         .cast("bigint")
         .alias("gq_n_hash"),
-        F.regexp_count(F.coalesce(t, F.lit("")), F.lit(r"\.\.\.|…"))
+        F.regexp_count(F.coalesce(t, F.lit("")), F.lit(_ELLIPSIS_RE))
         .cast("bigint")
         .alias("gq_n_ellipsis"),
         F.size(F.filter(toks, lambda x: x.rlike("[a-z]")))
@@ -215,7 +208,7 @@ def gopher_signal_exprs(toks: Column, lines: Column, t: Column) -> list[Column]:
         F.size(F.filter(lines, lambda x: F.ltrim(x).rlike(r"^[-*•]")))
         .cast("bigint")
         .alias("gq_bullet_lines"),
-        F.size(F.filter(lines, lambda x: F.rtrim(x).rlike(r"(\.\.\.|…)$")))
+        F.size(F.filter(lines, lambda x: _line_ends(x, _ELLIPSIS_RE)))
         .cast("bigint")
         .alias("gq_ellipsis_lines"),
     ]
@@ -269,6 +262,45 @@ def gopher_keep_expr(
     ).cast("int")
 
 
+def _gopher_gate(
+    df: DataFrame, t: Column, rules: dict, *, cls_grams: bool = False
+) -> DataFrame:
+    """:func:`with_gopher_gate`'s staged pass.  Stage 1 appends the
+    token array (:func:`word_tokens`) and the line array; with
+    ``cls_grams`` it also appends the classifier's uni+bigram list
+    ``__cls_grams`` built from that token array.  Stage 2 appends the
+    ``gq_*`` signals and drops both arrays; stage 3 appends
+    ``gq_keep``.  Chained projections keep each array built once per
+    row: higher-order functions are CodegenFallback, so codegen would
+    not share an unstaged array between its consumers."""
+    staged = df.select(
+        "*",
+        word_tokens(t).alias("__gq_toks"),
+        F.split(F.coalesce(t, F.lit("")), "\n").alias("__gq_lines"),
+    )
+    if cls_grams:
+        staged = staged.select(
+            "*",
+            _cls_grams_from_tokens(F.col("__gq_toks"), bigrams=True).alias(
+                "__cls_grams"
+            ),
+        )
+    sig = staged.select(
+        "*", *gopher_signal_exprs(F.col("__gq_toks"), F.col("__gq_lines"), t)
+    ).drop("__gq_toks", "__gq_lines")
+    return sig.select("*", gopher_keep_expr(**rules).alias("gq_keep"))
+
+
+def with_gopher_gate(df: DataFrame, t: Column, **rules) -> DataFrame:
+    """Append the Gopher signals (``gq_n_words`` … ``gq_ellipsis_lines``,
+    :func:`gopher_signal_exprs`) and the gate ``gq_keep``
+    (:func:`gopher_keep_expr` with ``rules``) to ``df``, all input
+    columns kept.  ``t`` is the text expression over ``df``'s columns;
+    a NULL text scores as an empty one.  Row-local staged projections:
+    no shuffle, no join."""
+    return _gopher_gate(df, t, rules)
+
+
 def gopher_quality_gate(
     df: DataFrame,
     text_col: str,
@@ -278,49 +310,28 @@ def gopher_quality_gate(
     max_words: int = 100_000,
     min_stop_words: int = 2,
 ) -> DataFrame:
-    """X31: the canonical Gopher/MassiveText rule-set quality filter
-    (Rae et al. 2021, arXiv:2112.11446 A1.1) as ONE row-local staged
-    projection: ``(doc_id, gq_n_words, gq_word_chars, gq_n_hash,
-    gq_n_ellipsis, gq_n_alpha_words, gq_n_stop, gq_n_lines,
-    gq_bullet_lines, gq_ellipsis_lines, gq_keep)``.
+    """X31: the Gopher/MassiveText rule-set quality filter (Rae et al.
+    2021, arXiv:2112.11446 A1.1) per document: ``(doc_id, gq_n_words,
+    gq_word_chars, gq_n_hash, gq_n_ellipsis, gq_n_alpha_words,
+    gq_n_stop, gq_n_lines, gq_bullet_lines, gq_ellipsis_lines,
+    gq_keep)``, computed by :func:`with_gopher_gate`.
 
     Every signal is an exact BIGINT count and the gate cross-multiplies
-    the paper's ratio rules into integer comparisons — the mean word
-    length, symbol ratio, bullet/ellipsis line fractions and alpha-word
-    fraction never materialize as floats, so cross-engine hash parity
-    is structural (class A), the same construction as the X29
-    classifier gate.  Zero shuffle, zero join, zero Python at any
-    corpus size — the filter a 1000-executor cluster applies while the
-    corpus streams through the scan.
+    the paper's ratio rules into integer comparisons, so no ratio
+    materializes as a float and the DuckDB twin (:func:`gopher_sql`)
+    matches bit for bit (class A).  No shuffle, join or Python.
 
     ``min_words``/``max_words``/``min_stop_words`` are exposed because
-    they are corpus-length-scale knobs (the paper's 50/100k assume web
+    they scale with document length (the paper's 50/100k assume web
     pages); the ratio rules keep the published constants.
     """
-    t = F.col(text_col)
-    staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        # coalesce BEFORE tokenizing (size(NULL array) is -1, not 0);
-        # filter the empty token an empty/whitespace doc splits to —
-        # the twin's list_filter(x <> '') does the same
-        F.filter(tokens(F.coalesce(t, F.lit(""))), lambda x: x != "").alias(
-            "__gq_toks"
-        ),
-        F.split(F.coalesce(t, F.lit("")), "\n").alias("__gq_lines"),
-        t.alias("__gq_raw"),
-    )
-    sig = staged.select(
-        "doc_id",
-        *gopher_signal_exprs(
-            F.col("__gq_toks"), F.col("__gq_lines"), F.col("__gq_raw")
-        ),
-    )
-    return sig.select(
-        "*",
-        gopher_keep_expr(
-            min_words=min_words, max_words=max_words, min_stop_words=min_stop_words
-        ).alias("gq_keep"),
-    )
+    return with_gopher_gate(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__gq_raw")),
+        F.col("__gq_raw"),
+        min_words=min_words,
+        max_words=max_words,
+        min_stop_words=min_stop_words,
+    ).drop("__gq_raw")
 
 
 def gopher_sql(
@@ -334,9 +345,6 @@ def gopher_sql(
     list, same line split, same integer cross-multiplied rules.  ``src``
     must yield ``(doc_id, text)``.  Every column is an exact integer —
     both engines share the very bits by construction."""
-    from pyspark_dist_explore_spark.operators.dedup import NORMALIZE_SQL
-
-    norm = NORMALIZE_SQL.format(c="COALESCE(text, '')")
     stop_sum = " + ".join(
         f"CASE WHEN list_contains(l, '{sw}') THEN 1 ELSE 0 END"
         for sw in GOPHER_STOPWORDS
@@ -345,7 +353,7 @@ def gopher_sql(
 WITH gq_src AS ({src}),
 gq_t AS (
   SELECT doc_id,
-         list_filter(string_split({norm}, ' '), x -> x <> '') AS l,
+         {word_tokens_sql("text")} AS l,
          string_split(COALESCE(text, ''), chr(10)) AS ls,
          COALESCE(text, '') AS raw
   FROM gq_src
@@ -356,14 +364,14 @@ gq_s AS (
          CAST(COALESCE(list_sum(list_transform(l, x -> len(x))), 0) AS BIGINT)
            AS gq_word_chars,
          CAST(len(regexp_extract_all(raw, '#')) AS BIGINT) AS gq_n_hash,
-         CAST(len(regexp_extract_all(raw, '\\.\\.\\.|…')) AS BIGINT) AS gq_n_ellipsis,
+         CAST(len(regexp_extract_all(raw, '{_ELLIPSIS_RE}')) AS BIGINT) AS gq_n_ellipsis,
          CAST(len(list_filter(l, x -> regexp_matches(x, '[a-z]'))) AS BIGINT)
            AS gq_n_alpha_words,
          CAST({stop_sum} AS BIGINT) AS gq_n_stop,
          CAST(len(ls) AS BIGINT) AS gq_n_lines,
          CAST(len(list_filter(ls, x -> regexp_matches(ltrim(x), '^[-*•]')))
               AS BIGINT) AS gq_bullet_lines,
-         CAST(len(list_filter(ls, x -> regexp_matches(rtrim(x), '(\\.\\.\\.|…)$')))
+         CAST(len(list_filter(ls, x -> {_line_ends_sql("x", _ELLIPSIS_RE)}))
               AS BIGINT) AS gq_ellipsis_lines
   FROM gq_t
 )
@@ -777,9 +785,9 @@ def gopher_repetition_battery(
     builds every requested gram size simultaneously (max(n)−1 lead
     columns over the same (doc, idx) sort — winnowing's ordering; a
     window-free row-local rewrite — per-size ``transform`` +
-    ``slice``/``concat_ws`` over the token array — was A/B'd in round
-    10 and REJECTED: 3.9 s vs 2.3 s at sf0.1, higher-order functions
-    are CodegenFallback so the per-element slice+concat chain runs
+    ``slice``/``concat_ws`` over the token array — measured slower,
+    3.9 s vs 2.3 s at sf0.1: higher-order functions are
+    CodegenFallback, so the per-element slice+concat chain runs
     interpreted and re-evaluates per gram) →
     the gram columns unpivot to ``(doc_id, n, gram)`` (≤ |ns| rows per
     position — the honest cost of the full battery; the paper's
@@ -796,9 +804,7 @@ def gopher_repetition_battery(
     max_n = ns[-1]
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.filter(tokens(F.coalesce(F.col(text_col), F.lit(""))), lambda x: x != "")
-        ).alias("idx", "tok"),
+        F.posexplode(word_tokens(F.col(text_col))).alias("idx", "tok"),
     )
     w = Window.partitionBy("doc_id").orderBy("idx")
     n_tok = F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
@@ -878,11 +884,8 @@ def gopher_repetition_sql(
     """DuckDB twin of :func:`gopher_repetition_battery`: same normalized
     tokens, same lead-chain grams, same min-by tie-break, same integer
     numerators.  ``src`` must yield ``(doc_id, text)``."""
-    from pyspark_dist_explore_spark.operators.dedup import NORMALIZE_SQL
-
     ns = sorted(set(top_ns) | set(dup_ns))
     max_n = ns[-1]
-    norm = NORMALIZE_SQL.format(c="COALESCE(text, '')")
     lead_cols = ", ".join(
         f"lead(tok, {k}) OVER (PARTITION BY doc_id ORDER BY idx) AS l{k}"
         for k in range(1, max_n)
@@ -896,8 +899,7 @@ def gopher_repetition_sql(
     return f"""
 WITH rb_t AS (
   SELECT doc_id, unnest(generate_series(1, len(l))) - 1 AS idx, unnest(l) AS tok
-  FROM (SELECT doc_id,
-               list_filter(string_split({norm}, ' '), x -> x <> '') AS l
+  FROM (SELECT doc_id, {word_tokens_sql("text")} AS l
         FROM ({src}) z) t
 ),
 led AS (
@@ -1876,8 +1878,7 @@ def frequent_ngrams(
         raise ValueError(f"min_count must be >= 1, got {min_count}")
     from pyspark.sql import Window
 
-    toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
-    toks = F.filter(toks, lambda x: x != "")
+    toks = word_tokens(F.col(text_col))
     # sequence(1, 0) DESCENDS in Spark (yields [1, 0]) — short docs need
     # an explicit empty-array branch, not a clamped upper bound
     n_starts = F.size(toks) - F.lit(n - 1)
@@ -1915,9 +1916,6 @@ def frequent_ngrams_sql(
     counts, prune, and (cnt DESC, gram ASC) rank."""
     if n < 1 or top_k < 1 or min_count < 1:
         raise ValueError("n, top_k, min_count must all be >= 1")
-    from pyspark_dist_explore_spark.operators.dedup import NORMALIZE_SQL
-
-    norm = NORMALIZE_SQL.format(c="COALESCE(text, '')")
     g = (
         f"COALESCE(CAST({group_col} AS VARCHAR), '')"
         if group_col is not None
@@ -1925,8 +1923,7 @@ def frequent_ngrams_sql(
     )
     return f"""
 WITH fng_t AS (
-  SELECT {g} AS "group",
-         list_filter(string_split({norm}, ' '), x -> x <> '') AS l
+  SELECT {g} AS "group", {word_tokens_sql("text")} AS l
   FROM ({src})
 ),
 fng_g AS (
@@ -3094,15 +3091,14 @@ CLS_MIX = 2654435761
 def _cls_gram_col(t: Column, *, bigrams: bool) -> Column:
     """Unigram (+ bigram) grams of the normalized token stream as ONE
     array column — row-local, no explode."""
-    toks = F.filter(tokens(F.coalesce(t, F.lit(""))), lambda x: x != "")
-    return _cls_grams_from_tokens(toks, bigrams=bigrams)
+    return _cls_grams_from_tokens(word_tokens(t), bigrams=bigrams)
 
 
 def _cls_grams_from_tokens(toks: Column, *, bigrams: bool) -> Column:
-    """The gram list from an ALREADY-BUILT non-empty token array — lets
-    a consumer that staged the tokens for other columns (e.g. the X31
-    Gopher signals) derive the classifier grams without re-running the
-    normalize+split+filter chain."""
+    """The gram list from an already-built :func:`word_tokens` array, so
+    a consumer that staged the tokens for other columns (the Gopher
+    pass, :func:`_gopher_gate`) derives the grams without re-running
+    the normalize+split+filter chain."""
     if not bigrams:
         return toks
 
@@ -3160,6 +3156,14 @@ def _cls_weight_expr(
     return (b * F.lit(CLS_MIX)) % F.lit(weight_scale) - F.lit(weight_scale // 2)
 
 
+def _cls_keep(n_grams: Column, logit: Column, threshold: tuple[int, int]) -> Column:
+    """The classifier gate: keep (1) iff the doc has grams and its mean
+    weight ``logit / n_grams`` reaches ``num/den``, compared as
+    ``logit·den ≥ num·n_grams`` so no division or float appears."""
+    num, den = threshold
+    return ((n_grams > 0) & (logit * F.lit(den) >= F.lit(num) * n_grams)).cast("int")
+
+
 def classifier_exprs(
     t: Column,
     *,
@@ -3184,7 +3188,6 @@ def classifier_exprs(
 
     ``hash_fn='xxhash64'`` (default) is the fast native path; ``'md5'``
     is the DuckDB-reproducible variant the registered gate uses."""
-    num, den = threshold
     grams = _cls_gram_col(t, bigrams=bigrams)
     ws = F.transform(
         grams,
@@ -3194,11 +3197,10 @@ def classifier_exprs(
     )
     logit = F.aggregate(ws, F.lit(0).cast("bigint"), lambda acc, x: acc + x)
     n_grams = F.size(grams).cast("bigint")
-    keep = ((n_grams > 0) & (logit * F.lit(den) >= F.lit(num) * n_grams)).cast("int")
     return [
         n_grams.alias("n_cls_grams"),
         logit.alias("cls_logit_num"),
-        keep.alias("cls_keep"),
+        _cls_keep(n_grams, logit, threshold).alias("cls_keep"),
     ]
 
 
@@ -3219,13 +3221,9 @@ def _gate_from_grams(
     than once in its own Project, so the gram build and the fold each
     evaluate ONCE per row — the single-projection form re-evaluates the
     fold for ``cls_keep`` and the gram chain for every consumer (HOFs
-    are CodegenFallback: no codegen subexpression elimination)."""
-    num, den = threshold
-    # r15: fold the weight inside the aggregate lambda instead of
-    # materializing a transform()'d weight array first — one interpreted
-    # pass and no per-row intermediate array; exact integer sums, so the
-    # logit is unchanged (probe: noop 1.03-1.14 s → 0.90-1.17 s at
-    # sf0.1, rows identical)
+    are CodegenFallback: no codegen subexpression elimination).  The
+    weight is folded inside the aggregate lambda, so no per-row weight
+    array is built."""
     scored = staged.select(
         "*",
         F.size(gram_col).cast("bigint").alias("n_cls_grams"),
@@ -3238,8 +3236,7 @@ def _gate_from_grams(
             ),
         ).alias("cls_logit_num"),
     ).drop(gram_col)
-    n_g, logit = F.col("n_cls_grams"), F.col("cls_logit_num")
-    keep = ((n_g > 0) & (logit * F.lit(den) >= F.lit(num) * n_g)).cast("int")
+    keep = _cls_keep(F.col("n_cls_grams"), F.col("cls_logit_num"), threshold)
     return scored.select("*", keep.alias("cls_keep"))
 
 
@@ -3318,7 +3315,7 @@ def classifier_score(
         raise ValueError(
             f"need n_buckets >= 1 and even weight_scale >= 2, got {n_buckets}, {weight_scale}"
         )
-    num, den = threshold
+    _, den = threshold
     if den < 1:
         raise ValueError(f"threshold denominator must be >= 1, got {den}")
     t = F.col(text_col)
@@ -3337,39 +3334,29 @@ def classifier_score(
             threshold=threshold,
             hash_fn=hash_fn,
         )
-    else:
-        grams = _cls_gram_col(t, bigrams=bigrams)
-        missing = {"bucket", "weight"} - set(weights.columns)
-        if missing:
-            raise ValueError(f"weights frame missing column(s): {sorted(missing)}")
-        b = _cls_bucket_expr(F.col("gram"), n_buckets=n_buckets, hash_fn=hash_fn)
-        exploded = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode_outer(grams).alias("gram"),  # outer: keep empty docs
-        ).select("doc_id", b.alias("bucket"), "gram")
-        joined = exploded.join(
-            F.broadcast(weights.select("bucket", F.col("weight").cast("bigint").alias("weight"))),
-            "bucket",
-            "left",
-        )
-        scored = joined.groupBy("doc_id").agg(
-            F.count(F.col("gram")).cast("bigint").alias("n_cls_grams"),
-            F.coalesce(
-                F.sum(F.when(F.col("gram").isNotNull(), F.coalesce(F.col("weight"), F.lit(0)))),
-                F.lit(0),
-            ).cast("bigint").alias("cls_logit_num"),
-        )
-    return scored.select(
-        "doc_id",
-        "n_cls_grams",
-        "cls_logit_num",
-        (
-            (F.col("n_cls_grams") > 0)
-            & (F.col("cls_logit_num") * F.lit(den) >= F.lit(num) * F.col("n_cls_grams"))
-        )
-        .cast("int")
-        .alias("cls_keep"),
+    grams = _cls_gram_col(t, bigrams=bigrams)
+    missing = {"bucket", "weight"} - set(weights.columns)
+    if missing:
+        raise ValueError(f"weights frame missing column(s): {sorted(missing)}")
+    b = _cls_bucket_expr(F.col("gram"), n_buckets=n_buckets, hash_fn=hash_fn)
+    exploded = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.explode_outer(grams).alias("gram"),  # outer: keep empty docs
+    ).select("doc_id", b.alias("bucket"), "gram")
+    joined = exploded.join(
+        F.broadcast(weights.select("bucket", F.col("weight").cast("bigint").alias("weight"))),
+        "bucket",
+        "left",
     )
+    scored = joined.groupBy("doc_id").agg(
+        F.count(F.col("gram")).cast("bigint").alias("n_cls_grams"),
+        F.coalesce(
+            F.sum(F.when(F.col("gram").isNotNull(), F.coalesce(F.col("weight"), F.lit(0)))),
+            F.lit(0),
+        ).cast("bigint").alias("cls_logit_num"),
+    )
+    keep = _cls_keep(F.col("n_cls_grams"), F.col("cls_logit_num"), threshold)
+    return scored.select("doc_id", "n_cls_grams", "cls_logit_num", keep.alias("cls_keep"))
 
 
 def nb_bucket_weight(
@@ -3493,10 +3480,7 @@ def classifier_train_counts_sql(
     BIGINTs; class A).  The weights downstream come from
     :func:`nb_bucket_weight` on BOTH sides, so comparing counts pins
     the whole trainer.  Sources must yield a ``text`` column."""
-    from pyspark_dist_explore_spark.operators.dedup import NORMALIZE_SQL
-
     def side(src: str) -> str:
-        norm = NORMALIZE_SQL.format(c="COALESCE(text, '')")
         bi = (
             "CASE WHEN len(l) >= 2 THEN list_transform(generate_series(1, len(l) - 1), "
             "i -> l[i] || ' ' || l[i + 1]) ELSE []::VARCHAR[] END"
@@ -3506,7 +3490,7 @@ def classifier_train_counts_sql(
   SELECT {_cls_bucket_sql("g", n_buckets)} AS bucket
   FROM (
     SELECT unnest({gram_expr}) AS g
-    FROM (SELECT list_filter(string_split({norm}, ' '), x -> x <> '') AS l
+    FROM (SELECT {word_tokens_sql("text")} AS l
           FROM ({src}))
   )
 """
@@ -3534,10 +3518,7 @@ def classifier_sql(
     mixer-weight BIGINT chain, same rational-threshold gate.  ``src``
     must yield ``(doc_id, text)``.  Every hashed column is an exact
     integer — the two engines share the very bits by construction."""
-    from pyspark_dist_explore_spark.operators.dedup import NORMALIZE_SQL
-
     num, den = threshold
-    norm = NORMALIZE_SQL.format(c="COALESCE(text, '')")
     half = weight_scale // 2
     w = (
         f"(({_cls_bucket_sql('g', n_buckets)}) * {CLS_MIX}) "
@@ -3551,8 +3532,7 @@ def classifier_sql(
     return f"""
 WITH cls_src AS ({src}),
 cls_t AS (
-  SELECT doc_id,
-         list_filter(string_split({norm}, ' '), x -> x <> '') AS l
+  SELECT doc_id, {word_tokens_sql("text")} AS l
   FROM cls_src
 ),
 cls_g AS (SELECT doc_id, {gram_expr} AS grams FROM cls_t),
@@ -3576,23 +3556,68 @@ FROM cls_s
 
 #: the terminal punctuation C4 requires a retained line to end with —
 #: "a period, exclamation mark, question mark, or end quotation mark"
-C4_TERMINAL_RE = r'[.!?"”]$'
+C4_TERMINAL_RE = r'[.!?"”]'
 
 
 def c4_line_keep(x: Column, *, min_words_per_line: int = 3) -> Column:
-    """C4's LINE retention predicate: ends in terminal punctuation
-    (after trailing-whitespace trim), carries ≥ ``min_words_per_line``
-    words, and does not mention 'javascript' (case-insensitive) —
-    the three line-level rules of §2.2 as one row-local boolean."""
-    # whitespace-regex split (not a single literal space): the paper's
-    # rule counts words, so tab- or multi-space-separated words must
-    # each count — the DuckDB twin splits on the same regex
-    words = F.size(F.filter(F.split(x, r"\s+"), lambda w: w != ""))
+    """C4's line retention predicate: the line ends in terminal
+    punctuation once trailing whitespace is stripped (:func:`_line_ends`),
+    carries ≥ ``min_words_per_line`` words, and does not mention
+    'javascript' (case-insensitive) — the three line-level rules of
+    §2.2 as one row-local boolean.  Words are the runs between
+    ``WHITESPACE_RE`` runs, so tab- or multi-space-separated words each
+    count; the DuckDB twin splits on the same class."""
+    words = F.size(F.filter(F.split(x, WHITESPACE_RE + "+"), lambda w: w != ""))
     return (
-        F.rtrim(x).rlike(C4_TERMINAL_RE)
+        _line_ends(x, C4_TERMINAL_RE)
         & (words >= F.lit(min_words_per_line))
         & ~F.lower(x).contains("javascript")
     )
+
+
+def _c4_gate(
+    df: DataFrame,
+    t: Column,
+    *,
+    line_sep: str,
+    min_words_per_line: int,
+    min_sentences: int,
+    bad_words: Sequence[str],
+) -> DataFrame:
+    """The one C4 pass :func:`c4_clean` and :func:`with_c4_gate` select
+    from.  Appends to ``df`` (NULL text read as ``''``): ``c4_n_lines``,
+    ``c4_n_kept_lines``, the retained lines re-joined as ``__c4_kept``,
+    the page flags ``c4_has_brace``/``c4_has_lorem``/``c4_has_bad``,
+    ``c4_n_sentences`` (``[.!?]`` marks in the retained text) and
+    ``c4_keep``.  The line array is staged once and dropped."""
+    ct = F.coalesce(t, F.lit(""))
+    staged = df.select("*", F.split(ct, re.escape(line_sep)).alias("__c4_lines"))
+    kept = F.filter(
+        F.col("__c4_lines"),
+        lambda x: c4_line_keep(x, min_words_per_line=min_words_per_line),
+    )
+    bad = (
+        F.arrays_overlap(word_tokens(t), F.array(*[F.lit(w) for w in bad_words]))
+        if bad_words
+        else F.lit(False)
+    )
+    flagged = staged.select(
+        "*",
+        F.size(F.col("__c4_lines")).cast("bigint").alias("c4_n_lines"),
+        F.size(kept).cast("bigint").alias("c4_n_kept_lines"),
+        F.array_join(kept, line_sep).alias("__c4_kept"),
+        ct.contains("{").cast("int").alias("c4_has_brace"),
+        F.lower(ct).contains("lorem ipsum").cast("int").alias("c4_has_lorem"),
+        bad.cast("int").alias("c4_has_bad"),
+    ).drop("__c4_lines")
+    n_sent = F.regexp_count(F.col("__c4_kept"), F.lit(r"[.!?]")).cast("bigint")
+    keep = (
+        (n_sent >= F.lit(min_sentences))
+        & (F.col("c4_has_brace") == 0)
+        & (F.col("c4_has_lorem") == 0)
+        & (F.col("c4_has_bad") == 0)
+    ).cast("int")
+    return flagged.select("*", n_sent.alias("c4_n_sentences"), keep.alias("c4_keep"))
 
 
 def c4_clean(
@@ -3606,71 +3631,43 @@ def c4_clean(
     bad_words: tuple[str, ...] | list[str] = (),
 ) -> DataFrame:
     """X37: the C4 cleaning heuristics (Raffel et al. 2020 §2.2) — the
-    OTHER canonical rule set next to Gopher (X31): line-level retention
-    (terminal punctuation + ≥3 words + no 'javascript') and page-level
-    drops (< ``min_sentences`` sentences, curly brace — "to remove
-    code", 'lorem ipsum', any ``bad_words`` token).  Returns one row
-    per doc: ``(doc_id, c4_n_lines, c4_n_kept_lines, c4_kept_md5,
-    c4_n_sentences, c4_has_brace, c4_has_lorem, c4_has_bad, c4_keep)``
-    — the md5 verifies the TRANSFORMATION (which lines survived, in
-    order), not just the counts.
+    other canonical rule set next to Gopher (X31): line-level retention
+    (:func:`c4_line_keep`) and page-level drops (< ``min_sentences``
+    sentences, curly brace — "to remove code", 'lorem ipsum', any
+    ``bad_words`` token).  Returns one row per doc: ``(doc_id,
+    c4_n_lines, c4_n_kept_lines, c4_kept_md5, c4_n_sentences,
+    c4_has_brace, c4_has_lorem, c4_has_bad, c4_keep)`` — the md5
+    verifies the transformation (which lines survived, in order), not
+    just the counts.
 
     Every column is an exact integer or an md5 of deterministic bytes
-    (ORACLES.md class A); the whole operator is ONE row-local staged
-    projection — zero shuffle, zero join, zero Python at any corpus
-    size, the same shape as the Gopher gate.  ``bad_words`` is
-    caller-supplied (the published filter uses the "List of Dirty,
-    Naughty, Obscene or Otherwise Bad Words"; shipping a list is a
-    policy decision, matching it as lowercase word tokens is not) —
-    empty tuple disables the rule.  Sentences are counted as terminal
-    marks ``[.!?]`` in the RETAINED text, the standard reproduction of
-    the paper's langdetect-era sentence count.
+    (ORACLES.md class A); the operator is one row-local staged pass
+    (:func:`_c4_gate`, shared with :func:`with_c4_gate`) — no shuffle,
+    join or Python.  ``bad_words`` is caller-supplied (the published
+    filter uses the "List of Dirty, Naughty, Obscene or Otherwise Bad
+    Words"; shipping a list is a policy decision, matching it against
+    :func:`word_tokens` is not) — an empty tuple disables the rule.
+    Sentences are counted as terminal marks ``[.!?]`` in the retained
+    text, the standard reproduction of the paper's langdetect-era
+    sentence count.
     """
-    import re as _re
-
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(t, _re.escape(line_sep)).alias("__c4_lines"),
-        t.alias("__c4_raw"),
-    )
-    kept = F.filter(
-        F.col("__c4_lines"),
-        lambda x: c4_line_keep(x, min_words_per_line=min_words_per_line),
-    )
-    staged2 = staged.select(
-        "doc_id",
-        F.size(F.col("__c4_lines")).cast("bigint").alias("c4_n_lines"),
-        F.size(kept).cast("bigint").alias("c4_n_kept_lines"),
-        F.array_join(kept, line_sep).alias("__c4_kept"),
-        F.col("__c4_raw").contains("{").cast("int").alias("c4_has_brace"),
-        F.lower(F.col("__c4_raw")).contains("lorem ipsum").cast("int")
-        .alias("c4_has_lorem"),
-        (
-            F.arrays_overlap(
-                F.filter(tokens(F.col("__c4_raw")), lambda x: x != ""),
-                F.array(*[F.lit(w) for w in bad_words]),
-            ).cast("int")
-            if bad_words
-            else F.lit(0)
-        ).alias("c4_has_bad"),
-    )
-    n_sent = F.regexp_count(F.col("__c4_kept"), F.lit(r"[.!?]")).cast("bigint")
-    return staged2.select(
+    return _c4_gate(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__c4_raw")),
+        F.col("__c4_raw"),
+        line_sep=line_sep,
+        min_words_per_line=min_words_per_line,
+        min_sentences=min_sentences,
+        bad_words=bad_words,
+    ).select(
         "doc_id",
         "c4_n_lines",
         "c4_n_kept_lines",
         F.md5(F.col("__c4_kept")).alias("c4_kept_md5"),
-        n_sent.alias("c4_n_sentences"),
+        "c4_n_sentences",
         "c4_has_brace",
         "c4_has_lorem",
         "c4_has_bad",
-        (
-            (n_sent >= F.lit(min_sentences))
-            & (F.col("c4_has_brace") == 0)
-            & (F.col("c4_has_lorem") == 0)
-            & (F.col("c4_has_bad") == 0)
-        ).cast("int").alias("c4_keep"),
+        "c4_keep",
     )
 
 
@@ -3683,41 +3680,27 @@ def with_c4_gate(
     min_sentences: int = 5,
     bad_words: tuple[str, ...] | list[str] = (),
 ) -> DataFrame:
-    """Append ``(__c4_kept, c4_keep)`` to ``df`` via staged projections
-    — the pipeline-predicate form of :func:`c4_clean` (all input
-    columns preserved, the retained-lines text exposed so the caller
-    can REPLACE the page text with it, which is what the published C4
-    pipeline does).  ``t`` is the text expression over ``df``'s
-    columns."""
-    import re as _re
-
-    ct = F.coalesce(t, F.lit(""))
-    staged = df.select(
-        "*", F.split(ct, _re.escape(line_sep)).alias("__c4_lines")
+    """Append ``(__c4_kept, c4_keep)`` to ``df`` — the pipeline-predicate
+    form of :func:`c4_clean`, a select over the same pass
+    (:func:`_c4_gate`).  All input columns are kept and the retained
+    lines are exposed so the caller can replace the page text with
+    them, which is what the published C4 pipeline does.  ``t`` is the
+    text expression over ``df``'s columns."""
+    return _c4_gate(
+        df,
+        t,
+        line_sep=line_sep,
+        min_words_per_line=min_words_per_line,
+        min_sentences=min_sentences,
+        bad_words=bad_words,
+    ).drop(
+        "c4_n_lines",
+        "c4_n_kept_lines",
+        "c4_has_brace",
+        "c4_has_lorem",
+        "c4_has_bad",
+        "c4_n_sentences",
     )
-    kept = F.filter(
-        F.col("__c4_lines"),
-        lambda x: c4_line_keep(x, min_words_per_line=min_words_per_line),
-    )
-    staged2 = staged.select(
-        "*", F.array_join(kept, line_sep).alias("__c4_kept")
-    ).drop("__c4_lines")
-    n_sent = F.regexp_count(F.col("__c4_kept"), F.lit(r"[.!?]")).cast("bigint")
-    bad = (
-        F.arrays_overlap(
-            F.filter(tokens(ct), lambda x: x != ""),
-            F.array(*[F.lit(w) for w in bad_words]),
-        )
-        if bad_words
-        else F.lit(False)
-    )
-    keep = (
-        (n_sent >= F.lit(min_sentences))
-        & ~ct.contains("{")
-        & ~F.lower(ct).contains("lorem ipsum")
-        & ~bad
-    ).cast("int")
-    return staged2.select("*", keep.alias("c4_keep"))
 
 
 def c4_sql(
@@ -3730,17 +3713,11 @@ def c4_sql(
 ) -> str:
     """DuckDB twin of :func:`c4_clean` — same line predicate, same
     rebuild, same md5 bytes.  ``src`` must yield ``(doc_id, text)``."""
-    from pyspark_dist_explore_spark.operators.dedup import NORMALIZE_SQL
-
-    norm = NORMALIZE_SQL.format(c="COALESCE(text, '')")
     sep = line_sep.replace("'", "''").replace("\n", "' || chr(10) || '")
     sep_lit = f"'{sep}'" if line_sep != "\n" else "chr(10)"
     if bad_words:
         arr = ", ".join("'" + w.replace("'", "''") + "'" for w in bad_words)
-        bad = (
-            f"CASE WHEN list_has_any(list_filter(string_split({norm}, ' '), "
-            f"x -> x <> ''), [{arr}]) THEN 1 ELSE 0 END"
-        )
+        bad = f"CASE WHEN list_has_any({word_tokens_sql('raw')}, [{arr}]) THEN 1 ELSE 0 END"
     else:
         bad = "0"
     return f"""
@@ -3753,8 +3730,8 @@ c4_t AS (
 ),
 c4_k AS (
   SELECT doc_id, ls, raw,
-         list_filter(ls, x -> regexp_matches(rtrim(x), '[.!?"”]$')
-             AND len(list_filter(regexp_split_to_array(x, '\\s+'), w -> w <> '')) >= {min_words_per_line}
+         list_filter(ls, x -> {_line_ends_sql("x", C4_TERMINAL_RE)}
+             AND len(list_filter(regexp_split_to_array(x, '{WHITESPACE_RE}+'), w -> w <> '')) >= {min_words_per_line}
              AND NOT contains(lower(x), 'javascript')) AS kept
   FROM c4_t
 ),
@@ -3791,7 +3768,7 @@ def inject_punctuation(t: Column) -> Column:
     section exercises every line/sentence rule with a MIXED gate on the
     synthetic word-salad corpus (which has no punctuation at all);
     real corpora call :func:`c4_clean` directly."""
-    toks = F.filter(tokens(F.coalesce(t, F.lit(""))), lambda x: x != "")
+    toks = word_tokens(t)
 
     # transform with index; rebuild via a lambda-local suffix CASE
     def _suffix(x: Column, i: Column) -> Column:
@@ -3813,9 +3790,6 @@ def inject_punctuation_sql(src: str) -> str:
     the md5-parity suffix rule for both engines).  ``src`` yields
     ``(doc_id, text)``; returns a query yielding ``(doc_id, text)``
     with the injected text (empty docs come through as '')."""
-    from pyspark_dist_explore_spark.operators.dedup import NORMALIZE_SQL
-
-    norm = NORMALIZE_SQL.format(c="COALESCE(text, '')")
     return f"""
 SELECT s.doc_id, COALESCE(j.text, '') AS text
 FROM ({src}) s
@@ -3828,7 +3802,7 @@ LEFT JOIN (
            '' ORDER BY pos) AS text
   FROM (
     SELECT doc_id, generate_subscripts(l, 1) - 1 AS pos, unnest(l) AS tok
-    FROM (SELECT doc_id, list_filter(string_split({norm}, ' '), x -> x <> '') AS l
+    FROM (SELECT doc_id, {word_tokens_sql("text")} AS l
           FROM ({src}) s2) t
   ) tok_rows
   GROUP BY doc_id

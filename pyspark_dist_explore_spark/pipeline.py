@@ -721,30 +721,17 @@ def curate_documents(
             )
     if gopher_rules is not None:
         # rule-based quality gate (X31): the Gopher/MassiveText rule
-        # set as integer cross-multiplied comparisons, riding the same
-        # staged-projection shape as the classifier — row-local filter,
-        # zero joins/shuffles; the kwargs dict exposes the
+        # set as integer cross-multiplied comparisons — a row-local
+        # filter, no join or shuffle; the kwargs dict exposes the
         # corpus-length-scale knobs ({} = the paper's published bounds)
-        from pyspark_dist_explore_spark.operators.dedup import tokens as _toks
-        from pyspark_dist_explore_spark.operators.textstats import (
-            gopher_keep_expr,
-            gopher_signal_exprs,
-        )
+        from pyspark_dist_explore_spark.operators.textstats import with_gopher_gate
 
         keep_cols = base.columns
-        gt = F.col("__text")
-        staged = base.select(
-            "*",
-            F.filter(_toks(F.coalesce(gt, F.lit(""))), lambda x: x != "").alias(
-                "__gq_toks"
-            ),
-            F.split(F.coalesce(gt, F.lit("")), "\n").alias("__gq_lines"),
+        base = (
+            with_gopher_gate(base, F.col("__text"), **gopher_rules)
+            .where(F.col("gq_keep") == 1)
+            .select(*keep_cols)
         )
-        sig = staged.select(
-            "*",
-            *gopher_signal_exprs(F.col("__gq_toks"), F.col("__gq_lines"), gt),
-        )
-        base = sig.where(gopher_keep_expr(**gopher_rules) == 1).select(*keep_cols)
     if allowed_langs is not None:
         base = base.where(F.col("lang_pred").isin(list(allowed_langs)))
     if max_dup_token_frac is not None:

@@ -2443,20 +2443,21 @@ JOIN (
 
 @register("text_stats", _text_stats_merged_oracle())
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document stats, quality signals AND language ID in one
-    row-local projection (stats∪quality merged round 4; the lang-ID
-    columns folded in round 6, freeing ``text_lang_id``'s slot for the
-    drift/profile promotions — all three halves are pure expressions
-    over the same scan).  Columns: chars/token counts/avg token length
-    + alpha/punct ratios + the [0,1] quality score + per-language
-    marker scores + deterministic-argmax ``lang_pred`` + (round 8,
-    X29) the hashed n-gram linear-classifier gate ``(n_cls_grams,
-    cls_logit_num, cls_keep)`` — fastText-shaped model-based quality
-    filtering, all-integer at the gate (ORACLES.md class A) + (round 8,
-    X31) the Gopher/MassiveText rule-set signals and gate (``gq_*``,
-    Rae et al. 2021 A1.1) — every rule an integer cross-multiplied
-    comparison, class A by construction — still one scan / zero
-    shuffle."""
+    """Per-document stats, quality signals and language ID
+    (:func:`textstats.text_profile_lang`) in one row-local projection
+    over one scan: chars/token counts/avg token length, alpha/punct
+    ratios, the [0,1] quality score, per-language marker scores and the
+    deterministic-argmax ``lang_pred``, plus two gates whose columns are
+    all exact integers (ORACLES.md class A):
+
+    - the Gopher/MassiveText rule-set signals and gate (``gq_*``, Rae
+      et al. 2021 A1.1), every rule an integer cross-multiplied
+      comparison;
+    - the md5 hashed n-gram linear-classifier gate ``(n_cls_grams,
+      cls_logit_num, cls_keep)``, fastText-shaped model-based quality
+      filtering.
+
+    No shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     return textstats.text_profile_lang(
         docs,
@@ -2889,71 +2890,51 @@ JOIN fn ON prof."group" = fn."group"
 """,
 )
 def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X20 at the driver gate (promoted round 6): the one-scan corpus
-    EDA card per source — docs/empties/token totals, the 1e-6
-    fixed-point quality mean, and the exact-dup fraction from md5
-    content fingerprints (ONE scan, two exchanges, plan-pinned in
-    tests/test_plans.py; NULL text profiles as an empty doc) — joined,
-    since round 8, with the X25 VOCABULARY-COVERAGE card: the top-16
-    tie-broken induced vocab's per-source in-vocab/OOV token counts
-    (pure integers, the pre-tokenizer-sizing signal), vocab induced via
-    ``TakeOrderedAndProject`` over the type-count aggregate and
-    broadcast into the coverage join — and, since round 9, the X38
-    CURATION FUNNEL card: per-source per-gate drop attribution
-    (fail / fail-ONLY / survivors for a min-length + Gopher +
-    classifier gate conjunction — all flags ride one row-local staged
-    projection into ONE group-sized aggregate,
-    :func:`pipeline.curation_funnel`) — and, since round 12, the X38
-    TOKEN-WEIGHTED mirror (``token_col='n_tok'`` over ``gq_n_words``):
-    ``funnel_tokens`` + per-gate fail/fail-only token sums +
-    ``survivor_tokens``, all exact BIGINTs on the SAME aggregate —
-    training-data decisions are made in tokens, and a gate that drops
-    1% of docs but 30% of tokens reads completely differently here."""
+    """X20: the one-scan corpus EDA card per source, joined with two
+    more per-source cards.
+
+    - Profile (:func:`textstats.corpus_profile`): docs, empties, token
+      totals, the 1e-6 fixed-point quality mean and the exact-dup
+      fraction from md5 content fingerprints; NULL text profiles as an
+      empty doc.
+    - X25 vocabulary coverage: in-vocab/OOV token counts against the
+      top-16 tie-broken induced vocabulary, which is broadcast into the
+      coverage join.
+    - X38 curation funnel (:func:`pipeline.curation_funnel`): per-gate
+      fail / fail-only / survivor counts for a min-length + Gopher
+      (:func:`textstats.with_gopher_gate`) + unigram md5 classifier
+      conjunction, plus the same counts weighted by ``gq_n_words``
+      tokens.  All flags come from row-local staged projections and
+      feed one group-sized aggregate; every column is an exact BIGINT.
+    """
     from pyspark_dist_explore_spark.pipeline import curation_funnel
 
     docs = load_table(spark, sf_dir, "documents")
     prof = textstats.corpus_profile(docs, "text", "doc_id", group_col="source")
     vocab = textstats.vocabulary(docs, "text", size=_VOCAB_SIZE)
     oov = textstats.oov_stats(docs, "text", "source", vocab)
-    tq = F.coalesce(F.col("text"), F.lit(""))
-    staged = docs.select(
-        F.col("source").alias("grp"),
-        F.filter(textstats.tokens(tq), lambda x: x != "").alias("__toks"),
-        F.split(tq, "\n").alias("__lines"),
-        tq.alias("__raw"),
-    )
-    # classifier gate via the STAGED once-per-row form (the X29
-    # lesson: the single-expression form re-evaluates the gram+fold
-    # chain per consumer — measured ~2x on this projection).  The
-    # funnel's flag rides the UNIGRAM-only md5 variant (r10 A/B at
-    # sf0.1: 1.05 s vs 1.54 s for the uni+bigram form — the funnel
-    # needs a keep bit, and halving the md5-per-gram work is the whole
-    # win; the full uni+bigram chain stays hash-checked in text_stats,
-    # X29's primary registration)
-    sig = textstats.with_classifier_gate(
-        staged.select(
-            "grp",
-            *textstats.gopher_signal_exprs(
-                F.col("__toks"), F.col("__lines"), F.col("__raw")
-            ),
-            "__raw",
-        ),
+    raw = docs.select(F.col("source").alias("grp"), F.col("text").alias("__raw"))
+    gq = textstats.with_gopher_gate(
+        raw,
         F.col("__raw"),
-        hash_fn="md5",
-        bigrams=False,
+        min_words=_GOPHER_MIN_WORDS,
+        min_stop_words=_GOPHER_MIN_STOP,
+    )
+    # both gates run as staged once-per-row projections; the funnel's
+    # classifier flag is the unigram-only md5 form, which does half the
+    # md5-per-gram work of the uni+bigram chain text_stats checks
+    sig = textstats.with_classifier_gate(
+        gq, F.col("__raw"), hash_fn="md5", bigrams=False
     )
     flags = sig.select(
         "grp",
         (F.col("gq_n_words") >= _FUNNEL_MIN_TOKENS).cast("int").alias("len_keep"),
-        textstats.gopher_keep_expr(
-            min_words=_GOPHER_MIN_WORDS, min_stop_words=_GOPHER_MIN_STOP
-        ).alias("gq_keep"),
+        "gq_keep",
         "cls_keep",
         F.col("gq_n_words").alias("n_tok"),
     )
-    # token_col promotes the X38 token-weighted mirror (r11): the same
-    # single aggregate also sums gq_n_words per fail/fail-only bucket —
-    # exact BIGINTs, so every weighted column is gate-hash-checked
+    # token_col adds the token-weighted mirror on the same aggregate:
+    # gq_n_words summed per fail/fail-only bucket, exact BIGINTs
     funnel = (
         curation_funnel(
             flags,

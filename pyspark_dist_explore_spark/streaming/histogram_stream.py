@@ -314,7 +314,8 @@ def stream_curate_lite(
     """Streaming CURATE-LITE: the curation gates composed over a
     document STREAM — X2 content dedup on the stream (engine-managed
     state, bounded by the watermark), then per micro-batch via
-    ``foreachBatch``: the X31 Gopher gate and the X41 per-host cap, all
+    ``foreachBatch``: the X31 Gopher gate (:func:`~pyspark_dist_explore_spark.
+    operators.textstats.with_gopher_gate`) and the X41 per-host cap, all
     the UNCHANGED batch operators — the gate expressions are row-local
     enough to run inside the streaming engine without a parallel
     implementation (pinned by a memory-sink test).
@@ -351,25 +352,16 @@ def stream_curate_lite(
     ).drop("__fp")
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        tq = F.coalesce(F.col(text_col), F.lit(""))
-        staged = batch.select(
-            "*",
-            F.filter(textstats.tokens(tq), lambda x: x != "").alias("__toks"),
-            F.split(tq, "\n").alias("__lines"),
-        )
-        sig = staged.select(
-            "*",
-            *textstats.gopher_signal_exprs(
-                F.col("__toks"), F.col("__lines"), tq
-            ),
-        )
-        gate = (
-            textstats.gopher_keep_expr(
-                min_words=min_words, min_stop_words=min_stop_words
+        kept = (
+            textstats.with_gopher_gate(
+                batch,
+                F.col(text_col),
+                min_words=min_words,
+                min_stop_words=min_stop_words,
             )
-            == 1
+            .where(F.col("gq_keep") == 1)
+            .select(*batch.columns)
         )
-        kept = sig.where(gate).select(*batch.columns)
         if host_col is not None and host_cap is not None:
             kept = cap_per_key(kept, host_col, id_col, host_cap)
         sink_fn(kept, batch_id)

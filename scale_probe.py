@@ -929,30 +929,15 @@ def main() -> None:
         }))
 
         def run_funnel(d: DataFrame) -> tuple[float, int]:
-            tq = F.coalesce(F.col("text"), F.lit(""))
-            staged = d.select(
-                F.col("source").alias("grp"),
-                F.filter(_ts.tokens(tq), lambda x: x != "").alias("__toks"),
-                F.split(tq, "\n").alias("__lines"),
-                tq.alias("__raw"),
+            raw = d.select(F.col("source").alias("grp"), F.col("text").alias("__raw"))
+            gq = _ts.with_gopher_gate(
+                raw, F.col("__raw"), min_words=20, min_stop_words=1
             )
-            sig = _ts.with_classifier_gate(
-                staged.select(
-                    "grp",
-                    *_ts.gopher_signal_exprs(
-                        F.col("__toks"), F.col("__lines"), F.col("__raw")
-                    ),
-                    "__raw",
-                ),
-                F.col("__raw"),
-                hash_fn="md5",
-            )
+            sig = _ts.with_classifier_gate(gq, F.col("__raw"), hash_fn="md5")
             flags = sig.select(
                 "grp",
                 (F.col("gq_n_words") >= 40).cast("int").alias("len_keep"),
-                _ts.gopher_keep_expr(min_words=20, min_stop_words=1).alias(
-                    "gq_keep"
-                ),
+                "gq_keep",
                 "cls_keep",
             )
             return timed(

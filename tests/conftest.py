@@ -20,3 +20,19 @@ def spark():
     )
     yield spark
     spark.stop()
+
+#: Degenerate and real-deployment text inputs the testdata lacks: NULL,
+#: empty, whitespace-only, a bare newline, non-BMP code points, one
+#: word, a vertical tab (whitespace to Java's ``\s``, not to RE2's),
+#: and CRLF line ends under both the C4 and the Gopher line rules.
+EDGE_DOCS = [
+    (1, None),
+    (2, ""),
+    (3, "  \t "),
+    (4, "\n"),
+    (5, "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 😀 text... The end."),
+    (6, "word"),
+    (7, "a\x0bb c"),
+    (8, "one two here.\r\nthree four five!\r\nsix seven eight?"),
+    (9, "the cat sat...\r\nthe dog sat…\r\nthe end."),
+]

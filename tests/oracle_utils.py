@@ -61,3 +61,19 @@ def compare(spark, sf_dir: str, build, oracle: str) -> None:
     a, b = canon(spark_rows, spark_cols), canon(duck_rows, duck_cols)
     mism = [(x, y) for x, y in zip(a, b) if x != y][:5]
     assert a == b, f"value mismatch, first diffs: {mism}"
+
+
+def twin_rows(spark, docs, build, oracle) -> tuple[list[tuple], list[tuple]]:
+    """Sorted (Spark, DuckDB) rows of one operator over the in-memory
+    ``(doc_id, text)`` rows ``docs``: ``build(df)`` runs on Spark and
+    ``oracle(src)`` renders the DuckDB query over ``src``, a query
+    yielding the same rows."""
+    df = spark.createDataFrame(docs, "doc_id bigint, text string")
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO docs VALUES (?, ?)", docs)
+        want = con.execute(oracle("SELECT doc_id, text FROM docs")).fetchall()
+    finally:
+        con.close()
+    return sorted(map(tuple, build(df).collect())), sorted(map(tuple, want))

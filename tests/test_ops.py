@@ -2993,6 +2993,16 @@ def test_deregistered_round6_sampling_queries_match_duckdb(spark):
         .agg(F.count(F.lit(1)).alias("cnt")),
         f"SELECT {hash_split_sql('doc_id')} AS split, count(*) AS cnt FROM documents GROUP BY 1",
     )
+    # a one-split spec renders the bare literal, as hash_split does
+    compare(
+        spark,
+        SF_SMOKE,
+        lambda s, d: hash_split(load_table(s, d, "documents"), "doc_id", fractions={"all": 1.0})
+        .groupBy("split")
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        f"SELECT {hash_split_sql('doc_id', {'all': 1.0})} AS split, count(*) AS cnt "
+        "FROM documents GROUP BY 1",
+    )
     compare(
         spark,
         SF_SMOKE,
@@ -4551,14 +4561,23 @@ def test_drop_duplicate_spans_original_case_rebuild(spark):
 
 
 def test_classifier_score_matches_duckdb(spark):
-    """Inline-weight classifier vs the DuckDB twin on real testdata —
-    every gate column is exact BIGINT, so this is bit equality."""
+    """Inline-weight classifier vs the DuckDB twin on real testdata and
+    on the degenerate/CRLF edge docs — every gate column is exact
+    BIGINT, so this is bit equality."""
     from pyspark_dist_explore_spark.operators.textstats import (
         classifier_score,
         classifier_sql,
     )
-    from tests.conftest import SF_SMOKE
-    from tests.oracle_utils import compare
+    from tests.conftest import EDGE_DOCS, SF_SMOKE
+    from tests.oracle_utils import compare, twin_rows
+
+    got, want = twin_rows(
+        spark,
+        EDGE_DOCS,
+        lambda df: classifier_score(df, "text", "doc_id", threshold=(3, 7), hash_fn="md5"),
+        lambda src: classifier_sql(src, threshold=(3, 7)),
+    )
+    assert got == want and len(got) == len(EDGE_DOCS)
 
     def build(spark, sf_dir):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -4723,15 +4742,25 @@ def test_pooled_gate_section_partition_invariant(spark):
 
 
 def test_gopher_gate_matches_duckdb(spark):
-    """Full twin on real testdata at the registered bounds — every gq_*
-    column is an exact integer, so the equality is bit-for-bit."""
+    """Full twin on real testdata at the registered bounds and on the
+    degenerate/CRLF edge docs — every gq_* column is an exact integer,
+    so the equality is bit-for-bit."""
     import duckdb
 
     from pyspark_dist_explore_spark.operators.textstats import (
         gopher_quality_gate,
         gopher_sql,
     )
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import EDGE_DOCS, SF_SMOKE
+    from tests.oracle_utils import twin_rows
+
+    edge, edge_want = twin_rows(
+        spark,
+        EDGE_DOCS,
+        lambda df: gopher_quality_gate(df, "text", "doc_id", min_words=1, min_stop_words=0),
+        lambda src: gopher_sql(src, min_words=1, min_stop_words=0),
+    )
+    assert edge == edge_want and len(edge) == len(EDGE_DOCS)
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     got = sorted(
@@ -5300,6 +5329,9 @@ def test_gopher_gate_matches_python_reference(spark):
         "the supercalifragilistic expialidocious " * 4,
         "1 2 3 4 5 6 7 the of and",
         "mixed the of content with words and 12 34 #",
+        # line tails: CRLF, and a tab after the ellipsis (1 of 3 lines)
+        "the cat sat...\r\nthe dog sat…\r\nthe end.",
+        "the cat sat on the mat...\t\nthe dog ran off with it\nthe end of the story",
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
@@ -5565,8 +5597,9 @@ def test_c4_clean_rule_semantics(spark):
 
 
 def test_c4_clean_matches_duckdb(spark):
-    """Bit-exact twin on planted realistic docs AND on the injected
-    word-salad corpus (both dialects render one rule definition)."""
+    """Bit-exact twin on the injected word-salad corpus (with and
+    without a bad-word list) and on the degenerate/CRLF edge docs (both
+    dialects render one rule definition)."""
     import duckdb
     from pyspark.sql import functions as F
 
@@ -5576,7 +5609,17 @@ def test_c4_clean_matches_duckdb(spark):
         inject_punctuation,
         inject_punctuation_sql,
     )
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import EDGE_DOCS, SF_SMOKE
+    from tests.oracle_utils import twin_rows
+
+    edge, edge_want = twin_rows(
+        spark,
+        EDGE_DOCS,
+        lambda df: c4_clean(df, "text", "doc_id", min_sentences=1, bad_words=("cat",)),
+        lambda src: c4_sql(src, min_sentences=1, bad_words=("cat",)),
+    )
+    assert edge == edge_want and len(edge) == len(EDGE_DOCS)
+    assert sum(r[-2] for r in edge) == 1  # c4_has_bad: the CRLF Gopher doc
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     inj = docs.select("doc_id", inject_punctuation(F.col("text")).alias("text"))
@@ -5603,6 +5646,26 @@ def test_c4_clean_matches_duckdb(spark):
     # the injected gate must be MIXED, not vacuous
     keeps = [r[-1] for r in got]
     assert 0 < sum(keeps) < len(keeps)
+    # the bad-word rule: 'the' stands as a whole token on about 30% of
+    # the injected pages
+    bad = ("the", "of")
+    got_bad = sorted(
+        map(tuple, c4_clean(inj, "text", "doc_id", min_sentences=12, bad_words=bad).collect())
+    )
+    want_bad = sorted(
+        map(
+            tuple,
+            con.execute(
+                c4_sql(
+                    inject_punctuation_sql("SELECT doc_id, text FROM documents"),
+                    min_sentences=12,
+                    bad_words=bad,
+                )
+            ).fetchall(),
+        )
+    )
+    assert got_bad == want_bad
+    assert 0 < sum(r[-2] for r in got_bad) < len(got_bad)  # c4_has_bad mixes
 
 
 def test_c4_clean_plan_no_exchange(spark):
@@ -5733,7 +5796,7 @@ def test_c4_clean_matches_python_reference(spark):
 
     rng = random.Random(9)
     words = ["alpha", "beta", "Gamma", "deltaX", "ok", "the", "Z"]
-    tails = [".", "!", "?", '"', "”", "", " ", ":", "..."]
+    tails = [".", "!", "?", '"', "”", "", " ", ":", "...", ".\r", "!\t", "?\r", ":\r"]
     extras = ["", "javascript", "JavaScript rules", "{", "lorem ipsum",
               "Lorem Ipsum dolor", "forbidden"]
 
