@@ -302,7 +302,8 @@ def strip_markup(t: Column) -> Column:
     comments / ``<script>`` / ``<style>`` blocks wholesale, remove
     remaining tags (``<[letter/!]...>`` only, so bare math like
     ``a < b`` survives), decode the common named entities (``&amp;``
-    last, per the spec), collapse whitespace, trim.  NULL stays NULL.
+    last, per the spec), collapse ``WHITESPACE_RE`` runs to one space,
+    trim.  NULL stays NULL.
 
     This is a regex-level boilerplate stripper (the public WET/C4
     lineage), NOT an HTML parser: pathological markup (an unclosed
@@ -317,7 +318,7 @@ def strip_markup(t: Column) -> Column:
     out = F.regexp_replace(out, MARKUP_TAG_RE, " ")
     for ent, repl in _MARKUP_DECODES:
         out = F.replace(out, F.lit(ent), F.lit(repl))
-    return F.trim(F.regexp_replace(out, r"\s+", " "))
+    return F.trim(F.regexp_replace(out, WHITESPACE_RE + "+", " "))
 
 
 def markup_stats(t: Column) -> tuple[Column, Column]:
@@ -341,7 +342,7 @@ def strip_markup_sql(c: str) -> str:
     for ent, repl in _MARKUP_DECODES:
         r = repl.replace("'", "''")
         out = f"replace({out}, '{ent}', '{r}')"
-    return rf"trim(regexp_replace({out}, '\s+', ' ', 'g'))"
+    return f"trim(regexp_replace({out}, '{WHITESPACE_RE}+', ' ', 'g'))"
 
 
 def markup_stats_sql(c: str) -> tuple[str, str]:
@@ -426,20 +427,43 @@ def shingles(col: Column, n: int = 3) -> Column:
 
 def _token_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """``(doc_id, idx, tok)`` — one row per non-empty whitespace token of
-    the normalized text, ``idx`` its position in the token array."""
+    the normalized text, ``idx`` its position in the token array.
+    DuckDB twin: :func:`_token_rows_sql`."""
     return df.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(tokens(F.col(text_col))).alias("idx", "tok"),
     ).where(F.col("tok") != "")
 
 
+def _token_rows_sql(src: str) -> str:
+    """DuckDB twin of :func:`_token_rows` over ``src``, a query yielding
+    ``(doc_id, text)``: the zipped unnest numbers the split array's
+    positions from 0, as ``posexplode`` does."""
+    return f"""
+SELECT doc_id, idx, tok FROM (
+  SELECT doc_id, unnest(generate_series(1, len(l))) - 1 AS idx, unnest(l) AS tok
+  FROM (SELECT doc_id, string_split({NORMALIZE_SQL.format(c='text')}, ' ') AS l
+        FROM ({src}) z) t
+) WHERE tok <> ''"""
+
+
 def _distinct_token_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """``(doc_id, tok)`` — one row per DISTINCT non-empty whitespace token
-    of the normalized text."""
+    of the normalized text.  DuckDB twin: :func:`_distinct_token_rows_sql`."""
     return df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
     ).where(F.col("tok") != "")
+
+
+def _distinct_token_rows_sql(src: str) -> str:
+    """DuckDB twin of :func:`_distinct_token_rows` over ``src``, a query
+    yielding ``(doc_id, text)``."""
+    return f"""
+SELECT doc_id, tok FROM (
+  SELECT doc_id, unnest(list_distinct(string_split({NORMALIZE_SQL.format(c='text')}, ' '))) AS tok
+  FROM ({src}) z
+) WHERE tok <> ''"""
 
 
 def _gram_rows(toks: DataFrame, n: int) -> DataFrame:
@@ -447,7 +471,7 @@ def _gram_rows(toks: DataFrame, n: int) -> DataFrame:
     word ``n``-gram, built as ``concat_ws(tok, lead(tok,1) … lead(tok,n-1))``
     over a ``(doc_id, idx)`` window, plus one whole-doc gram for a doc
     shorter than ``n`` tokens (``concat_ws`` skips the NULL leads).
-    ``n_tok`` is the doc's token count."""
+    ``n_tok`` is the doc's token count.  DuckDB twin: :func:`_gram_rows_sql`."""
     w_ord = Window.partitionBy("doc_id").orderBy("idx")
     gram = F.concat_ws(" ", F.col("tok"), *[F.lead("tok", j).over(w_ord) for j in range(1, n)])
     n_tok = F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
@@ -455,6 +479,18 @@ def _gram_rows(toks: DataFrame, n: int) -> DataFrame:
         (F.col("idx") <= F.col("n_tok") - n)  # full n-grams
         | ((F.col("n_tok") < n) & (F.col("idx") == 0))  # short doc: one gram
     )
+
+
+def _gram_rows_sql(toks: str, n: int) -> str:
+    """DuckDB twin of :func:`_gram_rows` over ``toks``, a query yielding
+    :func:`_token_rows_sql`'s ``(doc_id, idx, tok)``."""
+    leads = "".join(f", lead(tok, {j}) OVER w" for j in range(1, n))
+    return f"""
+SELECT doc_id, idx, gram, n_tok FROM (
+  SELECT doc_id, idx, concat_ws(' ', tok{leads}) AS gram,
+         count(*) OVER (PARTITION BY doc_id) AS n_tok
+  FROM ({toks}) t WINDOW w AS (PARTITION BY doc_id ORDER BY idx)
+) WHERE idx <= n_tok - {n} OR (n_tok < {n} AND idx = 0)"""
 
 
 def shingle_rows(df: DataFrame, text_col: str, id_col: str, shingle_n: int = 3) -> DataFrame:
@@ -754,7 +790,8 @@ def _jaccard_at_least(inter: DataFrame, rows: DataFrame, threshold: float) -> Da
     """``(doc_a, doc_b, jaccard)`` with ``jaccard ≥ threshold`` from the
     per-pair intersection counts ``inter`` ``(doc_a, doc_b, n_inter)``
     and the ``(doc_id, …)`` set rows (one row per distinct element per
-    doc): ``|A∩B| / (|A| + |B| − |A∩B|)``, rounded to 6."""
+    doc): ``|A∩B| / (|A| + |B| − |A∩B|)``, rounded to 6.  DuckDB twin:
+    :func:`_jaccard_at_least_sql`."""
     sizes = rows.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
@@ -767,6 +804,21 @@ def _jaccard_at_least(inter: DataFrame, rows: DataFrame, threshold: float) -> Da
         .select("doc_a", "doc_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
+
+
+def _jaccard_at_least_sql(inter: str, rows: str, threshold: float) -> str:
+    """DuckDB twin of :func:`_jaccard_at_least`: ``inter`` and ``rows``
+    are queries yielding ``(doc_a, doc_b, n_inter)`` and the
+    ``(doc_id, …)`` set rows."""
+    sizes = f"SELECT doc_id, count(*) AS n FROM ({rows}) r GROUP BY doc_id"
+    return f"""
+SELECT doc_a, doc_b, jaccard FROM (
+  SELECT i.doc_a, i.doc_b,
+         round(CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter), 6) AS jaccard
+  FROM ({inter}) i
+  JOIN ({sizes}) sa ON i.doc_a = sa.doc_id
+  JOIN ({sizes}) sb ON i.doc_b = sb.doc_id
+) j WHERE jaccard >= {threshold}"""
 
 
 def incremental_minhash_neardup(
@@ -1201,12 +1253,13 @@ def neardup_clusters(
     must not re-execute its upstream pair pipeline).  The loop stops at
     the first round with zero label changes — the convergence count is
     the ONLY action per round: the checkpoints are lazy, so the count
-    job materializes the round's blocks as it runs (r14: merging the
-    two actions per round removed a planning round + job each).  Labels are (id, id)-shaped — 2
-    longs per doc — so 100 TB of text is still only GBs of label state
-    shuffling on the id key.  The FINAL round's state backs the
+    job materializes the round's blocks as it runs (one action and one
+    planning round per round, not two).  Labels are (id, id)-shaped —
+    2 longs per doc — so 100 TB of text is still only GBs of label
+    state shuffling on the id key.  The FINAL round's state backs the
     returned frame and stays pinned until the driver reference is
     garbage-collected (Spark's ContextCleaner then drops the blocks).
+    DuckDB twin of the components: :func:`neardup_clusters_sql`.
     """
     src = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     # checkpoint the edge list ONCE: every round joins against it, and
@@ -1216,7 +1269,7 @@ def neardup_clusters(
     # convergence count is the materializing action, so construction
     # schedules no job of its own (one fewer action + planning round —
     # A/B'd at sf0.1, see OPTIMIZATION_r14.md)
-    # NOTE (r15, advisor): with Spark's default
+    # NOTE: with Spark's default
     # spark.checkpoint.checkpointAllMarkedAncestors=false, a job only
     # truly checkpoints the TOPMOST lazily-marked RDD in its lineage —
     # round 1's count checkpoints `stepped`, while this edge mark (and
@@ -1299,8 +1352,8 @@ def neardup_clusters(
     # EXCEPT when no round ever ran (max_iter=0, changed stays -1): the
     # returned labels then still read the never-materialized lazy marks,
     # and releasing the edge mark here would force the caller's first
-    # action to re-execute the whole upstream pair pipeline (r14
-    # advisor item); leave both marks for that first action.
+    # action to re-execute the whole upstream pair pipeline; leave both
+    # marks for that first action.
     if changed >= 0:
         _release_local_checkpoint(edges)
     return labels.select(
@@ -1308,6 +1361,28 @@ def neardup_clusters(
         F.col("lbl").alias("cluster_id"),
         (F.col("doc_id") == F.col("lbl")).cast("int").alias("is_survivor"),
     )
+
+
+def neardup_clusters_sql(pairs: str) -> str:
+    """DuckDB twin of :func:`neardup_clusters`' components over
+    ``pairs``, a query yielding ``(doc_a, doc_b)``: ``(node,
+    cluster_id)`` for every doc on an edge, ``cluster_id`` the minimum
+    id of its connected component (a recursive walk over both edge
+    directions).  Docs on no edge get no row; a caller labels them as
+    their own cluster."""
+    return f"""
+WITH RECURSIVE cc_pairs AS ({pairs}),
+edges AS (
+  SELECT doc_a AS src, doc_b AS dst FROM cc_pairs
+  UNION
+  SELECT doc_b, doc_a FROM cc_pairs
+),
+walk(node, lbl) AS (
+  SELECT src, src FROM edges
+  UNION
+  SELECT e.dst, w.lbl FROM walk w JOIN edges e ON e.src = w.node
+)
+SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY node"""
 
 
 def neardup_clusters_lazy(
@@ -1502,7 +1577,7 @@ def jaccard_pairs_exact(
 ) -> DataFrame:
     """All pairs with token-set Jaccard ≥ threshold, via token self-join.
 
-    Expressible in plain SQL (the DuckDB oracle mirrors it exactly):
+    DuckDB twin: :func:`jaccard_pairs_exact_sql`, the same stages:
     explode distinct tokens → self-join on token → per-pair intersection
     counts → |A∪B| = |A|+|B|−|A∩B|.  Quadratic only within shared-token
     groups; at scale, prune stopword-like ultra-frequent tokens first.
@@ -1515,6 +1590,18 @@ def jaccard_pairs_exact(
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     return _jaccard_at_least(inter, tok, threshold)
+
+
+def jaccard_pairs_exact_sql(src: str, threshold: float) -> str:
+    """DuckDB twin of :func:`jaccard_pairs_exact` over ``src``, a query
+    yielding ``(doc_id, text)``: ``(doc_a, doc_b, jaccard)``."""
+    inter = """
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
+  FROM jac_tok a JOIN jac_tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
+  GROUP BY 1, 2"""
+    return f"""
+WITH jac_tok AS ({_distinct_token_rows_sql(src)})
+{_jaccard_at_least_sql(inter, "SELECT doc_id FROM jac_tok", threshold)}"""
 
 
 def edit_distance_pairs(

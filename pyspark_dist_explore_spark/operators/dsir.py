@@ -53,6 +53,7 @@ from pyspark_dist_explore_spark.operators.textstats import (
     _cls_bucket_expr,
     _cls_bucket_sql,
     _cls_gram_col,
+    _cls_grams_sql,
 )
 
 
@@ -325,18 +326,15 @@ def dsir_sql(
     count_stats: bool = False,
 ) -> str:
     """DuckDB twin of :func:`dsir_scores` (``hash_fn='md5'`` form):
-    same normalized token stream, same uni+bigram list, same md5-bucket
-    chain, same 1e-6 fixed-point log-ratio sum.  ``raw_src`` /
+    same normalized token stream, same uni+bigram list
+    (:func:`~pyspark_dist_explore_spark.operators.textstats._cls_grams_sql`),
+    same md5-bucket chain, same 1e-6 fixed-point log-ratio sum.  ``raw_src`` /
     ``target_src`` must yield ``(doc_id, text)``.  The count columns are
     exact integers on any build; the ``ds_logw*`` columns share the grid
     only on a controlled engine pair (pytest scope — ORACLES.md class C).
     """
     words = word_tokens_sql("text")
-    bi = (
-        "CASE WHEN len(l) >= 2 THEN list_transform(generate_series(1, len(l) - 1), "
-        "i -> l[i] || ' ' || l[i + 1]) ELSE []::VARCHAR[] END"
-    )
-    gram_expr = f"list_concat(l, {bi})" if bigrams else "l"
+    gram_expr = _cls_grams_sql("l", bigrams=bigrams)
     b = _cls_bucket_sql("gram", n_buckets)
     aB = f"{alpha!r} * {n_buckets}"
     lam = (

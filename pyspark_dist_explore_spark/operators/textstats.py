@@ -22,6 +22,7 @@ from pyspark_dist_explore_spark.operators.dedup import (
     WHITESPACE_RE,
     _gram_rows,
     _token_rows,
+    _token_rows_sql,
     n_tokens,
     normalize_text,
     sum_cols,
@@ -158,6 +159,9 @@ GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 #: an ellipsis, as the Gopher symbol and line rules count it
 _ELLIPSIS_RE = r"\.\.\.|…"
 
+#: a bullet mark, as the Gopher line rule counts it at a line start
+_BULLET_RE = "[-*•]"
+
 
 def _line_ends(x: Column, pat: str) -> Column:
     """Line ``x`` ends in regex ``pat`` once trailing whitespace
@@ -172,6 +176,17 @@ def _line_ends_sql(x: str, pat: str) -> str:
     return f"regexp_matches({x}, '(?:{pat}){WHITESPACE_RE}*\\z')"
 
 
+def _line_starts(x: Column, pat: str) -> Column:
+    """Line ``x`` starts with regex ``pat`` once leading whitespace
+    (``WHITESPACE_RE``) is stripped.  DuckDB twin: :func:`_line_starts_sql`."""
+    return x.rlike(f"^{WHITESPACE_RE}*(?:{pat})")
+
+
+def _line_starts_sql(x: str, pat: str) -> str:
+    """DuckDB twin of :func:`_line_starts` over the SQL expression ``x``."""
+    return f"regexp_matches({x}, '^{WHITESPACE_RE}*(?:{pat})')"
+
+
 def gopher_signal_exprs(toks: Column, lines: Column, t: Column) -> list[Column]:
     """The per-document integer signals behind the Gopher/MassiveText
     quality rules (Rae et al. 2021, arXiv:2112.11446 appendix A1.1),
@@ -181,9 +196,11 @@ def gopher_signal_exprs(toks: Column, lines: Column, t: Column) -> list[Column]:
     consumer).  :func:`with_gopher_gate` is the staged caller.
 
     ``toks`` = :func:`word_tokens` of the text; ``lines`` = raw-text
-    lines (``split('\\n')``; an ellipsis line ends in ``...``/``…``
-    once trailing whitespace is stripped, :func:`_line_ends`); ``t`` =
-    the raw text (symbol counting wants original bytes).
+    lines (``split('\\n')``; a bullet line starts with ``-``/``*``/``•``
+    once leading whitespace is stripped, :func:`_line_starts`, and an
+    ellipsis line ends in ``...``/``…`` once trailing whitespace is
+    stripped, :func:`_line_ends`); ``t`` = the raw text (symbol
+    counting wants original bytes).
     """
     return [
         F.size(toks).cast("bigint").alias("gq_n_words"),
@@ -205,7 +222,7 @@ def gopher_signal_exprs(toks: Column, lines: Column, t: Column) -> list[Column]:
             [F.array_contains(toks, sw).cast("bigint") for sw in GOPHER_STOPWORDS]
         ).alias("gq_n_stop"),
         F.size(lines).cast("bigint").alias("gq_n_lines"),
-        F.size(F.filter(lines, lambda x: F.ltrim(x).rlike(r"^[-*•]")))
+        F.size(F.filter(lines, lambda x: _line_starts(x, _BULLET_RE)))
         .cast("bigint")
         .alias("gq_bullet_lines"),
         F.size(F.filter(lines, lambda x: _line_ends(x, _ELLIPSIS_RE)))
@@ -369,7 +386,7 @@ gq_s AS (
            AS gq_n_alpha_words,
          CAST({stop_sum} AS BIGINT) AS gq_n_stop,
          CAST(len(ls) AS BIGINT) AS gq_n_lines,
-         CAST(len(list_filter(ls, x -> regexp_matches(ltrim(x), '^[-*•]')))
+         CAST(len(list_filter(ls, x -> {_line_starts_sql("x", _BULLET_RE)}))
               AS BIGINT) AS gq_bullet_lines,
          CAST(len(list_filter(ls, x -> {_line_ends_sql("x", _ELLIPSIS_RE)}))
               AS BIGINT) AS gq_ellipsis_lines
@@ -653,7 +670,7 @@ def word2vec_embeddings(
 
 
 # --------------------------------------------------------------------------
-# Curation signals (X5 additions, round 4): PII-style scrubbing and
+# Curation signals (X5): PII-style scrubbing and
 # Gopher/MassiveText-style repetition measures
 # --------------------------------------------------------------------------
 
@@ -881,8 +898,9 @@ def gopher_repetition_sql(
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
 ) -> str:
-    """DuckDB twin of :func:`gopher_repetition_battery`: same normalized
-    tokens, same lead-chain grams, same min-by tie-break, same integer
+    """DuckDB twin of :func:`gopher_repetition_battery`: same token rows
+    (:func:`~pyspark_dist_explore_spark.operators.dedup._token_rows_sql`),
+    same lead-chain grams, same min-by tie-break, same integer
     numerators.  ``src`` must yield ``(doc_id, text)``."""
     ns = sorted(set(top_ns) | set(dup_ns))
     max_n = ns[-1]
@@ -897,11 +915,7 @@ def gopher_repetition_sql(
         for n in ns
     )
     return f"""
-WITH rb_t AS (
-  SELECT doc_id, unnest(generate_series(1, len(l))) - 1 AS idx, unnest(l) AS tok
-  FROM (SELECT doc_id, {word_tokens_sql("text")} AS l
-        FROM ({src}) z) t
-),
+WITH rb_t AS ({_token_rows_sql(src)}),
 led AS (
   SELECT doc_id, idx, tok,
          count(*) OVER (PARTITION BY doc_id) AS n_tok,
@@ -3125,6 +3139,18 @@ def _cls_grams_from_tokens(toks: Column, *, bigrams: bool) -> Column:
     return F.element_at(F.transform(F.array(toks), _grams), 1)
 
 
+def _cls_grams_sql(l: str, *, bigrams: bool) -> str:
+    """DuckDB twin of :func:`_cls_grams_from_tokens` over the
+    :func:`word_tokens_sql` list column ``l``."""
+    if not bigrams:
+        return l
+    bi = (
+        f"CASE WHEN len({l}) >= 2 THEN list_transform(generate_series(1, len({l}) - 1), "
+        f"i -> {l}[i] || ' ' || {l}[i + 1]) ELSE []::VARCHAR[] END"
+    )
+    return f"list_concat({l}, {bi})"
+
+
 def _cls_bucket_expr(gram: Column, *, n_buckets: int, hash_fn: str) -> Column:
     """Feature bucket of one gram.  ``xxhash64`` (default) is the fast
     native path (``pmod`` keeps the signed hash non-negative);
@@ -3481,15 +3507,10 @@ def classifier_train_counts_sql(
     :func:`nb_bucket_weight` on BOTH sides, so comparing counts pins
     the whole trainer.  Sources must yield a ``text`` column."""
     def side(src: str) -> str:
-        bi = (
-            "CASE WHEN len(l) >= 2 THEN list_transform(generate_series(1, len(l) - 1), "
-            "i -> l[i] || ' ' || l[i + 1]) ELSE []::VARCHAR[] END"
-        )
-        gram_expr = f"list_concat(l, {bi})" if bigrams else "l"
         return f"""
   SELECT {_cls_bucket_sql("g", n_buckets)} AS bucket
   FROM (
-    SELECT unnest({gram_expr}) AS g
+    SELECT unnest({_cls_grams_sql("l", bigrams=bigrams)}) AS g
     FROM (SELECT {word_tokens_sql("text")} AS l
           FROM ({src}))
   )
@@ -3524,18 +3545,13 @@ def classifier_sql(
         f"(({_cls_bucket_sql('g', n_buckets)}) * {CLS_MIX}) "
         f"% {weight_scale} - {half}"
     )
-    bi = (
-        f"CASE WHEN len(l) >= 2 THEN list_transform(generate_series(1, len(l) - 1), "
-        f"i -> l[i] || ' ' || l[i + 1]) ELSE []::VARCHAR[] END"
-    )
-    gram_expr = f"list_concat(l, {bi})" if bigrams else "l"
     return f"""
 WITH cls_src AS ({src}),
 cls_t AS (
   SELECT doc_id, {word_tokens_sql("text")} AS l
   FROM cls_src
 ),
-cls_g AS (SELECT doc_id, {gram_expr} AS grams FROM cls_t),
+cls_g AS (SELECT doc_id, {_cls_grams_sql("l", bigrams=bigrams)} AS grams FROM cls_t),
 cls_s AS (
   SELECT doc_id,
          CAST(len(grams) AS BIGINT) AS n_cls_grams,

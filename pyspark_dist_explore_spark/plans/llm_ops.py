@@ -378,28 +378,14 @@ _EDITDIST_MAX = 185
 _EDITDIST_PREFIX = 256
 
 
+#: the doc_id < ``_JACCARD_MAX_ID`` slice the exact-Jaccard slots read
+_JACCARD_SRC = f"SELECT doc_id, text FROM documents WHERE doc_id < {_JACCARD_MAX_ID}"
+
+
 @register(
     "neardup_jaccard_exact",
     f"""
-WITH tok AS (
-  SELECT doc_id, unnest(list_distinct(string_split({dedup.NORMALIZE_SQL.format(c='text')}, ' '))) AS tok
-  FROM documents WHERE doc_id < {_JACCARD_MAX_ID}
-),
-tok2 AS (SELECT doc_id, tok FROM tok WHERE tok <> ''),
-sizes AS (SELECT doc_id, count(*) AS n_tok FROM tok2 GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-  FROM tok2 a JOIN tok2 b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-jpairs AS (
-  SELECT doc_a, doc_b,
-         round(CAST(n_inter AS DOUBLE) / (sa.n_tok + sb.n_tok - n_inter), 6) AS jaccard
-  FROM inter
-  JOIN sizes sa ON inter.doc_a = sa.doc_id
-  JOIN sizes sb ON inter.doc_b = sb.doc_id
-  WHERE round(CAST(n_inter AS DOUBLE) / (sa.n_tok + sb.n_tok - n_inter), 6) >= {_JACCARD_THRESHOLD}
-)
+WITH jpairs AS ({dedup.jaccard_pairs_exact_sql(_JACCARD_SRC, _JACCARD_THRESHOLD)})
 SELECT 'jaccard' AS section, doc_a, doc_b, jaccard FROM jpairs
 UNION ALL
 SELECT 'editdist' AS section, doc_a, doc_b, CAST(edit_dist AS DOUBLE) AS jaccard
@@ -414,11 +400,11 @@ FROM ({dedup.edit_distance_pairs_sql(
 """,
 )
 def q_neardup_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact token-set Jaccard pairs ≥ 0.9 (ground truth for near-dup).
-
-    Round 12 appends the X55 EDIT-DISTANCE VERIFICATION as
-    ``section='editdist'`` rows (:func:`~pyspark_dist_explore_spark.
-    operators.dedup.edit_distance_pairs`): the same candidate pairs
+    """Exact token-set Jaccard pairs ≥ 0.9 (ground truth for near-dup)
+    as ``section='jaccard'`` rows, plus the X55 EDIT-DISTANCE
+    VERIFICATION as ``section='editdist'`` rows
+    (:func:`~pyspark_dist_explore_spark.operators.dedup.edit_distance_pairs`):
+    the same candidate pairs
     confirmed by exact Levenshtein over the 256-char normalized prefix
     with the banded-DP bound — the ``jaccard`` column carries the
     integer distance for surviving pairs.  Class-A here because the
@@ -446,11 +432,12 @@ def _minhash_oracle(
     incremental_mod: int | None = None,
 ) -> str:
     """DuckDB twin of minhash_neardup(hash_fn='md5'), stage for stage:
-    3-gram shingle build (zip-unnest + lead window, short-doc single
-    gram, DISTINCT), Kirsch–Mitzenmacher double hashing (h_i = h1 + i·h2
-    from one md5 digest — values < 2^54, overflow-free in both engines),
+    the shingle build (:func:`dedup._gram_rows_sql` over
+    :func:`dedup._token_rows_sql`, DISTINCT), Kirsch–Mitzenmacher
+    double hashing (h_i = h1 + i·h2 from one md5 digest — values < 2^54, overflow-free in both engines),
     ``num_hashes`` MIN aggregates, raw-string band keys, the band-bucket
-    self-join, and the exact shingle-Jaccard verify.
+    self-join, and the exact shingle-Jaccard verify
+    (:func:`dedup._jaccard_at_least_sql`).
 
     ``incremental_mod=m`` (X27) appends the
     ``'incremental'`` section: the snapshot slice (doc_id % m ≠ 0) is
@@ -462,8 +449,7 @@ def _minhash_oracle(
     exact dyadic rational (k a power of two), so the section is
     knife-edge-free by construction."""
     rows_per_band = num_hashes // bands
-    norm = dedup.NORMALIZE_SQL.format(c="text")
-    leads = ", ".join(f"lead(tok, {j}) OVER w" for j in range(1, shingle_n))
+    toks = dedup._token_rows_sql("SELECT doc_id, text FROM documents")
     mins = ", ".join(f"min(h1 + {i} * h2) AS h{i}" for i in range(num_hashes))
     band_selects = " UNION ALL ".join(
         "SELECT doc_id, {b} AS band, concat_ws(',', {cols}) AS band_hash FROM sig".format(
@@ -472,7 +458,9 @@ def _minhash_oracle(
         )
         for b in range(bands)
     )
-    jac = "round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6)"
+    jac = dedup._jaccard_at_least_sql(
+        "SELECT doc_a, doc_b, n_inter FROM inter", "SELECT doc_id FROM sh", threshold
+    )
     section_full = ""
     inc_union = ""
     if incremental_mod is not None:
@@ -496,19 +484,8 @@ JOIN sig sgb ON sgb.doc_id = c.batch_id
 JOIN sig sgs ON sgs.doc_id = c.snap_id
 WHERE CAST(({agree}) AS DOUBLE) / {num_hashes} >= {threshold}"""
     return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(generate_series(1, len(l))) - 1 AS idx, unnest(l) AS tok
-  FROM (SELECT doc_id, string_split({norm}, ' ') AS l FROM documents) t
-),
-t2 AS (SELECT doc_id, idx, tok FROM toks WHERE tok <> ''),
-grams AS (
-  SELECT doc_id, idx, concat_ws(' ', tok, {leads}) AS sh,
-         count(*) OVER (PARTITION BY doc_id) AS n_tok
-  FROM t2 WINDOW w AS (PARTITION BY doc_id ORDER BY idx)
-),
-sh AS (
-  SELECT DISTINCT doc_id, sh FROM grams
-  WHERE idx <= n_tok - {shingle_n} OR (n_tok < {shingle_n} AND idx = 0)
+WITH sh AS (
+  SELECT DISTINCT doc_id, gram AS sh FROM ({dedup._gram_rows_sql(toks, shingle_n)}) g
 ),
 hashed AS (
   SELECT doc_id,
@@ -523,7 +500,6 @@ cands AS (
   FROM bandrows a JOIN bandrows b
     ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
 ),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
 inter AS (
   SELECT c.doc_a, c.doc_b, count(*) AS n_inter
   FROM cands c
@@ -531,11 +507,7 @@ inter AS (
   JOIN sh b ON b.doc_id = c.doc_b AND b.sh = a.sh
   GROUP BY 1, 2
 )
-SELECT {section_full}doc_a, doc_b, {jac} AS jaccard
-FROM inter
-JOIN sizes sa ON doc_a = sa.doc_id
-JOIN sizes sb ON doc_b = sb.doc_id
-WHERE {jac} >= {threshold}
+SELECT {section_full}doc_a, doc_b, jaccard FROM ({jac}) jp
 {inc_union}
 """
 
@@ -553,13 +525,13 @@ def q_neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped demo).  At 3 grams only genuinely near-identical docs clear
     0.8, so the verified pair list is linear-ish and the cap is gone.
 
-    Registered with ``hash_fn="md5"`` (round 4): double hashing over one
+    Registered with ``hash_fn="md5"``: double hashing over one
     md5 digest is reproducible in DuckDB, so the ENTIRE LSH pipeline —
     shingling, signature mins, banding, bucket join, Jaccard verify —
     is hash-oracle-checked.  xxhash64 stays the library default (k
     independent native hashes + 8-byte compacted band keys).
 
-    Late round 8: the ``'incremental'`` section (X27) runs the REAL
+    The ``'incremental'`` section (X27) runs the REAL
     :func:`dedup.incremental_minhash_neardup` probe — snapshot slice
     (doc_id % 5 ≠ 0) supplies the band + signature artifacts, the batch
     slice (doc_id % 5 = 0) broadcasts against them, and each candidate
@@ -578,12 +550,12 @@ def q_neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans, and the checkpoint write costs what the re-scans cost.
     # Keep the lazy form; `shingle_rows=` stays available on every
     # builder for deployments whose corpus scan IS the bottleneck.)
-    # r14 opt: stage the SIGNATURE table (not the shingles — that A/B
-    # was a wash, see above): the banding self-join otherwise runs the
+    # Stage the SIGNATURE table (not the shingles — that A/B was a
+    # wash, see above): the banding self-join otherwise runs the
     # shingle+32-min aggregate on BOTH sides; with ``signatures=`` the
     # band rows derive row-locally from one checkpointed ~N×32 frame
-    # and the heavy aggregate runs once.  The Jaccard verify still
-    # reads the (lazy) shingle rows — that part is unchanged.
+    # and the heavy aggregate runs once.  The Jaccard verify reads the
+    # (lazy) shingle rows.
     full_sigs = dedup.minhash_signatures(
         docs, "text", "doc_id", num_hashes=32, shingle_n=3, hash_fn="md5"
     ).localCheckpoint(eager=False)
@@ -593,15 +565,14 @@ def q_neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.lit("full").alias("section"), "doc_a", "doc_b", "jaccard")
     snap = docs.where(F.col("doc_id") % 5 != 0)
     batch = docs.where(F.col("doc_id") % 5 == 0)
-    # r14 opt (supersedes the round-9 separate snap_sigs checkpoint):
     # MinHash signatures are per-document ROW-LOCAL (shingle within doc,
     # min over hashes), so the snapshot and batch signature tables are
     # exactly filters of the staged full-corpus frame — deriving both
-    # from full_sigs removes the 4/5-corpus snap_sigs re-aggregate AND
-    # the 1/5-corpus batch re-minhash inside the incremental probe (the
-    # corpus signature aggregate now runs ONCE; guide §2.4).  Identical
-    # rows by construction, asserted in the A/B and oracle-checked;
-    # same-session interleaved A/B at sf0.1 local[32], full slot:
+    # from full_sigs, not from a separate snap_sigs aggregate, spares
+    # the 4/5-corpus re-aggregate AND the 1/5-corpus batch re-minhash
+    # inside the incremental probe (the corpus signature aggregate runs
+    # ONCE).  Identical rows by construction, asserted in the A/B and
+    # oracle-checked; same-session interleaved A/B at sf0.1 local[32], full slot:
     # derived 3.38/3.08/3.15 s vs separate 5.32/5.06/4.24 s.
     snap_sigs = full_sigs.where(F.col("doc_id") % 5 != 0)
     batch_sigs = full_sigs.where(F.col("doc_id") % 5 == 0)
@@ -623,41 +594,18 @@ def q_neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CLUSTER_ORACLE = f"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, unnest(list_distinct(string_split({dedup.NORMALIZE_SQL.format(c='text')}, ' '))) AS tok
-  FROM documents WHERE doc_id < {_JACCARD_MAX_ID}
+WITH pairs AS ({dedup.jaccard_pairs_exact_sql(_JACCARD_SRC, _JACCARD_THRESHOLD)}),
+comp AS ({dedup.neardup_clusters_sql("SELECT doc_a, doc_b FROM pairs")}),
+sizes AS (
+  SELECT doc_id, count(*) AS n_tok
+  FROM ({dedup._distinct_token_rows_sql(_JACCARD_SRC)}) t GROUP BY doc_id
 ),
-tok2 AS (SELECT doc_id, tok FROM tok WHERE tok <> ''),
-sizes AS (SELECT doc_id, count(*) AS n_tok FROM tok2 GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-  FROM tok2 a JOIN tok2 b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sizes sa ON inter.doc_a = sa.doc_id
-  JOIN sizes sb ON inter.doc_b = sb.doc_id
-  WHERE round(CAST(n_inter AS DOUBLE) / (sa.n_tok + sb.n_tok - n_inter), 6)
-        >= {_JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-walk(node, lbl) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.dst, w.lbl FROM walk w JOIN edges e ON e.src = w.node
-),
-comp AS (SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY node),
 labeled AS (
   SELECT d.doc_id,
          COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
          CAST(CASE WHEN COALESCE(c.cluster_id, d.doc_id) = d.doc_id THEN 1 ELSE 0 END AS INT)
            AS is_survivor
-  FROM (SELECT doc_id FROM documents WHERE doc_id < {_JACCARD_MAX_ID}) d
+  FROM ({_JACCARD_SRC}) d
   LEFT JOIN comp c ON d.doc_id = c.node
 )
 SELECT 'minid' AS section, doc_id, cluster_id, is_survivor FROM labeled
@@ -672,19 +620,13 @@ FROM labeled l LEFT JOIN sizes s ON l.doc_id = s.doc_id
 
 
 def _cluster_quality_scores(docs: DataFrame) -> DataFrame:
-    """Per-doc distinct non-empty token count — the X60 election score.
-    Byte-for-byte the oracle's ``sizes`` CTE (count of distinct
-    whitespace tokens of the normalized text), coalesced to 0 for
-    token-less docs on BOTH engines so election never hinges on the
-    scored-vs-unscored tier."""
+    """Per-doc distinct word-token count — the X60 election score, the
+    oracle's ``sizes`` CTE (rows of ``dedup._distinct_token_rows_sql``
+    per doc), 0 for token-less docs on BOTH engines so election never
+    hinges on the scored-vs-unscored tier."""
     return docs.select(
         "doc_id",
-        F.size(
-            F.filter(
-                F.array_distinct(dedup.tokens(F.coalesce(F.col("text"), F.lit("")))),
-                lambda x: x != "",
-            )
-        ).alias("score"),
+        F.size(F.array_distinct(dedup.word_tokens(F.col("text")))).alias("score"),
     )
 
 
@@ -732,7 +674,7 @@ def _simhash_oracle(max_hamming: int) -> str:
         f"({c}, {bounds[c]}, {(1 << (bounds[c + 1] - bounds[c])) - 1})"
         for c in range(nchunks)
     )
-    norm = dedup.NORMALIZE_SQL.format(c="text")
+    toks = dedup._distinct_token_rows_sql("SELECT doc_id, text FROM documents")
     bit_sums = ", ".join(
         f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
         for i in range(bits)
@@ -742,13 +684,8 @@ def _simhash_oracle(max_hamming: int) -> str:
         for i in range(bits)
     )
     return f"""
-WITH tok AS (
-  SELECT doc_id, unnest(list_distinct(string_split({norm}, ' '))) AS tok
-  FROM documents
-),
-tok2 AS (
-  SELECT doc_id, {hex_int_sql("md5(tok)", 1, 15)} AS h
-  FROM tok WHERE tok <> ''
+WITH tok2 AS (
+  SELECT doc_id, {hex_int_sql("md5(tok)", 1, 15)} AS h FROM ({toks}) t
 ),
 sums AS (SELECT doc_id, {bit_sums} FROM tok2 GROUP BY doc_id),
 sig AS (SELECT doc_id, ({reassemble}) AS sim FROM sums),
@@ -1424,15 +1361,15 @@ _CURATE_MAX_ID = 300  # bounds the demo's exact-Jaccard pair stage only
 def _curate_oracle() -> str:
     """DuckDB twin of the WHOLE curation pipeline: quality + language
     scoring (shared fragments with text_quality / text_lang_id), md5
-    fingerprint dedup with arg_min survivor, exact-Jaccard pairs, the
-    recursive-CTE connected components, survivor filter, md5 split."""
+    fingerprint dedup with arg_min survivor, exact-Jaccard pairs
+    (:func:`dedup.jaccard_pairs_exact_sql`), their connected components
+    (:func:`dedup.neardup_clusters_sql`), survivor filter, md5 split."""
     norm = dedup.NORMALIZE_SQL.format(c="text")
     langs = sorted(textstats.LANG_MARKERS)
     score_exprs = _lang_score_sql()
     in_list = ", ".join(sql_str_lit(lang) for lang in langs)
     return f"""
-WITH RECURSIVE
-src AS (SELECT doc_id, text FROM documents WHERE doc_id < {_CURATE_MAX_ID}),
+WITH src AS (SELECT doc_id, text FROM documents WHERE doc_id < {_CURATE_MAX_ID}),
 scored AS (
   SELECT doc_id, text, {_quality_sql('text')} AS quality,
          concat(' ', {norm}, ' ') AS p
@@ -1453,28 +1390,8 @@ kept AS (
          arg_min(quality, doc_id) AS quality,
          arg_min(lang_pred, doc_id) AS lang_pred
   FROM filt GROUP BY md5({norm})),
-tok AS (SELECT doc_id, unnest(list_distinct(string_split({norm}, ' '))) AS tok FROM kept),
-tok2 AS (SELECT doc_id, tok FROM tok WHERE tok <> ''),
-sizes AS (SELECT doc_id, count(*) AS n_tok FROM tok2 GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-  FROM tok2 a JOIN tok2 b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY 1, 2),
-pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sizes sa ON inter.doc_a = sa.doc_id
-  JOIN sizes sb ON inter.doc_b = sb.doc_id
-  WHERE round(CAST(n_inter AS DOUBLE) / (sa.n_tok + sb.n_tok - n_inter), 6)
-        >= {_JACCARD_THRESHOLD}),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs),
-walk(node, lbl) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.dst, w.lbl FROM walk w JOIN edges e ON e.src = w.node),
-comp AS (SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY node)
+pairs AS ({dedup.jaccard_pairs_exact_sql("SELECT doc_id, text FROM kept", _JACCARD_THRESHOLD)}),
+comp AS ({dedup.neardup_clusters_sql("SELECT doc_a, doc_b FROM pairs")})
 SELECT k.doc_id, k.lang_pred, k.quality, {hash_split_sql('k.doc_id')} AS split
 FROM kept k LEFT JOIN comp c ON k.doc_id = c.node
 WHERE COALESCE(c.cluster_id, k.doc_id) = k.doc_id
@@ -1505,35 +1422,25 @@ def q_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Eval-set decontamination (round 5): flag training docs sharing any
+# Eval-set decontamination: flag training docs sharing any
 # ≥n-token word n-gram with a benchmark/eval corpus.
 # --------------------------------------------------------------------------
 
 _DECONTAM_NGRAM = 13  # the standard ≥13-token overlap rule
 
 
-def _decontam_oracle(n: int) -> str:
+def _decontam_oracle(n: int, min_score: float) -> str:
     """DuckDB twin of decontam.decontaminate over a train/eval split of
-    the documents table (eval = doc_id % 10 == 0): ONE gram build (the
-    same zip-unnest + lead-window + short-doc + DISTINCT stages as the
-    minhash oracle) split into the two sides, an equi-join probe, and
-    the per-doc verdict with a keep-all left join."""
-    norm = dedup.NORMALIZE_SQL.format(c="text")
-    leads = ", ".join(f"lead(tok, {j}) OVER w" for j in range(1, n))
+    the documents table (eval = doc_id % 10 == 0): ONE distinct gram
+    build (:func:`dedup._gram_rows_sql`, as in the minhash oracle)
+    split into the two sides, an equi-join probe, and the per-doc
+    flag with a keep-all left join; then the semantic probe, which
+    flags training vectors within cosine ``min_score`` of an eval
+    vector."""
+    toks = dedup._token_rows_sql("SELECT doc_id, text FROM documents")
     return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(generate_series(1, len(l))) - 1 AS idx, unnest(l) AS tok
-  FROM (SELECT doc_id, string_split({norm}, ' ') AS l FROM documents) t
-),
-t2 AS (SELECT doc_id, idx, tok FROM toks WHERE tok <> ''),
-grams AS (
-  SELECT doc_id, idx, concat_ws(' ', tok, {leads}) AS sh,
-         count(*) OVER (PARTITION BY doc_id) AS n_tok
-  FROM t2 WINDOW w AS (PARTITION BY doc_id ORDER BY idx)
-),
-sh AS (
-  SELECT DISTINCT doc_id, sh FROM grams
-  WHERE idx <= n_tok - {n} OR (n_tok < {n} AND idx = 0)
+WITH sh AS (
+  SELECT DISTINCT doc_id, gram AS sh FROM ({dedup._gram_rows_sql(toks, n)}) g
 ),
 tgrams AS (SELECT doc_id, sh FROM sh WHERE doc_id % 10 <> 0),
 egrams AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 10 = 0),
@@ -1565,7 +1472,7 @@ FROM (
   best AS (SELECT doc_id, max(s) AS score FROM sims GROUP BY doc_id)
   SELECT sims.doc_id, min(sims.eval_id) AS eval_id, best.score
   FROM sims JOIN best ON sims.doc_id = best.doc_id AND sims.s = best.score
-  WHERE best.score >= {{sem_thr}}
+  WHERE best.score >= {min_score}
   GROUP BY sims.doc_id, best.score
 ) pick
 """
@@ -1574,15 +1481,9 @@ FROM (
 _SEM_DECONTAM_THRESHOLD = 0.35  # flags 61/450 at sf0.01 — discriminating
 
 
-@register(
-    "decontaminate_eval",
-    _decontam_oracle(_DECONTAM_NGRAM).replace(
-        "{sem_thr}", repr(_SEM_DECONTAM_THRESHOLD)
-    ),
-)
+@register("decontaminate_eval", _decontam_oracle(_DECONTAM_NGRAM, _SEM_DECONTAM_THRESHOLD))
 def q_decontaminate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval-set decontamination, BOTH probes in one tagged result
-    (semantic section merged round 7):
+    """Eval-set decontamination, BOTH probes in one tagged result:
 
     - ``method='ngram'``: per training document, the count of distinct
       13-token word n-grams shared with the held-out "eval" slice
@@ -1628,7 +1529,7 @@ def q_decontaminate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Sequence packing (registered round 5; operator + oracle landed round 4)
+# Sequence packing
 # --------------------------------------------------------------------------
 
 from pyspark_dist_explore_spark.operators.packing import (  # noqa: E402
@@ -1870,7 +1771,7 @@ _EXACT_CAP = 600
 @register_sections(
     "vector_exact_search",
     f"""
-WITH RECURSIVE v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
 {_UNIT_CTE},
 ue AS (SELECT vec_id, uv FROM u WHERE vec_id < {_EXACT_CAP}),
 q AS (SELECT vec_id AS query_id, uv AS qv FROM u WHERE vec_id < 5),
@@ -1896,17 +1797,7 @@ sd_pairs AS (
     ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
   WHERE round(list_dot_product(a.uv, b.uv), 6) >= {_COS_THRESHOLD}
 ),
-sd_edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM sd_pairs
-  UNION
-  SELECT doc_b, doc_a FROM sd_pairs
-),
-sd_walk(node, lbl) AS (
-  SELECT src, src FROM sd_edges
-  UNION
-  SELECT e.dst, w.lbl FROM sd_walk w JOIN sd_edges e ON e.src = w.node
-),
-sd_comp AS (SELECT node, min(lbl) AS cluster_id FROM sd_walk GROUP BY node),
+sd_comp AS ({dedup.neardup_clusters_sql("SELECT doc_a, doc_b FROM sd_pairs")}),
 lshb AS (SELECT vec_id, uv, {similarity.lsh_bucket_sql('uv', 4)} AS bucket FROM u),
 lshq AS (SELECT vec_id AS query_id, uv AS qv, bucket FROM lshb WHERE vec_id < 5),
 lsh_scored AS (
@@ -2063,31 +1954,16 @@ def vector_exact_search_sections(
 
 
 def _winnowing_oracle(k: int, window: int) -> str:
-    """DuckDB twin of winnowing_fingerprints(hash_fn='md5'): the zip-unnest
-    reproduces posexplode (index over the ORIGINAL split array), the
-    lead-window gram build, both boundary filters, and the sliding
-    window-min — structurally identical stages, so the fingerprint SET
-    hash-matches without rounding games (md5 hex strings, exact)."""
-    norm = dedup.NORMALIZE_SQL.format(c="text")
-    leads = ", ".join(f"lead(tok, {j}) OVER w" for j in range(1, k))
+    """DuckDB twin of winnowing_fingerprints(hash_fn='md5'): the md5 of
+    each :func:`dedup._gram_rows_sql` gram (which keeps the token
+    positions of the split array and the short-doc gram), the window-end
+    filter, and the sliding window-min — structurally identical stages,
+    so the fingerprint SET hash-matches without rounding games (md5 hex
+    strings, exact)."""
+    toks = dedup._token_rows_sql("SELECT doc_id, text FROM documents")
     return f"""
-WITH toks AS (
-  SELECT doc_id,
-         unnest(generate_series(1, len(l))) - 1 AS idx,
-         unnest(l) AS tok
-  FROM (SELECT doc_id, string_split({norm}, ' ') AS l FROM documents) t
-),
-t2 AS (SELECT doc_id, idx, tok FROM toks WHERE tok <> ''),
-grams AS (
-  SELECT doc_id, idx,
-         md5(concat_ws(' ', tok, {leads})) AS h,
-         count(*) OVER (PARTITION BY doc_id) AS n_tok
-  FROM t2
-  WINDOW w AS (PARTITION BY doc_id ORDER BY idx)
-),
-g2 AS (
-  SELECT doc_id, idx, h, n_tok FROM grams
-  WHERE idx <= n_tok - {k} OR (n_tok < {k} AND idx = 0)
+WITH g2 AS (
+  SELECT doc_id, idx, md5(gram) AS h, n_tok FROM ({dedup._gram_rows_sql(toks, k)}) g
 ),
 fp AS (
   SELECT doc_id, idx, n_tok,
@@ -2477,8 +2353,8 @@ _C4_MIN_SENTENCES = 30
 def _scrub_repetition_oracle() -> str:
     """DuckDB twin of scrub_text ⋈ repetition_signals: the same ordered
     regexp_replace chain (counts measured on the ORIGINAL text), md5 of
-    the scrubbed bytes, zip-unnest tokens, lead-window bigrams."""
-    norm = dedup.NORMALIZE_SQL.format(c="text")
+    the scrubbed bytes, :func:`dedup._token_rows_sql` tokens,
+    lead-window bigrams."""
     repl = "<redacted>"
     count_cols = ", ".join(
         f"CAST(len(regexp_extract_all(text, {sql_str_lit(pat)})) AS BIGINT) AS n_{kind}"
@@ -2492,11 +2368,7 @@ WITH s AS (
   SELECT doc_id, {count_cols}, md5({scrubbed}) AS scrub_hash
   FROM documents
 ),
-toks AS (
-  SELECT doc_id, unnest(generate_series(1, len(l))) - 1 AS idx, unnest(l) AS tok
-  FROM (SELECT doc_id, string_split({norm}, ' ') AS l FROM documents) t
-),
-t2 AS (SELECT doc_id, idx, tok FROM toks WHERE tok <> ''),
+t2 AS ({dedup._token_rows_sql("SELECT doc_id, text FROM documents")}),
 tok_stats AS (
   SELECT doc_id, count(*) AS n_tokens, count(DISTINCT tok) AS n_distinct
   FROM t2 GROUP BY doc_id
@@ -3069,14 +2941,9 @@ def _perplexity_oracle() -> str:
     probabilities stay in the pytest twin
     (tests/test_ops.py::test_kn_bigram_*).
     """
-    norm = dedup.NORMALIZE_SQL.format(c="text")
     b = textstats._cls_bucket_sql("g", _DSIR_BUCKETS)
     return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(generate_series(1, len(l))) - 1 AS idx, unnest(l) AS tok
-  FROM (SELECT doc_id, string_split({norm}, ' ') AS l FROM documents) t
-),
-t2 AS (SELECT doc_id, idx, tok FROM toks WHERE tok <> ''),
+WITH t2 AS ({dedup._token_rows_sql("SELECT doc_id, text FROM documents")}),
 tf AS (SELECT doc_id, tok AS term, count(*) AS tf FROM t2 GROUP BY 1, 2),
 uni AS (SELECT term, sum(tf) AS cnt FROM tf GROUP BY term),
 ustat AS (
@@ -3676,14 +3543,14 @@ FROM documents
 """,
 )
 def q_text_normalize_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode canonicalization at the driver gate (new round 6): NFC
+    """Unicode canonicalization at the driver gate: NFC
     fold + C0-control strip over every document, hash-checked against
     DuckDB's ``nfc_normalize`` (md5 of the normalized bytes + the
     changed flag).  The accent-fold variant and the planted NFD-vs-NFC
     dedup collapse are pinned in pytest; ``curate_documents`` exposes
     the stage as ``unicode_form=``.
 
-    Round 10 adds the X42 URL-CANONICALIZATION section — the other
+    The X42 URL-CANONICALIZATION columns cover the other
     normalization a crawl pipeline runs before per-URL/host dedup
     policy: ``url_canon`` + ``url_host`` over a deterministic
     md5-parity MESSY url per doc (mixed-case schemes/hosts, www,
@@ -3695,9 +3562,9 @@ def q_text_normalize_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     normed = dedup.normalize_unicode(docs, "text", "doc_id")
     messy = _messy_url_col()  # depends only on doc_id — rides the same projection
-    # X51 (round 12): markup stripping over the messy-HTML adapter —
-    # block removal (script/style/comment), tag removal, ordered entity
-    # decode (&amp; last), whitespace collapse — md5 of the stripped
+    # X51: markup stripping over the messy-HTML adapter — block
+    # removal (script/style/comment), tag removal, ordered entity
+    # decode (&amp; last), WHITESPACE_RE collapse — md5 of the stripped
     # text plus the raw tag/entity counters, all doc-varying
     mh = _messy_html_col()
     n_tags, n_entities = dedup.markup_stats(mh)

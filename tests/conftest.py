@@ -24,7 +24,8 @@ def spark():
 #: Degenerate and real-deployment text inputs the testdata lacks: NULL,
 #: empty, whitespace-only, a bare newline, non-BMP code points, one
 #: word, a vertical tab (whitespace to Java's ``\s``, not to RE2's),
-#: and CRLF line ends under both the C4 and the Gopher line rules.
+#: CRLF line ends under both the C4 and the Gopher line rules, and
+#: tab-indented bullet lines.
 EDGE_DOCS = [
     (1, None),
     (2, ""),
@@ -35,4 +36,5 @@ EDGE_DOCS = [
     (7, "a\x0bb c"),
     (8, "one two here.\r\nthree four five!\r\nsix seven eight?"),
     (9, "the cat sat...\r\nthe dog sat…\r\nthe end."),
+    (10, "\t- one item here\n\t- two item here\nthe end of the list"),
 ]

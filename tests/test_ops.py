@@ -4761,6 +4761,8 @@ def test_gopher_gate_matches_duckdb(spark):
         lambda src: gopher_sql(src, min_words=1, min_stop_words=0),
     )
     assert edge == edge_want and len(edge) == len(EDGE_DOCS)
+    # gq_bullet_lines of the tab-indented list: its two "\t- " lines
+    assert {r[0]: r[8] for r in edge}[10] == 2
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     got = sorted(
@@ -5307,7 +5309,7 @@ def test_gopher_gate_matches_python_reference(spark):
         bl = sum(1 for l in lines if re.match(r"^[-*•]", l.lstrip()))
         el = sum(1 for l in lines if re.search(r"(\.\.\.|…)$", l.rstrip()))
         nl = len(lines)
-        return int(
+        keep = int(
             min_words <= n <= 100_000
             and 3 * n <= wc <= 10 * n
             and 10 * n_hash <= n       # A1.1: each symbol ratio on its own
@@ -5317,6 +5319,7 @@ def test_gopher_gate_matches_python_reference(spark):
             and 5 * alpha >= 4 * n
             and stop >= min_stop
         )
+        return keep, bl, el
 
     texts = [
         None, "", "   ",
@@ -5332,12 +5335,15 @@ def test_gopher_gate_matches_python_reference(spark):
         # line tails: CRLF, and a tab after the ellipsis (1 of 3 lines)
         "the cat sat...\r\nthe dog sat…\r\nthe end.",
         "the cat sat on the mat...\t\nthe dog ran off with it\nthe end of the story",
+        # tab-indented bullets: 2 of 3 lines, and 3 of 3 (dropped)
+        "\t- one item here\n\t- two item here\nthe end of the list",
+        "\t- the first item here\n\t- the second item here\n\t- the third item here",
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
     )
     got = {
-        r["doc_id"]: r["gq_keep"]
+        r["doc_id"]: (r["gq_keep"], r["gq_bullet_lines"], r["gq_ellipsis_lines"])
         for r in gopher_quality_gate(
             df, "text", "doc_id", min_words=5, min_stop_words=1
         ).collect()
@@ -6445,6 +6451,7 @@ def test_strip_markup_semantics_and_twin(spark):
         (5, ""),
         (6, "<p>multi\nline <I CLASS=\"x\">caps</I> tag</p>"),
         (7, "&quot;q&quot; &apos;a&apos; &#39;n&#39; &gt;&lt;"),
+        (8, "<p>a\x0bb</p> c"),
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     nt, ne = markup_stats(F.col("text"))
@@ -6476,6 +6483,7 @@ def test_strip_markup_semantics_and_twin(spark):
     assert by[4][1] is None
     assert by[6][1] == "multi line caps tag"
     assert by[7][1] == "\"q\" 'a' 'n' ><"
+    assert by[8][1] == "a b c"  # \x0B is whitespace on both engines
     # no residual markup in the stripped output
     stripped = df.where("text IS NOT NULL").select(
         strip_markup(F.col("text")).alias("s")
